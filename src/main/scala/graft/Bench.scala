@@ -174,16 +174,14 @@ object Bench {
     // for the six-job dipstick — record it at the next promotion, the
     // controlBaselineSec discipline) sched_vs_pin reads the mode
     // directly: >= ~2 means every many-small-job row ran under it even
-    // where its own bracket looks quiet. 0.0 = no pin recorded yet.
-    // pinned at the r20a promotion: the gate-meeting quiet window's
-    // calibrated six-one-task-job dipstick read 0.1213 s (~20 ms/job —
-    // the box's quiet scheduler round-trip price; the r19 hot windows
-    // read ~0.24 s). sched_vs_pin >= ~2 on a future run means every
-    // many-small-job row ran under the whole-sweep noise mode even
-    // where its own self-calibrated bracket looks quiet (the r19b
-    // lesson this pin exists for).
+    // where its own bracket looks quiet. 0.0 = no pin: the pin is a
+    // property of one machine, so it comes only from the environment —
+    // a built-in default would silently mis-calibrate every other box.
+    // (The 4-core VM the canonical baseline was promoted on pins
+    // 0.1213 s: its quiet window's six-one-task-job dipstick, ~20 ms/job;
+    // its hot windows read ~0.24 s.)
     val schedBaselinePin =
-      sys.env.get("SPARK_GRAFT_SCHED_BASELINE").map(_.toDouble).orElse(Some(0.1213))
+      sys.env.get("SPARK_GRAFT_SCHED_BASELINE").map(_.toDouble)
     val schedVsPin =
       schedBaselinePin.map(p => BenchMath.ratio(schedEff, p)).getOrElse(0.0)
     // every string goes through the shared escaper — an unescaped quote

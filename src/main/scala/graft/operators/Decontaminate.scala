@@ -99,17 +99,16 @@ object Decontaminate {
       table: String, numBuckets: Int = 8,
       embCol: Option[String] = None, nLists: Int = 16): Unit = {
     dropEvalIdentities(spark, table)
-    val pay = evalRows.where(col(payloadCol).isNotNull)
-      .select(col(idCol), col(payloadCol))
-    Dedup.ensureImageHistory(spark, pay, payloadCol, idCol, table, numBuckets)
-    Dedup.ensureAudioHistory(spark, pay, payloadCol, idCol, table, numBuckets)
-    Dedup.ensureVideoHistory(spark, pay, payloadCol, idCol, table, numBuckets)
-    Dedup.appendImageHistoryDelta(spark, pay, payloadCol, idCol, table, 0L)
-    Dedup.appendAudioHistoryDelta(spark, pay, payloadCol, idCol, table, 0L)
-    Dedup.appendVideoHistoryDelta(spark, pay, payloadCol, idCol, table, 0L)
-    Dedup.compactImageDelta(spark, table)
-    Dedup.compactAudioDelta(spark, table)
-    Dedup.compactVideoDelta(spark, table)
+    // one decode pass feeds all four table writes (lazy barrier: the
+    // first write materializes it)
+    val ident = Multimodal.multimodalIdentities(
+        evalRows.where(col(payloadCol).isNotNull), payloadCol, idCol)
+      .localCheckpoint(eager = false)
+    Dedup.MultimodalHistory.ensure(spark, table, ident.schema(idCol), numBuckets)
+    Dedup.appendImageHistoryDelta(spark, ident, idCol, table, 0L)
+    Dedup.appendAudioHistoryDelta(spark, ident, idCol, table, 0L)
+    Dedup.appendVideoHistoryDelta(spark, ident, idCol, table, 0L)
+    Dedup.MultimodalHistory.fold(spark, table)
     embCol.foreach { e =>
       val vecs = evalRows.where(col(e).isNotNull).select(col(idCol), col(e))
       // an eval set without vectors simply skips the `_ei` table (the
@@ -138,40 +137,43 @@ object Decontaminate {
     * Scale shape: each leg is the corresponding incremental probe's —
     * batch identities broadcast, the eval tables (tiny by nature)
     * never exchange; the eval vectors probe bucket-pruned under the
-    * eval-trained frozen quantizer. Chain the probes on a materialized
-    * batch (the caller's barrier) when payloads are heavy. */
+    * eval-trained frozen quantizer. The payloads decode once
+    * ([[Multimodal.multimodalIdentities]]) and the surviving ids
+    * semi-join back to `batch`, which is therefore read twice — pass a
+    * materialized batch (the caller's barrier) when payloads are
+    * heavy. */
   def dropContaminatedMultimodal(spark: org.apache.spark.sql.SparkSession,
       batch: DataFrame, payloadCol: String, idCol: String, table: String,
       embCol: Option[String] = None, embTau: Double = 0.95,
       checkIds: Boolean = true): DataFrame = {
-    val guarded = if (!checkIds) batch
-      else guardEvalIdCollisions(spark, batch, idCol, table)
-    val s1 = Dedup.imageIncrementalDelta(spark, guarded, table, payloadCol, idCol)
-    val s2 = Dedup.audioIncrementalDelta(spark, s1, table, payloadCol, idCol)
-    val s3 = Dedup.videoIncrementalDelta(spark, s2, table, payloadCol, idCol)
+    val clean = dropContaminatedIdentities(spark,
+      Multimodal.multimodalIdentities(batch, payloadCol, idCol), idCol, table,
+      checkIds)
+    val s3 = batch.join(broadcast(clean.select(col(idCol))), Seq(idCol), "left_semi")
     embCol.filter(_ => spark.catalog.tableExists(s"${table}_ei")).fold(s3) { e =>
       Similarity.semanticIncrementalDelta(spark, s3, s"${table}_ei", embTau,
         idCol = idCol, vecCol = e, cId = idCol, cVec = e)
     }
   }
 
-  /** [[dropContaminatedMultimodal]] over a precomputed identity frame
-    * ([[Multimodal.multimodalIdentities]] — the fused intake path):
-    * the same three modality probes chained in the same order with the
-    * same eval-id collision guard, consuming identities instead of
-    * payloads (zero decode passes). No embedding leg — the intake loop
-    * decontaminates its embedding rows separately. */
-  def dropContaminatedMultimodalIdent(spark: org.apache.spark.sql.SparkSession,
+  /** The payload legs of [[dropContaminatedMultimodal]] over an
+    * identity frame ([[Multimodal.multimodalIdentities]] — the fused
+    * intake path runs this directly on its materialized identities):
+    * the image, audio and video probes chained in that order behind the
+    * eval-id collision guard. Returns the clean identity rows. No
+    * embedding leg — the intake loop decontaminates its embedding rows
+    * separately. */
+  def dropContaminatedIdentities(spark: org.apache.spark.sql.SparkSession,
       ident: DataFrame, idCol: String, table: String,
       checkIds: Boolean = true): DataFrame = {
     val guarded = if (!checkIds) ident
       else guardEvalIdCollisions(spark, ident, idCol, table)
-    val s1 = Dedup.imageIncrementalDeltaIdent(spark, guarded, table, idCol)
-    val s2 = Dedup.audioIncrementalDeltaIdent(spark, s1, table, idCol)
-    Dedup.videoIncrementalDeltaIdent(spark, s2, table, idCol)
+    val s1 = Dedup.imageIncrementalDelta(spark, guarded, table, idCol)
+    val s2 = Dedup.audioIncrementalDelta(spark, s1, table, idCol)
+    Dedup.videoIncrementalDelta(spark, s2, table, idCol)
   }
 
-  /** The eval-id disjointness guard both multimodal probe forms share:
+  /** The eval-id disjointness guard of every multimodal probe:
     * batch ids colliding with any eval identity-table id fail LOUDLY
     * via a broadcast left join whose match arm is `raise_error` (the
     * same-id replay guard would otherwise silently pass a contaminated
@@ -223,9 +225,7 @@ object Decontaminate {
     * optional `_ei` index). */
   def dropEvalIdentities(spark: org.apache.spark.sql.SparkSession,
       table: String): Unit = {
-    Dedup.dropImageHistory(spark, table)
-    Dedup.dropAudioHistory(spark, table)
-    Dedup.dropVideoHistory(spark, table)
+    Dedup.MultimodalHistory.drop(spark, table)
     Similarity.dropIvfIndex(spark, s"${table}_ei")
   }
 }

@@ -1,9 +1,10 @@
 package graft.operators
 
 import graft.functions.{TextFunctions => TF, VectorFunctions => VF}
-import org.apache.spark.sql.{Column, DataFrame}
+import org.apache.spark.sql.{Column, DataFrame, Row, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.{ArrayType, LongType, StringType, StructField, StructType}
 
 /** Deduplication for training-data pipelines (SURVEY §2.9 L1/L2):
   * exact content hash, MinHash-LSH near-dup (Broder's min-wise hashing
@@ -261,6 +262,13 @@ object Dedup {
     * right tool for that content anyway. Pass `maxBucket = Int.MaxValue`
     * when verifying recall guarantees (the l02d contract does).
     *
+    * Barrier trade: the shared shingle frame is a lazy
+    * `localCheckpoint`, so its lineage is truncated and its blocks live
+    * only in executor block managers. An executor lost mid-job fails
+    * the job instead of recomputing the blocks; the caller reruns it
+    * (the operator is deterministic). That suits bounded batches; a
+    * multi-hour corpus-scale run pays a full rerun per executor loss.
+    *
     * @param bands number of bands; rows per band = numHashes/bands.
     * @param maxBucket per-(band, bandsig) bucket-size cap. */
   def minhashCandidates(df: DataFrame, textCol: String, idCol: String,
@@ -301,6 +309,201 @@ object Dedup {
       .select(col("id_a"), col("id_b"), TF.jaccard(col("sh_a"), col("sh_b")).alias("jaccard"))
   }
 
+  // ================= persisted dedup HISTORIES =================
+  // Every incremental leg probes a persisted history: bucketed main
+  // tables, each with a sibling delta directory of replay-safe
+  // `batch-<id>/` appends (overwrite-own-dir, skipped once the fold
+  // manifest records the batch), folded back in by
+  // [[Layout.foldDeltaIntoBucketed]] (commit record + manifest — every
+  // crash state recoverable). That is the delta-plus-periodic-rebuild
+  // index policy, and it is written ONCE: a [[History]] descriptor per
+  // family lists its tables in fold order, and ensure / drop / fold /
+  // foldIfNeeded are the same code for every family. Table names,
+  // bucket keys and delta paths are the families' own, unchanged.
+
+  /** One table of a [[History]]: the suffix on the history's base name,
+    * its bucket keys (given the id column — `_sh` buckets on it) and
+    * its rows over an empty source frame, which derives the empty
+    * schema from the id field alone. */
+  private[operators] final case class HistoryTable(suffix: String,
+      keys: String => Seq[String], empty: (SparkSession, StructField) => DataFrame)
+
+  /** A persisted dedup history family: its tables in FOLD order. */
+  final class History private[operators] (
+      private[operators] val tables: Seq[HistoryTable]) {
+
+    /** Both families' tables, this one's first. */
+    def ++(that: History): History = new History(tables ++ that.tables)
+
+    /** Create every MISSING table as an empty bucketed table, never
+      * touching an existing one — the crash-safe first-use init of the
+      * delta ingest loops. A blanket drop-and-rewrite on one missing
+      * table would destroy folded rows of its siblings in the deeper
+      * crash state (init half-crashed, deltas then partially folded);
+      * per-table creation leaves whatever survived intact. A table
+      * created from scratch is DEFINED empty: its delta state can only
+      * be a leftover of a destroyed prior incarnation (a new session
+      * over an old warehouse under the in-memory metastore), and
+      * probing it would find phantom matches, so it is cleared. */
+    def ensure(spark: SparkSession, table: String, idField: StructField,
+        numBuckets: Int): Unit =
+      tables.foreach { h =>
+        val t = table + h.suffix
+        if (!spark.catalog.tableExists(t)) {
+          clear(spark, t)
+          Layout.writeBucketed(h.empty(spark, idField), t, h.keys(idField.name),
+            numBuckets)
+        }
+      }
+
+    /** Drop every table AND its warehouse location and delta state. The
+      * location delete matters across sessions — with a non-durable
+      * metastore (the default in-memory Derby) a new session's catalog
+      * has no entry for the old table, so `saveAsTable` takes the
+      * CREATE path and refuses with LOCATION_ALREADY_EXISTS over the
+      * surviving directory. Rebuilds from scratch drop first. */
+    def drop(spark: SparkSession, table: String): Unit =
+      tables.foreach(h => clear(spark, table + h.suffix))
+
+    /** Fold every table's delta into its bucketed main, in fold order.
+      * The order is each family's crash-window contract: a band table
+      * folds before its `_sh` (probes verify against main ∪ `_sh`
+      * delta, so a crash between the two stays correct), `_vb` before
+      * `_vn`, and the intake hash table `_xh` last (probes read it as
+      * main ∪ delta). */
+    def fold(spark: SparkSession, table: String): Unit =
+      tables.foreach(h => Layout.foldDeltaIntoBucketed(spark, table + h.suffix,
+        noSpecHint = "not a dedup history table"))
+
+    /** AUTO-fold policy — the measured trigger [[Similarity.ivfAging]]
+      * established: fold when the accumulated delta bytes (summed over
+      * the family's tables) reach `maxDeltaRatio` of the bucketed
+      * mains. Delta bytes are what the probes' delta legs pay per
+      * micro-batch, so the trigger bounds steady-state probe cost at
+      * ≤ (1 + ratio)× the folded cost while amortizing fold work
+      * against real growth — an empty or tiny main folds immediately
+      * (cheap), a 100 TB main only once the deltas have earned it. The
+      * measurement is filesystem metadata ([[Layout.deltaMainBytes]]),
+      * no jobs — safe to call on every micro-batch.
+      *
+      * A family with any table MISSING never folds: a delta directory
+      * without its table is stale state (a new session over an old
+      * warehouse, or a drop that crashed between the table and its
+      * delta), the main's zero bytes would make any delta look due, and
+      * the fold would read catalog metadata that does not exist. The
+      * family's next `ensure` clears that state. Crash states are the
+      * fold protocol's own; the policy only decides WHEN to enter it.
+      * Returns true when a fold ran. */
+    def foldIfNeeded(spark: SparkSession, table: String,
+        maxDeltaRatio: Double = 0.10): Boolean = {
+      require(maxDeltaRatio > 0, "maxDeltaRatio must be positive")
+      val ts = tables.map(table + _.suffix)
+      if (!ts.forall(spark.catalog.tableExists)) return false
+      val (d, m) = ts.map(Layout.deltaMainBytes(spark, _))
+        .reduce((a, b) => (a._1 + b._1, a._2 + b._2))
+      val due = d > 0 && d >= maxDeltaRatio * m
+      if (due) fold(spark, table)
+      due
+    }
+  }
+
+  /** Drop `t` and its location, then its delta state (resolved while
+    * the catalog entry still exists). */
+  private def clear(spark: SparkSession, t: String): Unit = {
+    val delta = Layout.deltaDirOf(spark, t)
+    Layout.dropTableAndLocation(spark, t)
+    Layout.deleteDeltaState(spark, delta)
+  }
+
+  /** Land one batch's rows in `batch-<id>/` of `t`'s delta directory —
+    * overwrite-own-dir, so a replay rewrites exactly its own files —
+    * unless the fold manifest records the batch as already folded
+    * ([[Layout.foldManifestDirOf]]: re-appending it would let the next
+    * fold duplicate its rows in the main table). Batch ids must be
+    * monotonic over the table lifetime. */
+  private def appendDelta(spark: SparkSession, t: String, batchId: Long)(
+      rows: => DataFrame): Unit =
+    if (!Layout.isBatchFolded(spark, t, batchId))
+      rows.write.mode("overwrite")
+        .parquet(s"${Layout.deltaDirOf(spark, t)}/batch-$batchId")
+
+  /** `t`'s delta rows, when its delta directory exists. */
+  private def deltaOf(spark: SparkSession, t: String): Option[DataFrame] = {
+    val p = new org.apache.hadoop.fs.Path(Layout.deltaDirOf(spark, t))
+    if (p.getFileSystem(spark.sparkContext.hadoopConfiguration).exists(p))
+      Some(Layout.readDelta(spark, t, p.toString))
+    else None
+  }
+
+  /** `t`'s bucketed main ∪ its delta. */
+  private def withDelta(spark: SparkSession, t: String): DataFrame =
+    deltaOf(spark, t).fold(spark.table(t))(spark.table(t).unionByName(_))
+
+  /** Empty source frames the history schemas derive from: (id, text)
+    * for the text families, the [[Multimodal.multimodalIdentities]]
+    * row for the modality families. */
+  private def emptyText(spark: SparkSession, id: StructField): DataFrame =
+    emptyFrame(spark, id, StructField("__text", StringType))
+  private def emptyIdentities(spark: SparkSession, id: StructField): DataFrame =
+    emptyFrame(spark, id, StructField("__ph", LongType),
+      StructField("__asig", LongType),
+      StructField("__fhs", ArrayType(LongType, containsNull = false)))
+  private def emptyFrame(spark: SparkSession, fields: StructField*): DataFrame =
+    spark.createDataFrame(java.util.Collections.emptyList[Row](), StructType(fields))
+
+  /** Near-dedup band history: the banded signatures (the base name,
+    * bucketed on exactly the probe's `(__band, __bandsig)`) and the
+    * shingle sets (`_sh`, bucketed on the id) —
+    * [[writeBandHistory]]'s two tables. */
+  val BandHistory = new History(Seq(
+    HistoryTable("", _ => Seq("__band", "__bandsig"),
+      (s, id) => bandedSignatures(emptyText(s, id), "__text", id.name)),
+    HistoryTable("_sh", id => Seq(id),
+      (s, id) => shingleFrame(emptyText(s, id), "__text", id.name))))
+
+  /** An exact-hash history table: (__xid, __xh), bucketed on the hash. */
+  private def hashTable(suffix: String) = HistoryTable(suffix, _ => Seq("__xh"),
+    (s, id) => hashFrame(emptyText(s, id), "__text", id.name))
+
+  /** The text intake history: [[BandHistory]] plus the EXACT-dedup hash
+    * history `_xh` — one (id, sha256(text)) row per accumulated
+    * document, bucketed on the hash: two narrow columns at any corpus
+    * size. The intake loop probes it ([[exactIncrementalDelta]]: batch
+    * hashes broadcast, the history never exchanges) to drop texts the
+    * corpus already accepted — the cheap pre-filter that spares the LSH
+    * probe, and the only way to catch SHORT exact duplicates (an empty
+    * shingle set never surfaces as an LSH candidate). Folded last: its
+    * probe reads main ∪ delta, so an unfolded `_xh` delta is simply
+    * still delta-side. */
+  val IntakeHistory = BandHistory ++ new History(Seq(hashTable("_xh")))
+
+  /** Canonical-URL history `<table>_url_xh` — the exact-hash table over
+    * canonical URLs ([[UrlOps.urlIncrementalDelta]]). */
+  val UrlHistory = new History(Seq(hashTable("_url_xh")))
+
+  /** Paragraph-hash history `_pg` ([[paragraphIncrementalDelta]]). */
+  val ParagraphHistory = new History(Seq(HistoryTable("_pg", _ => Seq("__ph"),
+    (s, id) => paragraphFrame(emptyText(s, id), "__text", id.name))))
+
+  /** Image dHash history `_ph` ([[imageIncrementalDelta]]). */
+  val ImageHistory = new History(Seq(HistoryTable("_ph", _ => Seq("__ph"),
+    (s, id) => imageRows(emptyIdentities(s, id), id.name))))
+
+  /** Audio band history `_ab` ([[audioIncrementalDelta]]). */
+  val AudioHistory = new History(Seq(HistoryTable("_ab", _ => Seq("__band", "__bucket"),
+    (s, id) => audioBandFrame(audioSigs(emptyIdentities(s, id), id.name)))))
+
+  /** Video history ([[videoIncrementalDelta]]): banded frame rows `_vb`
+    * and the vote denominators `_vn`. */
+  val VideoHistory = new History(Seq(
+    HistoryTable("_vb", _ => Seq("__fidx", "__band", "__bucket"),
+      (s, id) => videoBandFrame(videoFrameRows(emptyIdentities(s, id), id.name))),
+    HistoryTable("_vn", _ => Seq("__pid"),
+      (s, id) => videoCountRows(emptyIdentities(s, id), id.name))))
+
+  /** The three modality histories of a multimodal intake. */
+  val MultimodalHistory = ImageHistory ++ AudioHistory ++ VideoHistory
+
   /** Persist a document set's LSH state as the INCREMENTAL near-dedup
     * history: two bucketed tables,
     *
@@ -332,54 +535,6 @@ object Dedup {
       s"${table}_sh", Seq(idCol), numBuckets, mode)
   }
 
-  /** Create any MISSING half of a band history as an empty bucketed
-    * table, never touching an existing half — the crash-safe first-use
-    * init for the delta ingest loop. A blanket drop-and-rewrite on a
-    * missing `_sh` would destroy folded band rows in the deeper crash
-    * state (init half-crashed, deltas then partially compacted); per-
-    * table creation leaves whatever survived intact. `_sh` first,
-    * mirroring [[appendBandHistoryDelta]]'s write order. Signature
-    * parameters only shape the empty schemas and must match the
-    * probe's. */
-  def ensureBandHistory(spark: org.apache.spark.sql.SparkSession,
-      like: DataFrame, textCol: String, idCol: String, table: String,
-      numBuckets: Int, shingleN: Int = 3, numHashes: Int = 16,
-      bands: Int = 4): Unit = {
-    val empty = like.select(col(idCol), col(textCol)).limit(0)
-    // a half being created from scratch is DEFINED empty — its sibling
-    // delta dirs can only be leftovers of a destroyed prior incarnation
-    // (a new session over an old warehouse), and probing them would
-    // find phantom matches against rows that no longer exist
-    def create(t: String)(frame: DataFrame, keys: Seq[String]): Unit =
-      if (!spark.catalog.tableExists(t)) {
-        val delta = Layout.deltaDirOf(spark, t)
-        Layout.dropTableAndLocation(spark, t) // orphaned location
-        Layout.deleteDeltaState(spark, delta)
-        Layout.writeBucketed(frame, t, keys, numBuckets)
-      }
-    create(s"${table}_sh")(
-      shingleFrame(empty, textCol, idCol, shingleN), Seq(idCol))
-    create(table)(
-      bandedSignatures(empty, textCol, idCol, shingleN, numHashes, bands),
-      Seq("__band", "__bandsig"))
-  }
-
-  /** Drop a band history: both tables AND their warehouse locations.
-    * The location delete matters across sessions — with a non-durable
-    * metastore (the default in-memory Derby) a new session's catalog has
-    * no entry for the old table, `mode=overwrite` therefore takes the
-    * CREATE path, and `saveAsTable` refuses with
-    * LOCATION_ALREADY_EXISTS over the surviving directory. Callers that
-    * rebuild a history from scratch (rather than [[appendBandHistory]])
-    * should drop first. */
-  def dropBandHistory(spark: org.apache.spark.sql.SparkSession, table: String): Unit =
-    for (t <- Seq(table, s"${table}_sh")) {
-      // resolve the delta location while the catalog entry still exists
-      val delta = Layout.deltaDirOf(spark, t)
-      Layout.dropTableAndLocation(spark, t)
-      Layout.deleteDeltaState(spark, delta)
-    }
-
   /** Append a (deduped) batch to an existing band history — the write
     * half of the ingest loop: probe ([[minhashIncremental]]), drop dups
     * ([[nearDedupIncremental]]), append survivors. Spark appends to a
@@ -407,19 +562,19 @@ object Dedup {
     * matches whose Jaccard verification silently drops for missing
     * shingles. Probes see delta rows immediately
     * ([[minhashIncremental]] `includeDelta`); fold with
-    * [[compactBandDelta]] on whatever cadence bounds delta size.
+    * [[BandHistory]] on whatever cadence bounds delta size.
     *
     * A batch the fold manifest records as already folded
     * ([[Layout.foldManifestDirOf]]) is SKIPPED — the replay-after-fold
     * state, where re-appending would let the next fold duplicate the
     * batch's rows in the main tables permanently. The band table's
-    * manifest is the single gate for both writes: [[compactBandDelta]]
+    * manifest is the single gate for both writes: [[BandHistory]]
     * folds bands first, so a band-marked batch's shingles are either
     * folded too or still sitting in the `_sh` delta — either way a
     * skipped replay loses nothing. Corollary (the manifest contract):
     * batch ids must be monotonic over the table lifetime — one
     * streaming checkpoint; rebuild the history for a fresh stream. */
-  def appendBandHistoryDelta(spark: org.apache.spark.sql.SparkSession,
+  def appendBandHistoryDelta(spark: SparkSession,
       df: DataFrame, textCol: String, idCol: String, table: String,
       batchId: Long, shingleN: Int = 3, numHashes: Int = 16,
       bands: Int = 4): Unit = {
@@ -436,22 +591,6 @@ object Dedup {
     bandedOfShingles(shingled, idCol, numHashes, bands)
       .write.mode("overwrite")
       .parquet(s"${Layout.deltaDirOf(spark, table)}/batch-$batchId")
-  }
-
-  /** Fold both band-history delta directories back into their bucketed
-    * tables ([[Layout.foldDeltaIntoBucketed]] — commit-record rename,
-    * every crash state recoverable). Band table first: if the fold dies
-    * between the two, the just-folded band rows' shingles still live in
-    * the surviving `_sh` delta — which [[minhashIncremental]]'s
-    * verification reads as a coalesced second source precisely so that
-    * window stays correct (gating both legs on one delta dir would
-    * silently drop those pairs' Jaccard rows). */
-  def compactBandDelta(spark: org.apache.spark.sql.SparkSession,
-      table: String): Unit = {
-    Layout.foldDeltaIntoBucketed(spark, table,
-      noSpecHint = "not a writeBandHistory table")
-    Layout.foldDeltaIntoBucketed(spark, s"${table}_sh",
-      noSpecHint = "not a writeBandHistory table")
   }
 
   /** Compact a band history down to `survivors` (a frame carrying
@@ -479,7 +618,7 @@ object Dedup {
     * by `(__band, __bandsig)`, so the id semi-join is its one full
     * shuffle — that is the price of compaction, paid rarely and
     * amortized over every probe that no longer drags dead bands. */
-  def compactBandHistory(spark: org.apache.spark.sql.SparkSession,
+  def compactBandHistory(spark: SparkSession,
       table: String, survivors: DataFrame, idCol: String): Unit = {
     require(survivors.columns.contains(idCol),
       s"survivors frame lacks id column '$idCol'")
@@ -506,35 +645,6 @@ object Dedup {
     }
   }
 
-  /** EXACT-dedup HASH HISTORY — the third table of the intake family
-    * (`<table>_xh`): one (id, sha256(text)) row per accumulated
-    * document, bucketed on the hash, maintained under the same
-    * delta-subdirectory + fold-manifest discipline as the band tables.
-    * The streaming intake loop probes it to drop batch rows whose text
-    * the corpus has already accepted — the cheap pre-filter that spares
-    * the LSH probe the load, and the only way to catch SHORT exact
-    * duplicates (docs whose shingle set is empty never surface as LSH
-    * candidates at any threshold).
-    *
-    * Scale shape: the table is two narrow columns regardless of corpus
-    * text volume, and the probe ([[exactIncrementalDelta]]) broadcasts
-    * the batch's hashes — the history side never exchanges. Creates
-    * only a MISSING table (the [[ensureBandHistory]] crash-safe
-    * discipline), clearing stale delta state from a destroyed prior
-    * incarnation. */
-  def ensureHashHistory(spark: org.apache.spark.sql.SparkSession,
-      like: DataFrame, textCol: String, idCol: String, table: String,
-      numBuckets: Int): Unit = {
-    val t = s"${table}_xh"
-    if (!spark.catalog.tableExists(t)) {
-      val delta = Layout.deltaDirOf(spark, t)
-      Layout.dropTableAndLocation(spark, t)
-      Layout.deleteDeltaState(spark, delta)
-      Layout.writeBucketed(hashFrame(like, textCol, idCol).limit(0),
-        t, Seq("__xh"), numBuckets)
-    }
-  }
-
   /** The hash-history row shape: (__xid, __xh). Columns are renamed —
     * not the caller's names — so the probe's history-vs-batch join
     * conditions never collide with batch columns. NULL texts are
@@ -549,29 +659,10 @@ object Dedup {
     * fold manifest records the batch as already folded (the
     * [[appendBandHistoryDelta]] discipline; same monotonic-batch-id
     * contract). */
-  def appendHashHistoryDelta(spark: org.apache.spark.sql.SparkSession,
+  def appendHashHistoryDelta(spark: SparkSession,
       df: DataFrame, textCol: String, idCol: String, table: String,
-      batchId: Long): Unit = {
-    val t = s"${table}_xh"
-    if (Layout.isBatchFolded(spark, t, batchId)) return
-    hashFrame(df, textCol, idCol).write.mode("overwrite")
-      .parquet(s"${Layout.deltaDirOf(spark, t)}/batch-$batchId")
-  }
-
-  /** Fold the hash-history delta into its bucketed table (commit-record
-    * + manifest protocol — [[Layout.foldDeltaIntoBucketed]]). */
-  def compactHashDelta(spark: org.apache.spark.sql.SparkSession,
-      table: String): Unit =
-    Layout.foldDeltaIntoBucketed(spark, s"${table}_xh",
-      noSpecHint = "not an ensureHashHistory table")
-
-  /** Drop a hash history (table + location + delta state). */
-  def dropHashHistory(spark: org.apache.spark.sql.SparkSession, table: String): Unit = {
-    val t = s"${table}_xh"
-    val delta = Layout.deltaDirOf(spark, t)
-    Layout.dropTableAndLocation(spark, t)
-    Layout.deleteDeltaState(spark, delta)
-  }
+      batchId: Long): Unit =
+    appendDelta(spark, s"${table}_xh", batchId)(hashFrame(df, textCol, idCol))
 
   /** L1 incremental against a persisted hash history (main ∪ delta) —
     * the exact-dedup stage of the streaming intake loop: batch rows
@@ -587,17 +678,12 @@ object Dedup {
     * only two narrow columns — is semi-FILTERED map-side to the
     * matching (id, hash) rows, and those broadcast back for the
     * anti-join. Neither side ever shuffles. */
-  def exactIncrementalDelta(spark: org.apache.spark.sql.SparkSession,
+  def exactIncrementalDelta(spark: SparkSession,
       newDf: DataFrame, table: String, textCol: String, idCol: String,
       includeDelta: Boolean = true): DataFrame = {
     val t = s"${table}_xh"
     val h = hashName(newDf)
-    val deltaP = new org.apache.hadoop.fs.Path(Layout.deltaDirOf(spark, t))
-    val fs = deltaP.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    val hist =
-      if (includeDelta && fs.exists(deltaP))
-        spark.table(t).unionByName(Layout.readDelta(spark, t, deltaP.toString))
-      else spark.table(t)
+    val hist = if (includeDelta) withDelta(spark, t) else spark.table(t)
     val batchKeys = newDf.where(col(textCol).isNotNull)
       .select(sha2(col(textCol), 256).alias(h))
     // hits is bounded by the batch's key set whenever the history is
@@ -637,35 +723,28 @@ object Dedup {
     *   operator exists to avoid). Degenerate batch content lands in
     *   oversized buckets and is sidelined exactly as in
     *   [[minhashCandidates]]; pass Int.MaxValue to verify recall. */
-  def minhashIncremental(spark: org.apache.spark.sql.SparkSession,
+  def minhashIncremental(spark: SparkSession,
       newDf: DataFrame, historyTable: String, textCol: String, idCol: String,
       shingleN: Int = 3, numHashes: Int = 16, bands: Int = 4,
       maxBucket: Int = 128, includeDelta: Boolean = true): DataFrame = {
     val batch = bandedSignatures(newDf, textCol, idCol, shingleN, numHashes, bands)
     val boundedRaw = dropOversizedBuckets(batch, Seq("__band", "__bandsig"), maxBucket)
-    val newShRaw = shingleFrame(newDf, textCol, idCol, shingleN)
-    val hconf = spark.sparkContext.hadoopConfiguration
-    val bandDelta = new org.apache.hadoop.fs.Path(
-      Layout.deltaDirOf(spark, historyTable))
-    val shDelta = new org.apache.hadoop.fs.Path(
-      Layout.deltaDirOf(spark, s"${historyTable}_sh"))
-    val fs = bandDelta.getFileSystem(hconf)
-    // the two delta dirs are gated INDEPENDENTLY: compactBandDelta folds
+    val newSh = shingleFrame(newDf, textCol, idCol, shingleN)
+    // the two delta dirs are gated INDEPENDENTLY: BandHistory folds
     // the band table first, so a crash (or a racing probe) between the
     // two folds sees band rows already in the main table whose shingles
     // still live only in the surviving _sh delta — verification must be
     // able to find them there
-    val useBandDelta = includeDelta && fs.exists(bandDelta)
-    val useShDelta = includeDelta && fs.exists(shDelta)
+    val bandDelta = if (includeDelta) deltaOf(spark, historyTable) else None
+    val shDelta = if (includeDelta) deltaOf(spark, s"${historyTable}_sh") else None
     // both band legs share the batch-side signature pipeline — when a
     // delta leg exists, materialize it once (tiny: one batch) or each
     // leg would recompute the shingle + hash pass. The shingle frame
     // needs no barrier: since verification unified into one join it is
     // referenced exactly once
     val bounded =
-      if (useBandDelta) boundedRaw.localCheckpoint(eager = true)
+      if (bandDelta.isDefined) boundedRaw.localCheckpoint(eager = true)
       else boundedRaw
-    val newSh = newShRaw
     // the MAIN leg keeps the zero-exchange property (bucketed layout on
     // exactly the join keys, PlanSpec-pinned), the DELTA leg is a
     // small×small join (batch × un-compacted appends) — probing the
@@ -698,12 +777,8 @@ object Dedup {
     // flagged as its own duplicate, so it lands again). The pair
     // contract is one row per (id_new, id_hist): dedup across legs —
     // the pair set is candidate-sized, so the extra exchange is noise
-    val pairs =
-      if (useBandDelta)
-        mainPairs.unionByName(bandPairs(
-          Layout.readDelta(spark, historyTable, bandDelta.toString)))
-          .distinct()
-      else mainPairs
+    val pairs = bandDelta.fold(mainPairs)(d =>
+      mainPairs.unionByName(bandPairs(d)).distinct())
     // shingle verification looks a pair's history side up in BOTH
     // sources (main `_sh` bucketed-by-id — still exchange-free as the
     // left-join's bucketed side — and the `_sh` delta when present,
@@ -716,8 +791,7 @@ object Dedup {
       .join(spark.table(s"${historyTable}_sh")
         .select(col(idCol).alias("id_hist"), col("__sh").alias("__sh_m")),
         Seq("id_hist"), "left")
-    val withSh =
-      if (useShDelta)
+    val withSh = shDelta.fold(verified.withColumn("__sh_h", col("__sh_m"))) { d =>
         verified
           // one shingle row per id: a redelivered document (see the
           // pair-union note) holds a row in TWO delta batch dirs — an
@@ -725,111 +799,14 @@ object Dedup {
           // byte-identical (the shingle frame is a pure function of the
           // text), so keeping either is correct; coalesce below still
           // prefers the main-source row when both sources hit
-          .join(Layout.readDelta(spark, s"${historyTable}_sh", shDelta.toString)
-            .select(col(idCol).alias("id_hist"), col("__sh").alias("__sh_d"))
+          .join(d.select(col(idCol).alias("id_hist"), col("__sh").alias("__sh_d"))
             .dropDuplicates("id_hist"),
             Seq("id_hist"), "left")
           .withColumn("__sh_h", coalesce(col("__sh_m"), col("__sh_d")))
-      else verified.withColumn("__sh_h", col("__sh_m"))
+      }
     withSh.where(col("__sh_h").isNotNull) // inner-join semantics, either source
       .select(col("id_new"), col("id_hist"),
         TF.jaccard(col("sh_n"), col("__sh_h")).alias("jaccard"))
-  }
-
-  /** The intake history = band history (near-dedup) + hash history
-    * (exact dedup), managed as one unit by the streaming intake loop
-    * ([[graft.streaming.StreamOps.intakeBatch]]). Creates whichever
-    * tables are missing (crash-safe per-table, like
-    * [[ensureBandHistory]]). */
-  def ensureIntakeHistory(spark: org.apache.spark.sql.SparkSession,
-      like: DataFrame, textCol: String, idCol: String, table: String,
-      numBuckets: Int): Unit = {
-    ensureBandHistory(spark, like, textCol, idCol, table, numBuckets)
-    ensureHashHistory(spark, like, textCol, idCol, table, numBuckets)
-  }
-
-  /** Fold all three intake delta directories (band, `_sh`, `_xh`) into
-    * their bucketed tables. Band tables first ([[compactBandDelta]]'s
-    * crash-window ordering), hash last — a crash anywhere leaves every
-    * probe correct: the hash probe reads main ∪ delta, so an unfolded
-    * `_xh` delta is simply still delta-side. */
-  def compactIntakeDelta(spark: org.apache.spark.sql.SparkSession,
-      table: String): Unit = {
-    compactBandDelta(spark, table)
-    compactHashDelta(spark, table)
-  }
-
-  /** Drop an intake history: all three tables + locations + delta
-    * state, plus the optional paragraph-leg `_pg` table when the loop
-    * ran with paragraph dedup on (a no-op otherwise). */
-  def dropIntakeHistory(spark: org.apache.spark.sql.SparkSession, table: String): Unit = {
-    dropBandHistory(spark, table)
-    dropHashHistory(spark, table)
-    dropParagraphHistory(spark, table)
-  }
-
-  /** AUTO-compaction policy for intake histories — the measured-trigger
-    * discipline [[Similarity.ivfAging]] established, applied to the
-    * delta/main layout: fold when the accumulated delta bytes (summed
-    * over the band, `_sh` and `_xh` sub-tables) reach `maxDeltaRatio`
-    * of the bucketed mains. Delta bytes are what the delta probe legs
-    * pay per micro-batch (main ∪ delta unions), so the trigger bounds
-    * steady-state probe cost at ≤ (1 + ratio)× the folded cost while
-    * amortizing fold work against real growth — an empty or tiny main
-    * folds immediately (cheap), a 100 TB main folds only after the
-    * deltas have earned it. The measurement is filesystem metadata
-    * ([[Layout.deltaMainBytes]]), no jobs — safe to call on every
-    * micro-batch.
-    *
-    * Crash states are the fold protocol's own
-    * ([[Layout.foldDeltaIntoBucketed]]'s decidable commit-record
-    * states, plus the fold manifest that keeps REPLAYED batches from
-    * re-appending across an auto-triggered fold) — the policy adds no
-    * new state, it only decides WHEN to enter the protocol. Returns
-    * true when a fold ran. */
-  def compactIntakeIfNeeded(spark: org.apache.spark.sql.SparkSession,
-      table: String, maxDeltaRatio: Double = 0.10): Boolean = {
-    require(maxDeltaRatio > 0, "maxDeltaRatio must be positive")
-    val (d, m) = Seq(table, s"${table}_sh", s"${table}_xh")
-      .map(Layout.deltaMainBytes(spark, _))
-      .reduce((a, b) => (a._1 + b._1, a._2 + b._2))
-    val fold = d > 0 && d >= maxDeltaRatio * m
-    if (fold) compactIntakeDelta(spark, table)
-    fold
-  }
-
-  /** [[compactIntakeIfNeeded]] for an audio band history (`_ab`). */
-  def compactAudioIfNeeded(spark: org.apache.spark.sql.SparkSession,
-      table: String, maxDeltaRatio: Double = 0.10): Boolean = {
-    require(maxDeltaRatio > 0, "maxDeltaRatio must be positive")
-    val (d, m) = Layout.deltaMainBytes(spark, s"${table}_ab")
-    val fold = d > 0 && d >= maxDeltaRatio * m
-    if (fold) compactAudioDelta(spark, table)
-    fold
-  }
-
-  /** [[compactIntakeIfNeeded]] for an image hash history (`_ph`). */
-  def compactImageIfNeeded(spark: org.apache.spark.sql.SparkSession,
-      table: String, maxDeltaRatio: Double = 0.10): Boolean = {
-    require(maxDeltaRatio > 0, "maxDeltaRatio must be positive")
-    val (d, m) = Layout.deltaMainBytes(spark, s"${table}_ph")
-    val fold = d > 0 && d >= maxDeltaRatio * m
-    if (fold) compactImageDelta(spark, table)
-    fold
-  }
-
-  /** [[compactIntakeIfNeeded]] for a video history (`_vb` band table +
-    * `_vn` vote-denominator table, folded as one unit — the
-    * [[compactVideoDelta]] crash-window ordering). */
-  def compactVideoIfNeeded(spark: org.apache.spark.sql.SparkSession,
-      table: String, maxDeltaRatio: Double = 0.10): Boolean = {
-    require(maxDeltaRatio > 0, "maxDeltaRatio must be positive")
-    val (d, m) = Seq(s"${table}_vb", s"${table}_vn")
-      .map(Layout.deltaMainBytes(spark, _))
-      .reduce((a, b) => (a._1 + b._1, a._2 + b._2))
-    val fold = d > 0 && d >= maxDeltaRatio * m
-    if (fold) compactVideoDelta(spark, table)
-    fold
   }
 
   /** L2 incremental, applied — drop every batch row near-duplicating the
@@ -838,7 +815,7 @@ object Dedup {
     * [[appendBandHistory]] the survivors — the full ingest loop, tested
     * end-to-end in DedupSpec). Same localCheckpoint barrier rationale as
     * [[nearDedupMinhash]]. */
-  def nearDedupIncremental(spark: org.apache.spark.sql.SparkSession,
+  def nearDedupIncremental(spark: SparkSession,
       newDf: DataFrame, historyTable: String, textCol: String, idCol: String,
       threshold: Double = 0.8, shingleN: Int = 3, numHashes: Int = 16,
       bands: Int = 4, maxBucket: Int = 128,
@@ -887,7 +864,13 @@ object Dedup {
     * Returns (id, cluster) for EVERY row of `df` — isolated docs map to
     * themselves — so callers can either filter `id === cluster` for the
     * survivors or join back for a full dedup map (the shape a 100 TB
-    * pipeline wants: the map is reusable across downstream tables). */
+    * pipeline wants: the map is reusable across downstream tables).
+    *
+    * Barrier trade: [[minhashCandidates]]' shingle checkpoint and
+    * [[Graph.connectedComponents]]' per-round edge checkpoints are all
+    * `localCheckpoint`s — lineage-truncated executor blocks, so an
+    * executor lost mid-run fails the job rather than recomputing, and
+    * the caller reruns it (the operator is deterministic). */
   def nearDupClusters(df: DataFrame, textCol: String, idCol: String,
       threshold: Double = 0.8, maxBucket: Int = 128): DataFrame = {
     // no persist needed: connectedComponents localCheckpoints its edge
@@ -895,144 +878,114 @@ object Dedup {
     val pairs = minhashCandidates(df, textCol, idCol, maxBucket = maxBucket)
       .where(col("jaccard") >= threshold)
       .select(col("id_a"), col("id_b"))
-    Graph.connectedComponents(pairs, "id_a", "id_b",
-        nodes = Some(df.select(col(idCol))), assumeDistinct = true)
-      .select(col("id").alias(idCol), col("component").alias("cluster"))
+    clustersOf(pairs, df, idCol)
   }
+
+  // ---- MULTIMODAL identity families: image `_ph`, audio `_ab`, video
+  // `_vb`/`_vn`. Every operator below consumes an IDENTITY frame —
+  // (idCol, __ph long, __asig long, __fhs array<long>) from
+  // [[Multimodal.multimodalIdentities]], ONE decode pass over a batch's
+  // payload bytes that the caller materializes once — and returns
+  // identity rows (the surviving subset) or an (id, cluster) map, never
+  // payloads; every history-delta append projects from the same frame.
+  // A caller holding payloads computes the identities once and
+  // semi-joins the survivors back by id. A NULL identity column (the
+  // payload does not decode as that modality) is never a duplicate
+  // class: such rows pass every stage untouched, which is what lets one
+  // image → audio → video chain route a mixed corpus with no modality
+  // detector. Payloads never cross a shuffle anywhere in the family. ----
+
+  /** Hamming tolerance of image dHash identity in
+    * [[imageNearDupClusters]] (a lossy re-encode moves a few bits). */
+  val ImageMaxDist = 3
+
+  /** (id, cluster) map from candidate pairs: connected components over
+    * (id_a, id_b), every row of `nodes` present — isolated rows map to
+    * themselves. The node ids go through a distinct so the
+    * isolated-node pass runs on hash partitions of the id: once AQE
+    * turns that anti-join into a broadcast it reads its other side
+    * locally, and a bare projection would inherit the source's
+    * partition sizes — an identity frame over a lopsided union (an
+    * opaque `mapPartitions` the anti-join cannot be pushed beneath)
+    * put half a source partition in each task (ScaleSpec audio). */
+  private def clustersOf(pairs: DataFrame, nodes: DataFrame,
+      idCol: String): DataFrame =
+    Graph.connectedComponents(pairs, "id_a", "id_b",
+        nodes = Some(nodes.select(col(idCol)).distinct()),
+        assumeDistinct = true)
+      .select(col("id").alias(idCol), col("component").alias("cluster"))
 
   /** Cluster-resolved IMAGE near-dedup — [[nearDupClusters]] with
-    * perceptual identity instead of shingles: dHash the decoded
-    * rasters ([[Multimodal.imageDHash]]; undecodable payloads keep a
-    * null signature and their own singleton cluster — "no identity" is
-    * not bucket 0), band the 64-bit signatures, connect components
-    * over pairs within `maxDist`, keep each cluster's minimum id. The
-    * survivor frame joins back to the caller's columns by id, so the
-    * image payloads themselves never enter the shuffle — 8 bytes per
-    * image, exactly the text path's discipline. */
-  def imageNearDupClusters(df: DataFrame, payloadCol: String, idCol: String,
-      maxDist: Int = 3, maxBucket: Int = 1024): DataFrame = {
-    // maxDist=0 would wire a single 64-bit band (nBands = maxDist + 1),
-    // which the band-mask guard in simhashCandidatesOfSigs rejects —
-    // catch it here with the caller-level story: exact dHash identity
-    // is [[imageExact]]'s job, the banded join needs >= 2 bands
-    require(maxDist >= 1,
-      "imageNearDupClusters needs maxDist >= 1 (for dHash-exact identity use imageExact)")
-    val sigs = Multimodal.imageDHash(
-        df.select(col(idCol), col(payloadCol)), payloadCol, "__dhash")
-      .select(col(idCol), col("__dhash"))
-    val pairs = simhashCandidatesOfSigs(sigs.where(col("__dhash").isNotNull),
-        idCol, "__dhash", maxDist, nBands = maxDist + 1, bits = 64,
+    * perceptual identity instead of shingles: band the 64-bit dHash
+    * signatures (`__ph`; null-hash rows keep their own singleton
+    * cluster — "no identity" is not bucket 0), connect components over
+    * pairs within [[ImageMaxDist]], keep each cluster's minimum id.
+    * 8 bytes per image enter the shuffle, exactly the text path's
+    * discipline. */
+  def imageNearDupClusters(ident: DataFrame, idCol: String,
+      maxBucket: Int = 1024): DataFrame = {
+    val pairs = simhashCandidatesOfSigs(
+        ident.where(col("__ph").isNotNull).select(col(idCol), col("__ph")),
+        idCol, "__ph", ImageMaxDist, nBands = ImageMaxDist + 1, bits = 64,
         maxBucket = maxBucket)
       .select(col("id_a"), col("id_b"))
-    Graph.connectedComponents(pairs, "id_a", "id_b",
-        nodes = Some(df.select(col(idCol))), assumeDistinct = true)
-      .select(col("id").alias(idCol), col("component").alias("cluster"))
+    clustersOf(pairs, ident, idCol)
   }
 
-  /** Within-batch IMAGE exact dedup — [[exact]] keyed on the perceptual
-    * hash instead of sha256(text): rows whose decoded rasters share a
-    * dHash keep only the minimum id (a PNG re-encode of the same pixels
-    * IS the same image; byte-identity would miss it). Undecodable
-    * payloads (null dHash) pass through untouched — "no identity" is
-    * the NULL-text family contract, not a duplicate class. */
-  def imageExact(df: DataFrame, payloadCol: String, idCol: String): DataFrame = {
-    val h = graft.Cols.fresh(df.columns, "__ph")
-    val rn = graft.Cols.fresh(df.columns :+ h, "__rn")
-    val hashed = Multimodal.imageDHash(df, payloadCol, h)
-    val w = Window.partitionBy(col(h)).orderBy(col(idCol))
-    hashed.where(col(h).isNotNull)
+  /** Within-batch IMAGE exact dedup — [[exact]] keyed on the dHash
+    * (`__ph`) instead of sha256(text): rows whose decoded rasters share
+    * a dHash keep only the minimum id (a PNG re-encode of the same
+    * pixels IS the same image; byte identity would miss it). Null-hash
+    * rows pass through. Returns the surviving identity rows. */
+  def imageExact(ident: DataFrame, idCol: String): DataFrame = {
+    val rn = graft.Cols.fresh(ident.columns, "__rn")
+    val w = Window.partitionBy(col("__ph")).orderBy(col(idCol))
+    ident.where(col("__ph").isNotNull)
       .withColumn(rn, row_number().over(w))
       .where(col(rn) === 1)
-      .drop(h, rn)
-      .unionByName(hashed.where(col(h).isNull).drop(h))
+      .drop(rn)
+      .unionByName(ident.where(col("__ph").isNull))
   }
 
-  /** IMAGE perceptual-hash HISTORY (`<table>_ph`) — the [[ensureHashHistory]]
-    * discipline keyed on dHash: one (id, dhash) row per accumulated
-    * image, bucketed on the hash, same delta-subdirectory +
-    * fold-manifest replay safety. Two narrow columns at any corpus
-    * size; the probe broadcasts batch hashes and the history never
-    * exchanges — image payloads never cross a shuffle anywhere in the
-    * family. */
-  def ensureImageHistory(spark: org.apache.spark.sql.SparkSession,
-      like: DataFrame, payloadCol: String, idCol: String, table: String,
-      numBuckets: Int): Unit = {
-    val t = s"${table}_ph"
-    if (!spark.catalog.tableExists(t)) {
-      val delta = Layout.deltaDirOf(spark, t)
-      Layout.dropTableAndLocation(spark, t)
-      Layout.deleteDeltaState(spark, delta)
-      Layout.writeBucketed(imageHashFrame(like, payloadCol, idCol).limit(0),
-        t, Seq("__ph"), numBuckets)
-    }
-  }
-
-  /** The image-history row shape: (__pid, __ph). Renamed so probe join
-    * conditions never collide with batch columns; undecodable payloads
-    * are excluded — nothing can ever match a missing identity. */
-  private def imageHashFrame(df: DataFrame, payloadCol: String,
-      idCol: String): DataFrame =
-    Multimodal.imageDHash(df.select(col(idCol), col(payloadCol)), payloadCol, "__ph")
-      .where(col("__ph").isNotNull)
-      .select(col(idCol).alias("__pid"), col("__ph"))
+  /** The image-history row shape (`<table>_ph`, bucketed on the hash):
+    * (__pid, __ph) — renamed so probe join conditions never collide
+    * with batch columns; rows without an image identity are excluded,
+    * nothing can ever match them. */
+  private def imageRows(ident: DataFrame, idCol: String): DataFrame =
+    ident.where(col("__ph").isNotNull).select(col(idCol).alias("__pid"), col("__ph"))
 
   /** Replay-safe delta append to an image history (the
     * [[appendHashHistoryDelta]] contract: overwrite-own-dir per batch,
-    * fold-manifest skip). */
-  def appendImageHistoryDelta(spark: org.apache.spark.sql.SparkSession,
-      df: DataFrame, payloadCol: String, idCol: String, table: String,
-      batchId: Long): Unit = {
-    val t = s"${table}_ph"
-    if (Layout.isBatchFolded(spark, t, batchId)) return
-    imageHashFrame(df, payloadCol, idCol).write.mode("overwrite")
-      .parquet(s"${Layout.deltaDirOf(spark, t)}/batch-$batchId")
-  }
-
-  /** Fold the image-history delta into its bucketed table. */
-  def compactImageDelta(spark: org.apache.spark.sql.SparkSession,
-      table: String): Unit =
-    Layout.foldDeltaIntoBucketed(spark, s"${table}_ph",
-      noSpecHint = "not an ensureImageHistory table")
-
-  /** Drop an image history (table + location + delta state). */
-  def dropImageHistory(spark: org.apache.spark.sql.SparkSession,
-      table: String): Unit = {
-    val t = s"${table}_ph"
-    val delta = Layout.deltaDirOf(spark, t)
-    Layout.dropTableAndLocation(spark, t)
-    Layout.deleteDeltaState(spark, delta)
-  }
+    * fold-manifest skip). The three modality appends are independent
+    * writes; the intake loops issue them in one fixed order (image,
+    * audio, video), so every crash prefix leaves every probe correct. */
+  def appendImageHistoryDelta(spark: SparkSession, ident: DataFrame,
+      idCol: String, table: String, batchId: Long): Unit =
+    appendDelta(spark, s"${table}_ph", batchId)(imageRows(ident, idCol))
 
   /** Incremental image dedup against a persisted perceptual-hash
     * history (main ∪ delta) — [[exactIncrementalDelta]] for images:
     * batch rows whose dHash the history holds under a DIFFERENT id are
     * dropped (the same-id exclusion is the replay guard — a replayed
     * batch meeting its own appended hashes recomputes the identical
-    * survivor set). Undecodable payloads pass through: a null hash
-    * matches nothing, so the anti-join keeps them by construction.
+    * survivor set). Null-hash rows pass through: they match nothing,
+    * so the anti-join keeps them by construction.
     *
     * Scale shape: batch hashes broadcast, the history is semi-filtered
     * map-side to matching rows and those broadcast back — neither side
     * ever shuffles, and only (id, long) pairs move. */
-  def imageIncrementalDelta(spark: org.apache.spark.sql.SparkSession,
-      newDf: DataFrame, table: String, payloadCol: String, idCol: String,
-      includeDelta: Boolean = true): DataFrame = {
-    val t = s"${table}_ph"
-    // distinct from the history's own "__ph" — a same-named batch column
-    // makes the join condition's reference ambiguous
-    val h = graft.Cols.fresh(newDf.columns :+ "__ph", "__bph")
-    val deltaP = new org.apache.hadoop.fs.Path(Layout.deltaDirOf(spark, t))
-    val fs = deltaP.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    val hist =
-      if (includeDelta && fs.exists(deltaP))
-        spark.table(t).unionByName(Layout.readDelta(spark, t, deltaP.toString))
-      else spark.table(t)
-    val hashed = Multimodal.imageDHash(newDf, payloadCol, h)
-    val batchKeys = hashed.where(col(h).isNotNull).select(col(h))
-    val hits = hist.join(broadcast(batchKeys), col("__ph") === col(h), "left_semi")
-    hashed.join(broadcast(hits),
-        col("__ph") === col(h) && col("__pid") =!= col(idCol), "left_anti")
-      .drop(h)
+  def imageIncrementalDelta(spark: SparkSession, ident: DataFrame,
+      table: String, idCol: String): DataFrame = {
+    // the history's own column is "__ph" — rename the batch side so the
+    // join condition's references stay unambiguous
+    val bph = graft.Cols.fresh(ident.columns :+ "__pid", "__bph")
+    val b = ident.withColumnRenamed("__ph", bph)
+    val batchKeys = b.where(col(bph).isNotNull).select(col(bph))
+    val hits = withDelta(spark, s"${table}_ph")
+      .join(broadcast(batchKeys), col("__ph") === col(bph), "left_semi")
+    b.join(broadcast(hits),
+        col("__ph") === col(bph) && col("__pid") =!= col(idCol), "left_anti")
+      .withColumnRenamed(bph, "__ph")
   }
 
   // ---- AUDIO identity family (the image `_ph` discipline over
@@ -1083,19 +1036,15 @@ object Dedup {
     s"AudioMaxDist=$AudioMaxDist breaks the $AudioBands-band 1-bit-flip " +
       s"recall guarantee (needs <= ${2 * AudioBands - 1})")
 
-  /** The audio-history row shape: (__pid, __asig). Payloads that do not
-    * decode (or are too short to frame) carry no identity and are
-    * excluded — nothing can ever match them. */
-  private def audioSigFrame(df: DataFrame, payloadCol: String,
-      idCol: String): DataFrame =
-    Multimodal.audioFingerprint(df.select(col(idCol), col(payloadCol)),
-        payloadCol, "__asig")
-      .where(col("__asig").isNotNull)
-      .select(col(idCol).alias("__pid"), col("__asig"))
+  /** The audio fingerprints of an identity frame: (__pid, __asig), rows
+    * without an audio identity excluded. */
+  private def audioSigs(ident: DataFrame, idCol: String): DataFrame =
+    ident.where(col("__asig").isNotNull).select(col(idCol).alias("__pid"), col("__asig"))
 
   /** Banded form of a (__pid, __asig) frame: one EXACT row per (band,
-    * bucket) — the stored/history side. Probes come from
-    * [[audioProbeFrame]]'s flip balls. */
+    * bucket) — the stored/history side (`<table>_ab`, bucketed on
+    * exactly the probe join's keys (__band, __bucket)). Probes come
+    * from [[audioProbeFrame]]'s flip balls. */
   private def audioBandFrame(sigs: DataFrame): DataFrame =
     sigs.select(col("__pid"), col("__asig"),
         posexplode(array((0 until AudioBands).map(b =>
@@ -1161,84 +1110,57 @@ object Dedup {
       .distinct()
   }
 
-  /** Create the audio band history (`<table>_ab`) if missing — the
-    * [[ensureImageHistory]] contract, banded rows bucketed on exactly
-    * the probe join's keys (__band, __bucket). */
-  def ensureAudioHistory(spark: org.apache.spark.sql.SparkSession,
-      like: DataFrame, payloadCol: String, idCol: String, table: String,
-      numBuckets: Int): Unit = {
-    val t = s"${table}_ab"
-    if (!spark.catalog.tableExists(t)) {
-      val delta = Layout.deltaDirOf(spark, t)
-      Layout.dropTableAndLocation(spark, t)
-      Layout.deleteDeltaState(spark, delta)
-      Layout.writeBucketed(
-        audioBandFrame(audioSigFrame(like, payloadCol, idCol).limit(0)),
-        t, Seq("__band", "__bucket"), numBuckets)
-    }
+  /** Cluster-resolved AUDIO near-dedup — [[imageNearDupClusters]] over
+    * spectral fingerprints: wide-band + flip-probe candidates
+    * ([[audioCandidates]]), connect components within
+    * [[AudioMaxDist]], keep each cluster's minimum id. */
+  def audioNearDupClusters(ident: DataFrame, idCol: String,
+      maxBucket: Int = 1024): DataFrame = {
+    val pairs = audioCandidates(audioSigs(ident, idCol), "__pid", "__asig",
+        maxBucket = maxBucket)
+      .select(col("id_a"), col("id_b"))
+    clustersOf(pairs, ident, idCol)
   }
 
-  /** Replay-safe delta append to an audio history (overwrite-own-dir
-    * per batch, fold-manifest skip — the [[appendImageHistoryDelta]]
-    * contract). */
-  def appendAudioHistoryDelta(spark: org.apache.spark.sql.SparkSession,
-      df: DataFrame, payloadCol: String, idCol: String, table: String,
-      batchId: Long): Unit = {
-    val t = s"${table}_ab"
-    if (Layout.isBatchFolded(spark, t, batchId)) return
-    audioBandFrame(audioSigFrame(df, payloadCol, idCol)).write.mode("overwrite")
-      .parquet(s"${Layout.deltaDirOf(spark, t)}/batch-$batchId")
-  }
-
-  /** Fold the audio-history delta into its bucketed table. */
-  def compactAudioDelta(spark: org.apache.spark.sql.SparkSession,
-      table: String): Unit =
-    Layout.foldDeltaIntoBucketed(spark, s"${table}_ab",
-      noSpecHint = "not an ensureAudioHistory table")
-
-  /** Drop an audio history (table + location + delta state). */
-  def dropAudioHistory(spark: org.apache.spark.sql.SparkSession,
-      table: String): Unit = {
-    val t = s"${table}_ab"
-    val delta = Layout.deltaDirOf(spark, t)
-    Layout.dropTableAndLocation(spark, t)
-    Layout.deleteDeltaState(spark, delta)
-  }
+  /** Replay-safe delta append to an audio history — banded rows, the
+    * [[appendImageHistoryDelta]] contract. */
+  def appendAudioHistoryDelta(spark: SparkSession, ident: DataFrame,
+      idCol: String, table: String, batchId: Long): Unit =
+    appendDelta(spark, s"${table}_ab", batchId)(audioBandFrame(audioSigs(ident, idCol)))
 
   /** Incremental audio dedup against a persisted band history
     * (main ∪ delta): batch rows whose fingerprint lies within
     * [[AudioMaxDist]] of a history row under a DIFFERENT id are
-    * dropped. Same-id exclusion is the replay guard; undecodable
-    * payloads (null fingerprint) pass through by construction.
+    * dropped. Same-id exclusion is the replay guard; rows without an
+    * audio identity pass through by construction.
     *
     * Scale shape: the batch's flip-ball probe rows broadcast
     * (AudioBands × (AudioBandBits+1) = 5 × 13 = 65 small rows per
     * item); the MAIN history leg joins them against the bucketed
     * (__band, __bucket) layout with no history-side exchange, the
     * delta leg is small×small; only (id, long) pairs ever move. */
-  def audioIncrementalDelta(spark: org.apache.spark.sql.SparkSession,
-      newDf: DataFrame, table: String, payloadCol: String, idCol: String,
-      includeDelta: Boolean = true, maxBucket: Int = 1024): DataFrame = {
+  def audioIncrementalDelta(spark: SparkSession, ident: DataFrame,
+      table: String, idCol: String, maxBucket: Int = 1024): DataFrame = {
     val t = s"${table}_ab"
-    val h = graft.Cols.fresh(newDf.columns :+ "__asig", "__bsig")
-    val deltaP = new org.apache.hadoop.fs.Path(Layout.deltaDirOf(spark, t))
-    val fs = deltaP.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    val hashed = Multimodal.audioFingerprint(newDf, payloadCol, h)
+    val delta = deltaOf(spark, t)
     // batch side carries the FLIP-BALL probes (13 rows per band per
     // item — still batch-sized and broadcastable); the history keeps
     // one exact row per band, so the persisted layout never grows
     // with the probe geometry. Oversized probe groups are sidelined
     // (the audioCandidates probe-side cap): a batch-side
     // mass-duplicate class must not star-join the history.
-    val batchBands = dropOversizedBuckets(audioProbeFrame(
-        hashed.where(col(h).isNotNull)
-          .select(col(idCol).alias("__pid"), col(h).alias("__asig"))),
+    val bandsRaw = dropOversizedBuckets(audioProbeFrame(audioSigs(ident, idCol)),
         Seq("__band", "__bucket"), maxBucket)
       .select(col("__band").alias("__bband"), col("__bucket").alias("__bbucket"),
         col("__pid").alias("__bid"), col("__asig").alias("__bsig2"))
-      // one shared signature pipeline for both legs (the
-      // minhashIncremental barrier rationale); batch-sized
-      .localCheckpoint(eager = true)
+    // the probe pipeline is shared by the main and delta legs when both
+    // exist — but it derives from the caller's MATERIALIZED identity
+    // frame, so with one leg (the steady state after a fold)
+    // re-deriving it is a cheap re-explode and a checkpoint job would
+    // be pure overhead; checkpoint only when a delta leg will actually
+    // re-reference it
+    val batchBands =
+      if (delta.isDefined) bandsRaw.localCheckpoint(eager = true) else bandsRaw
     def hitIds(hist: DataFrame): DataFrame =
       hist.join(broadcast(batchBands),
           col("__band") === col("__bband") &&
@@ -1247,30 +1169,9 @@ object Dedup {
         .where(hamming(col("__asig"), col("__bsig2"), bits = 64) <= AudioMaxDist)
         .select(col("__bid"))
     val mainHits = hitIds(spark.table(t))
-    val hits =
-      if (includeDelta && fs.exists(deltaP))
-        mainHits.unionByName(hitIds(Layout.readDelta(spark, t, deltaP.toString)))
-      else mainHits
-    hashed.join(broadcast(hits.distinct()),
-        col(idCol) === col("__bid"), "left_anti")
-      .drop(h)
-  }
-
-  /** Cluster-resolved AUDIO near-dedup — [[imageNearDupClusters]] over
-    * spectral fingerprints: wide-band + flip-probe candidates
-    * ([[audioCandidates]]), connect components within
-    * [[AudioMaxDist]], keep each cluster's minimum id. */
-  def audioNearDupClusters(df: DataFrame, payloadCol: String, idCol: String,
-      maxBucket: Int = 1024): DataFrame = {
-    val sigs = Multimodal.audioFingerprint(
-        df.select(col(idCol), col(payloadCol)), payloadCol, "__afp")
-      .select(col(idCol), col("__afp"))
-    val pairs = audioCandidates(sigs.where(col("__afp").isNotNull),
-        idCol, "__afp", maxBucket = maxBucket)
-      .select(col("id_a"), col("id_b"))
-    Graph.connectedComponents(pairs, "id_a", "id_b",
-        nodes = Some(df.select(col(idCol))), assumeDistinct = true)
-      .select(col("id").alias(idCol), col("component").alias("cluster"))
+    val hits = delta.fold(mainHits)(d => mainHits.unionByName(hitIds(d)))
+    ident.join(broadcast(hits.distinct()),
+      col(idCol) === col("__bid"), "left_anti")
   }
 
   // ---- VIDEO identity family: per-frame dHash + frame voting. A
@@ -1327,28 +1228,27 @@ object Dedup {
         col("frames_a"), col("frames_b"))
   }
 
-  /** Default banding for per-frame video hashes (frame matches use the
+  /** Banding for per-frame video hashes (frame matches use the
     * image-dHash tolerance class: a lossy re-encode moves a frame a few
     * bits; the frame VOTE absorbs the occasional outlier frame). */
   val VideoMaxDist = 3
   val VideoBands = 4
-  /** Default qualified fraction of the SHORTER video's frames. */
+  /** Qualified fraction of the SHORTER video's frames. */
   val VideoMinMatchFrac = 0.6
+
+  /** The per-frame rows of an identity frame's `__fhs` column —
+    * (__pid, __fidx int, __fh long), the [[Multimodal.videoFrameHashes]]
+    * shape (rows without a video identity contribute nothing). */
+  private def videoFrameRows(ident: DataFrame, idCol: String): DataFrame =
+    ident.where(col("__fhs").isNotNull)
+      .select(col(idCol).alias("__pid"), posexplode(col("__fhs")))
+      .withColumnRenamed("pos", "__fidx").withColumnRenamed("col", "__fh")
 
   /** The video-history row shapes: `<table>_vb` — banded frame rows
     * (__fidx, __band, __bucket, __pid, __fh), bucketed on exactly the
-    * probe join's keys; `<table>_vn` — per-video frame counts
-    * (__pid, __nf), the vote denominators. */
-  private def videoBandFrame(df: DataFrame, payloadCol: String,
-      idCol: String): DataFrame =
-    videoBandFrameOfFrames(
-      Multimodal.videoFrameHashes(df.select(col(idCol), col(payloadCol)),
-          payloadCol, idCol, "__fidx", "__fh")
-        .select(col(idCol).alias("__pid"), col("__fidx"), col("__fh")))
-
-  /** Banded form of a (__pid, __fidx, __fh) frame — the shared half of
-    * [[videoBandFrame]] the fused-identity append reuses. */
-  private def videoBandFrameOfFrames(fh: DataFrame): DataFrame = {
+    * probe join's keys (this function); `<table>_vn` — per-video frame
+    * counts (__pid, __nf), the vote denominators ([[videoCountRows]]). */
+  private def videoBandFrame(fh: DataFrame): DataFrame = {
     val bandBits = 64 / VideoBands
     val mask = (1L << bandBits) - 1L
     fh.select(col("__pid"), col("__fidx"), col("__fh"),
@@ -1358,28 +1258,25 @@ object Dedup {
       .select(col("__fidx"), col("__band"), col("__bucket"), col("__pid"), col("__fh"))
   }
 
-  private def videoCountFrame(df: DataFrame, payloadCol: String,
-      idCol: String): DataFrame =
-    Multimodal.videoFrameHashes(df.select(col(idCol), col(payloadCol)),
-        payloadCol, idCol, "__fidx", "__fh")
-      .groupBy(col(idCol).alias("__pid")).agg(count(lit(1)).as("__nf"))
+  /** Per-video frame counts straight off the identity arrays — no
+    * regroup shuffle. */
+  private def videoCountRows(ident: DataFrame, idCol: String): DataFrame =
+    ident.where(col("__fhs").isNotNull)
+      .select(col(idCol).alias("__pid"), size(col("__fhs")).cast("long").as("__nf"))
 
-  /** Create whichever half of a video history is missing (the
-    * [[ensureBandHistory]] crash-safe per-table contract). */
-  def ensureVideoHistory(spark: org.apache.spark.sql.SparkSession,
-      like: DataFrame, payloadCol: String, idCol: String, table: String,
-      numBuckets: Int): Unit = {
-    def create(t: String)(frame: DataFrame, keys: Seq[String]): Unit =
-      if (!spark.catalog.tableExists(t)) {
-        val delta = Layout.deltaDirOf(spark, t)
-        Layout.dropTableAndLocation(spark, t)
-        Layout.deleteDeltaState(spark, delta)
-        Layout.writeBucketed(frame, t, keys, numBuckets)
-      }
-    val empty = like.select(col(idCol), col(payloadCol)).limit(0)
-    create(s"${table}_vn")(videoCountFrame(empty, payloadCol, idCol), Seq("__pid"))
-    create(s"${table}_vb")(videoBandFrame(empty, payloadCol, idCol),
-      Seq("__fidx", "__band", "__bucket"))
+  /** Cluster-resolved VIDEO near-dedup — [[imageNearDupClusters]] for
+    * the third modality: per-frame dHashes, frame-aligned banded
+    * matches within [[VideoMaxDist]], a [[VideoMinMatchFrac]] frame
+    * vote, connected components, keep each cluster's minimum id. Rows
+    * without a video identity contribute no frame rows and keep
+    * themselves. */
+  def videoNearDupClusters(ident: DataFrame, idCol: String,
+      maxBucket: Int = 1024): DataFrame = {
+    val pairs = videoCandidates(videoFrameRows(ident, idCol), "__pid",
+        "__fidx", "__fh", maxDist = VideoMaxDist, nBands = VideoBands,
+        maxBucket = maxBucket, minMatchFrac = VideoMinMatchFrac)
+      .select(col("id_a"), col("id_b"))
+    clustersOf(pairs, ident, idCol)
   }
 
   /** Replay-safe delta append to a video history — band rows first,
@@ -1388,75 +1285,39 @@ object Dedup {
     * inner count join drops them) — a probe can only UNDER-drop in the
     * window, never wrongly drop, and the replayed batch overwrites
     * both dirs identically. */
-  def appendVideoHistoryDelta(spark: org.apache.spark.sql.SparkSession,
-      df: DataFrame, payloadCol: String, idCol: String, table: String,
-      batchId: Long): Unit = {
-    val tb = s"${table}_vb"; val tn = s"${table}_vn"
-    if (!Layout.isBatchFolded(spark, tb, batchId))
-      videoBandFrame(df, payloadCol, idCol).write.mode("overwrite")
-        .parquet(s"${Layout.deltaDirOf(spark, tb)}/batch-$batchId")
-    if (!Layout.isBatchFolded(spark, tn, batchId))
-      videoCountFrame(df, payloadCol, idCol).write.mode("overwrite")
-        .parquet(s"${Layout.deltaDirOf(spark, tn)}/batch-$batchId")
+  def appendVideoHistoryDelta(spark: SparkSession, ident: DataFrame,
+      idCol: String, table: String, batchId: Long): Unit = {
+    appendDelta(spark, s"${table}_vb", batchId)(
+      videoBandFrame(videoFrameRows(ident, idCol)))
+    appendDelta(spark, s"${table}_vn", batchId)(videoCountRows(ident, idCol))
   }
-
-  /** Fold both video-history deltas (band first — the append order's
-    * crash-window rationale in reverse leaves probes correct). */
-  def compactVideoDelta(spark: org.apache.spark.sql.SparkSession,
-      table: String): Unit = {
-    Layout.foldDeltaIntoBucketed(spark, s"${table}_vb",
-      noSpecHint = "not an ensureVideoHistory table")
-    Layout.foldDeltaIntoBucketed(spark, s"${table}_vn",
-      noSpecHint = "not an ensureVideoHistory table")
-  }
-
-  /** Drop a video history (both tables + locations + delta state). */
-  def dropVideoHistory(spark: org.apache.spark.sql.SparkSession,
-      table: String): Unit =
-    Seq(s"${table}_vb", s"${table}_vn").foreach { t =>
-      val delta = Layout.deltaDirOf(spark, t)
-      Layout.dropTableAndLocation(spark, t)
-      Layout.deleteDeltaState(spark, delta)
-    }
 
   /** Incremental video dedup against a persisted history (main ∪
     * delta): batch videos whose frame VOTE against some history video
     * (different id) reaches [[VideoMinMatchFrac]] of the shorter
     * video's frames are dropped. Same-id exclusion is the replay
-    * guard; undecodable payloads carry no frame rows and pass through.
+    * guard; rows without a video identity carry no frame rows and pass
+    * through.
     *
     * Scale shape: the batch's banded frame rows broadcast; the MAIN
     * band leg joins the bucketed (__fidx, __band, __bucket) layout
     * with no history-side exchange; the vote aggregates candidate-pair
-    * rows only; frame counts are two tiny joins. */
-  def videoIncrementalDelta(spark: org.apache.spark.sql.SparkSession,
-      newDf: DataFrame, table: String, payloadCol: String, idCol: String,
-      includeDelta: Boolean = true, maxBucket: Int = 1024): DataFrame = {
-    val tb = s"${table}_vb"; val tn = s"${table}_vn"
-    val hconf = spark.sparkContext.hadoopConfiguration
-    val bDelta = new org.apache.hadoop.fs.Path(Layout.deltaDirOf(spark, tb))
-    val nDelta = new org.apache.hadoop.fs.Path(Layout.deltaDirOf(spark, tn))
-    val fs = bDelta.getFileSystem(hconf)
-    // one decode+hash pass; counts come from the UNCAPPED frame rows
-    // (a capped bucket must not shrink a vote denominator)
-    val fh = Multimodal.videoFrameHashes(
-        newDf.select(col(idCol), col(payloadCol)), payloadCol, idCol,
-        "__fidx", "__fh")
-      .select(col(idCol).alias("__pid"), col("__fidx"), col("__fh"))
-      .localCheckpoint(eager = true)
-    val bandBits = 64 / VideoBands
-    val mask = (1L << bandBits) - 1L
-    val batchBands = dropOversizedBuckets(
-        fh.select(col("__pid"), col("__fidx"), col("__fh"),
-            posexplode(array((0 until VideoBands).map(b =>
-              shiftright(col("__fh"), b * bandBits).bitwiseAND(lit(mask))): _*)))
-          .withColumnRenamed("pos", "__band").withColumnRenamed("col", "__bucket"),
+    * rows only; frame counts are two tiny joins. No barrier on the
+    * batch bands: when a delta leg exists both legs broadcast the same
+    * band frame, and the executed plan REUSES that broadcast exchange
+    * (AQE `ReusedExchange` for the second leg), so the frame explode
+    * and its cap window run once per probe — a checkpoint would only
+    * add a job. */
+  def videoIncrementalDelta(spark: SparkSession, ident: DataFrame,
+      table: String, idCol: String, maxBucket: Int = 1024): DataFrame = {
+    val tb = s"${table}_vb"
+    val batchBands = dropOversizedBuckets(videoBandFrame(videoFrameRows(ident, idCol)),
         Seq("__fidx", "__band", "__bucket"), maxBucket)
       .select(col("__fidx").alias("__bfidx"), col("__band").alias("__bband"),
         col("__bucket").alias("__bbucket"), col("__pid").alias("__bid"),
         col("__fh").alias("__bfh"))
-    val batchCounts = fh.groupBy(col("__pid").alias("__bid"))
-      .agg(count(lit(1)).as("__bnf"))
+    val batchCounts = videoCountRows(ident, idCol)
+      .select(col("__pid").alias("__bid"), col("__nf").alias("__bnf"))
     def frameMatches(hist: DataFrame): DataFrame =
       hist.join(broadcast(batchBands),
           col("__fidx") === col("__bfidx") && col("__band") === col("__bband") &&
@@ -1464,266 +1325,16 @@ object Dedup {
         .where(hamming(col("__fh"), col("__bfh"), bits = 64) <= VideoMaxDist)
         .select(col("__bid"), col("__pid"), col("__fidx"))
     val mainMatches = frameMatches(spark.table(tb))
-    val matches =
-      if (includeDelta && fs.exists(bDelta))
-        mainMatches.unionByName(frameMatches(
-          Layout.readDelta(spark, tb, bDelta.toString)))
-      else mainMatches
-    val histCounts =
-      if (includeDelta && fs.exists(nDelta))
-        spark.table(tn).unionByName(Layout.readDelta(spark, tn, nDelta.toString))
-      else spark.table(tn)
+    val matches = deltaOf(spark, tb)
+      .fold(mainMatches)(d => mainMatches.unionByName(frameMatches(d)))
     val hits = matches.distinct()
       .groupBy(col("__bid"), col("__pid")).agg(count(lit(1)).as("__m"))
-      .join(histCounts.select(col("__pid"), col("__nf")), Seq("__pid"))
-      .join(broadcast(batchCounts), Seq("__bid"))
-      .where(col("__m") >= lit(VideoMinMatchFrac) * least(col("__nf"), col("__bnf")))
-      .select(col("__bid")).distinct()
-    newDf.join(broadcast(hits), col(idCol) === col("__bid"), "left_anti")
-  }
-
-  /** Cluster-resolved VIDEO near-dedup — [[imageNearDupClusters]] for
-    * the third modality: per-frame dHashes ([[Multimodal
-    * .videoFrameHashes]]), frame-aligned banded matches, frame vote,
-    * connected components, keep each cluster's minimum id. Videos that
-    * do not decode contribute no frame rows and keep themselves. */
-  def videoNearDupClusters(df: DataFrame, payloadCol: String, idCol: String,
-      maxDist: Int = 3, maxBucket: Int = 1024,
-      minMatchFrac: Double = 0.6): DataFrame = {
-    val fh = Multimodal.videoFrameHashes(
-      df.select(col(idCol), col(payloadCol)), payloadCol, idCol)
-    val pairs = videoCandidates(fh, idCol, maxDist = maxDist,
-        nBands = maxDist + 1, maxBucket = maxBucket,
-        minMatchFrac = minMatchFrac)
-      .select(col("id_a"), col("id_b"))
-    Graph.connectedComponents(pairs, "id_a", "id_b",
-        nodes = Some(df.select(col(idCol))), assumeDistinct = true)
-      .select(col("id").alias(idCol), col("component").alias("cluster"))
-  }
-
-  // ---- FUSED multimodal identity chain. Identity frames carry
-  // (idCol, __ph, __asig, __fhs) from [[Multimodal
-  // .multimodalIdentities]] — ONE decode pass over the batch's payload
-  // bytes, materialized once by the caller. Every stage below consumes
-  // and returns identity rows (the surviving subset), never payloads,
-  // and every history-delta append projects from the same frame — so a
-  // multimodal micro-batch reads its heavy blobs exactly once where
-  // the payload-column stage forms re-decode per stage (2× per
-  // modality) and per append (the r19 verdict's top read-amplification
-  // item). Semantics are the payload forms' verbatim: same kernels,
-  // same NULL pass-through ("no identity" is never a duplicate class),
-  // same same-id replay exclusion, same probe-side caps — pinned
-  // bit-for-bit in DedupSpec ("fused identity chain"). ----
-
-  /** [[imageExact]] over a precomputed identity frame: rows whose
-    * dHash (`__ph`) collides keep only the minimum id; null-hash rows
-    * pass through. Returns surviving identity rows. */
-  def imageExactIdent(ident: DataFrame, idCol: String): DataFrame = {
-    val rn = graft.Cols.fresh(ident.columns, "__rn")
-    val w = Window.partitionBy(col("__ph")).orderBy(col(idCol))
-    ident.where(col("__ph").isNotNull)
-      .withColumn(rn, row_number().over(w))
-      .where(col(rn) === 1)
-      .drop(rn)
-      .unionByName(ident.where(col("__ph").isNull))
-  }
-
-  /** [[imageIncrementalDelta]] over a precomputed identity frame —
-    * identical probe (batch hashes broadcast, history never exchanges,
-    * same-id replay exclusion), minus the decode pass. */
-  def imageIncrementalDeltaIdent(spark: org.apache.spark.sql.SparkSession,
-      ident: DataFrame, table: String, idCol: String,
-      includeDelta: Boolean = true): DataFrame = {
-    val t = s"${table}_ph"
-    // the history's own column is "__ph" — rename the batch side so the
-    // join condition's references stay unambiguous (the payload form's
-    // fresh-name discipline)
-    val bph = graft.Cols.fresh(ident.columns :+ "__pid", "__bph")
-    val b = ident.withColumnRenamed("__ph", bph)
-    val deltaP = new org.apache.hadoop.fs.Path(Layout.deltaDirOf(spark, t))
-    val fs = deltaP.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    val hist =
-      if (includeDelta && fs.exists(deltaP))
-        spark.table(t).unionByName(Layout.readDelta(spark, t, deltaP.toString))
-      else spark.table(t)
-    val batchKeys = b.where(col(bph).isNotNull).select(col(bph))
-    val hits = hist.join(broadcast(batchKeys), col("__ph") === col(bph), "left_semi")
-    b.join(broadcast(hits),
-        col("__ph") === col(bph) && col("__pid") =!= col(idCol), "left_anti")
-      .withColumnRenamed(bph, "__ph")
-  }
-
-  /** [[audioNearDupClusters]] over a precomputed identity frame: same
-    * candidate geometry and vote over `__asig`, no fingerprint pass. */
-  def audioNearDupClustersIdent(ident: DataFrame, idCol: String,
-      maxBucket: Int = 1024): DataFrame = {
-    val sigs = ident.select(col(idCol), col("__asig").alias("__afp"))
-    val pairs = audioCandidates(sigs.where(col("__afp").isNotNull),
-        idCol, "__afp", maxBucket = maxBucket)
-      .select(col("id_a"), col("id_b"))
-    Graph.connectedComponents(pairs, "id_a", "id_b",
-        nodes = Some(ident.select(col(idCol))), assumeDistinct = true)
-      .select(col("id").alias(idCol), col("component").alias("cluster"))
-  }
-
-  /** [[audioIncrementalDelta]] over a precomputed identity frame —
-    * identical flip-ball probe vs main ∪ delta, minus the decode. */
-  def audioIncrementalDeltaIdent(spark: org.apache.spark.sql.SparkSession,
-      ident: DataFrame, table: String, idCol: String,
-      includeDelta: Boolean = true, maxBucket: Int = 1024): DataFrame = {
-    val t = s"${table}_ab"
-    val deltaP = new org.apache.hadoop.fs.Path(Layout.deltaDirOf(spark, t))
-    val fs = deltaP.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    val twoLegs = includeDelta && fs.exists(deltaP)
-    // the probe pipeline is shared by the main and delta legs when both
-    // exist (the payload form's barrier) — but it derives from the
-    // caller's MATERIALIZED identity frame, so with one leg (the
-    // steady state after compaction) re-deriving it is a cheap
-    // re-explode and the checkpoint job is pure overhead; checkpoint
-    // only when a delta leg will actually re-reference it
-    val bandsRaw = dropOversizedBuckets(audioProbeFrame(
-        ident.where(col("__asig").isNotNull)
-          .select(col(idCol).alias("__pid"), col("__asig"))),
-        Seq("__band", "__bucket"), maxBucket)
-      .select(col("__band").alias("__bband"), col("__bucket").alias("__bbucket"),
-        col("__pid").alias("__bid"), col("__asig").alias("__bsig2"))
-    val batchBands =
-      if (twoLegs) bandsRaw.localCheckpoint(eager = true) else bandsRaw
-    def hitIds(hist: DataFrame): DataFrame =
-      hist.join(broadcast(batchBands),
-          col("__band") === col("__bband") &&
-            col("__bucket") === col("__bbucket") &&
-            col("__pid") =!= col("__bid"))
-        .where(hamming(col("__asig"), col("__bsig2"), bits = 64) <= AudioMaxDist)
-        .select(col("__bid"))
-    val mainHits = hitIds(spark.table(t))
-    val hits =
-      if (twoLegs)
-        mainHits.unionByName(hitIds(Layout.readDelta(spark, t, deltaP.toString)))
-      else mainHits
-    ident.join(broadcast(hits.distinct()),
-      col(idCol) === col("__bid"), "left_anti")
-  }
-
-  /** The per-frame rows of an identity frame's `__fhs` column —
-    * (__pid, __fidx int, __fh long), the [[Multimodal.videoFrameHashes]]
-    * shape (no-identity rows contribute nothing). */
-  private def identFrameRows(ident: DataFrame, idCol: String): DataFrame =
-    ident.where(col("__fhs").isNotNull)
-      .select(col(idCol).alias("__pid"), posexplode(col("__fhs")))
-      .withColumnRenamed("pos", "__fidx").withColumnRenamed("col", "__fh")
-
-  /** [[videoNearDupClusters]] over a precomputed identity frame: same
-    * frame-aligned bands and vote, no decode+hash pass. */
-  def videoNearDupClustersIdent(ident: DataFrame, idCol: String,
-      maxDist: Int = 3, maxBucket: Int = 1024,
-      minMatchFrac: Double = 0.6): DataFrame = {
-    val fh = ident.where(col("__fhs").isNotNull)
-      .select(col(idCol), posexplode(col("__fhs")))
-      .withColumnRenamed("pos", "frame_idx").withColumnRenamed("col", "fhash")
-    val pairs = videoCandidates(fh, idCol, maxDist = maxDist,
-        nBands = maxDist + 1, maxBucket = maxBucket,
-        minMatchFrac = minMatchFrac)
-      .select(col("id_a"), col("id_b"))
-    Graph.connectedComponents(pairs, "id_a", "id_b",
-        nodes = Some(ident.select(col(idCol))), assumeDistinct = true)
-      .select(col("id").alias(idCol), col("component").alias("cluster"))
-  }
-
-  /** [[videoIncrementalDelta]] over a precomputed identity frame —
-    * identical banded frame match + vote vs main ∪ delta, minus the
-    * decode pass (and its barrier: the frame rows derive from the
-    * caller's materialized identity frame, so re-deriving them per
-    * consumer is a cheap re-explode, not a re-decode). */
-  def videoIncrementalDeltaIdent(spark: org.apache.spark.sql.SparkSession,
-      ident: DataFrame, table: String, idCol: String,
-      includeDelta: Boolean = true, maxBucket: Int = 1024): DataFrame = {
-    val tb = s"${table}_vb"; val tn = s"${table}_vn"
-    val hconf = spark.sparkContext.hadoopConfiguration
-    val bDelta = new org.apache.hadoop.fs.Path(Layout.deltaDirOf(spark, tb))
-    val nDelta = new org.apache.hadoop.fs.Path(Layout.deltaDirOf(spark, tn))
-    val fs = bDelta.getFileSystem(hconf)
-    val fh = identFrameRows(ident, idCol)
-    val bandBits = 64 / VideoBands
-    val mask = (1L << bandBits) - 1L
-    val batchBands = dropOversizedBuckets(
-        fh.select(col("__pid"), col("__fidx"), col("__fh"),
-            posexplode(array((0 until VideoBands).map(b =>
-              shiftright(col("__fh"), b * bandBits).bitwiseAND(lit(mask))): _*)))
-          .withColumnRenamed("pos", "__band").withColumnRenamed("col", "__bucket"),
-        Seq("__fidx", "__band", "__bucket"), maxBucket)
-      .select(col("__fidx").alias("__bfidx"), col("__band").alias("__bband"),
-        col("__bucket").alias("__bbucket"), col("__pid").alias("__bid"),
-        col("__fh").alias("__bfh"))
-    // counts come straight off the identity arrays — no regroup shuffle
-    val batchCounts = ident.where(col("__fhs").isNotNull)
-      .select(col(idCol).alias("__bid"), size(col("__fhs")).cast("long").as("__bnf"))
-    def frameMatches(hist: DataFrame): DataFrame =
-      hist.join(broadcast(batchBands),
-          col("__fidx") === col("__bfidx") && col("__band") === col("__bband") &&
-            col("__bucket") === col("__bbucket") && col("__pid") =!= col("__bid"))
-        .where(hamming(col("__fh"), col("__bfh"), bits = 64) <= VideoMaxDist)
-        .select(col("__bid"), col("__pid"), col("__fidx"))
-    val mainMatches = frameMatches(spark.table(tb))
-    val matches =
-      if (includeDelta && fs.exists(bDelta))
-        mainMatches.unionByName(frameMatches(
-          Layout.readDelta(spark, tb, bDelta.toString)))
-      else mainMatches
-    val histCounts =
-      if (includeDelta && fs.exists(nDelta))
-        spark.table(tn).unionByName(Layout.readDelta(spark, tn, nDelta.toString))
-      else spark.table(tn)
-    val hits = matches.distinct()
-      .groupBy(col("__bid"), col("__pid")).agg(count(lit(1)).as("__m"))
-      .join(histCounts.select(col("__pid"), col("__nf")), Seq("__pid"))
+      .join(withDelta(spark, s"${table}_vn").select(col("__pid"), col("__nf")),
+        Seq("__pid"))
       .join(broadcast(batchCounts), Seq("__bid"))
       .where(col("__m") >= lit(VideoMinMatchFrac) * least(col("__nf"), col("__bnf")))
       .select(col("__bid")).distinct()
     ident.join(broadcast(hits), col(idCol) === col("__bid"), "left_anti")
-  }
-
-  /** [[appendImageHistoryDelta]] projected from a precomputed identity
-    * frame — same delta rows (`(__pid, __ph)`, non-null hashes only),
-    * zero payload reads. The three modality appends stay independent
-    * writes in the same fixed order, so every crash prefix leaves every
-    * probe correct exactly as before. */
-  def appendImageHistoryDeltaIdent(spark: org.apache.spark.sql.SparkSession,
-      ident: DataFrame, idCol: String, table: String, batchId: Long): Unit = {
-    val t = s"${table}_ph"
-    if (Layout.isBatchFolded(spark, t, batchId)) return
-    ident.where(col("__ph").isNotNull)
-      .select(col(idCol).alias("__pid"), col("__ph"))
-      .write.mode("overwrite")
-      .parquet(s"${Layout.deltaDirOf(spark, t)}/batch-$batchId")
-  }
-
-  /** [[appendAudioHistoryDelta]] from a precomputed identity frame. */
-  def appendAudioHistoryDeltaIdent(spark: org.apache.spark.sql.SparkSession,
-      ident: DataFrame, idCol: String, table: String, batchId: Long): Unit = {
-    val t = s"${table}_ab"
-    if (Layout.isBatchFolded(spark, t, batchId)) return
-    audioBandFrame(ident.where(col("__asig").isNotNull)
-        .select(col(idCol).alias("__pid"), col("__asig")))
-      .write.mode("overwrite")
-      .parquet(s"${Layout.deltaDirOf(spark, t)}/batch-$batchId")
-  }
-
-  /** [[appendVideoHistoryDelta]] from a precomputed identity frame —
-    * same band-rows-first/counts-second crash-window order; the count
-    * half reads `size(__fhs)` off the identity row instead of
-    * regrouping frame rows (same integers, no shuffle). */
-  def appendVideoHistoryDeltaIdent(spark: org.apache.spark.sql.SparkSession,
-      ident: DataFrame, idCol: String, table: String, batchId: Long): Unit = {
-    val tb = s"${table}_vb"; val tn = s"${table}_vn"
-    if (!Layout.isBatchFolded(spark, tb, batchId))
-      videoBandFrameOfFrames(identFrameRows(ident, idCol)).write.mode("overwrite")
-        .parquet(s"${Layout.deltaDirOf(spark, tb)}/batch-$batchId")
-    if (!Layout.isBatchFolded(spark, tn, batchId))
-      ident.where(col("__fhs").isNotNull)
-        .select(col(idCol).alias("__pid"), size(col("__fhs")).cast("long").as("__nf"))
-        .write.mode("overwrite")
-        .parquet(s"${Layout.deltaDirOf(spark, tn)}/batch-$batchId")
   }
 
   /** SimHash 32-bit signature over token 1-grams: per bit, sum +1/-1
@@ -1957,24 +1568,6 @@ object Dedup {
       .groupBy(col("__ph")).agg(min(col("__pid")).alias("__pid"))
       .select(col("__pid"), col("__ph"))
 
-  /** Create the paragraph-hash history `<table>_pg` if missing —
-    * bucketed on the hash, under the same delta-subdirectory +
-    * fold-manifest discipline as `_xh` ([[ensureHashHistory]]'s
-    * crash-safe shape, including stale-delta clearing). The table is
-    * two narrow columns regardless of corpus text volume. */
-  def ensureParagraphHistory(spark: org.apache.spark.sql.SparkSession,
-      like: DataFrame, textCol: String, idCol: String, table: String,
-      numBuckets: Int): Unit = {
-    val t = s"${table}_pg"
-    if (!spark.catalog.tableExists(t)) {
-      val delta = Layout.deltaDirOf(spark, t)
-      Layout.dropTableAndLocation(spark, t)
-      Layout.deleteDeltaState(spark, delta)
-      Layout.writeBucketed(paragraphFrame(like, textCol, idCol).limit(0),
-        t, Seq("__ph"), numBuckets)
-    }
-  }
-
   /** Build a paragraph history from an existing corpus in one bucketed
     * write (the batch-bootstrap path; streaming appends go through
     * [[appendParagraphHistoryDelta]]). */
@@ -1998,47 +1591,12 @@ object Dedup {
     * adding one shuffle exchange per micro-batch). Default false
     * keeps the "history holds each hash once" bound STRUCTURAL for
     * every other caller. */
-  def appendParagraphHistoryDelta(spark: org.apache.spark.sql.SparkSession,
+  def appendParagraphHistoryDelta(spark: SparkSession,
       df: DataFrame, textCol: String, idCol: String, table: String,
-      batchId: Long, assumeCanonical: Boolean = false): Unit = {
-    val t = s"${table}_pg"
-    if (Layout.isBatchFolded(spark, t, batchId)) return
-    val frame =
-      if (assumeCanonical)
-        paragraphFrame(df, textCol, idCol)
-          .select(col("__pid"), col("__ph"))
-      else canonicalParagraphFrame(df, textCol, idCol)
-    frame.write.mode("overwrite")
-      .parquet(s"${Layout.deltaDirOf(spark, t)}/batch-$batchId")
-  }
-
-  /** Fold the paragraph-history delta into its bucketed table. */
-  def compactParagraphDelta(spark: org.apache.spark.sql.SparkSession,
-      table: String): Unit =
-    Layout.foldDeltaIntoBucketed(spark, s"${table}_pg",
-      noSpecHint = "not an ensureParagraphHistory table")
-
-  /** Byte-ratio auto-fold for a paragraph history (the
-    * [[compactIntakeIfNeeded]] measured-trigger policy; filesystem
-    * metadata only). Returns true if a fold ran. */
-  def compactParagraphIfNeeded(spark: org.apache.spark.sql.SparkSession,
-      table: String, maxDeltaRatio: Double = 0.10): Boolean = {
-    require(maxDeltaRatio > 0, "maxDeltaRatio must be positive")
-    if (!spark.catalog.tableExists(s"${table}_pg")) return false
-    val (d, m) = Layout.deltaMainBytes(spark, s"${table}_pg")
-    val fold = d > 0 && d >= maxDeltaRatio * m
-    if (fold) compactParagraphDelta(spark, table)
-    fold
-  }
-
-  /** Drop a paragraph history (table + location + delta state). */
-  def dropParagraphHistory(spark: org.apache.spark.sql.SparkSession,
-      table: String): Unit = {
-    val t = s"${table}_pg"
-    val delta = Layout.deltaDirOf(spark, t)
-    Layout.dropTableAndLocation(spark, t)
-    Layout.deleteDeltaState(spark, delta)
-  }
+      batchId: Long, assumeCanonical: Boolean = false): Unit =
+    appendDelta(spark, s"${table}_pg", batchId)(
+      if (assumeCanonical) paragraphFrame(df, textCol, idCol)
+      else canonicalParagraphFrame(df, textCol, idCol))
 
   /** L39 incremental — remove batch paragraphs whose hash a persisted
     * paragraph history (main ∪ delta) holds under a DIFFERENT id, then
@@ -2059,16 +1617,11 @@ object Dedup {
     * row per hash, so the bound is structural, not a caller
     * precondition (a same-id replay can duplicate a hash between main
     * and its own delta file, which at most doubles it). */
-  def paragraphIncrementalDelta(spark: org.apache.spark.sql.SparkSession,
+  def paragraphIncrementalDelta(spark: SparkSession,
       newDf: DataFrame, table: String, textCol: String, idCol: String,
       minChars: Int = 1, includeDelta: Boolean = true): DataFrame = {
     val t = s"${table}_pg"
-    val deltaP = new org.apache.hadoop.fs.Path(Layout.deltaDirOf(spark, t))
-    val fs = deltaP.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    val hist =
-      if (includeDelta && fs.exists(deltaP))
-        spark.table(t).unionByName(Layout.readDelta(spark, t, deltaP.toString))
-      else spark.table(t)
+    val hist = if (includeDelta) withDelta(spark, t) else spark.table(t)
     val withH = explodeParas(newDf, textCol, idCol)
       .withColumn("__bh", paraHash(col("__para"), minChars))
     val batchKeys = withH.where(col("__bh").isNotNull).select(col("__bh"))

@@ -1966,12 +1966,9 @@ object Multimodal {
     * bit-identical to [[imageDHash]] / [[audioFingerprint]] /
     * [[videoFrameHashes]] run separately.
     *
-    * This is the fused-identity form the multimodal intake loop runs
-    * per micro-batch: the heavy payload bytes are READ once and each
-    * foreign-modality decode attempt rejects on magic bytes, where the
-    * per-stage column forms re-read the batch's payloads once per
-    * stage (2× per modality in the dedup chain + once per history
-    * append — the r19 "3× payload-read amplification" diagnosis). The
+    * This is the input of every multimodal dedup operator in
+    * [[Dedup]]: the heavy payload bytes are READ once and each
+    * foreign-modality decode attempt rejects on magic bytes. The
     * output rows are identity-sized (8 B image + 8 B audio +
     * 12 B/frame video), so the caller can materialize them once and
     * run every dedup stage and every history-delta projection over

@@ -418,7 +418,7 @@ object Similarity {
   }
 
   /** Create the embedding-history index `${table}_ei` if missing —
-    * the [[graft.operators.Dedup.ensureImageHistory]] discipline for
+    * the [[graft.operators.Dedup.History.ensure]] discipline for
     * the embedding modality (crash-safe: a half-created index is
     * dropped whole and rebuilt; callers must pass the SAME first-batch
     * vectors on a replay, which foreachBatch guarantees). */
@@ -557,8 +557,8 @@ object Similarity {
     * (e.g. a future writeBucketed change re-projecting the frame, or a
     * write path bypassing the observed Dataset). The metrics land
     * within listener-bus latency of the action that just ran, so a
-    * short poll either returns them or fails loudly naming the
-    * contract instead of hanging the ingest loop. */
+    * 30 s poll either returns them or fails loudly naming both
+    * possible causes instead of hanging the ingest loop. */
   private def assignmentStats(
       obs: org.apache.spark.sql.Observation): (Long, Long, Double) = {
     val deadline = System.nanoTime() + 30L * 1000 * 1000 * 1000
@@ -568,9 +568,12 @@ object Similarity {
       m = org.apache.spark.sql.graftshim.ObservationBridge.getOrEmpty(obs)
     }
     require(m.nonEmpty,
-      "observed assignment metrics never materialized — the caller's " +
-        "write must execute the observed Dataset itself (the " +
-        "observedAssignment contract), not a re-projection of it")
+      "observed assignment metrics did not arrive within 30 s. Either " +
+        "the executed plan dropped the CollectMetrics node (the caller's " +
+        "write must execute the observed Dataset itself, not a " +
+        "re-projection of it — the observedAssignment contract), or the " +
+        "listener bus did not deliver the metrics in time (a " +
+        "backlogged or overloaded Spark driver)")
     val mean = m.get("mean") match {
       case Some(d: java.lang.Double) => d.toDouble
       case _ => Double.NaN
@@ -656,7 +659,7 @@ object Similarity {
     Layout.foldDeltaIntoBucketed(spark, table,
       noSpecHint = "build the index with writeIvfIndex first")
 
-  /** [[graft.operators.Dedup.compactIntakeIfNeeded]]'s byte-ratio
+  /** [[graft.operators.Dedup.History.foldIfNeeded]]'s byte-ratio
     * auto-fold policy for a persisted IVF index / embedding history:
     * fold when the delta directory reaches `maxDeltaRatio` of the
     * bucketed main's bytes (fs metadata only, no jobs — safe per

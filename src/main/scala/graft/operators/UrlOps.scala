@@ -113,9 +113,10 @@ object UrlOps {
   // ---- persisted canonical-URL history (cross-batch URL dedup — the
   // CCNet shape: a crawl sees the same URL across fetches/batches, so
   // production URL dedup is incremental). The history IS the exact-hash
-  // machinery ([[Dedup.ensureHashHistory]] et al.) applied to the
+  // machinery ([[Dedup.exactIncrementalDelta]] et al.) applied to the
   // CANONICAL url string, under its own `<table>_url` base name so it
-  // can live next to the same intake table's text-hash `_xh` history.
+  // can live next to the same intake table's text-hash `_xh` history;
+  // [[Dedup.UrlHistory]] is its lifecycle (ensure / drop / fold).
   // All the `_xh` properties carry over verbatim: bucketed main +
   // overwrite-own-dir deltas + fold manifest, zero-exchange probe
   // (batch hashes broadcast, history never exchanges), same-id replay
@@ -126,14 +127,6 @@ object UrlOps {
     (df.withColumn(cu, canonicalizeUrl(col(urlCol))), cu)
   }
 
-  /** Create the canonical-URL history `<table>_url_xh` if missing. */
-  def ensureUrlHistory(spark: org.apache.spark.sql.SparkSession,
-      like: DataFrame, urlCol: String, idCol: String, table: String,
-      numBuckets: Int): Unit = {
-    val (withC, cu) = withCanonCol(like, urlCol)
-    Dedup.ensureHashHistory(spark, withC, cu, idCol, s"${table}_url", numBuckets)
-  }
-
   /** Replay-safe delta append of a batch's canonical-URL hashes. */
   def appendUrlHistoryDelta(spark: org.apache.spark.sql.SparkSession,
       df: DataFrame, urlCol: String, idCol: String, table: String,
@@ -141,28 +134,6 @@ object UrlOps {
     val (withC, cu) = withCanonCol(df, urlCol)
     Dedup.appendHashHistoryDelta(spark, withC, cu, idCol, s"${table}_url", batchId)
   }
-
-  /** Fold the URL-history delta into its bucketed table. */
-  def compactUrlDelta(spark: org.apache.spark.sql.SparkSession,
-      table: String): Unit =
-    Dedup.compactHashDelta(spark, s"${table}_url")
-
-  /** Byte-ratio auto-fold (the measured-trigger policy; fs metadata
-    * only). Returns true if a fold ran. */
-  def compactUrlIfNeeded(spark: org.apache.spark.sql.SparkSession,
-      table: String, maxDeltaRatio: Double = 0.10): Boolean = {
-    require(maxDeltaRatio > 0, "maxDeltaRatio must be positive")
-    if (!spark.catalog.tableExists(s"${table}_url_xh")) return false
-    val (d, m) = Layout.deltaMainBytes(spark, s"${table}_url_xh")
-    val fold = d > 0 && d >= maxDeltaRatio * m
-    if (fold) compactUrlDelta(spark, table)
-    fold
-  }
-
-  /** Drop a URL history (table + location + delta state). */
-  def dropUrlHistory(spark: org.apache.spark.sql.SparkSession,
-      table: String): Unit =
-    Dedup.dropHashHistory(spark, s"${table}_url")
 
   /** Drop batch rows whose CANONICAL url the history (main ∪ delta)
     * holds under a DIFFERENT id — [[Dedup.exactIncrementalDelta]] over

@@ -536,7 +536,7 @@ object LlmQueries {
           concat(col("text"), lit(" zzextra")).as("text"))
       // rebuild from scratch each run: a PREVIOUS session's warehouse
       // directory would otherwise fail the managed-table create
-      Dedup.dropBandHistory(s, "l02h_hist")
+      Dedup.BandHistory.drop(s, "l02h_hist")
       Dedup.writeBandHistory(docs, "text", "doc_id", "l02h_hist", numBuckets = 8)
       val cands = Dedup.minhashIncremental(s, batch, "l02h_hist", "text", "doc_id",
           maxBucket = Int.MaxValue)
@@ -564,7 +564,7 @@ object LlmQueries {
       // writes would otherwise wedge the query on the missing _sh half
       if (!s.catalog.tableExists(table) ||
           !s.catalog.tableExists(s"${table}_sh")) {
-        Dedup.dropBandHistory(s, table) // orphaned location from a prior session
+        Dedup.BandHistory.drop(s, table) // orphaned location from a prior session
         Dedup.writeBandHistory(docs, "text", "doc_id", table, numBuckets = 8)
       }
       val batch = docs.where(col("doc_id") % 7 === 0)
@@ -597,7 +597,7 @@ object LlmQueries {
       val probe = arrived
         .select((col("doc_id") + 200000).as("doc_id"),
           concat(col("text"), lit(" zzextra")).as("text"))
-      Dedup.dropBandHistory(s, "l02i_hist") // also clears stale deltas
+      Dedup.BandHistory.drop(s, "l02i_hist") // also clears stale deltas
       Dedup.writeBandHistory(hist, "text", "doc_id", "l02i_hist", numBuckets = 8)
       Dedup.appendBandHistoryDelta(s, arrived, "text", "doc_id", "l02i_hist",
         batchId = 0)
@@ -613,7 +613,7 @@ object LlmQueries {
       // delta read resolves lazily at final analysis, after compaction
       // renamed the delta away — pin the 1-row result eagerly first
       val missedPre = missed("missed_delta").localCheckpoint(eager = true)
-      Dedup.compactBandDelta(s, "l02i_hist")
+      Dedup.BandHistory.fold(s, "l02i_hist")
       missedPre.crossJoin(missed("missed_compacted"))
         .crossJoin(planted.agg(count(lit(1)).as("n_planted")))
     }, Some("""SELECT 0 AS missed_delta, 0 AS missed_compacted, COUNT(*) AS n_planted FROM documents WHERE doc_id % 7 = 0""")),
@@ -630,7 +630,7 @@ object LlmQueries {
       // BOTH tables gated — see l02h_probe
       if (!s.catalog.tableExists(table) ||
           !s.catalog.tableExists(s"${table}_sh")) {
-        Dedup.dropBandHistory(s, table) // orphaned location from a prior session
+        Dedup.BandHistory.drop(s, table) // orphaned location from a prior session
         Dedup.writeBandHistory(docs.where(col("doc_id") % 7 =!= 0),
           "text", "doc_id", table, numBuckets = 8)
         Dedup.appendBandHistoryDelta(s, docs.where(col("doc_id") % 7 === 0),
@@ -1485,12 +1485,12 @@ object LlmQueries {
         .stripSuffix("/") + "/l23_out"
       // rebuild from scratch each run: stale pointer/history from a
       // previous rep or session would no-op the batches (l02i pattern)
-      Dedup.dropIntakeHistory(s, table)
+      Dedup.IntakeHistory.drop(s, table)
       val outP = new org.apache.hadoop.fs.Path(outDir)
       outP.getFileSystem(s.sparkContext.hadoopConfiguration).delete(outP, true)
       StreamOps.intakeBatch(b0, 0L, table, 8, "html", "doc_id", outDir)
       StreamOps.intakeBatch(b1, 1L, table, 8, "html", "doc_id", outDir)
-      Dedup.compactIntakeDelta(s, table) // mid-stream fold: b2 probes MAIN
+      Dedup.IntakeHistory.fold(s, table) // mid-stream fold: b2 probes MAIN
       StreamOps.intakeBatch(b2, 2L, table, 8, "html", "doc_id", outDir)
       (0 to 2).map(b => s.read.parquet(s"$outDir/batch-$b")
           .select(col("doc_id"), lit(b).cast("int").as("batch"), col("quality")))
@@ -1533,12 +1533,12 @@ object LlmQueries {
       if (!s.catalog.tableExists(table) ||
           !s.catalog.tableExists(s"${table}_sh") ||
           !s.catalog.tableExists(s"${table}_xh")) {
-        Dedup.dropIntakeHistory(s, table) // orphaned dirs from a prior session
+        Dedup.IntakeHistory.drop(s, table) // orphaned dirs from a prior session
         fs.delete(outP, true)
         StreamOps.intakeBatch(docs.where(col("doc_id") % 3 =!= 1)
             .select(col("doc_id"), wrap(col("__clean")).as("html")),
           0L, table, 8, "html", "doc_id", outDir)
-        Dedup.compactIntakeDelta(s, table)
+        Dedup.IntakeHistory.fold(s, table)
       }
       // roll the pointer back so every rep replays batch 1 for real
       // (overwrite-own-dir appends keep the history idempotent)
@@ -1599,8 +1599,8 @@ object LlmQueries {
       // original, so the copy (larger id) can never be its cluster's
       // minimum — whatever hash-collision classes join the component
       val survivedCopies = Dedup.imageNearDupClusters(
-          originals.unionByName(copies), "payload", "doc_id",
-          maxDist = 3, maxBucket = Int.MaxValue)
+          Multimodal.multimodalIdentities(originals.unionByName(copies),
+            "payload", "doc_id"), "doc_id", maxBucket = Int.MaxValue)
         .where(col("doc_id") === col("cluster") && col("doc_id") >= 200000)
         .agg(count(lit(1)).as("copies_survived"))
       missed.crossJoin(nonzero)
@@ -1626,11 +1626,12 @@ object LlmQueries {
       val table = s"l24bp_hist_${sfTag(d)}"
       val hist = docs.where(col("doc_id") % 3 =!= 1)
       if (!s.catalog.tableExists(s"${table}_ph")) {
-        Dedup.dropImageHistory(s, table) // orphaned location from a prior session
-        val seedImgs = Multimodal.syntheticPpmMixed(hist, "doc_id", 16, 16)
-        Dedup.ensureImageHistory(s, seedImgs, "payload", "doc_id", table, 8)
-        Dedup.appendImageHistoryDelta(s, seedImgs, "payload", "doc_id", table, 0L)
-        Dedup.compactImageDelta(s, table) // steady state: folded main
+        Dedup.ImageHistory.drop(s, table) // orphaned location from a prior session
+        val seed = Multimodal.multimodalIdentities(
+          Multimodal.syntheticPpmMixed(hist, "doc_id", 16, 16), "payload", "doc_id")
+        Dedup.ImageHistory.ensure(s, table, seed.schema("doc_id"), 8)
+        Dedup.appendImageHistoryDelta(s, seed, "doc_id", table, 0L)
+        Dedup.ImageHistory.fold(s, table) // steady state: folded main
       }
       val fresh = Multimodal.syntheticPpmMixed(
         docs.where(col("doc_id") % 3 === 1), "doc_id", 16, 16)
@@ -1646,8 +1647,8 @@ object LlmQueries {
         .unionByName(vsHist.select(col("doc_id"), col("payload")))
         .unionByName(within.select(col("doc_id"), col("payload")))
       Dedup.imageIncrementalDelta(s,
-          Dedup.imageExact(batch, "payload", "doc_id"),
-          table, "payload", "doc_id")
+          Dedup.imageExact(Multimodal.multimodalIdentities(batch, "payload", "doc_id"),
+            "doc_id"), table, "doc_id")
         .select(col("doc_id")).orderBy(col("doc_id"))
     }, Some("""SELECT doc_id FROM documents WHERE doc_id % 3 = 1 ORDER BY doc_id""")),
 
@@ -1725,10 +1726,11 @@ object LlmQueries {
       val histPcm = Multimodal.syntheticWavPcm16(hist, "doc_id")
         .select(col("doc_id"), col("payload"))
       if (!s.catalog.tableExists(s"${table}_ab")) {
-        Dedup.dropAudioHistory(s, table) // orphaned location from a prior session
-        Dedup.ensureAudioHistory(s, histPcm, "payload", "doc_id", table, 8)
-        Dedup.appendAudioHistoryDelta(s, histPcm, "payload", "doc_id", table, 0L)
-        Dedup.compactAudioDelta(s, table) // steady state: folded main
+        Dedup.AudioHistory.drop(s, table) // orphaned location from a prior session
+        val seed = Multimodal.multimodalIdentities(histPcm, "payload", "doc_id")
+        Dedup.AudioHistory.ensure(s, table, seed.schema("doc_id"), 8)
+        Dedup.appendAudioHistoryDelta(s, seed, "doc_id", table, 0L)
+        Dedup.AudioHistory.fold(s, table) // steady state: folded main
       }
       val freshIds = docs.where(col("doc_id") % 3 === 1)
       val fresh = Multimodal.syntheticWavPcm16(freshIds, "doc_id")
@@ -1743,8 +1745,10 @@ object LlmQueries {
             .select((col("doc_id") + 300000).as("doc_id"),
               col("doc_id").as("__seed")), "__seed")
         .select(col("doc_id"), col("payload"))
-      // one synthesis pass for the whole row (the l28 rationale)
-      val batch = fresh.unionByName(vsHist).unionByName(within)
+      // one synthesis + decode pass for the whole row (the l28
+      // rationale): every leg below reads these identities
+      val batch = Multimodal.multimodalIdentities(
+          fresh.unionByName(vsHist).unionByName(within), "payload", "doc_id")
         .localCheckpoint(true)
       // claim (1): banded history probe == brute-force Hamming over
       // the same signatures (different-id, <= AudioMaxDist)
@@ -1754,11 +1758,10 @@ object LlmQueries {
       // appears at a larger scale factor (the l28/l30 recall-contract
       // discipline; production callers keep the default cap)
       val incSurvivors = Dedup.audioIncrementalDelta(s, batch, table,
-          "payload", "doc_id", maxBucket = Int.MaxValue)
+          "doc_id", maxBucket = Int.MaxValue)
         .select(col("doc_id")).localCheckpoint(true)
-      val batchSigs = Multimodal.audioFingerprint(batch)
-        .where(col("afp").isNotNull).select(col("doc_id"), col("afp"))
-        .localCheckpoint(true)
+      val batchSigs = batch.where(col("__asig").isNotNull)
+        .select(col("doc_id"), col("__asig").as("afp"))
       val histSigs = Multimodal.audioFingerprint(histPcm)
         .where(col("afp").isNotNull)
         .select(col("doc_id").as("__hid"), col("afp").as("__hafp"))
@@ -1774,8 +1777,8 @@ object LlmQueries {
         .agg(count(lit(1)).as("mismatch_hist"))
       // claims (2)+(3): the composed pipeline — within-batch cluster
       // resolution, then the history probe — kills every planted copy.
-      // Clusters derive from the already-materialized batch signatures
-      // (audioNearDupClusters would re-fingerprint the payloads)
+      // Clusters derive from the batch signatures the reference above
+      // uses (the audioNearDupClusters candidate geometry)
       val withinSurvivors = graft.operators.Graph
         .connectedComponents(
           Dedup.audioCandidates(batchSigs, "doc_id", "afp",
@@ -1785,7 +1788,7 @@ object LlmQueries {
         .where(col("id") === col("component"))
         .select(col("id").as("doc_id")).join(batch, Seq("doc_id"))
       val pipeSurvivors = Dedup.audioIncrementalDelta(s, withinSurvivors,
-          table, "payload", "doc_id", maxBucket = Int.MaxValue)
+          table, "doc_id", maxBucket = Int.MaxValue)
         .select(col("doc_id")).localCheckpoint(true)
       val missedHist = pipeSurvivors.where(col("doc_id") >= 200000 && col("doc_id") < 300000)
         .agg(count(lit(1)).as("missed_hist"))
@@ -1863,10 +1866,12 @@ object LlmQueries {
         .select(col("doc_id"), col("payload"))
       if (!s.catalog.tableExists(s"${table}_vb") ||
           !s.catalog.tableExists(s"${table}_vn")) {
-        Dedup.dropVideoHistory(s, table) // orphaned location from a prior session
-        Dedup.ensureVideoHistory(s, histVids, "payload", "doc_id", table, 8)
-        Dedup.appendVideoHistoryDelta(s, histVids, "payload", "doc_id", table, 0L)
-        Dedup.compactVideoDelta(s, table) // steady state: folded main
+        Dedup.VideoHistory.drop(s, table) // orphaned location from a prior session
+        val seed = Multimodal.multimodalIdentities(histVids, "payload", "doc_id")
+          .localCheckpoint(eager = false) // both appends read it
+        Dedup.VideoHistory.ensure(s, table, seed.schema("doc_id"), 8)
+        Dedup.appendVideoHistoryDelta(s, seed, "doc_id", table, 0L)
+        Dedup.VideoHistory.fold(s, table) // steady state: folded main
       }
       val freshIds = docs.where(col("doc_id") % 3 === 1)
       val fresh = Multimodal.syntheticY4mBlocks(freshIds, "doc_id", 64, 32, 4)
@@ -1881,14 +1886,15 @@ object LlmQueries {
             .select((col("doc_id") + 300000).as("doc_id"),
               col("doc_id").as("__seed")), "__seed", 64, 32, 4)
         .select(col("doc_id"), col("payload"))
-      val batch = fresh.unionByName(vsHist).unionByName(within)
+      val batch = Multimodal.multimodalIdentities(
+          fresh.unionByName(vsHist).unionByName(within), "payload", "doc_id")
         .localCheckpoint(true)
-      val withinSurvivors = Dedup.videoNearDupClusters(batch, "payload",
-          "doc_id", maxBucket = Int.MaxValue)
+      val withinSurvivors = Dedup.videoNearDupClusters(batch, "doc_id",
+          maxBucket = Int.MaxValue)
         .where(col("doc_id") === col("cluster"))
         .select(col("doc_id")).join(batch, Seq("doc_id"))
       Dedup.videoIncrementalDelta(s, withinSurvivors, table,
-          "payload", "doc_id", maxBucket = Int.MaxValue)
+          "doc_id", maxBucket = Int.MaxValue)
         .select(col("doc_id")).orderBy(col("doc_id"))
     }, Some("""SELECT doc_id FROM documents WHERE doc_id % 3 = 1 ORDER BY doc_id""")),
 
@@ -1932,13 +1938,11 @@ object LlmQueries {
         .select(col("doc_id"), col("doc_id").as("__seed"))
       if (!Seq("_ph", "_ab", "_vb", "_vn")
           .forall(x => s.catalog.tableExists(table + x))) {
-        StreamOps.dropMultimodalHistory(s, table) // orphaned prior-session state
+        Dedup.MultimodalHistory.drop(s, table) // orphaned prior-session state
         fs.delete(outP, true)
         StreamOps.multimodalIntakeBatch(modal(histIds, reencode = false),
           0L, table, 8, "payload", "doc_id", outDir)
-        graft.operators.Dedup.compactImageDelta(s, table)
-        graft.operators.Dedup.compactAudioDelta(s, table)
-        graft.operators.Dedup.compactVideoDelta(s, table) // steady state
+        Dedup.MultimodalHistory.fold(s, table) // steady state
       }
       // roll the pointer back so every rep replays batch 1 for real
       fs.delete(new org.apache.hadoop.fs.Path(outP, "_LATEST"), false)
@@ -2022,10 +2026,7 @@ object LlmQueries {
             .select(col("doc_id"), col("doc_id").as("__seed")), reencode = false))
         StreamOps.mixedIntakeBatch(seed, 0L, table, 8, "html", "payload",
           "doc_id", outDir)
-        Dedup.compactIntakeDelta(s, table) // steady state: folded mains
-        Dedup.compactImageDelta(s, table)
-        Dedup.compactAudioDelta(s, table)
-        Dedup.compactVideoDelta(s, table)
+        (Dedup.IntakeHistory ++ Dedup.MultimodalHistory).fold(s, table) // steady state
       }
       // roll the pointer back so every rep replays batch 1 for real
       fs.delete(new org.apache.hadoop.fs.Path(outP, "_LATEST"), false)
@@ -2138,10 +2139,7 @@ object LlmQueries {
           .unionByName(vecFrame(emb.where(col("vec_id") % 4 === 1), 1000000, idF))
         StreamOps.mixedIntakeBatch(seed, 0L, table, 8, "html", "payload",
           "doc_id", outDir, embCol = Some("embedding"))
-        Dedup.compactIntakeDelta(s, table) // steady state: folded mains
-        Dedup.compactImageDelta(s, table)
-        Dedup.compactAudioDelta(s, table)
-        Dedup.compactVideoDelta(s, table)
+        (Dedup.IntakeHistory ++ Dedup.MultimodalHistory).fold(s, table) // steady state
         Similarity.compactIvfDelta(s, s"${table}_ei")
       }
       // roll the pointer back so every rep replays batch 1 for real
@@ -2233,7 +2231,7 @@ object LlmQueries {
       val docs = Tables.documents(s, d).select(col("doc_id"), col("text"))
       val table = s"l35bp_hist_${sfTag(d)}"
       if (!s.catalog.tableExists(s"${table}_pg")) {
-        Dedup.dropParagraphHistory(s, table) // orphaned prior location
+        Dedup.ParagraphHistory.drop(s, table) // orphaned prior location
         Dedup.writeParagraphHistory(docs, "text", "doc_id", table, numBuckets = 8)
       }
       val batch = docs.where(col("doc_id") % 4 === 0)
@@ -3179,10 +3177,10 @@ object LlmQueries {
       val table = s"l40c_hist_${sfTag(d)}"
       val base = urlFixture(Tables.documents(s, d).select(col("doc_id")))
       if (!s.catalog.tableExists(s"${table}_url_xh")) {
-        U.dropUrlHistory(s, table) // stale location from a prior session
-        U.ensureUrlHistory(s, base, "url", "doc_id", table, 8)
+        Dedup.UrlHistory.drop(s, table) // stale location from a prior session
+        Dedup.UrlHistory.ensure(s, table, base.schema("doc_id"), 8)
         U.appendUrlHistoryDelta(s, base, "url", "doc_id", table, 0L)
-        U.compactUrlDelta(s, table)
+        Dedup.UrlHistory.fold(s, table)
       }
       val batch = base
         .select((col("doc_id") + 500000).as("doc_id"), col("url"))

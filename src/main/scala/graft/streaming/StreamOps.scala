@@ -274,7 +274,7 @@ object StreamOps {
     * recomputes the identical survivor set against its own crashed
     * half-state. The accumulated (100 TB) main tables are never read
     * for the write and never rewritten on the hot path; fold the delta
-    * with [[graft.operators.Dedup.compactBandDelta]] on whatever
+    * with [[graft.operators.Dedup.BandHistory]] on whatever
     * cadence bounds delta size (probes stay correct either way).
     *
     * First batch: the bucketed main tables must exist for the delta
@@ -293,7 +293,7 @@ object StreamOps {
     if (current.contains(batchId)) return false // replayed batch: no-op
     // creates whichever history half is missing (a keyed-on-one-table
     // check would wedge forever after a crash between the two creates)
-    Dedup.ensureBandHistory(spark, batch, textCol, idCol, historyTable,
+    Dedup.BandHistory.ensure(spark, historyTable, batch.schema(idCol),
       numBuckets)
     val within = Dedup.nearDedupMinhash(
       Dedup.exact(batch, textCol, idCol), textCol, idCol, threshold)
@@ -344,7 +344,7 @@ object StreamOps {
     * a batch replayed after a compaction folded its crashed append is
     * skipped by the fold manifest ([[graft.operators.Layout
     * .foldManifestDirOf]]) rather than re-appended. Fold the deltas with
-    * [[graft.operators.Dedup.compactIntakeDelta]] on whatever cadence
+    * [[graft.operators.Dedup.IntakeHistory]] on whatever cadence
     * bounds their size — probes stay correct on either side of the
     * fold, and replays stay safe across it.
     *
@@ -543,8 +543,8 @@ object StreamOps {
     val paraed =
       if (!paragraphDedup) cleanedDf
       else {
-        Dedup.ensureParagraphHistory(spark, cleanedDf, "text", idCol,
-          historyTable, numBuckets)
+        Dedup.ParagraphHistory.ensure(spark, historyTable,
+          cleanedDf.schema(idCol), numBuckets)
         // the within-result checkpoint keeps the probe's ~4 references
         // from re-running the within pass's two shuffles each time
         Dedup.paragraphIncrementalDelta(spark,
@@ -646,7 +646,7 @@ object StreamOps {
     // creates whichever history tables are missing (crash-safe per
     // table — a keyed-on-one-table check would wedge after a crash
     // between creates)
-    Dedup.ensureIntakeHistory(spark, decon, "text", idCol, historyTable,
+    Dedup.IntakeHistory.ensure(spark, historyTable, decon.schema(idCol),
       numBuckets)
     val exactWithin = Dedup.exact(decon, "text", idCol)
     val exactNew = Dedup.exactIncrementalDelta(spark, exactWithin,
@@ -723,18 +723,16 @@ object StreamOps {
     outFrame.write.mode("overwrite").parquet(survivorsPath)
     // the history deltas project from the ALREADY-materialized survivor
     // identity frame — zero re-reads (and zero re-decodes) of the
-    // written payloads, where the payload-frame appends cost one full
-    // batch-dir scan + decode pass EACH (4 passes: image, audio, video
-    // bands, video counts — the r19 verdict's top read-amplification
-    // item). The identities are deterministic functions of the written
-    // payload bytes, so a replayed batch still overwrites each delta
-    // dir with identical content; the three appends stay independent
-    // writes in the same fixed order, preserving every crash prefix.
-    Dedup.appendImageHistoryDeltaIdent(spark, survIdent, idCol,
+    // written payloads. The identities are deterministic functions of
+    // the written payload bytes, so a replayed batch still overwrites
+    // each delta dir with identical content; the three appends stay
+    // independent writes in the same fixed order, preserving every
+    // crash prefix.
+    Dedup.appendImageHistoryDelta(spark, survIdent, idCol,
       historyTable, batchId)
-    Dedup.appendAudioHistoryDeltaIdent(spark, survIdent, idCol,
+    Dedup.appendAudioHistoryDelta(spark, survIdent, idCol,
       historyTable, batchId)
-    Dedup.appendVideoHistoryDeltaIdent(spark, survIdent, idCol,
+    Dedup.appendVideoHistoryDelta(spark, survIdent, idCol,
       historyTable, batchId)
     graft.sources.AtomicPointer.write(hconf,
       new Path(root, s"_LATEST.tmp-$batchId"), pointer, batchId.toString)
@@ -754,12 +752,11 @@ object StreamOps {
     * every modality identity together; the frame is identity-sized
     * (8 B image + 8 B audio + 12 B/frame video per row) and
     * materializes once. Every dedup stage then consumes and returns
-    * identity rows — the payload-column stage forms re-decoded the
-    * batch's blobs once per stage (2× per modality) plus once per
-    * history append. Stage boundaries still persist only the surviving
-    * ID SET (the r12 resident-bytes discipline) and semi-join the
-    * materialized identity frame back, so no stage re-runs an upstream
-    * pipeline and plans stay bounded.
+    * identity rows, so no stage or history append decodes a payload.
+    * Stage boundaries persist only the surviving ID SET (the
+    * resident-bytes discipline) and semi-join the materialized identity
+    * frame back, so no stage re-runs an upstream pipeline and plans
+    * stay bounded.
     *
     * Barrier class: `localCheckpoint` (eager) — lineage is truncated,
     * so an executor loss inside the batch fails the job and the batch
@@ -772,10 +769,8 @@ object StreamOps {
       decontaminateMm: Option[String] = None): (DataFrame, DataFrame) = {
     import graft.operators.Dedup
     val spark = batch.sparkSession
-    val like = batch.select(col(idCol), col(payloadCol)).limit(0)
-    Dedup.ensureImageHistory(spark, like, payloadCol, idCol, historyTable, numBuckets)
-    Dedup.ensureAudioHistory(spark, like, payloadCol, idCol, historyTable, numBuckets)
-    Dedup.ensureVideoHistory(spark, like, payloadCol, idCol, historyTable, numBuckets)
+    Dedup.MultimodalHistory.ensure(spark, historyTable, batch.schema(idCol),
+      numBuckets)
     def keepMinIds(clusters: DataFrame): DataFrame =
       clusters.where(col(idCol) === col("cluster")).select(col(idCol))
     // payloads resident once (the final survivor write needs them);
@@ -795,19 +790,19 @@ object StreamOps {
     // leg's placement rationale: a contaminated payload must never
     // leave history rows behind)
     val base = decontaminateMm.fold(ident0) { t =>
-      step(graft.operators.Decontaminate.dropContaminatedMultimodalIdent(
+      step(graft.operators.Decontaminate.dropContaminatedIdentities(
         spark, ident0, idCol, t))
     }
     // the two image stages share ONE boundary: the exact-keep-min
     // window is identity-sized, so the incremental probe re-deriving it
     // under its two references costs a small re-sort over materialized
     // blocks, not a decode — one fewer checkpoint job per micro-batch
-    val s2 = step(Dedup.imageIncrementalDeltaIdent(spark,
-      Dedup.imageExactIdent(base, idCol), historyTable, idCol))
-    val s3 = step(keepMinIds(Dedup.audioNearDupClustersIdent(s2, idCol)))
-    val s4 = step(Dedup.audioIncrementalDeltaIdent(spark, s3, historyTable, idCol))
-    val s5 = step(keepMinIds(Dedup.videoNearDupClustersIdent(s4, idCol)))
-    val s6 = step(Dedup.videoIncrementalDeltaIdent(spark, s5, historyTable, idCol))
+    val s2 = step(Dedup.imageIncrementalDelta(spark,
+      Dedup.imageExact(base, idCol), historyTable, idCol))
+    val s3 = step(keepMinIds(Dedup.audioNearDupClusters(s2, idCol)))
+    val s4 = step(Dedup.audioIncrementalDelta(spark, s3, historyTable, idCol))
+    val s5 = step(keepMinIds(Dedup.videoNearDupClusters(s4, idCol)))
+    val s6 = step(Dedup.videoIncrementalDelta(spark, s5, historyTable, idCol))
     (batch0.join(broadcast(s6.select(col(idCol))), Seq(idCol), "left_semi"), s6)
   }
 
@@ -822,14 +817,6 @@ object StreamOps {
         multimodalIntakeBatch(batch, batchId, historyTable, numBuckets,
           payloadCol, idCol, outDir, decontaminateMm): Unit
       }
-
-  /** Drop all three modality histories of a multimodal intake. */
-  def dropMultimodalHistory(spark: org.apache.spark.sql.SparkSession,
-      table: String): Unit = {
-    graft.operators.Dedup.dropImageHistory(spark, table)
-    graft.operators.Dedup.dropAudioHistory(spark, table)
-    graft.operators.Dedup.dropVideoHistory(spark, table)
-  }
 
   /** The MIXED-corpus intake loop — ONE exactly-once micro-batch
     * pipeline over a real crawl batch, where a row carries text
@@ -963,11 +950,11 @@ object StreamOps {
     // frame (payload-leg survivors == payload-not-null merged rows by
     // construction of the full-outer merge) — zero re-reads/re-decodes
     // of the written payloads (the multimodalIntakeBatch rationale)
-    Dedup.appendImageHistoryDeltaIdent(spark, payIdent, idCol,
+    Dedup.appendImageHistoryDelta(spark, payIdent, idCol,
       historyTable, batchId)
-    Dedup.appendAudioHistoryDeltaIdent(spark, payIdent, idCol,
+    Dedup.appendAudioHistoryDelta(spark, payIdent, idCol,
       historyTable, batchId)
-    Dedup.appendVideoHistoryDeltaIdent(spark, payIdent, idCol,
+    Dedup.appendVideoHistoryDelta(spark, payIdent, idCol,
       historyTable, batchId)
     embCol.foreach { e =>
       // the seeding guard above may have deferred index creation (a
@@ -1012,18 +999,20 @@ object StreamOps {
           qualityModel, gates): Unit
       }
 
-  /** Drop all histories of a mixed intake (text pair + three
-    * modalities + the embedding-leg IVF index if one was created). */
+  /** Drop all histories of a mixed intake (text pair, the paragraph
+    * table when the paragraph leg created one, three modalities, and
+    * the embedding-leg IVF index if one was created). */
   def dropMixedHistory(spark: org.apache.spark.sql.SparkSession,
       table: String): Unit = {
-    graft.operators.Dedup.dropIntakeHistory(spark, table)
-    dropMultimodalHistory(spark, table)
+    import graft.operators.Dedup
+    (Dedup.IntakeHistory ++ Dedup.ParagraphHistory ++ Dedup.MultimodalHistory)
+      .drop(spark, table)
     graft.operators.Similarity.dropIvfIndex(spark, s"${table}_ei")
   }
 
   /** ONE maintenance call for a mixed intake's histories — the
-    * byte-ratio auto-fold ([[graft.operators.Dedup
-    * .compactIntakeIfNeeded]]'s measured-trigger policy) across every
+    * byte-ratio auto-fold ([[graft.operators.Dedup.History
+    * .foldIfNeeded]]'s measured-trigger policy) across every
     * family the loop maintains: text (band + `_sh` + `_xh`), the
     * paragraph `_pg` table when the paragraph leg created one, image
     * `_ph`, audio `_ab`, video `_vb`/`_vn`, and the embedding `_ei`
@@ -1040,16 +1029,16 @@ object StreamOps {
   def maintainMixedHistories(spark: org.apache.spark.sql.SparkSession,
       table: String, maxDeltaRatio: Double = 0.10): Seq[String] = {
     import graft.operators.{Dedup, Similarity}
-    val folded = scala.collection.mutable.ArrayBuffer.empty[String]
-    if (Dedup.compactIntakeIfNeeded(spark, table, maxDeltaRatio)) folded += "text"
-    if (Dedup.compactParagraphIfNeeded(spark, table, maxDeltaRatio)) folded += "paragraph"
-    if (Dedup.compactImageIfNeeded(spark, table, maxDeltaRatio)) folded += "image"
-    if (Dedup.compactAudioIfNeeded(spark, table, maxDeltaRatio)) folded += "audio"
-    if (Dedup.compactVideoIfNeeded(spark, table, maxDeltaRatio)) folded += "video"
+    val families = Seq("text" -> Dedup.IntakeHistory,
+      "paragraph" -> Dedup.ParagraphHistory, "image" -> Dedup.ImageHistory,
+      "audio" -> Dedup.AudioHistory, "video" -> Dedup.VideoHistory)
+    val folded = families.collect {
+      case (name, h) if h.foldIfNeeded(spark, table, maxDeltaRatio) => name
+    }
     if (spark.catalog.tableExists(s"${table}_ei") &&
         Similarity.compactIvfIfNeeded(spark, s"${table}_ei", maxDeltaRatio))
-      folded += "embedding"
-    folded.toSeq
+      folded :+ "embedding"
+    else folded
   }
 
   /** Read the current CDC state (empty frame with `schema` if none). */

@@ -12,6 +12,14 @@ class DedupSpec extends SparkSpec {
 
   private def docs = Tables.documents(spark, sf0001).select($"doc_id", $"text")
 
+  /** The identity frame of a (doc_id, payload) frame — the input of
+    * every multimodal dedup operator. */
+  private def ident(payloads: org.apache.spark.sql.DataFrame) =
+    graft.operators.Multimodal.multimodalIdentities(payloads, "payload", "doc_id")
+
+  private def ids(df: org.apache.spark.sql.DataFrame): Set[Long] =
+    df.select($"doc_id").as[Long].collect().toSet
+
   test("L1: exact dedup removes planted copies and is idempotent") {
     val copies = docs.where($"doc_id" % 5 === 0)
       .select(($"doc_id" + 100000).as("doc_id"), $"text")
@@ -61,41 +69,38 @@ class DedupSpec extends SparkSpec {
     def png(pairs: Seq[(Long, Long)]) = Multimodal.syntheticPngMixed(
       pairs.toDF("doc_id", "__seed"), "__seed", 16, 16)
       .select($"doc_id", $"payload")
-    Dedup.dropImageHistory(spark, table)
+    Dedup.ImageHistory.drop(spark, table)
     try {
-      val b0 = ppm(1L to 10L)
-      Dedup.ensureImageHistory(spark, b0, "payload", "doc_id", table, 4)
-      Dedup.appendImageHistoryDelta(spark, b0, "payload", "doc_id", table, 0)
-      def ids(df: org.apache.spark.sql.DataFrame): Set[Long] =
-        df.select($"doc_id").as[Long].collect().toSet
+      val b0 = ident(ppm(1L to 10L))
+      Dedup.ImageHistory.ensure(spark, table, b0.schema("doc_id"), 4)
+      Dedup.appendImageHistoryDelta(spark, b0, "doc_id", table, 0)
       // BEFORE compaction the probe must see the delta: a cross-codec
       // copy of history image 3 dies, fresh 20/21 survive
-      val b1 = ppm(Seq(20L, 21L)).unionByName(png(Seq((103L, 3L))))
-      assert(ids(Dedup.imageIncrementalDelta(spark, b1, table, "payload", "doc_id"))
+      val b1 = ident(ppm(Seq(20L, 21L)).unionByName(png(Seq((103L, 3L)))))
+      assert(ids(Dedup.imageIncrementalDelta(spark, b1, table, "doc_id"))
         === Set(20L, 21L), "delta-side history identity missed")
       // same-id replay: the original batch probing its own appended
       // hashes recomputes the identical (full) survivor set
-      assert(ids(Dedup.imageIncrementalDelta(spark, b0, table, "payload", "doc_id"))
+      assert(ids(Dedup.imageIncrementalDelta(spark, b0, table, "doc_id"))
         === (1L to 10L).toSet, "replay guard dropped a batch's own rows")
       // fold, then the same probes hold against the bucketed main
-      Dedup.compactImageDelta(spark, table)
+      Dedup.ImageHistory.fold(spark, table)
       assert(spark.table(s"${table}_ph").count() === 10L)
-      assert(ids(Dedup.imageIncrementalDelta(spark, b1, table, "payload", "doc_id"))
+      assert(ids(Dedup.imageIncrementalDelta(spark, b1, table, "doc_id"))
         === Set(20L, 21L), "post-fold history identity missed")
       // undecodable payloads pass through both stages (no identity)
       val junk = Seq((300L, "not an image".getBytes)).toDF("doc_id", "payload")
       val mixed = ppm(Seq(30L)).unionByName(junk)
       val within = Dedup.imageExact(
-        mixed.unionByName(png(Seq((130L, 30L)))), "payload", "doc_id")
+        ident(mixed.unionByName(png(Seq((130L, 30L))))), "doc_id")
       assert(ids(within) === Set(30L, 300L), "within-batch keep-min or passthrough broke")
-      assert(ids(Dedup.imageIncrementalDelta(spark, within, table, "payload", "doc_id"))
+      assert(ids(Dedup.imageIncrementalDelta(spark, within, table, "doc_id"))
         === Set(30L, 300L))
-    } finally Dedup.dropImageHistory(spark, table)
+    } finally Dedup.ImageHistory.drop(spark, table)
   }
 
-  test("fused identity chain: multimodalIdentities bit-matches the per-modality extractors; ident stages match the payload stages") {
+  test("fused identity chain: multimodalIdentities bit-matches the per-modality extractors") {
     import graft.operators.Multimodal
-    val table = "t_fused_ident"
     def ppm(ids: Seq[Long]) = Multimodal.syntheticPpmMixed(
       ids.toDF("doc_id"), "doc_id", 16, 16).select($"doc_id", $"payload")
     def wav(ids: Seq[Long]) = Multimodal.syntheticWavPcm16(
@@ -107,7 +112,7 @@ class DedupSpec extends SparkSpec {
     val batch = ppm(1L to 6L).unionByName(wav(10L to 15L))
       .unionByName(y4m(20L to 24L)).unionByName(junk)
       .localCheckpoint(true)
-    // (1) the fused pass returns exactly the three extractors' values
+    // the fused pass returns exactly the three extractors' values
     val fused = Multimodal.multimodalIdentities(batch, "payload", "doc_id")
       .collect().map(r => r.getLong(0) ->
         (Option(r.get(1)), Option(r.get(2)),
@@ -124,61 +129,6 @@ class DedupSpec extends SparkSpec {
       assert(p === ph(id), s"image dHash diverged for $id")
       assert(a === afp(id), s"audio fingerprint diverged for $id")
       assert(f === fhs.get(id), s"video frame hashes diverged for $id")
-    }
-    // (2) every ident stage returns the payload stage's survivor set
-    Dedup.dropImageHistory(spark, table)
-    Dedup.dropAudioHistory(spark, table)
-    Dedup.dropVideoHistory(spark, table)
-    try {
-      Dedup.ensureImageHistory(spark, batch, "payload", "doc_id", table, 4)
-      Dedup.ensureAudioHistory(spark, batch, "payload", "doc_id", table, 4)
-      Dedup.ensureVideoHistory(spark, batch, "payload", "doc_id", table, 4)
-      val hist = ppm(Seq(3L, 4L)).unionByName(wav(Seq(12L)))
-        .unionByName(y4m(Seq(22L)))
-        .select(($"doc_id" + 500).as("doc_id"), $"payload")
-      Dedup.appendImageHistoryDelta(spark, hist, "payload", "doc_id", table, 0)
-      Dedup.appendAudioHistoryDelta(spark, hist, "payload", "doc_id", table, 0)
-      Dedup.appendVideoHistoryDelta(spark, hist, "payload", "doc_id", table, 0)
-      val ident = Multimodal.multimodalIdentities(batch, "payload", "doc_id")
-        .localCheckpoint(true)
-      def ids(df: org.apache.spark.sql.DataFrame): Set[Long] =
-        df.select($"doc_id").as[Long].collect().toSet
-      assert(ids(Dedup.imageExactIdent(ident, "doc_id"))
-        === ids(Dedup.imageExact(batch, "payload", "doc_id")))
-      assert(ids(Dedup.imageIncrementalDeltaIdent(spark, ident, table, "doc_id"))
-        === ids(Dedup.imageIncrementalDelta(spark, batch, table, "payload", "doc_id")))
-      assert(ids(Dedup.audioIncrementalDeltaIdent(spark, ident, table, "doc_id"))
-        === ids(Dedup.audioIncrementalDelta(spark, batch, table, "payload", "doc_id")))
-      assert(ids(Dedup.videoIncrementalDeltaIdent(spark, ident, table, "doc_id"))
-        === ids(Dedup.videoIncrementalDelta(spark, batch, table, "payload", "doc_id")))
-      def clusters(df: org.apache.spark.sql.DataFrame): Set[(Long, Long)] =
-        df.select($"doc_id", $"cluster").as[(Long, Long)].collect().toSet
-      assert(clusters(Dedup.audioNearDupClustersIdent(ident, "doc_id"))
-        === clusters(Dedup.audioNearDupClusters(batch, "payload", "doc_id")))
-      assert(clusters(Dedup.videoNearDupClustersIdent(ident, "doc_id"))
-        === clusters(Dedup.videoNearDupClusters(batch, "payload", "doc_id")))
-      // (3) ident-projected delta appends write the SAME rows as the
-      // payload-frame appends
-      Dedup.appendImageHistoryDeltaIdent(spark, ident, "doc_id", table, 1)
-      Dedup.appendAudioHistoryDeltaIdent(spark, ident, "doc_id", table, 1)
-      Dedup.appendVideoHistoryDeltaIdent(spark, ident, "doc_id", table, 1)
-      def deltaRows(suffix: String, batchId: Long): Set[String] = {
-        val t = table + suffix
-        val dir = s"${graft.operators.Layout.deltaDirOf(spark, t)}/batch-$batchId"
-        spark.read.schema(spark.table(t).schema).parquet(dir)
-          .collect().map(_.toString).toSet
-      }
-      Dedup.appendImageHistoryDelta(spark, batch, "payload", "doc_id", table, 2)
-      Dedup.appendAudioHistoryDelta(spark, batch, "payload", "doc_id", table, 2)
-      Dedup.appendVideoHistoryDelta(spark, batch, "payload", "doc_id", table, 2)
-      Seq("_ph", "_ab", "_vb", "_vn").foreach { sfx =>
-        assert(deltaRows(sfx, 1) === deltaRows(sfx, 2),
-          s"ident append rows diverged from payload append rows in $sfx")
-      }
-    } finally {
-      Dedup.dropImageHistory(spark, table)
-      Dedup.dropAudioHistory(spark, table)
-      Dedup.dropVideoHistory(spark, table)
     }
   }
 
@@ -269,7 +219,7 @@ class DedupSpec extends SparkSpec {
 
   test("L39c: paragraph history writes are one-row-per-hash even from a NON-deduped corpus (bounded probe hits)") {
     val table = "t_pg_boot"
-    Dedup.dropParagraphHistory(spark, table)
+    Dedup.ParagraphHistory.drop(spark, table)
     try {
       // the footer paragraph appears in all three docs — a bootstrap
       // from this corpus used to store three occurrence rows for it,
@@ -302,18 +252,18 @@ class DedupSpec extends SparkSpec {
         table, "text", "doc_id")
         .collect().map(r => r.getLong(0) -> r.getString(1)).toMap
       assert(replay(1L) === "common footer text")
-    } finally Dedup.dropParagraphHistory(spark, table)
+    } finally Dedup.ParagraphHistory.drop(spark, table)
   }
 
   test("L39: paragraph history lifecycle — delta-visible probe, same-id replay, fold, auto-fold trigger") {
     val table = "t_pg_hist"
-    Dedup.dropParagraphHistory(spark, table)
+    Dedup.ParagraphHistory.drop(spark, table)
     try {
       val b0 = Seq(
         (1L, "seed intro one\ncommon footer text"),
         (2L, "seed intro two\nsecond body line"))
         .toDF("doc_id", "text")
-      Dedup.ensureParagraphHistory(spark, b0, "text", "doc_id", table, 4)
+      Dedup.ParagraphHistory.ensure(spark, table, b0.schema("doc_id"), 4)
       Dedup.appendParagraphHistoryDelta(spark, b0, "text", "doc_id", table, 0)
       def probe(df: org.apache.spark.sql.DataFrame): Map[Long, String] =
         Dedup.paragraphIncrementalDelta(spark, df, table, "text", "doc_id")
@@ -335,7 +285,7 @@ class DedupSpec extends SparkSpec {
         2L -> "seed intro two\nsecond body line"),
         s"replay guard dropped a batch's own paragraphs: $replay")
       // fold, then the same probes hold against the bucketed main
-      Dedup.compactParagraphDelta(spark, table)
+      Dedup.ParagraphHistory.fold(spark, table)
       assert(spark.table(s"${table}_pg").count() === 4L)
       assert(probe(b1) === Map(10L -> "fresh ten line"),
         "post-fold paragraph identity missed")
@@ -344,11 +294,11 @@ class DedupSpec extends SparkSpec {
       Dedup.appendParagraphHistoryDelta(spark,
         Seq((20L, "late delta paragraph")).toDF("doc_id", "text"),
         "text", "doc_id", table, 1)
-      assert(Dedup.compactParagraphIfNeeded(spark, table, 1e-9))
-      assert(!Dedup.compactParagraphIfNeeded(spark, table, 1e-9))
+      assert(Dedup.ParagraphHistory.foldIfNeeded(spark, table, 1e-9))
+      assert(!Dedup.ParagraphHistory.foldIfNeeded(spark, table, 1e-9))
       assert(probe(Seq((30L, "late delta paragraph\nbrand new line"))
         .toDF("doc_id", "text")) === Map(30L -> "brand new line"))
-    } finally Dedup.dropParagraphHistory(spark, table)
+    } finally Dedup.ParagraphHistory.drop(spark, table)
   }
 
   test("L28b: audio history lifecycle — delta-visible banded probe, same-id replay, fold, undecodable passthrough") {
@@ -358,39 +308,38 @@ class DedupSpec extends SparkSpec {
       ids.toDF("doc_id"), "doc_id").select($"doc_id", $"payload")
     def mulaw(pairs: Seq[(Long, Long)]) = Multimodal.syntheticWavMulawTone(
       pairs.toDF("doc_id", "__seed"), "__seed").select($"doc_id", $"payload")
-    Dedup.dropAudioHistory(spark, table)
+    Dedup.AudioHistory.drop(spark, table)
     try {
-      val b0 = pcm(1L to 10L)
-      Dedup.ensureAudioHistory(spark, b0, "payload", "doc_id", table, 4)
-      Dedup.appendAudioHistoryDelta(spark, b0, "payload", "doc_id", table, 0)
-      def ids(df: org.apache.spark.sql.DataFrame): Set[Long] =
-        df.select($"doc_id").as[Long].collect().toSet
+      val b0 = ident(pcm(1L to 10L))
+      Dedup.AudioHistory.ensure(spark, table, b0.schema("doc_id"), 4)
+      Dedup.appendAudioHistoryDelta(spark, b0, "doc_id", table, 0)
       // BEFORE compaction the probe must see the delta: a LOSSY μ-law
       // re-encode of history clip 3 (a few Hamming bits away, not
       // equal) dies on the band join; fresh 20/21 survive
-      val b1 = pcm(Seq(20L, 21L)).unionByName(mulaw(Seq((103L, 3L))))
-      assert(ids(Dedup.audioIncrementalDelta(spark, b1, table, "payload", "doc_id"))
+      val b1 = ident(pcm(Seq(20L, 21L)).unionByName(mulaw(Seq((103L, 3L)))))
+      assert(ids(Dedup.audioIncrementalDelta(spark, b1, table, "doc_id"))
         === Set(20L, 21L), "delta-side lossy re-encode missed")
       // same-id replay: the original batch probing its own appended
       // signatures recomputes the identical (full) survivor set
-      assert(ids(Dedup.audioIncrementalDelta(spark, b0, table, "payload", "doc_id"))
+      assert(ids(Dedup.audioIncrementalDelta(spark, b0, table, "doc_id"))
         === (1L to 10L).toSet, "replay guard dropped a batch's own rows")
       // fold, then the same probes hold against the bucketed main
-      Dedup.compactAudioDelta(spark, table)
+      Dedup.AudioHistory.fold(spark, table)
       assert(spark.table(s"${table}_ab").count() === 10L * Dedup.AudioBands)
-      assert(ids(Dedup.audioIncrementalDelta(spark, b1, table, "payload", "doc_id"))
+      assert(ids(Dedup.audioIncrementalDelta(spark, b1, table, "doc_id"))
         === Set(20L, 21L), "post-fold lossy re-encode missed")
       // undecodable payloads pass through (no identity), and the
       // within-batch cluster resolution keeps min id per re-encode pair
       val junk = Seq((300L, "not audio".getBytes)).toDF("doc_id", "payload")
-      val batch = pcm(Seq(30L)).unionByName(mulaw(Seq((130L, 30L)))).unionByName(junk)
-      val within = Dedup.audioNearDupClusters(batch, "payload", "doc_id")
+      val batch = ident(pcm(Seq(30L)).unionByName(mulaw(Seq((130L, 30L))))
+        .unionByName(junk))
+      val within = Dedup.audioNearDupClusters(batch, "doc_id")
         .where($"doc_id" === $"cluster").select($"doc_id")
         .join(batch, Seq("doc_id"))
       assert(ids(within) === Set(30L, 300L), "within-batch keep-min or passthrough broke")
-      assert(ids(Dedup.audioIncrementalDelta(spark, within, table, "payload", "doc_id"))
+      assert(ids(Dedup.audioIncrementalDelta(spark, within, table, "doc_id"))
         === Set(30L, 300L))
-    } finally Dedup.dropAudioHistory(spark, table)
+    } finally Dedup.AudioHistory.drop(spark, table)
   }
 
   test("L30: video frame vote — shared-prefix clips pair on the shorter length, half-overlap stays distinct, copies never survive") {
@@ -414,7 +363,7 @@ class DedupSpec extends SparkSpec {
       (4L, y4m(fA.take(2))),                          // D: A's 2-frame prefix clip (2/2 of min)
       (5L, "not a video".getBytes))                   // no identity
       .toDF("doc_id", "payload")
-    val clusters = Dedup.videoNearDupClusters(vids, "payload", "doc_id",
+    val clusters = Dedup.videoNearDupClusters(ident(vids), "doc_id",
         maxBucket = Int.MaxValue)
       .as[(Long, Long)].collect().toMap
     assert(clusters(2L) === 2L, "half-overlap must stay a distinct video")
@@ -433,49 +382,95 @@ class DedupSpec extends SparkSpec {
     def mjpeg(pairs: Seq[(Long, Long)]) = Multimodal.syntheticAviMjpegBlocks(
       pairs.toDF("doc_id", "__seed"), "__seed", 64, 32, 4)
       .select($"doc_id", $"payload")
-    Dedup.dropVideoHistory(spark, table)
+    Dedup.VideoHistory.drop(spark, table)
     try {
-      val b0 = y4m(1L to 10L)
-      Dedup.ensureVideoHistory(spark, b0, "payload", "doc_id", table, 4)
-      Dedup.appendVideoHistoryDelta(spark, b0, "payload", "doc_id", table, 0)
-      def ids(df: org.apache.spark.sql.DataFrame): Set[Long] =
-        df.select($"doc_id").as[Long].collect().toSet
+      val b0 = ident(y4m(1L to 10L))
+      Dedup.VideoHistory.ensure(spark, table, b0.schema("doc_id"), 4)
+      Dedup.appendVideoHistoryDelta(spark, b0, "doc_id", table, 0)
       // BEFORE compaction: the cross-container copy of history video 3
       // dies on the delta-side frame vote, fresh 20/21 survive
-      val b1 = y4m(Seq(20L, 21L)).unionByName(mjpeg(Seq((103L, 3L))))
-      assert(ids(Dedup.videoIncrementalDelta(spark, b1, table, "payload", "doc_id"))
+      val b1 = ident(y4m(Seq(20L, 21L)).unionByName(mjpeg(Seq((103L, 3L)))))
+      assert(ids(Dedup.videoIncrementalDelta(spark, b1, table, "doc_id"))
         === Set(20L, 21L), "delta-side cross-container vote missed")
       // same-id replay: the batch probing its own appended frames
       // recomputes the identical survivor set
-      assert(ids(Dedup.videoIncrementalDelta(spark, b0, table, "payload", "doc_id"))
+      assert(ids(Dedup.videoIncrementalDelta(spark, b0, table, "doc_id"))
         === (1L to 10L).toSet, "replay guard dropped a batch's own rows")
       // fold, probes hold against the bucketed mains
-      Dedup.compactVideoDelta(spark, table)
+      Dedup.VideoHistory.fold(spark, table)
       assert(spark.table(s"${table}_vb").count() === 10L * 4 * Dedup.VideoBands)
       assert(spark.table(s"${table}_vn").count() === 10L)
-      assert(ids(Dedup.videoIncrementalDelta(spark, b1, table, "payload", "doc_id"))
+      assert(ids(Dedup.videoIncrementalDelta(spark, b1, table, "doc_id"))
         === Set(20L, 21L), "post-fold vote missed")
       // crash window: band rows appended, vote denominators NOT (the
       // appendVideoHistoryDelta order) — the probe must UNDER-drop
       // (copy of 30 survives), never error or wrongly drop
-      Dedup.appendVideoHistoryDelta(spark, y4m(Seq(30L)), "payload", "doc_id", table, 1)
+      Dedup.appendVideoHistoryDelta(spark, ident(y4m(Seq(30L))), "doc_id", table, 1)
       val nDelta = new org.apache.hadoop.fs.Path(
         Layout.deltaDirOf(spark, s"${table}_vn"), "batch-1")
       nDelta.getFileSystem(spark.sparkContext.hadoopConfiguration)
         .delete(nDelta, true)
-      val probe30 = mjpeg(Seq((130L, 30L))).unionByName(y4m(Seq(40L)))
-      assert(ids(Dedup.videoIncrementalDelta(spark, probe30, table, "payload", "doc_id"))
+      val probe30 = ident(mjpeg(Seq((130L, 30L))).unionByName(y4m(Seq(40L))))
+      assert(ids(Dedup.videoIncrementalDelta(spark, probe30, table, "doc_id"))
         === Set(130L, 40L),
         "missing vote denominator must under-drop, not error")
       // re-append (replay) completes the pair → the copy now dies
-      Dedup.appendVideoHistoryDelta(spark, y4m(Seq(30L)), "payload", "doc_id", table, 1)
-      assert(ids(Dedup.videoIncrementalDelta(spark, probe30, table, "payload", "doc_id"))
+      Dedup.appendVideoHistoryDelta(spark, ident(y4m(Seq(30L))), "doc_id", table, 1)
+      assert(ids(Dedup.videoIncrementalDelta(spark, probe30, table, "doc_id"))
         === Set(40L))
       // undecodable passthrough
       val junk = Seq((300L, "not video".getBytes)).toDF("doc_id", "payload")
-      assert(ids(Dedup.videoIncrementalDelta(spark, junk, table, "payload", "doc_id"))
+      assert(ids(Dedup.videoIncrementalDelta(spark, ident(junk), table, "doc_id"))
         === Set(300L))
-    } finally Dedup.dropVideoHistory(spark, table)
+    } finally Dedup.VideoHistory.drop(spark, table)
+  }
+
+  test("history ensure: a video history with only `_vn` present gets `_vb` created, `_vn` untouched") {
+    import graft.operators.{Layout, Multimodal}
+    val table = "t_vid_half"
+    def y4m(ids: Seq[Long]) = ident(Multimodal.syntheticY4mBlocks(
+      ids.toDF("doc_id"), "doc_id", 64, 32, 4).select($"doc_id", $"payload"))
+    Dedup.VideoHistory.drop(spark, table)
+    try {
+      val b0 = y4m(1L to 3L)
+      Dedup.VideoHistory.ensure(spark, table, b0.schema("doc_id"), 4)
+      Dedup.appendVideoHistoryDelta(spark, b0, "doc_id", table, 0)
+      Dedup.VideoHistory.fold(spark, table)
+      // the half-lost state: `_vb` gone with its location, `_vn` folded
+      Layout.dropTableAndLocation(spark, s"${table}_vb")
+      val counts = spark.table(s"${table}_vn").collect().map(_.toString).toSet
+      assert(counts.size === 3)
+      Dedup.VideoHistory.ensure(spark, table, b0.schema("doc_id"), 4)
+      assert(spark.table(s"${table}_vb").count() === 0L, "_vb must be created empty")
+      val spec = spark.sessionState.catalog.getTableMetadata(
+        spark.sessionState.sqlParser.parseTableIdentifier(s"${table}_vb")).bucketSpec
+      assert(spec.map(b => (b.numBuckets, b.bucketColumnNames)) ===
+        Some((4, Seq("__fidx", "__band", "__bucket"))))
+      assert(spark.table(s"${table}_vn").collect().map(_.toString).toSet === counts,
+        "ensure must not touch the surviving `_vn`")
+      // the created table takes the appends' rows: a later batch folds in
+      Dedup.appendVideoHistoryDelta(spark, y4m(Seq(9L)), "doc_id", table, 1)
+      Dedup.VideoHistory.fold(spark, table)
+      assert(spark.table(s"${table}_vb").count() === 4L * Dedup.VideoBands)
+      assert(spark.table(s"${table}_vn").count() === 4L)
+    } finally Dedup.VideoHistory.drop(spark, table)
+  }
+
+  test("history fold-if-needed: a stale delta without its table folds nothing and does not throw") {
+    import graft.operators.Layout
+    import graft.streaming.StreamOps
+    val table = "t_stale_delta"
+    StreamOps.dropMixedHistory(spark, table)
+    try {
+      // an image delta with no `_ph` table — what a new session over an
+      // old warehouse sees under the in-memory metastore, or a drop that
+      // crashed between the table and its delta
+      Seq((1L, 7L)).toDF("__pid", "__ph").write
+        .parquet(s"${Layout.deltaDirOf(spark, s"${table}_ph")}/batch-0")
+      assert(!spark.catalog.tableExists(s"${table}_ph"))
+      val folded = StreamOps.maintainMixedHistories(spark, table)
+      assert(!folded.contains("image"), s"folded: $folded")
+    } finally StreamOps.dropMixedHistory(spark, table)
   }
 
   test("L23 auto-compaction: byte-ratio trigger folds when earned, probe's delta legs vanish, replay stays safe across an auto fold") {
@@ -485,7 +480,7 @@ class DedupSpec extends SparkSpec {
     val table = "t_autofold"
     val outDir = tmpDir("autofold_out")
     val hconf = spark.sparkContext.hadoopConfiguration
-    Dedup.dropIntakeHistory(spark, table)
+    Dedup.IntakeHistory.drop(spark, table)
     try {
       def docs(ids: Range) = ids.map(_.toLong).toDF("doc_id")
         .select($"doc_id", concat(lit("<p>"),
@@ -500,19 +495,19 @@ class DedupSpec extends SparkSpec {
       // early folds are intended), and a second call does not thrash
       StreamOps.intakeBatch(docs(0 until 300), 0L, table, 4, "html", "doc_id", outDir)
       assert(anyDelta, "append should land delta-side")
-      assert(Dedup.compactIntakeIfNeeded(spark, table), "over-ratio delta must fold")
+      assert(Dedup.IntakeHistory.foldIfNeeded(spark, table), "over-ratio delta must fold")
       assert(!anyDelta, "fold must clear every delta dir")
-      assert(!Dedup.compactIntakeIfNeeded(spark, table), "empty delta must not re-fold")
+      assert(!Dedup.IntakeHistory.foldIfNeeded(spark, table), "empty delta must not re-fold")
       // a small batch against the now-large main stays UNDER the 10%
       // ratio: the policy leaves it delta-side (fold work not yet earned)
       StreamOps.intakeBatch(docs(300 until 310), 1L, table, 4, "html", "doc_id", outDir)
       assert(anyDelta)
-      assert(!Dedup.compactIntakeIfNeeded(spark, table, maxDeltaRatio = 0.5),
+      assert(!Dedup.IntakeHistory.foldIfNeeded(spark, table, maxDeltaRatio = 0.5),
         "a 10-doc delta over a 300-doc main must not trigger at ratio 0.5")
       // tightening the ratio models accumulated pressure → auto fold;
       // post-fold the probes' delta legs VANISH (they key on the dirs'
       // existence — absence is the recovered probe plan)
-      assert(Dedup.compactIntakeIfNeeded(spark, table, maxDeltaRatio = 1e-9))
+      assert(Dedup.IntakeHistory.foldIfNeeded(spark, table, maxDeltaRatio = 1e-9))
       assert(!anyDelta, "post-fold probes must be main-only")
       val survivors1 = spark.read.parquet(s"$outDir/batch-1")
         .select($"doc_id").as[Long].collect().sorted
@@ -529,7 +524,7 @@ class DedupSpec extends SparkSpec {
         .select($"doc_id").as[Long].collect().sorted
       assert(replayed === survivors1, "replay across an auto fold changed the survivor set")
       assert(!anyDelta, "a folded batch's replay must not re-append delta rows")
-    } finally Dedup.dropIntakeHistory(spark, table)
+    } finally Dedup.IntakeHistory.drop(spark, table)
   }
 
   test("L2b/L24: hamming at the full 64-bit window counts the sign bit; banding handles negative signatures") {
@@ -564,12 +559,6 @@ class DedupSpec extends SparkSpec {
         maxDist = 0, nBands = 1, bits = 64, maxBucket = 1024)
     }
     assert(e.getMessage.contains("band"))
-    // and the caller that wired nBands = maxDist + 1 rejects maxDist=0
-    // at its own door (exact dHash identity is imageExact's job)
-    intercept[IllegalArgumentException] {
-      Dedup.imageNearDupClusters(sigs.select($"doc_id",
-        lit(Array[Byte]()).as("payload")), "payload", "doc_id", maxDist = 0)
-    }
   }
 
   test("L4b: ANN top-k overlaps exact top-k (recall@10)") {
@@ -1106,8 +1095,8 @@ class DedupSpec extends SparkSpec {
           includeDelta = includeDelta)
         .where($"jaccard" >= 0.8)
         .select($"id_new", $"id_hist").as[(Long, Long)].collect().toSet
-    Dedup.dropBandHistory(spark, table)
-    Dedup.dropBandHistory(spark, ref)
+    Dedup.BandHistory.drop(spark, table)
+    Dedup.BandHistory.drop(spark, ref)
     Dedup.writeBandHistory(hist, "text", "doc_id", table, numBuckets = 4)
     Dedup.writeBandHistory(hist, "text", "doc_id", ref, numBuckets = 4)
     val fs = org.apache.hadoop.fs.FileSystem.get(spark.sparkContext.hadoopConfiguration)
@@ -1133,7 +1122,7 @@ class DedupSpec extends SparkSpec {
       assert(pairs(ref) === withDelta,
         "delta-probe diverged from direct-append probe")
       // compaction folds both tables, preserves bucket spec, delta gone
-      Dedup.compactBandDelta(spark, table)
+      Dedup.BandHistory.fold(spark, table)
       assert(!fs.exists(deltaP(table)) && !fs.exists(deltaP(s"${table}_sh")))
       assert(spark.table(table).select($"doc_id").distinct().count() === 14)
       assert(spark.table(s"${table}_sh").select($"doc_id").distinct().count() === 14)
@@ -1144,11 +1133,11 @@ class DedupSpec extends SparkSpec {
       }
       assert(pairs(table) === withDelta, "compaction changed probe results")
       // compaction with no delta is a no-op
-      Dedup.compactBandDelta(spark, table)
+      Dedup.BandHistory.fold(spark, table)
       assert(spark.table(table).select($"doc_id").distinct().count() === 14)
     } finally {
-      Dedup.dropBandHistory(spark, table)
-      Dedup.dropBandHistory(spark, ref)
+      Dedup.BandHistory.drop(spark, table)
+      Dedup.BandHistory.drop(spark, ref)
     }
   }
 
@@ -1160,7 +1149,7 @@ class DedupSpec extends SparkSpec {
     val arrived = Seq((11L, doc(11)), (12L, doc(12))).toDF("doc_id", "text")
     val probeBatch = Seq((21L, doc(11) + " zz")).toDF("doc_id", "text")
     val fs = org.apache.hadoop.fs.FileSystem.get(spark.sparkContext.hadoopConfiguration)
-    Dedup.dropBandHistory(spark, table)
+    Dedup.BandHistory.drop(spark, table)
     Dedup.writeBandHistory(hist, "text", "doc_id", table, numBuckets = 4)
     try {
       Dedup.appendBandHistoryDelta(spark, arrived, "text", "doc_id", table, batchId = 0)
@@ -1179,10 +1168,10 @@ class DedupSpec extends SparkSpec {
       assert(fs.exists(new org.apache.hadoop.fs.Path(Layout.deltaDirOf(spark, s"${table}_sh"))))
       assert(pairs() === Set((21L, 11L)), "pair lost in the between-folds window")
       // re-running the compaction completes the job; probe unchanged
-      Dedup.compactBandDelta(spark, table)
+      Dedup.BandHistory.fold(spark, table)
       assert(!fs.exists(new org.apache.hadoop.fs.Path(Layout.deltaDirOf(spark, s"${table}_sh"))))
       assert(pairs() === Set((21L, 11L)))
-    } finally Dedup.dropBandHistory(spark, table)
+    } finally Dedup.BandHistory.drop(spark, table)
   }
 
   test("L2h: fold manifest — a batch replayed AFTER its fold is skipped, never duplicated") {
@@ -1193,11 +1182,11 @@ class DedupSpec extends SparkSpec {
     val batch = Seq((11L, doc(11)), (12L, doc(12))).toDF("doc_id", "text")
     val fs = org.apache.hadoop.fs.FileSystem.get(spark.sparkContext.hadoopConfiguration)
     def deltaP(t: String) = new org.apache.hadoop.fs.Path(Layout.deltaDirOf(spark, t))
-    Dedup.dropBandHistory(spark, table)
+    Dedup.BandHistory.drop(spark, table)
     Dedup.writeBandHistory(hist, "text", "doc_id", table, numBuckets = 4)
     try {
       Dedup.appendBandHistoryDelta(spark, batch, "text", "doc_id", table, batchId = 0)
-      Dedup.compactBandDelta(spark, table)
+      Dedup.BandHistory.fold(spark, table)
       assert(spark.table(s"${table}_sh").count() === 10)
       // the lost-checkpoint replay: the stream re-delivers batch 0 AFTER
       // the fold — without the manifest this would re-append, and the
@@ -1205,7 +1194,7 @@ class DedupSpec extends SparkSpec {
       Dedup.appendBandHistoryDelta(spark, batch, "text", "doc_id", table, batchId = 0)
       assert(!fs.exists(deltaP(table)) && !fs.exists(deltaP(s"${table}_sh")),
         "replayed folded batch landed in the delta")
-      Dedup.compactBandDelta(spark, table) // would fold the duplicate in
+      Dedup.BandHistory.fold(spark, table) // would fold the duplicate in
       // one shingle row and bands(=4) band rows per doc — no duplicates
       assert(spark.table(s"${table}_sh").count() === 10)
       assert(spark.table(table).groupBy($"doc_id").count()
@@ -1215,12 +1204,12 @@ class DedupSpec extends SparkSpec {
       val b1 = Seq((13L, doc(13))).toDF("doc_id", "text")
       Dedup.appendBandHistoryDelta(spark, b1, "text", "doc_id", table, batchId = 1)
       assert(fs.exists(deltaP(table)), "fresh batch wrongly skipped")
-      Dedup.compactBandDelta(spark, table)
+      Dedup.BandHistory.fold(spark, table)
       assert(spark.table(s"${table}_sh").count() === 11)
       // the manifest survives the folds: batch 0 AND 1 both marked
       assert(Layout.isBatchFolded(spark, table, 0) &&
         Layout.isBatchFolded(spark, table, 1))
-    } finally Dedup.dropBandHistory(spark, table)
+    } finally Dedup.BandHistory.drop(spark, table)
   }
 
   test("L4g: fold manifest — a vector batch replayed after its fold is skipped (no double top-k slots)") {
@@ -1261,7 +1250,7 @@ class DedupSpec extends SparkSpec {
     val hist = (1 to 8).map(i => (i.toLong, doc(i))).toDF("doc_id", "text")
     val d11 = Seq((11L, doc(11))).toDF("doc_id", "text")
     val probeBatch = Seq((21L, doc(11) + " zz")).toDF("doc_id", "text")
-    Dedup.dropBandHistory(spark, table)
+    Dedup.BandHistory.drop(spark, table)
     Dedup.writeBandHistory(hist, "text", "doc_id", table, numBuckets = 4)
     try {
       def rows() = Dedup.minhashIncremental(spark, probeBatch, table,
@@ -1277,13 +1266,13 @@ class DedupSpec extends SparkSpec {
       // fold ONE copy into main, redeliver delta-side again: the id now
       // lives in BOTH sources — cross-leg union and the two-source
       // shingle lookup must still emit exactly one row
-      Dedup.dropBandHistory(spark, table)
+      Dedup.BandHistory.drop(spark, table)
       Dedup.writeBandHistory(hist, "text", "doc_id", table, numBuckets = 4)
       Dedup.appendBandHistoryDelta(spark, d11, "text", "doc_id", table, batchId = 0)
-      Dedup.compactBandDelta(spark, table)
+      Dedup.BandHistory.fold(spark, table)
       Dedup.appendBandHistoryDelta(spark, d11, "text", "doc_id", table, batchId = 1)
       assert(rows() === List((21L, 11L)), "main+delta id multiplied the pair")
-    } finally Dedup.dropBandHistory(spark, table)
+    } finally Dedup.BandHistory.drop(spark, table)
   }
 
   test("L4g: every interrupted-compaction crash state recovers without loss or duplication") {
@@ -1433,7 +1422,7 @@ class DedupSpec extends SparkSpec {
       "sequence packing lays documents into fixed token windows per shard without any global cumulative sum")
     val history = sents.take(4).zipWithIndex.map { case (t, i) => (i.toLong, t) }
       .toDF("doc_id", "text")
-    Dedup.dropBandHistory(spark, "t_incr_hist")
+    Dedup.BandHistory.drop(spark, "t_incr_hist")
     Dedup.writeBandHistory(history, "text", "doc_id", "t_incr_hist", numBuckets = 4)
 
     // batch 1: a near-dup of history doc 3 plus a genuinely fresh doc
@@ -1466,7 +1455,7 @@ class DedupSpec extends SparkSpec {
       .where($"id_a" < 300L && $"id_b" >= 300L) // cross-side pairs only
       .select($"id_a", $"id_b", $"jaccard").as[(Long, Long, Double)].collect().toSet
     assert(inc === batchMode, s"incremental != batch-mode cross pairs: $inc vs $batchMode")
-    Dedup.dropBandHistory(spark, "t_incr_hist")
+    Dedup.BandHistory.drop(spark, "t_incr_hist")
   }
 
   test("L2h: compaction drops deleted docs' bands; probes match a fresh build, bucket spec preserved") {
@@ -1481,8 +1470,8 @@ class DedupSpec extends SparkSpec {
       "minhash signatures approximate jaccard similarity by taking minima of permuted shingle hashes per band")
     val corpus = sents.zipWithIndex.map { case (t, i) => (i.toLong, t) }
       .toDF("doc_id", "text")
-    Dedup.dropBandHistory(spark, "t_cmp_hist")
-    Dedup.dropBandHistory(spark, "t_cmp_fresh")
+    Dedup.BandHistory.drop(spark, "t_cmp_hist")
+    Dedup.BandHistory.drop(spark, "t_cmp_fresh")
     Dedup.writeBandHistory(corpus, "text", "doc_id", "t_cmp_hist", numBuckets = 4)
     // docs 3 and 4 are deleted from the corpus; compact to the survivors
     val survivors = corpus.where($"doc_id" < 3)
@@ -1550,8 +1539,8 @@ class DedupSpec extends SparkSpec {
         === expectRows, "recovered compaction lost or mutated rows")
       assert(probe("t_cmp_hist") === compacted)
     } finally {
-      Dedup.dropBandHistory(spark, "t_cmp_hist")
-      Dedup.dropBandHistory(spark, "t_cmp_fresh")
+      Dedup.BandHistory.drop(spark, "t_cmp_hist")
+      Dedup.BandHistory.drop(spark, "t_cmp_fresh")
     }
   }
 

@@ -308,7 +308,7 @@ class PipelineSpec extends SparkSpec {
       StructField("doc_id", LongType), StructField("text", StringType))),
       Seq("doc_id"))
     val hist = "t_handoff_hist"
-    Dedup.dropBandHistory(spark, hist)
+    Dedup.BandHistory.drop(spark, hist)
     val survDir = tmpDir("handoff_surv")
     val ckpt = tmpDir("handoff_ckpt")
     val seen = scala.collection.mutable.ArrayBuffer[Long]()
@@ -367,6 +367,6 @@ class PipelineSpec extends SparkSpec {
       // and replaying the day-2 batch is idempotent too
       deliver(spark.read.parquet(staging), seen.last)
       assert(sinkRows() === day2)
-    } finally Dedup.dropBandHistory(spark, hist)
+    } finally Dedup.BandHistory.drop(spark, hist)
   }
 }

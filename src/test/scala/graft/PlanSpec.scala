@@ -335,7 +335,7 @@ class PlanSpec extends SparkSpec with AdaptiveSparkPlanHelper {
       else p.children.iterator.flatMap(c => pathTo(c, pred)).nextOption().map(p :: _)
     val docs = graft.sources.Tables.documents(spark, sf0001)
       .select(col("doc_id"), col("text"))
-    Dedup.dropBandHistory(spark, "t_plan_hist")
+    Dedup.BandHistory.drop(spark, "t_plan_hist")
     val conf = spark.conf
     val oldAqe = conf.get("spark.sql.adaptive.enabled")
     val oldB = conf.get("spark.sql.autoBroadcastJoinThreshold")
@@ -367,7 +367,7 @@ class PlanSpec extends SparkSpec with AdaptiveSparkPlanHelper {
     } finally {
       conf.set("spark.sql.adaptive.enabled", oldAqe)
       conf.set("spark.sql.autoBroadcastJoinThreshold", oldB)
-      Dedup.dropBandHistory(spark, "t_plan_hist")
+      Dedup.BandHistory.drop(spark, "t_plan_hist")
     }
   }
 
@@ -381,7 +381,7 @@ class PlanSpec extends SparkSpec with AdaptiveSparkPlanHelper {
     val docs = graft.sources.Tables.documents(spark, sf0001)
       .select(col("doc_id"), col("text"))
     val table = "t_plan_pg"
-    Dedup.dropParagraphHistory(spark, table)
+    Dedup.ParagraphHistory.drop(spark, table)
     val conf = spark.conf
     val oldAqe = conf.get("spark.sql.adaptive.enabled")
     try {
@@ -405,7 +405,7 @@ class PlanSpec extends SparkSpec with AdaptiveSparkPlanHelper {
       assert(texts.nonEmpty && texts.forall(_ == "fresh line"))
     } finally {
       conf.set("spark.sql.adaptive.enabled", oldAqe)
-      Dedup.dropParagraphHistory(spark, table)
+      Dedup.ParagraphHistory.drop(spark, table)
     }
   }
 

@@ -718,7 +718,7 @@ class ScaleSpec extends SparkSpec {
         .stripSuffix("/") + "/t_scale_intake_out"
       val outP = new org.apache.hadoop.fs.Path(outDir)
       val fs = outP.getFileSystem(spark.sparkContext.hadoopConfiguration)
-      Dedup.dropIntakeHistory(spark, table)
+      Dedup.IntakeHistory.drop(spark, table)
       fs.delete(outP, true)
       def wrap(c: org.apache.spark.sql.Column) =
         concat(lit("""<div class="d"><p>"""), c,
@@ -810,7 +810,7 @@ class ScaleSpec extends SparkSpec {
           "fresh reversed texts were wrongly deduped")
         assertBalanced("intake-b1", stages1)
       } finally {
-        Dedup.dropIntakeHistory(spark, table)
+        Dedup.IntakeHistory.drop(spark, table)
         fs.delete(outP, true)
       }
     }
@@ -1093,8 +1093,8 @@ class ScaleSpec extends SparkSpec {
       var clusters: Map[Long, Long] = null
       val stages = probe {
         clusters = Dedup.videoNearDupClusters(
-            originals.unionByName(copies), "payload", "doc_id",
-            maxBucket = 1024)
+            Multimodal.multimodalIdentities(originals.unionByName(copies),
+              "payload", "doc_id"), "doc_id", maxBucket = 1024)
           .as[(Long, Long)].collect().toMap
       }
       copies.select($"doc_id").as[Long].collect().foreach { id =>
@@ -1124,8 +1124,8 @@ class ScaleSpec extends SparkSpec {
       var clusters: Map[Long, Long] = null
       val stages = probe {
         clusters = Dedup.audioNearDupClusters(
-            originals.unionByName(copies), "payload", "doc_id",
-            maxBucket = 1024)
+            Multimodal.multimodalIdentities(originals.unionByName(copies),
+              "payload", "doc_id"), "doc_id", maxBucket = 1024)
           .as[(Long, Long)].collect().toMap
       }
       // planted cross-codec pairs survive the cap (their buckets are

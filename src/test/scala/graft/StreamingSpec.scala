@@ -1,6 +1,6 @@
 package graft
 
-import graft.operators.{CdcApply, Joins}
+import graft.operators.{CdcApply, Dedup, Joins}
 import graft.sources.TestSources
 import graft.streaming.{FileSink, Reconcile, ReconcileLease, Stateful, StreamOps}
 import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
@@ -17,6 +17,10 @@ class StreamingSpec extends SparkSpec {
   import spark.implicits._
 
   private def ts(s: String) = Timestamp.valueOf(s)
+
+  /** Drop a text intake loop's histories, the paragraph leg's included. */
+  private def dropTextHistory(table: String): Unit =
+    (Dedup.IntakeHistory ++ Dedup.ParagraphHistory).drop(spark, table)
 
   test("T1/T6: watermark drops late rows in append mode") {
     val ms = TestSources.memory[(Timestamp, Long)]
@@ -723,7 +727,7 @@ class StreamingSpec extends SparkSpec {
     import graft.operators.Dedup
     def doc(n: Int): String = (0 until 20).map(w => s"tok${n}w$w").mkString(" ")
     val hist = "t_stream_hist"
-    Dedup.dropBandHistory(spark, hist)
+    Dedup.BandHistory.drop(spark, hist)
     val out = tmpDir("neardedup_out"); val ckpt = tmpDir("neardedup_ckpt")
     val ms = TestSources.memory[(Long, String)]
     val q = StreamOps.nearDedupSink(ms.toDF.toDF("doc_id", "text"),
@@ -780,7 +784,7 @@ class StreamingSpec extends SparkSpec {
       val after = Seq((9L, doc(8) + " rr"), (10L, doc(10))).toDF("doc_id", "text")
       assert(StreamOps.nearDedupBatch(after, 3L, hist, 4, "text", "doc_id", out))
       assert(batchIds(3) === Array(10L))
-    } finally Dedup.dropBandHistory(spark, hist)
+    } finally Dedup.BandHistory.drop(spark, hist)
   }
 
   test("L23 streaming intake: clean/score/dedup loop is exactly-once across a real mid-stream restart + compaction") {
@@ -790,7 +794,7 @@ class StreamingSpec extends SparkSpec {
     def html(t: String): String =
       s"""<div class="d"><p>$t</p></div><script>var x = "<b>";</script>"""
     val hist = "t_intake_hist"
-    Dedup.dropIntakeHistory(spark, hist)
+    dropTextHistory(hist)
     val srcDir = tmpDir("intake_src")
     val out = tmpDir("intake_out"); val ckpt = tmpDir("intake_ckpt")
     val hconf = spark.sparkContext.hadoopConfiguration
@@ -842,7 +846,7 @@ class StreamingSpec extends SparkSpec {
         "test setup: commit record for batch 1 not found")
       graft.sources.AtomicPointer.write(hconf,
         new Path(out, "_LATEST.tmp-crash"), new Path(out, "_LATEST"), "0")
-      Dedup.compactIntakeDelta(spark, hist)
+      Dedup.IntakeHistory.fold(spark, hist)
       assert(spark.table(hist).select($"doc_id").distinct().count() === 3)
       // restart from the same checkpoint: batch 1 REPLAYS through
       // recovery, then the stream continues with batch 2
@@ -859,7 +863,7 @@ class StreamingSpec extends SparkSpec {
       // fold everything and check the accumulated history is exact:
       // each survivor once — 4 band rows, 1 shingle row, 1 hash row per
       // id, no duplicates from the replay
-      Dedup.compactIntakeDelta(spark, hist)
+      Dedup.IntakeHistory.fold(spark, hist)
       assert(spark.table(hist).select($"doc_id").distinct().as[Long]
         .collect().sorted === Array(1L, 3L, 5L, 8L))
       assert(spark.table(hist).groupBy($"doc_id").count()
@@ -877,14 +881,14 @@ class StreamingSpec extends SparkSpec {
           (13L, html(doc(13)))).toDF("doc_id", "html"),
         3L, hist, 4, "html", "doc_id", out))
       assert(batchIds(3) === Array(13L))
-    } finally Dedup.dropIntakeHistory(spark, hist)
+    } finally dropTextHistory(hist)
   }
 
   test("L2i streaming leg: delta-mode near-dedup ingest is exactly-once on every leg") {
     import graft.operators.{Dedup, Layout}
     def doc(n: Int): String = (0 until 20).map(w => s"tok${n}w$w").mkString(" ")
     val hist = "t_stream_delta_hist"
-    Dedup.dropBandHistory(spark, hist)
+    Dedup.BandHistory.drop(spark, hist)
     val out = tmpDir("neardelta_out"); val ckpt = tmpDir("neardelta_ckpt")
     val fs = org.apache.hadoop.fs.FileSystem.get(spark.sparkContext.hadoopConfiguration)
     val ms = TestSources.memory[(Long, String)]
@@ -931,20 +935,20 @@ class StreamingSpec extends SparkSpec {
       assert(bandRows === Seq(4L), s"replay double-appended: $bandRows")
       // compaction folds the delta into the mains; the loop continues
       // correctly against the folded history
-      Dedup.compactBandDelta(spark, hist)
+      Dedup.BandHistory.fold(spark, hist)
       assert(!fs.exists(new org.apache.hadoop.fs.Path(Layout.deltaDirOf(spark, hist))))
       assert(spark.table(hist).select($"doc_id").distinct().count() === 3)
       val next = Seq((7L, doc(5) + " qq"), (8L, doc(8))).toDF("doc_id", "text")
       assert(StreamOps.nearDedupBatchDelta(next, 2L, hist, 4, "text", "doc_id", out))
       assert(batchIds(2) === Array(8L)) // doc 7 caught against the FOLDED main
-    } finally Dedup.dropBandHistory(spark, hist)
+    } finally Dedup.BandHistory.drop(spark, hist)
   }
 
   test("L23 optional legs: boilerplate extraction + LM gate inside the intake loop — nav text never reaches the corpus, gibberish dies on the LM") {
     import graft.operators.{Dedup, NgramLm}
     val hist = "t_legs_hist"
     val outDir = tmpDir("legs_out")
-    Dedup.dropIntakeHistory(spark, hist)
+    dropTextHistory(hist)
     try {
       val good = Seq.fill(8)("the table scans rows fast and the query joins the table").mkString(" ")
       val gib = Seq.fill(25)("qjz xvk wqq zzj pqx").mkString(" ")
@@ -970,14 +974,14 @@ class StreamingSpec extends SparkSpec {
       out.values.foreach { t =>
         assert(!t.contains("Home") && !t.contains("Privacy"), s"boilerplate leaked: $t")
       }
-    } finally Dedup.dropIntakeHistory(spark, hist)
+    } finally dropTextHistory(hist)
   }
 
   test("L31 multimodal intake: one loop dedups a mixed binary batch per modality, junk passes through, exactly-once across a replay") {
     import graft.operators.Multimodal
     val hist = "t_mm_hist"
     val outDir = tmpDir("mm_out")
-    StreamOps.dropMultimodalHistory(spark, hist)
+    Dedup.MultimodalHistory.drop(spark, hist)
     try {
       def img(pairs: (Long, Long)*) = Multimodal.syntheticPpmMixed(
         pairs.toSeq.toDF("doc_id", "__seed"), "__seed", 16, 16)
@@ -1020,7 +1024,7 @@ class StreamingSpec extends SparkSpec {
       assert(out1 === Set(60L, 61L, 62L, 63L, 999L), "replay changed the survivor set")
       // full replay: pointer already records batch 1 → no-op
       assert(!StreamOps.multimodalIntakeBatch(b1, 1L, hist, 4, "payload", "doc_id", outDir))
-    } finally StreamOps.dropMultimodalHistory(spark, hist)
+    } finally Dedup.MultimodalHistory.drop(spark, hist)
   }
 
   test("L32 mixed intake: one loop routes text and binary rows by null-ness, merges one survivor write, both-rows keep independent legs, exactly-once across a replay") {
@@ -1154,7 +1158,7 @@ class StreamingSpec extends SparkSpec {
     import graft.operators.Dedup
     val hist = "t_para_intake"
     val outDir = tmpDir("para_intake_out")
-    Dedup.dropIntakeHistory(spark, hist)
+    dropTextHistory(hist)
     try {
       def toks(seed: Long) = (0 until 40).map(i => s"tok${seed}w$i").mkString(" ")
       val footer = "shared footer paragraph repeated on every page of the site"
@@ -1203,7 +1207,7 @@ class StreamingSpec extends SparkSpec {
       val t2 = texts(2L)
       assert(t2.keySet === Set(20L) && !t2(20L).contains("shared footer"),
         s"post-fold paragraph identity missed: $t2")
-    } finally Dedup.dropIntakeHistory(spark, hist)
+    } finally dropTextHistory(hist)
   }
 
   test("L33 seeding guard: a vector-free first batch defers _ei creation — the quantizer trains on the first batch that carries vectors, never on zero") {
@@ -1253,7 +1257,7 @@ class StreamingSpec extends SparkSpec {
     import graft.operators.{Dedup, NgramLm}
     val hist = "t_lmb_hist"
     val outDir = tmpDir("lmb_out")
-    Dedup.dropIntakeHistory(spark, hist)
+    dropTextHistory(hist)
     try {
       // the CCNet shape: LM trained on a CLEAN reference (pure "ab"
       // docs — every "zq"/"bz"/"qz" bigram is unseen and penalized),
@@ -1298,7 +1302,7 @@ class StreamingSpec extends SparkSpec {
           lmBuckets = Some((lm, th, Set("head"))))
       }
       assert(thrown.getMessage.contains("share one CharLm"))
-    } finally Dedup.dropIntakeHistory(spark, hist)
+    } finally dropTextHistory(hist)
   }
 
   test("L34 decontamination leg: intakeBatch drops docs sharing an eval n-gram, short docs pass, the eval set itself never enters the corpus") {
@@ -1306,7 +1310,7 @@ class StreamingSpec extends SparkSpec {
     val hist = "t_decon_hist"
     val evalT = "t_decon_eval"
     val outDir = tmpDir("decon_out")
-    Dedup.dropIntakeHistory(spark, hist)
+    dropTextHistory(hist)
     Decontaminate.dropEvalGrams(spark, evalT)
     try {
       def page(body: String) = s"<p>$body</p>"
@@ -1343,7 +1347,7 @@ class StreamingSpec extends SparkSpec {
         .select($"doc_id").as[Long].collect().toSet
       assert(out1 === Set(13L), "contaminated doc left ghost history rows")
     } finally {
-      Dedup.dropIntakeHistory(spark, hist)
+      dropTextHistory(hist)
       Decontaminate.dropEvalGrams(spark, evalT)
     }
   }
@@ -1481,7 +1485,7 @@ class StreamingSpec extends SparkSpec {
     import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
     val hist = "t_budget_hist"
     val outDir = tmpDir("budget_out")
-    Dedup.dropIntakeHistory(spark, hist)
+    dropTextHistory(hist)
     try {
       def docs(ids: Range) = ids.map(_.toLong).toDF("doc_id")
         .select($"doc_id", concat(lit("<p>"),
@@ -1489,7 +1493,7 @@ class StreamingSpec extends SparkSpec {
             i => concat(lit("tok"), $"doc_id", lit("w"), i)), " "),
           lit("</p>")).as("html"))
       StreamOps.intakeBatch(docs(0 until 300), 0L, hist, 4, "html", "doc_id", outDir)
-      Dedup.compactIntakeDelta(spark, hist) // steady state: folded main
+      Dedup.IntakeHistory.fold(spark, hist) // steady state: folded main
       val n = new java.util.concurrent.atomic.AtomicInteger(0)
       val listener = new SparkListener {
         override def onJobStart(js: SparkListenerJobStart): Unit = { n.incrementAndGet(): Unit }
@@ -1504,7 +1508,7 @@ class StreamingSpec extends SparkSpec {
         s"steady-state intakeBatch launched ${n.get()} jobs (pinned at 20) — " +
           "a new job slipped into the hot path; re-run graft.tools.JobCountProbe " +
           "to attribute it and either fuse it or re-justify the budget")
-    } finally Dedup.dropIntakeHistory(spark, hist)
+    } finally dropTextHistory(hist)
   }
 
   test("L39 job budget: the paragraph-enabled intakeBatch stays within 34 jobs (two barriers, one append, two dedup passes over the default path)") {
@@ -1512,7 +1516,7 @@ class StreamingSpec extends SparkSpec {
     import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
     val hist = "t_budget_pg_hist"
     val outDir = tmpDir("budget_pg_out")
-    Dedup.dropIntakeHistory(spark, hist)
+    dropTextHistory(hist)
     try {
       def docs(ids: Range) = ids.map(_.toLong).toDF("doc_id")
         .select($"doc_id", concat(lit("<p>"),
@@ -1521,8 +1525,8 @@ class StreamingSpec extends SparkSpec {
           lit("</p><p>shared footer paragraph on every page</p>")).as("html"))
       StreamOps.intakeBatch(docs(0 until 300), 0L, hist, 4, "html", "doc_id",
         outDir, paragraphDedup = true)
-      Dedup.compactIntakeDelta(spark, hist)
-      Dedup.compactParagraphDelta(spark, hist) // steady state: folded mains
+      Dedup.IntakeHistory.fold(spark, hist)
+      Dedup.ParagraphHistory.fold(spark, hist) // steady state: folded mains
       val n = new java.util.concurrent.atomic.AtomicInteger(0)
       val listener = new SparkListener {
         override def onJobStart(js: SparkListenerJobStart): Unit = { n.incrementAndGet(): Unit }
@@ -1542,7 +1546,7 @@ class StreamingSpec extends SparkSpec {
       // growth is loud, like the parent.
       assert(n.get() <= 34,
         s"paragraph-enabled intakeBatch launched ${n.get()} jobs (pinned at 34)")
-    } finally Dedup.dropIntakeHistory(spark, hist)
+    } finally dropTextHistory(hist)
   }
 
   test("L31 job budget: one steady-state multimodalIntakeBatch launches at most 50 Spark jobs (pinned)") {
@@ -1560,7 +1564,7 @@ class StreamingSpec extends SparkSpec {
     import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
     val hist = "t_budget_mm_hist"
     val outDir = tmpDir("budget_mm_out")
-    StreamOps.dropMultimodalHistory(spark, hist)
+    Dedup.MultimodalHistory.drop(spark, hist)
     try {
       def mixed(ids: Range) = {
         val f = ids.map(_.toLong).toDF("doc_id")
@@ -1572,9 +1576,7 @@ class StreamingSpec extends SparkSpec {
       }
       StreamOps.multimodalIntakeBatch(mixed(0 until 90), 0L, hist, 4,
         "payload", "doc_id", outDir)
-      Dedup.compactImageDelta(spark, hist)
-      Dedup.compactAudioDelta(spark, hist)
-      Dedup.compactVideoDelta(spark, hist) // steady state: folded mains
+      Dedup.MultimodalHistory.fold(spark, hist) // steady state: folded mains
       val n = new java.util.concurrent.atomic.AtomicInteger(0)
       val listener = new SparkListener {
         override def onJobStart(js: SparkListenerJobStart): Unit = { n.incrementAndGet(): Unit }
@@ -1588,7 +1590,7 @@ class StreamingSpec extends SparkSpec {
       assert(n.get() <= 50,
         s"steady-state multimodalIntakeBatch launched ${n.get()} jobs (pinned at 50) — " +
           "re-run 'Test/runMain graft.tools.JobCountProbe multimodal' to attribute")
-    } finally StreamOps.dropMultimodalHistory(spark, hist)
+    } finally Dedup.MultimodalHistory.drop(spark, hist)
   }
 
   test("L40 guard: a batch id colliding with an eval identity id fails LOUDLY, not silently passing leakage") {
@@ -1822,7 +1824,7 @@ class StreamingSpec extends SparkSpec {
     import graft.operators.{Dedup, GopherRules}
     val hist = "t_gopher_hist"
     val outDir = tmpDir("gopher_out")
-    Dedup.dropIntakeHistory(spark, hist)
+    dropTextHistory(hist)
     try {
       // the cleaning pass collapses newlines, so the planted
       // violations here are ones that survive single-line form
@@ -1849,14 +1851,14 @@ class StreamingSpec extends SparkSpec {
       val out = spark.read.parquet(s"$outDir/batch-0")
         .select($"doc_id").as[Long].collect().toSet
       assert(out === Set(1L), s"gopher gate broke: $out")
-    } finally Dedup.dropIntakeHistory(spark, hist)
+    } finally dropTextHistory(hist)
   }
 
   test("L49 intake leg: C4 line surgery — per-line kills rewrite the survivor text, doc-level rules kill, history sees the surgered text") {
     import graft.operators.{C4Rules, Dedup}
     val hist = "t_c4_hist"
     val outDir = tmpDir("c4_out")
-    Dedup.dropIntakeHistory(spark, hist)
+    dropTextHistory(hist)
     try {
       val good3 = Seq(
         "the cat sat on the mat today.",
@@ -1905,7 +1907,7 @@ class StreamingSpec extends SparkSpec {
         .select($"doc_id").as[Long].collect().toSet
       assert(out1.isEmpty,
         s"surgered-identical replay must die against the history: $out1")
-    } finally Dedup.dropIntakeHistory(spark, hist)
+    } finally dropTextHistory(hist)
   }
 
   test("L50 front-to-chain: WARC containers → pages() → URL dedup + C4 gates in ONE intakeBatch — the CommonCrawl front feeds the existing chain") {
@@ -1913,7 +1915,7 @@ class StreamingSpec extends SparkSpec {
     import graft.sources.Warc
     val hist = "t_warc_hist"
     val outDir = tmpDir("warc_out")
-    Dedup.dropIntakeHistory(spark, hist)
+    dropTextHistory(hist)
     try {
       val good3 = Seq(
         "the cat sat on the mat today.",
@@ -1962,7 +1964,7 @@ class StreamingSpec extends SparkSpec {
         s"one canonical-/x body must survive: $texts")
       assert(!texts.exists(_.contains("five good words")),
         s"the C4-killed page must not survive: $texts")
-    } finally Dedup.dropIntakeHistory(spark, hist)
+    } finally dropTextHistory(hist)
   }
 
   test("L50+L51 composed loop: WARC containers → pages() → mixedIntakeBatch, survivors costed by the PERSISTED unigram vocab as the packing currency — exactly-once across a replay, packing identical") {
@@ -2215,7 +2217,7 @@ class StreamingSpec extends SparkSpec {
     import graft.operators.{C4Rules, Dedup, GopherRules, LangId}
     val hist = "t_c4comp_hist"
     val outDir = tmpDir("c4comp_out")
-    Dedup.dropIntakeHistory(spark, hist)
+    dropTextHistory(hist)
     try {
       // disjoint 50-token slices formatted as 10 six-word lines (a
       // stop word opens each line, '.' closes it) — C4- and
@@ -2285,14 +2287,14 @@ class StreamingSpec extends SparkSpec {
       val t5 = out.where($"doc_id" === 5L).select($"text").as[String].head()
       assert(!t5.contains("javascript") && t5.split("\n").length === 10,
         s"survivor 5 must be surgered to its ten good lines: $t5")
-    } finally Dedup.dropIntakeHistory(spark, hist)
+    } finally dropTextHistory(hist)
   }
 
   test("L43d intake leg: host-blocklist filtering right after URL dedup — blocked hosts leave no output and NO history rows; requires the url leg") {
     import graft.operators.Dedup
     val hist = "t_hostf_hist"
     val outDir = tmpDir("hostf_out")
-    Dedup.dropIntakeHistory(spark, hist)
+    dropTextHistory(hist)
     try {
       val blocked = Seq("bad.example.com").toDF("host")
       val gates = StreamOps.TextGates(hostBlocklist = Some(blocked))
@@ -2325,14 +2327,14 @@ class StreamingSpec extends SparkSpec {
           outDir, minQuality = 0.0, gates = gates)
       }
       assert(thrown.getMessage.contains("urlDedupCol"))
-    } finally Dedup.dropIntakeHistory(spark, hist)
+    } finally dropTextHistory(hist)
   }
 
   test("L42d intake leg: Pareto-noisy classifier keep — survivors equal the closed-form per-row rule, tail docs pass probabilistically, clean docs all pass") {
     import graft.operators.{Dedup, QualityClassifier => QC}
     val hist = "t_pareto_hist"
     val outDir = tmpDir("pareto_out")
-    Dedup.dropIntakeHistory(spark, hist)
+    dropTextHistory(hist)
     try {
       def toks(seed: Long) = (0 until 30).map(i => s"tok${seed}w$i").mkString(" ")
       def gib(t: String) =
@@ -2370,14 +2372,14 @@ class StreamingSpec extends SparkSpec {
       val gibIds = (0L until 12L).toSet
       assert((gibIds & expected).nonEmpty, "Pareto noise should admit SOME tail docs at alpha=0.5")
       assert((gibIds -- expected).nonEmpty, "…and reject the rest")
-    } finally Dedup.dropIntakeHistory(spark, hist)
+    } finally dropTextHistory(hist)
   }
 
   test("L46 intake leg: trained language-ID routing — wrong-language docs die before any scoring, keep-set docs survive") {
     import graft.operators.{Dedup, LangId}
     val hist = "t_langid_hist"
     val outDir = tmpDir("langid_out")
-    Dedup.dropIntakeHistory(spark, hist)
+    dropTextHistory(hist)
     try {
       def toks(seed: Long) = (0 until 25).map(i => s"word${seed}x$i").mkString(" ")
       def xx(t: String) =
@@ -2436,14 +2438,14 @@ class StreamingSpec extends SparkSpec {
         .select($"doc_id").as[Long].collect().toSet
       assert(out1 === Set(200L),
         s"the confidence floor must kill the off-distribution doc: $out1")
-    } finally Dedup.dropIntakeHistory(spark, hist)
+    } finally dropTextHistory(hist)
   }
 
   test("L47 intake leg: DSIR threshold keep — the intake decision equals the closed-form noised rule; target-like docs survive, off-distribution docs die") {
     import graft.operators.{Dedup, Dsir}
     val hist = "t_dsir_hist"
     val outDir = tmpDir("dsir_out")
-    Dedup.dropIntakeHistory(spark, hist)
+    dropTextHistory(hist)
     try {
       // a SHARED clean vocabulary in DISJOINT 30-word slices: batch
       // docs carry features the models actually saw (the distribution
@@ -2480,7 +2482,7 @@ class StreamingSpec extends SparkSpec {
         s"target-like docs must survive: $expected")
       assert(((10L until 16L).toSet & expected).isEmpty,
         s"off-distribution docs must die: $expected")
-    } finally Dedup.dropIntakeHistory(spark, hist)
+    } finally dropTextHistory(hist)
   }
 
   test("L7b intake leg: Dolma PII policy — PII-dense docs drop, survivors carry MASKED text (and so do their history hashes)") {
@@ -2488,7 +2490,7 @@ class StreamingSpec extends SparkSpec {
     import graft.operators.Dedup
     val hist = "t_pii_hist"
     val outDir = tmpDir("pii_out")
-    Dedup.dropIntakeHistory(spark, hist)
+    dropTextHistory(hist)
     try {
       def words(seed: Long) = (0 until 30).map(i => s"word${seed}w$i").mkString(" ")
       val batch = Seq(
@@ -2519,7 +2521,7 @@ class StreamingSpec extends SparkSpec {
         .select($"doc_id").as[Long].collect().toSet
       assert(out2.isEmpty,
         s"mask-equal re-crawl must die against the masked history: $out2")
-    } finally Dedup.dropIntakeHistory(spark, hist)
+    } finally dropTextHistory(hist)
   }
 
   test("L48 all-gates composition: url dedup + host blocklist + PII + language ID + Gopher + classifier + Pareto + DSIR in ONE intakeBatch — one attributable kill per gate, survivors equal the closed-form rule composition") {
@@ -2527,7 +2529,7 @@ class StreamingSpec extends SparkSpec {
     import graft.operators.{Dedup, Dsir, GopherRules, LangId, QualityClassifier => QC}
     val hist = "t_allgate_hist"
     val outDir = tmpDir("allgate_out")
-    Dedup.dropIntakeHistory(spark, hist)
+    dropTextHistory(hist)
     try {
       // shared 30-word vocab slices (disjoint per doc — near-dedup must
       // not fire; prefix-shared so char bigrams stay in-language)
@@ -2633,6 +2635,6 @@ class StreamingSpec extends SparkSpec {
       val t5 = out.where($"doc_id" === 5L).select($"text").as[String].head()
       assert(t5.contains("<EMAIL>") && !t5.contains("@"),
         s"PII survivor must be masked: $t5")
-    } finally Dedup.dropIntakeHistory(spark, hist)
+    } finally dropTextHistory(hist)
   }
 }

@@ -1,6 +1,6 @@
 package graft
 
-import graft.operators.{UrlOps => U}
+import graft.operators.{Dedup, UrlOps => U}
 import org.apache.spark.sql.functions._
 
 /** Unit contracts for URL canonicalization + dedup (the l40/l40b
@@ -78,11 +78,11 @@ class UrlOpsSpec extends SparkSpec {
 
   test("L43c: url history lifecycle — delta-visible probe, same-id replay, fold, auto-fold trigger, NULL passthrough") {
     val table = "t_url_hist"
-    U.dropUrlHistory(spark, table)
+    Dedup.UrlHistory.drop(spark, table)
     try {
       val b0 = Seq((1L, "http://a.example.com/x"), (2L, "http://b.example.com/y"))
         .toDF("id", "url")
-      U.ensureUrlHistory(spark, b0, "url", "id", table, 4)
+      Dedup.UrlHistory.ensure(spark, table, b0.schema("id"), 4)
       U.appendUrlHistoryDelta(spark, b0, "url", "id", table, 0)
       def probe(rows: (Long, String)*): Set[Long] =
         U.urlIncrementalDelta(spark, rows.toDF("id", "url"), table, "url", "id")
@@ -98,15 +98,15 @@ class UrlOpsSpec extends SparkSpec {
       U.appendUrlHistoryDelta(spark,
         Seq((11L, "http://c.example.com/z")).toDF("id", "url"),
         "url", "id", table, 1)
-      U.compactUrlDelta(spark, table)
+      Dedup.UrlHistory.fold(spark, table)
       assert(probe((20L, "http://c.example.com/z/")) === Set.empty)
       // auto-fold: fires on an unfolded delta, not again after
       U.appendUrlHistoryDelta(spark,
         Seq((30L, "http://d.example.com/w")).toDF("id", "url"),
         "url", "id", table, 2)
-      assert(U.compactUrlIfNeeded(spark, table, 1e-9))
-      assert(!U.compactUrlIfNeeded(spark, table, 1e-9))
-    } finally U.dropUrlHistory(spark, table)
+      assert(Dedup.UrlHistory.foldIfNeeded(spark, table, 1e-9))
+      assert(!Dedup.UrlHistory.foldIfNeeded(spark, table, 1e-9))
+    } finally Dedup.UrlHistory.drop(spark, table)
   }
 
   test("L43: host aggregates count rows, distinct canonical urls, dup rows") {

@@ -25,7 +25,7 @@ object JobCountProbe {
     val outDir = spark.conf.get("spark.sql.warehouse.dir").stripSuffix("/") + "/jcp_out"
     val outP = new org.apache.hadoop.fs.Path(outDir)
     outP.getFileSystem(spark.sparkContext.hadoopConfiguration).delete(outP, true)
-    Dedup.dropIntakeHistory(spark, table)
+    Dedup.IntakeHistory.drop(spark, table)
     def docs(ids: Range) = ids.map(_.toLong).toDF("doc_id")
       .select($"doc_id", concat(lit("<p>"),
         array_join(transform(sequence(lit(0), lit(39)),
@@ -33,7 +33,7 @@ object JobCountProbe {
         lit("</p>")).as("html"))
     // seed + fold so the measured batch is steady-state
     StreamOps.intakeBatch(docs(0 until 3000), 0L, table, 8, "html", "doc_id", outDir)
-    Dedup.compactIntakeDelta(spark, table)
+    Dedup.IntakeHistory.fold(spark, table)
     val names = scala.collection.mutable.ArrayBuffer.empty[String]
     val listener = new SparkListener {
       override def onJobStart(js: SparkListenerJobStart): Unit = names.synchronized {
@@ -119,7 +119,7 @@ object JobCountProbe {
     val outDir = spark.conf.get("spark.sql.warehouse.dir").stripSuffix("/") + "/jcp_mm_out"
     val outP = new org.apache.hadoop.fs.Path(outDir)
     outP.getFileSystem(spark.sparkContext.hadoopConfiguration).delete(outP, true)
-    StreamOps.dropMultimodalHistory(spark, table)
+    graft.operators.Dedup.MultimodalHistory.drop(spark, table)
     // a mixed batch: one third each of images, audio clips, video clips
     def mixed(ids: Range) = {
       val f = ids.map(_.toLong).toDF("doc_id").select($"doc_id", $"doc_id".as("__seed"))
@@ -131,9 +131,7 @@ object JobCountProbe {
     // seed + fold every history so the measured batch is steady-state
     StreamOps.multimodalIntakeBatch(mixed(0 until 900), 0L, table, 8,
       "payload", "doc_id", outDir)
-    graft.operators.Dedup.compactImageDelta(spark, table)
-    graft.operators.Dedup.compactAudioDelta(spark, table)
-    graft.operators.Dedup.compactVideoDelta(spark, table)
+    graft.operators.Dedup.MultimodalHistory.fold(spark, table)
     val names = scala.collection.mutable.ArrayBuffer.empty[String]
     val listener = new SparkListener {
       override def onJobStart(js: SparkListenerJobStart): Unit = names.synchronized {
