@@ -10,7 +10,7 @@ import org.apache.spark.sql.functions._
   * DELETE (SURVEY §2.1 S10/S11, §2.8 T8).
   *
   * Batch form below; the streaming form is the same transform inside
-  * `foreachBatch` (see graft.streaming.StreamOps.cdcSink), which is the
+  * `foreachBatch` ([[graft.streaming.StreamOps.applyBatch]]), which is the
   * Spark idiom for an idempotent at-least-once sink — the analogue of the
   * Connect offsets topic + JDBC batch write.
   *

@@ -528,28 +528,17 @@ object Dedup {
     *   as shuffle partitions; 100 TB wants thousands, tests use few). */
   def writeBandHistory(df: DataFrame, textCol: String, idCol: String,
       table: String, numBuckets: Int, shingleN: Int = 3, numHashes: Int = 16,
-      bands: Int = 4, mode: String = "overwrite"): Unit = {
+      bands: Int = 4): Unit = {
     val banded = bandedSignatures(df, textCol, idCol, shingleN, numHashes, bands)
-    Layout.writeBucketed(banded, table, Seq("__band", "__bandsig"), numBuckets, mode)
+    Layout.writeBucketed(banded, table, Seq("__band", "__bandsig"), numBuckets)
     Layout.writeBucketed(shingleFrame(df, textCol, idCol, shingleN),
-      s"${table}_sh", Seq(idCol), numBuckets, mode)
+      s"${table}_sh", Seq(idCol), numBuckets)
   }
-
-  /** Append a (deduped) batch to an existing band history — the write
-    * half of the ingest loop: probe ([[minhashIncremental]]), drop dups
-    * ([[nearDedupIncremental]]), append survivors. Spark appends to a
-    * bucketed table preserving the bucket spec, so the zero-exchange
-    * probe property survives accumulation. */
-  def appendBandHistory(df: DataFrame, textCol: String, idCol: String,
-      table: String, numBuckets: Int, shingleN: Int = 3, numHashes: Int = 16,
-      bands: Int = 4): Unit =
-    writeBandHistory(df, textCol, idCol, table, numBuckets, shingleN,
-      numHashes, bands, mode = "append")
 
   /** REPLAY-SAFE delta append to a band history — the
     * [[Similarity.appendToIvfDelta]] discipline applied here: a direct
-    * bucketed-table append ([[appendBandHistory]]) cannot be made
-    * idempotent without a recovery rewrite (a replayed micro-batch
+    * bucketed-table append cannot be made idempotent without a
+    * recovery rewrite (a replayed micro-batch
     * appends its rows twice), so the streaming ingest loop lands each
     * batch in `batch-<batchId>/` subdirectories of BOTH tables' delta
     * directories with mode=overwrite — a replay deterministically
@@ -561,7 +550,7 @@ object Dedup {
     * probes (band pairs drive the candidate join) — rather than band
     * matches whose Jaccard verification silently drops for missing
     * shingles. Probes see delta rows immediately
-    * ([[minhashIncremental]] `includeDelta`); fold with
+    * ([[minhashIncremental]] reads main ∪ delta); fold with
     * [[BandHistory]] on whatever cadence bounds delta size.
     *
     * A batch the fold manifest records as already folded
@@ -594,7 +583,7 @@ object Dedup {
   }
 
   /** Compact a band history down to `survivors` (a frame carrying
-    * `idCol`): [[appendBandHistory]] grows both tables unboundedly, and
+    * `idCol`): every accepted batch grows both tables, and
     * documents that were deleted or aged out of retention leave DEAD
     * bands behind — rows that inflate every probe's join and can even
     * resurface a removed document as a "duplicate". Retention is the
@@ -679,11 +668,9 @@ object Dedup {
     * matching (id, hash) rows, and those broadcast back for the
     * anti-join. Neither side ever shuffles. */
   def exactIncrementalDelta(spark: SparkSession,
-      newDf: DataFrame, table: String, textCol: String, idCol: String,
-      includeDelta: Boolean = true): DataFrame = {
-    val t = s"${table}_xh"
+      newDf: DataFrame, table: String, textCol: String, idCol: String): DataFrame = {
     val h = hashName(newDf)
-    val hist = if (includeDelta) withDelta(spark, t) else spark.table(t)
+    val hist = withDelta(spark, s"${table}_xh")
     val batchKeys = newDf.where(col(textCol).isNotNull)
       .select(sha2(col(textCol), 256).alias(h))
     // hits is bounded by the batch's key set whenever the history is
@@ -726,7 +713,7 @@ object Dedup {
   def minhashIncremental(spark: SparkSession,
       newDf: DataFrame, historyTable: String, textCol: String, idCol: String,
       shingleN: Int = 3, numHashes: Int = 16, bands: Int = 4,
-      maxBucket: Int = 128, includeDelta: Boolean = true): DataFrame = {
+      maxBucket: Int = 128): DataFrame = {
     val batch = bandedSignatures(newDf, textCol, idCol, shingleN, numHashes, bands)
     val boundedRaw = dropOversizedBuckets(batch, Seq("__band", "__bandsig"), maxBucket)
     val newSh = shingleFrame(newDf, textCol, idCol, shingleN)
@@ -735,8 +722,8 @@ object Dedup {
     // two folds sees band rows already in the main table whose shingles
     // still live only in the surviving _sh delta — verification must be
     // able to find them there
-    val bandDelta = if (includeDelta) deltaOf(spark, historyTable) else None
-    val shDelta = if (includeDelta) deltaOf(spark, s"${historyTable}_sh") else None
+    val bandDelta = deltaOf(spark, historyTable)
+    val shDelta = deltaOf(spark, s"${historyTable}_sh")
     // both band legs share the batch-side signature pipeline — when a
     // delta leg exists, materialize it once (tiny: one batch) or each
     // leg would recompute the shingle + hash pass. The shingle frame
@@ -812,16 +799,15 @@ object Dedup {
   /** L2 incremental, applied — drop every batch row near-duplicating the
     * persisted history above `threshold` (compose with
     * [[nearDedupMinhash]] for within-batch dups, then
-    * [[appendBandHistory]] the survivors — the full ingest loop, tested
-    * end-to-end in DedupSpec). Same localCheckpoint barrier rationale as
-    * [[nearDedupMinhash]]. */
+    * [[appendBandHistoryDelta]] the survivors — the full ingest loop is
+    * [[graft.streaming.StreamOps.nearDedupBatch]]). Same localCheckpoint
+    * barrier rationale as [[nearDedupMinhash]]. */
   def nearDedupIncremental(spark: SparkSession,
       newDf: DataFrame, historyTable: String, textCol: String, idCol: String,
       threshold: Double = 0.8, shingleN: Int = 3, numHashes: Int = 16,
-      bands: Int = 4, maxBucket: Int = 128,
-      includeDelta: Boolean = true): DataFrame = {
+      bands: Int = 4, maxBucket: Int = 128): DataFrame = {
     val dupIds = minhashIncremental(spark, newDf, historyTable, textCol, idCol,
-        shingleN, numHashes, bands, maxBucket, includeDelta)
+        shingleN, numHashes, bands, maxBucket)
       .where(col("jaccard") >= threshold)
       .select(col("id_new").alias(idCol)).distinct()
       .localCheckpoint(eager = true)
@@ -1619,9 +1605,8 @@ object Dedup {
     * and its own delta file, which at most doubles it). */
   def paragraphIncrementalDelta(spark: SparkSession,
       newDf: DataFrame, table: String, textCol: String, idCol: String,
-      minChars: Int = 1, includeDelta: Boolean = true): DataFrame = {
-    val t = s"${table}_pg"
-    val hist = if (includeDelta) withDelta(spark, t) else spark.table(t)
+      minChars: Int = 1): DataFrame = {
+    val hist = withDelta(spark, s"${table}_pg")
     val withH = explodeParas(newDf, textCol, idCol)
       .withColumn("__bh", paraHash(col("__para"), minChars))
     val batchKeys = withH.where(col("__bh").isNotNull).select(col("__bh"))

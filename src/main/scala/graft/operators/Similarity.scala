@@ -700,7 +700,7 @@ object Similarity {
     * reports the same number. */
   def ivfAging(spark: org.apache.spark.sql.SparkSession, table: String,
       tau: Double = 0.02, cVec: String = "embedding",
-      includeDelta: Boolean = true, sampleFraction: Double = 1.0): IvfAging = {
+      sampleFraction: Double = 1.0): IvfAging = {
     require(sampleFraction > 0 && sampleFraction <= 1.0,
       "sampleFraction must be in (0, 1]")
     val meta = readIvfMeta(spark, table)
@@ -709,7 +709,7 @@ object Similarity {
     val deltaPath = new org.apache.hadoop.fs.Path(ivfDeltaDir(spark, table))
     val fs = deltaPath.getFileSystem(spark.sparkContext.hadoopConfiguration)
     val whole =
-      if (includeDelta && fs.exists(deltaPath))
+      if (fs.exists(deltaPath))
         main.unionByName(readIvfDelta(spark, table, deltaPath.toString)
           .select(main.columns.map(col): _*))
       else main
@@ -845,14 +845,13 @@ object Similarity {
     * join scores them. Identical results to [[ivfTopK]] with the same
     * build parameters (parity-tested: same deterministic quantizer).
     *
-    * `includeDelta=true` (default) also scores rows in the index's
-    * delta directory ([[appendToIvfDelta]]) so streaming appends are
-    * visible to probes immediately, before any compaction. */
+    * Rows in the index's delta directory ([[appendToIvfDelta]]) are
+    * scored too, so streaming appends are visible to probes
+    * immediately, before any compaction. */
   def ivfTopKIndexed(spark: org.apache.spark.sql.SparkSession, queries: DataFrame,
       table: String, k: Int, nProbe: Int = 4,
       qId: String = "q_id", qVec: String = "q_vec",
-      cId: String = "vec_id", cVec: String = "embedding",
-      includeDelta: Boolean = true): DataFrame = {
+      cId: String = "vec_id", cVec: String = "embedding"): DataFrame = {
     val centRows = readCentroids(spark, table) // build order → same tie-breaks
     val cents = typedLit(centRows.toSeq)
     val probes = queries.select(col(qId), col(qVec),
@@ -874,7 +873,7 @@ object Similarity {
     val fs = org.apache.hadoop.fs.FileSystem.get(
       spark.sparkContext.hadoopConfiguration)
     val corpus =
-      if (includeDelta && fs.exists(deltaPath))
+      if (fs.exists(deltaPath))
         main.unionByName(readIvfDelta(spark, table, deltaPath.toString)
           .select(main.columns.map(col): _*))
       else main
@@ -988,7 +987,7 @@ object Similarity {
       newDf: DataFrame, table: String, tau: Double,
       idCol: String = "vec_id", vecCol: String = "embedding",
       cId: String = "vec_id", cVec: String = "embedding",
-      includeDelta: Boolean = true, maxList: Int = 4096): DataFrame = {
+      maxList: Int = 4096): DataFrame = {
     val centRows = readCentroids(spark, table) // build order → same tie-breaks
     val cents = typedLit(centRows.toSeq)
     val bid = graft.Cols.fresh(newDf.columns ++ Seq(cId, cVec), "__bid")
@@ -1015,7 +1014,7 @@ object Similarity {
     val deltaPath = new org.apache.hadoop.fs.Path(ivfDeltaDir(spark, table))
     val fs = deltaPath.getFileSystem(spark.sparkContext.hadoopConfiguration)
     val hist =
-      if (includeDelta && fs.exists(deltaPath))
+      if (fs.exists(deltaPath))
         main.unionByName(readIvfDelta(spark, table, deltaPath.toString)
           .select(main.columns.map(col): _*))
       else main

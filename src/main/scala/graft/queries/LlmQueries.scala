@@ -1090,7 +1090,7 @@ object LlmQueries {
     // intake-facing form of l27c: tercile thresholds drawn ONCE from
     // the ring sample (NgramLm.bucketThresholds — frozen boundary
     // rows), then a pure per-row CASE (NgramLm.bucketColumn, the
-    // intakeBatch lmBuckets hot-loop shape) keeps head+middle and
+    // mixedIntakeBatch lmBuckets hot-loop shape) keeps head+middle and
     // evidence-free docs, drops the tail third. DuckDB restates the
     // whole train → score → boundary → CASE → keep-filter chain. ----
     ("l36_perplexity_route", (s, d) => {
@@ -1361,7 +1361,7 @@ object LlmQueries {
       // barrier: the interpreted block-classifier pipeline is the most
       // expensive per-row expression in the engine, and downstream it
       // is referenced by BOTH sides of the scoring join, the dedup
-      // window and the token count — materialize once (the intakeBatch
+      // window and the token count — materialize once (the mixedIntakeBatch
       // exactNew rationale; measured ~2x on this row)
       val q = TF.withQualityOnly(cleaned, "clean")
         .where(col("quality") >= 0.75)
@@ -1407,7 +1407,7 @@ object LlmQueries {
           concat(col("text"), lit(" zzextra")).as("text")))
       val html = concat(lit("""<div class="doc"><p>"""), col("text"),
         lit("</p></div>"))
-      // barriers (the intakeBatch exactNew rationale, r19 plan audit):
+      // barriers (the mixedIntakeBatch exactNew rationale, r19 plan audit):
       // the LSH stage references its input FOUR times (banded
       // signatures, both shingle join-backs, the CC node list) and the
       // planted arithmetic reads `scored` twice more — without the
@@ -1443,7 +1443,7 @@ object LlmQueries {
     }, Some("""WITH c AS (SELECT doc_id, trim(regexp_replace(regexp_replace(nfc_normalize(text), '[\x00-\x08\x0E-\x1F\x7F]', '', 'g'), '[ \t\n\r\f\x0B]+', ' ', 'g')) AS c1, trim(regexp_replace(regexp_replace(nfc_normalize(text || ' zzextra'), '[\x00-\x08\x0E-\x1F\x7F]', '', 'g'), '[ \t\n\r\f\x0B]+', ' ', 'g')) AS c2 FROM documents WHERE doc_id % 7 = 0), u AS (SELECT doc_id, unnest([c1, c2]) AS x FROM c), t AS (SELECT doc_id, x, list_filter(string_split_regex(lower(x), '\s+'), w -> len(w) > 0) ts FROM u), m AS (SELECT doc_id, x, CASE WHEN len(x)=0 THEN 0.0 ELSE CAST(len(x) - len(regexp_replace(x, '[.,!?;:]', '', 'g')) AS DOUBLE)/len(x) END pr, CASE WHEN len(ts)=0 THEN 0.0 ELSE CAST(list_sum(list_transform(ts, w -> len(w))) AS DOUBLE)/len(ts) END mwl FROM t), q AS (SELECT doc_id, round(least(CAST(len(x) AS DOUBLE)/400.0, 1.0)*0.5 + (1.0 - least(pr*5.0, 1.0))*0.3 + (CASE WHEN mwl >= 3.0 AND mwl <= 10.0 THEN 1.0 ELSE 0.5 END)*0.2, 6) AS quality FROM m), ok AS (SELECT doc_id FROM q GROUP BY doc_id HAVING min(quality) >= 0.75) SELECT 0 AS missed_planted, COUNT(*) AS n_planted FROM ok""")),
 
     // ---- L23: the STREAMING intake loop end-to-end — three micro-
-    // batches driven through StreamOps.intakeBatch (clean → score →
+    // batches driven through StreamOps.mixedIntakeBatch (clean → score →
     // exact dedup within+vs-history → near dedup within+vs-history →
     // exactly-once survivor output + delta appends), with a compaction
     // BETWEEN batches so the last batch probes the folded main tables.
@@ -1488,10 +1488,10 @@ object LlmQueries {
       Dedup.IntakeHistory.drop(s, table)
       val outP = new org.apache.hadoop.fs.Path(outDir)
       outP.getFileSystem(s.sparkContext.hadoopConfiguration).delete(outP, true)
-      StreamOps.intakeBatch(b0, 0L, table, 8, "html", "doc_id", outDir)
-      StreamOps.intakeBatch(b1, 1L, table, 8, "html", "doc_id", outDir)
+      StreamOps.mixedIntakeBatch(b0, 0L, table, 8, "html", "payload", "doc_id", outDir)
+      StreamOps.mixedIntakeBatch(b1, 1L, table, 8, "html", "payload", "doc_id", outDir)
       Dedup.IntakeHistory.fold(s, table) // mid-stream fold: b2 probes MAIN
-      StreamOps.intakeBatch(b2, 2L, table, 8, "html", "doc_id", outDir)
+      StreamOps.mixedIntakeBatch(b2, 2L, table, 8, "html", "payload", "doc_id", outDir)
       (0 to 2).map(b => s.read.parquet(s"$outDir/batch-$b")
           .select(col("doc_id"), lit(b).cast("int").as("batch"), col("quality")))
         .reduce(_ unionByName _)
@@ -1535,9 +1535,9 @@ object LlmQueries {
           !s.catalog.tableExists(s"${table}_xh")) {
         Dedup.IntakeHistory.drop(s, table) // orphaned dirs from a prior session
         fs.delete(outP, true)
-        StreamOps.intakeBatch(docs.where(col("doc_id") % 3 =!= 1)
+        StreamOps.mixedIntakeBatch(docs.where(col("doc_id") % 3 =!= 1)
             .select(col("doc_id"), wrap(col("__clean")).as("html")),
-          0L, table, 8, "html", "doc_id", outDir)
+          0L, table, 8, "html", "payload", "doc_id", outDir)
         Dedup.IntakeHistory.fold(s, table)
       }
       // roll the pointer back so every rep replays batch 1 for real
@@ -1553,7 +1553,7 @@ object LlmQueries {
           .where(col("doc_id") % 3 === 0 && col("doc_id") % 7 === 0)
           .select((col("doc_id") + 200000).as("doc_id"),
             wrap(concat(col("__clean"), lit(" zzextra"))).as("html")))
-      StreamOps.intakeBatch(b1, 1L, table, 8, "html", "doc_id", outDir)
+      StreamOps.mixedIntakeBatch(b1, 1L, table, 8, "html", "payload", "doc_id", outDir)
       s.read.parquet(s"$outDir/batch-1")
         .select(col("doc_id"), col("quality"))
         .orderBy(col("doc_id"))
@@ -1940,8 +1940,8 @@ object LlmQueries {
           .forall(x => s.catalog.tableExists(table + x))) {
         Dedup.MultimodalHistory.drop(s, table) // orphaned prior-session state
         fs.delete(outP, true)
-        StreamOps.multimodalIntakeBatch(modal(histIds, reencode = false),
-          0L, table, 8, "payload", "doc_id", outDir)
+        StreamOps.mixedIntakeBatch(modal(histIds, reencode = false),
+          0L, table, 8, "html", "payload", "doc_id", outDir)
         Dedup.MultimodalHistory.fold(s, table) // steady state
       }
       // roll the pointer back so every rep replays batch 1 for real
@@ -1955,7 +1955,7 @@ object LlmQueries {
       val batch = modal(fresh, reencode = false)
         .unionByName(modal(vsHist, reencode = true))
         .unionByName(modal(within, reencode = true))
-      StreamOps.multimodalIntakeBatch(batch, 1L, table, 8, "payload",
+      StreamOps.mixedIntakeBatch(batch, 1L, table, 8, "html", "payload",
         "doc_id", outDir)
       s.read.parquet(s"$outDir/batch-1")
         .select(col("doc_id")).orderBy(col("doc_id"))

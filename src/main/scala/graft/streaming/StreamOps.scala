@@ -1,10 +1,9 @@
 package graft.streaming
 
 import graft.operators.CdcApply
-import org.apache.spark.sql.{Column, DataFrame}
+import graft.sources.AtomicPointer
+import org.apache.spark.sql.{Column, DataFrame, Row, SparkSession}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.streaming.DataStreamWriter
-import org.apache.spark.sql.Row
 import org.apache.hadoop.fs.Path
 
 /** Structured-Streaming operators replicating the Connect runtime
@@ -98,386 +97,158 @@ object StreamOps {
     if (df.isStreaming) df.dropDuplicatesWithinWatermark(keys)
     else df.dropDuplicates(keys)
 
-  /** T8/T9 — CDC-apply sink: per micro-batch, fold changes into a
-    * versioned parquet state store idempotently — the at-least-once +
-    * idempotent-write contract of the Debezium sink (reference
-    * `Dockerfile:28-31`).
+  /** The exactly-once commit protocol of every micro-batch function
+    * here — the `foreachBatch` contract of Structured Streaming (SIGMOD
+    * 2018): a deterministic replay plus an idempotent commit, stated
+    * once. `dir/_LATEST` holds the id of the last committed batch. A
+    * batch whose id it already records is a full replay and is skipped
+    * (returns false): Structured Streaming replays at most the last
+    * uncommitted batch per checkpoint, so comparing against the latest
+    * committed id is the whole idempotence contract (older ids cannot
+    * legally reappear). Otherwise `body` runs with the previously
+    * committed id, and the pointer flips via write-tmp + atomic rename
+    * ([[graft.sources.AtomicPointer]]). Every write `body` makes must
+    * overwrite a directory the batch owns, so a crash at any step
+    * leaves the old pointer and the replay rewrites identical content.
+    * Missing state is only inferred from the pointer file genuinely
+    * not existing — any other read failure propagates.
     *
-    * State layout: `stateDir/batch-<id>/` immutable snapshots plus a
-    * `stateDir/_LATEST` pointer file holding the current batch id. Each
-    * micro-batch reads the pointed-at snapshot, applies the changes,
-    * writes a NEW snapshot dir, then flips the pointer via write-tmp +
-    * atomic rename. A crash at any step leaves the old pointer → old
-    * snapshot intact; a replayed batch whose id is already recorded in
-    * the pointer is skipped (idempotence). Missing state is only
-    * inferred from the pointer file genuinely not existing — any other
-    * read failure propagates instead of silently truncating state. */
-  def cdcSink(changes: DataFrame, stateDir: String, keys: Seq[String],
-      ord: Seq[Column], isTombstone: Column, checkpoint: String): DataStreamWriter[Row] =
-    changes.writeStream
-      .option("checkpointLocation", checkpoint)
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        applyBatch(batch, batchId, stateDir, keys, ord, isTombstone): Unit
-      }
+    * Streaming callers wire a batch function into a query inline:
+    * {{{
+    * frame.writeStream.option("checkpointLocation", ckpt)
+    *   .foreachBatch { (b: DataFrame, id: Long) =>
+    *     StreamOps.mixedIntakeBatch(b, id, …): Unit }
+    * }}} */
+  private def commitOnce(spark: SparkSession, dir: String, batchId: Long)(
+      body: Option[Long] => Unit): Boolean = {
+    val current = committed(spark, dir)
+    if (current.contains(batchId)) return false // replayed batch: no-op
+    body(current)
+    AtomicPointer.write(spark.sparkContext.hadoopConfiguration,
+      new Path(dir, s"_LATEST.tmp-$batchId"), new Path(dir, "_LATEST"),
+      batchId.toString)
+    true
+  }
 
-  /** One CDC micro-batch against the versioned state store (also the
-    * batch path the tests drive directly). Returns false if the batch
-    * was already applied (replay skipped). */
+  /** The id of the last batch committed under `dir` ([[commitOnce]]). */
+  private def committed(spark: SparkSession, dir: String): Option[Long] =
+    AtomicPointer.read(spark.sparkContext.hadoopConfiguration,
+      new Path(dir, "_LATEST")).map(_.toLong)
+
+  /** CDC state snapshot `id` (empty frame with `schema` if none). */
+  private def snapshot(spark: SparkSession, stateDir: String, id: Option[Long],
+      schema: org.apache.spark.sql.types.StructType): DataFrame = id match {
+    case Some(id) => spark.read.parquet(new Path(stateDir, s"batch-$id").toString)
+    case None => spark.createDataFrame(spark.sparkContext.emptyRDD[Row], schema)
+  }
+
+  /** Write a batch's survivors to its own `dir/batch-<id>/` and return
+    * them re-read. The write is the plan barrier: the history appends
+    * that follow see the SAME survivor set, computed once, by scanning
+    * the written directory (one small bounded scan each) instead of
+    * re-running the survivor plan or paying a checkpoint's block copy.
+    * The explicit schema keeps the re-read from spending a
+    * schema-discovery job over the just-written footers. */
+  private def writeSurvivors(frame: DataFrame, dir: String,
+      batchId: Long): DataFrame = {
+    val path = new Path(dir, s"batch-$batchId").toString
+    frame.write.mode("overwrite").parquet(path)
+    frame.sparkSession.read.schema(frame.schema).parquet(path)
+  }
+
+  /** T8/T9 — one CDC micro-batch against the versioned state store: the
+    * at-least-once + idempotent-write contract of the Debezium sink
+    * (reference `Dockerfile:28-31`). Returns false if the batch was
+    * already applied (replay skipped).
+    *
+    * State layout: `stateDir/batch-<id>/` immutable snapshots plus the
+    * `stateDir/_LATEST` pointer ([[commitOnce]]). Each micro-batch
+    * reads the pointed-at snapshot, applies the changes and writes a
+    * NEW snapshot dir before the pointer flips. */
   def applyBatch(batch: DataFrame, batchId: Long, stateDir: String,
       keys: Seq[String], ord: Seq[Column], isTombstone: Column): Boolean = {
     val spark = batch.sparkSession
-    val hconf = spark.sparkContext.hadoopConfiguration
     val root = new Path(stateDir)
-    val fs = root.getFileSystem(hconf)
-    val pointer = new Path(root, "_LATEST")
-    val current: Option[Long] =
-      graft.sources.AtomicPointer.read(hconf, pointer).map(_.toLong)
-    // Structured Streaming replays at most the last uncommitted batch per
-    // checkpoint, so comparing against the latest applied id is the full
-    // idempotence contract (older ids can't legally reappear).
-    if (current.contains(batchId)) return false // replayed batch: no-op
-    val state = current match {
-      case Some(id) => spark.read.parquet(new Path(root, s"batch-$id").toString)
-      case None => spark.createDataFrame(
-        spark.sparkContext.emptyRDD[Row], batch.schema)
+    commitOnce(spark, stateDir, batchId) { current =>
+      val state = snapshot(spark, stateDir, current, batch.schema)
+      // Debezium-sink parity: `schema.evolution=basic` — a batch carrying
+      // new fields widens the state schema (typed NULL backfill), existing
+      // columns are never dropped or retyped.
+      val (stateEv, batchEv) = graft.sources.SchemaEvolution.evolve(state, batch)
+      CdcApply(stateEv, batchEv, keys, ord, isTombstone)
+        .write.mode("overwrite").parquet(new Path(root, s"batch-$batchId").toString)
+      // GC: superseded snapshots (anything but the pointed-at and the
+      // new one) would otherwise accumulate one full state copy per
+      // micro-batch. Nothing reads them: the pointer still names the
+      // kept previous snapshot until the flip.
+      val keep = Set(s"batch-$batchId") ++ current.map(id => s"batch-$id")
+      val fs = root.getFileSystem(spark.sparkContext.hadoopConfiguration)
+      fs.listStatus(root).foreach { st =>
+        val n = st.getPath.getName
+        if (n.startsWith("batch-") && !keep(n)) fs.delete(st.getPath, true)
+      }
     }
-    // Debezium-sink parity: `schema.evolution=basic` — a batch carrying
-    // new fields widens the state schema (typed NULL backfill), existing
-    // columns are never dropped or retyped.
-    val (stateEv, batchEv) = graft.sources.SchemaEvolution.evolve(state, batch)
-    val snap = new Path(root, s"batch-$batchId")
-    CdcApply(stateEv, batchEv, keys, ord, isTombstone)
-      .write.mode("overwrite").parquet(snap.toString)
-    // flip the pointer (shared crash-safe idiom — see AtomicPointer)
-    graft.sources.AtomicPointer.write(hconf,
-      new Path(root, s"_LATEST.tmp-$batchId"), pointer, batchId.toString)
-    // GC: superseded snapshots (anything but the previous and current)
-    // would otherwise accumulate one full state copy per micro-batch.
-    val keep = Set(s"batch-$batchId") ++ current.map(id => s"batch-$id")
-    fs.listStatus(root).foreach { st =>
-      val n = st.getPath.getName
-      if (n.startsWith("batch-") && !keep(n)) fs.delete(st.getPath, true)
-    }
-    true
   }
 
-  /** Streaming leg of the L2h incremental near-dedup ingest loop: per
-    * micro-batch — exact dedup within the batch, MinHash near-dedup
-    * within the batch, near-dedup against the PERSISTED band history
-    * ([[graft.operators.Dedup.writeBandHistory]]), survivors written to
-    * `outDir/batch-<id>/` and appended to the history. The batch path
-    * [[nearDedupBatch]] is the unit the tests drive directly.
+  /** L2 incremental near-dedup ingest micro-batch: exact dedup within
+    * the batch, MinHash near-dedup within the batch, near-dedup against
+    * the persisted band history (main ∪ delta,
+    * [[graft.operators.Dedup.nearDedupIncremental]]), survivors written
+    * to `outDir/batch-<id>/` and appended to the history's delta
+    * ([[graft.operators.Dedup.appendBandHistoryDelta]]). Returns false
+    * if the batch id is already recorded (full replay: no-op).
     *
-    * Delivery contract (mirrors the Connect worker's at-least-once pump
-    * + idempotent sink): the survivor output is EXACTLY-ONCE — each
-    * batch dir is overwritten whole, and a fully-replayed batch (its id
-    * already in the `_LATEST` pointer) is skipped — while the history
-    * append is at-least-once with a dedup-safe failure mode: a crash
-    * between append and pointer flip can re-append one batch's rows,
-    * and duplicate history entries cannot change any future survivor
-    * set (candidate pairs are distinct on ids before scoring), they
-    * only cost storage until the next history rebuild. The replayed
-    * batch itself recomputes the SAME survivors against its own
-    * appended copy: probe pairs exclude same-id matches (a doc meeting
-    * its own history row is a replay artifact, not a duplicate —
-    * [[graft.operators.Dedup.minhashIncremental]]), so the re-written
-    * batch dir is identical, not empty. Versioning the history instead
-    * would mean rewriting the accumulated corpus every micro-batch —
-    * O(history) per batch is exactly what the bucketed append exists
-    * to avoid. */
-  /** Streaming leg of persisted-IVF index maintenance: per micro-batch,
-    * assign the batch's vectors to the index's FROZEN centroids and land
-    * them in the index's delta directory
-    * ([[graft.operators.Similarity.appendToIvfDelta]]). Exactly-once by
-    * construction: each batch overwrites its own `batch-<id>/` delta
-    * subdirectory, so a replay after any crash rewrites identical
-    * content instead of double-appending — no pointer file and no
-    * recovery rewrite of the (100 TB) main index. Probes
-    * ([[graft.operators.Similarity.ivfTopKIndexed]]) see appended
-    * vectors immediately via the main ∪ delta union; fold the delta in
-    * with [[graft.operators.Similarity.compactIvfDelta]] on whatever
-    * cadence bounds the delta's size. */
-  def ivfAppendSink(vecs: DataFrame, table: String, checkpoint: String,
-      idCol: String = "vec_id", vecCol: String = "embedding"): DataStreamWriter[Row] =
-    vecs.writeStream
-      .option("checkpointLocation", checkpoint)
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        graft.operators.Similarity.appendToIvfDelta(
-          batch.sparkSession, batch, table, batchId, idCol, vecCol): Unit
-      }
-
-  def nearDedupSink(docs: DataFrame, historyTable: String, numBuckets: Int,
-      textCol: String, idCol: String, outDir: String, checkpoint: String,
-      threshold: Double = 0.8): DataStreamWriter[Row] =
-    docs.writeStream
-      .option("checkpointLocation", checkpoint)
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        nearDedupBatch(batch, batchId, historyTable, numBuckets,
-          textCol, idCol, outDir, threshold): Unit
-      }
-
-  /** One near-dedup ingest micro-batch (see [[nearDedupSink]]). Returns
-    * false if the batch id is already recorded (full replay: no-op). */
-  def nearDedupBatch(batch: DataFrame, batchId: Long, historyTable: String,
-      numBuckets: Int, textCol: String, idCol: String, outDir: String,
-      threshold: Double = 0.8): Boolean = {
-    import graft.operators.Dedup
-    val spark = batch.sparkSession
-    val hconf = spark.sparkContext.hadoopConfiguration
-    val root = new Path(outDir)
-    val pointer = new Path(root, "_LATEST")
-    val current = graft.sources.AtomicPointer.read(hconf, pointer).map(_.toLong)
-    if (current.contains(batchId)) return false // replayed batch: no-op
-    val within = Dedup.nearDedupMinhash(
-      Dedup.exact(batch, textCol, idCol), textCol, idCol, threshold)
-    val hasHistory = spark.catalog.tableExists(historyTable)
-    // barrier: the output write and the history append must see the
-    // SAME survivor set, computed once (not two LSH pipeline runs) —
-    // the exactly-once write IS the barrier; the append re-reads the
-    // written directory (the intakeBatch job-budget rationale)
-    val survivorsPath = new Path(root, s"batch-$batchId").toString
-    val outFrame = if (hasHistory)
-        Dedup.nearDedupIncremental(spark, within, historyTable, textCol, idCol, threshold)
-      else within
-    outFrame.write.mode("overwrite").parquet(survivorsPath)
-    val survivors = spark.read.schema(outFrame.schema).parquet(survivorsPath)
-    if (hasHistory)
-      Dedup.appendBandHistory(survivors, textCol, idCol, historyTable, numBuckets)
-    else
-      Dedup.writeBandHistory(survivors, textCol, idCol, historyTable, numBuckets)
-    graft.sources.AtomicPointer.write(hconf,
-      new Path(root, s"_LATEST.tmp-$batchId"), pointer, batchId.toString)
-    true
-  }
-
-  /** [[nearDedupSink]] with the REPLAY-SAFE delta history append —
-    * see [[nearDedupBatchDelta]] for the exactly-once upgrade. */
-  def nearDedupSinkDelta(docs: DataFrame, historyTable: String, numBuckets: Int,
-      textCol: String, idCol: String, outDir: String, checkpoint: String,
-      threshold: Double = 0.8): DataStreamWriter[Row] =
-    docs.writeStream
-      .option("checkpointLocation", checkpoint)
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        nearDedupBatchDelta(batch, batchId, historyTable, numBuckets,
-          textCol, idCol, outDir, threshold): Unit
-      }
-
-  /** [[nearDedupBatch]] upgraded to the delta-ingest discipline
-    * ([[graft.operators.Dedup.appendBandHistoryDelta]]): the history
-    * append lands in the batch's OWN `batch-<id>/` delta subdirectories
-    * (replay overwrites identical content, never double-appends), which
-    * closes [[nearDedupBatch]]'s one at-least-once window — the crash
-    * between history append and pointer flip that re-appends a batch's
-    * band rows. Here EVERY leg is exactly-once: survivor output
-    * overwrites its own directory, history overwrites its own delta
-    * subdirectory, and the probe excludes same-id pairs so a replay
-    * recomputes the identical survivor set against its own crashed
-    * half-state. The accumulated (100 TB) main tables are never read
-    * for the write and never rewritten on the hot path; fold the delta
-    * with [[graft.operators.Dedup.BandHistory]] on whatever
+    * Every leg is exactly-once ([[commitOnce]]): survivor output
+    * overwrites its own directory, the history append overwrites its
+    * own `batch-<id>/` delta subdirectory, and the probe excludes
+    * same-id pairs, so a replay after a crash between append and
+    * pointer flip recomputes the identical survivor set against its
+    * own half-state. The accumulated (100 TB) main tables are never
+    * read for the write and never rewritten on the hot path; fold the
+    * delta with [[graft.operators.Dedup.BandHistory]] on whatever
     * cadence bounds delta size (probes stay correct either way).
     *
     * First batch: the bucketed main tables must exist for the delta
     * dirs to belong to — an EMPTY history is created once (two bucketed
     * writes of zero rows), after which the main tables only change at
     * compaction. */
-  def nearDedupBatchDelta(batch: DataFrame, batchId: Long, historyTable: String,
+  def nearDedupBatch(batch: DataFrame, batchId: Long, historyTable: String,
       numBuckets: Int, textCol: String, idCol: String, outDir: String,
       threshold: Double = 0.8): Boolean = {
     import graft.operators.Dedup
     val spark = batch.sparkSession
-    val hconf = spark.sparkContext.hadoopConfiguration
-    val root = new Path(outDir)
-    val pointer = new Path(root, "_LATEST")
-    val current = graft.sources.AtomicPointer.read(hconf, pointer).map(_.toLong)
-    if (current.contains(batchId)) return false // replayed batch: no-op
-    // creates whichever history half is missing (a keyed-on-one-table
-    // check would wedge forever after a crash between the two creates)
-    Dedup.BandHistory.ensure(spark, historyTable, batch.schema(idCol),
-      numBuckets)
-    val within = Dedup.nearDedupMinhash(
-      Dedup.exact(batch, textCol, idCol), textCol, idCol, threshold)
-    // barrier: the output write and the delta append must see the SAME
-    // survivor set, computed once (not two LSH pipeline runs) — the
-    // exactly-once write IS the barrier; the append re-reads the
-    // written directory (the intakeBatch job-budget rationale)
-    val survivorsPath = new Path(root, s"batch-$batchId").toString
-    val outFrame = Dedup.nearDedupIncremental(spark, within, historyTable,
-      textCol, idCol, threshold)
-    outFrame.write.mode("overwrite").parquet(survivorsPath)
-    Dedup.appendBandHistoryDelta(spark,
-      spark.read.schema(outFrame.schema).parquet(survivorsPath),
-      textCol, idCol, historyTable, batchId)
-    graft.sources.AtomicPointer.write(hconf,
-      new Path(root, s"_LATEST.tmp-$batchId"), pointer, batchId.toString)
-    true
+    commitOnce(spark, outDir, batchId) { _ =>
+      // creates whichever history half is missing (a keyed-on-one-table
+      // check would wedge forever after a crash between the two creates)
+      Dedup.BandHistory.ensure(spark, historyTable, batch.schema(idCol),
+        numBuckets)
+      val within = Dedup.nearDedupMinhash(
+        Dedup.exact(batch, textCol, idCol), textCol, idCol, threshold)
+      val survivors = writeSurvivors(Dedup.nearDedupIncremental(spark, within,
+        historyTable, textCol, idCol, threshold), outDir, batchId)
+      Dedup.appendBandHistoryDelta(spark, survivors, textCol, idCol,
+        historyTable, batchId)
+    }
   }
 
-  /** The FULL streaming intake loop — the production shape of the whole
-    * engine, composing every proven piece into one `foreachBatch`
-    * pipeline. Per micro-batch of raw (id, html) documents:
-    *
-    *  1. clean: `strip_html` → `normalizeText` (two native codegen'd
-    *     expressions, one per-row pass);
-    *  2. score: `qualityScore`, drop rows below `minQuality` (rows with
-    *     NULL html score NULL and drop — intake is a filter, unlike the
-    *     pure dedup operators' NULL pass-through);
-    *  3. exact dedup, within the batch ([[graft.operators.Dedup.exact]])
-    *     then against the accumulated HASH history
-    *     ([[graft.operators.Dedup.exactIncrementalDelta]], main ∪
-    *     delta) — catches all exact copies, including short docs LSH
-    *     cannot see, before any LSH work;
-    *  4. near dedup, within the batch then against the persisted BAND
-    *     history ([[graft.operators.Dedup.nearDedupIncremental]],
-    *     main ∪ delta);
-    *  5. survivors (id, text, quality) written exactly-once to
-    *     `outDir/batch-<id>/` and appended to BOTH history deltas
-    *     (band tables first, hash last — every crash prefix leaves
-    *     probes correct), then the `_LATEST` pointer flips.
-    *
-    * Delivery contract — every leg exactly-once: the survivor output
-    * and the delta appends each overwrite their own batch-<id>
-    * directory; a fully-replayed batch (id in the pointer) is a no-op;
-    * a partially-replayed batch recomputes the IDENTICAL survivor set
-    * because both history probes exclude same-id matches (a doc meeting
-    * its own crashed append is a replay artifact, not a duplicate); and
-    * a batch replayed after a compaction folded its crashed append is
-    * skipped by the fold manifest ([[graft.operators.Layout
-    * .foldManifestDirOf]]) rather than re-appended. Fold the deltas with
-    * [[graft.operators.Dedup.IntakeHistory]] on whatever cadence
-    * bounds their size — probes stay correct on either side of the
-    * fold, and replays stay safe across it.
-    *
-    * Scale shape: steps 1-2 are narrow projections; step 3 broadcasts
-    * only batch hashes (history side never exchanges); step 4's history
-    * leg is the zero-exchange bucketed probe; the appends write one
-    * batch's worth of data. Nothing in the loop reads or rewrites the
-    * accumulated corpus. */
-  def intakeSink(docs: DataFrame, historyTable: String, numBuckets: Int,
-      htmlCol: String, idCol: String, outDir: String, checkpoint: String,
-      minQuality: Double = 0.75, threshold: Double = 0.8,
-      extractBoilerplate: Boolean = false,
-      lmGate: Option[(graft.operators.NgramLm.CharLm, Double)] = None,
-      decontaminate: Option[(String, Int)] = None,
-      paragraphDedup: Boolean = false,
-      lmBuckets: Option[(graft.operators.NgramLm.CharLm,
-        graft.operators.NgramLm.PplThresholds, Set[String])] = None,
-      urlDedupCol: Option[String] = None,
-      qualityModel: Option[(graft.operators.QualityClassifier.LrModel,
-        Long)] = None,
-      gates: TextGates = TextGates()): DataStreamWriter[Row] =
-    docs.writeStream
-      .option("checkpointLocation", checkpoint)
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        intakeBatch(batch, batchId, historyTable, numBuckets,
-          htmlCol, idCol, outDir, minQuality, threshold,
-          extractBoilerplate, lmGate, decontaminate, paragraphDedup,
-          lmBuckets, urlDedupCol, qualityModel, gates): Unit
-      }
-
-  /** One intake micro-batch (see [[intakeSink]]; also the batch path
-    * the registry row and tests drive directly). Returns false if the
-    * batch id is already recorded (full replay: no-op).
-    *
-    * Optional front-half legs (both default-off, both pure per-row or
-    * broadcast-join work — the loop's shuffle/exactly-once shape is
-    * unchanged):
-    *  - `extractBoilerplate` inserts the jusText block classifier
-    *    ([[graft.functions.TextFunctions.extractContent]]) BEFORE
-    *    strip/normalize, so nav/footer/menu text never reaches the
-    *    quality gate or the histories;
-    *  - `lmGate = Some((lm, minAvgLogp))` scores the cleaned text
-    *    against a char-bigram LM trained ONCE on a clean reference
-    *    corpus ([[graft.operators.NgramLm.trainCharBigram]] — the
-    *    CCNet recipe; the model frames broadcast) and drops docs whose
-    *    mean log-prob falls below the floor;
-    *  - `decontaminate = Some((evalGramTable, n))` drops docs sharing
-    *    any token n-gram with a frozen eval set
-    *    ([[graft.operators.Decontaminate]] — batch grams broadcast
-    *    into the bucketed table, eval side never exchanges);
-    *  - `paragraphDedup` inserts the CCNet/Dolma paragraph legs right
-    *    after clean and BEFORE quality scoring (boilerplate paragraphs
-    *    removed before anything scores or hashes the doc):
-    *    within-batch keep-first ([[graft.operators.Dedup
-    *    .paragraphDedup]]) then the persisted `_pg` history probe
-    *    ([[graft.operators.Dedup.paragraphIncrementalDelta]], main ∪
-    *    delta, zero history exchange); survivors' paragraph hashes
-    *    append to the `_pg` delta between the band and hash appends
-    *    (each history independent, so any crash prefix leaves every
-    *    probe correct);
-    *  - `urlDedupCol = Some(url)` runs canonical-URL keep-first dedup
-    *    ([[graft.operators.UrlOps.urlDedup]]) as the VERY FIRST leg,
-    *    before any content cleaning — the RefinedWeb/CCNet order: a
-    *    URL-duplicate row is shed before its content costs anything
-    *    (NULL-url rows pass through);
-    *  - `qualityModel = Some((model, minPMicro))` gates on the TRAINED
-    *    quality classifier ([[graft.operators.QualityClassifier]], the
-    *    GPT-3/DCLM recipe) right after the heuristic quality gate — a
-    *    pure per-row map-literal fold, no join, no extra job. */
-  def intakeBatch(batch: DataFrame, batchId: Long, historyTable: String,
-      numBuckets: Int, htmlCol: String, idCol: String, outDir: String,
-      minQuality: Double = 0.75, threshold: Double = 0.8,
-      extractBoilerplate: Boolean = false,
-      lmGate: Option[(graft.operators.NgramLm.CharLm, Double)] = None,
-      decontaminate: Option[(String, Int)] = None,
-      paragraphDedup: Boolean = false,
-      lmBuckets: Option[(graft.operators.NgramLm.CharLm,
-        graft.operators.NgramLm.PplThresholds, Set[String])] = None,
-      urlDedupCol: Option[String] = None,
-      qualityModel: Option[(graft.operators.QualityClassifier.LrModel,
-        Long)] = None,
-      gates: TextGates = TextGates()): Boolean = {
-    import graft.operators.Dedup
-    val spark = batch.sparkSession
-    val hconf = spark.sparkContext.hadoopConfiguration
-    val root = new Path(outDir)
-    val pointer = new Path(root, "_LATEST")
-    val current = graft.sources.AtomicPointer.read(hconf, pointer).map(_.toLong)
-    if (current.contains(batchId)) return false // replayed batch: no-op
-    val outFrame = textSurvivorFrame(batch, historyTable, numBuckets,
-      htmlCol, idCol, minQuality, threshold, extractBoilerplate, lmGate,
-      decontaminate, paragraphDedup, lmBuckets, urlDedupCol, qualityModel,
-      gates)
-    val survivorsPath = new Path(root, s"batch-$batchId").toString
-    outFrame.write.mode("overwrite").parquet(survivorsPath)
-    // explicit schema: a schema-discovery pass over the just-written
-    // footers would spend the job the write just saved
-    val survivors = spark.read.schema(outFrame.schema).parquet(survivorsPath)
-    Dedup.appendBandHistoryDelta(spark, survivors, "text", idCol,
-      historyTable, batchId)
-    if (paragraphDedup)
-      // assumeCanonical: survivors went through paragraphDedup +
-      // the history probe, so each hash appears in exactly one doc —
-      // the canonicalization groupBy would add a shuffle per
-      // micro-batch and collapse nothing (ADVICE r15)
-      Dedup.appendParagraphHistoryDelta(spark, survivors, "text", idCol,
-        historyTable, batchId, assumeCanonical = true)
-    Dedup.appendHashHistoryDelta(spark, survivors, "text", idCol,
-      historyTable, batchId)
-    graft.sources.AtomicPointer.write(hconf,
-      new Path(root, s"_LATEST.tmp-$batchId"), pointer, batchId.toString)
-    true
-  }
-
-  /** The text front half + dedup chain of [[intakeBatch]], ending at
-    * the UNWRITTEN survivor frame (idCol, text, quality) — the
+  /** The text front half + dedup chain of [[mixedIntakeBatch]], ending
+    * at the UNWRITTEN survivor frame (idCol, text, quality) — the
     * exactly-once write (which doubles as the plan barrier, the
-    * job-budget rationale) stays with the caller: the text loop writes
-    * this frame alone; the mixed loop ([[mixedIntakeBatch]]) unions it
-    * with the payload legs' frame and writes ONCE. */
+    * job-budget rationale) stays with the caller, which merges this
+    * frame with the other legs' and writes ONCE. */
   private def textSurvivorFrame(batchRaw: DataFrame, historyTable: String,
       numBuckets: Int, htmlCol: String, idCol: String,
       minQuality: Double, threshold: Double,
       extractBoilerplate: Boolean,
       lmGate: Option[(graft.operators.NgramLm.CharLm, Double)],
-      decontaminate: Option[(String, Int)] = None,
-      paragraphDedup: Boolean = false,
+      decontaminate: Option[(String, Int)],
+      paragraphDedup: Boolean,
       lmBuckets: Option[(graft.operators.NgramLm.CharLm,
-        graft.operators.NgramLm.PplThresholds, Set[String])] = None,
-      urlDedupCol: Option[String] = None,
+        graft.operators.NgramLm.PplThresholds, Set[String])],
+      urlDedupCol: Option[String],
       qualityModel: Option[(graft.operators.QualityClassifier.LrModel,
-        Long)] = None,
-      gates: TextGates = TextGates()): DataFrame = {
+        Long)],
+      gates: TextGates): DataFrame = {
     import graft.operators.{Decontaminate, Dedup}
     import graft.functions.{TextFunctions => TF}
     // URL dedup is the FIRST leg by design (RefinedWeb/CCNet run it
@@ -674,75 +445,22 @@ object StreamOps {
       "text", idCol, threshold)
   }
 
-  /** The MULTIMODAL intake loop — one exactly-once micro-batch
-    * pipeline over a MIXED binary corpus (images, audio clips, video
-    * clips in one payload column), composing the three identity
-    * families end-to-end with NO modality detector: every identity
-    * extractor returns "no identity" for payloads it cannot decode,
-    * and every dedup stage passes no-identity rows through untouched —
-    * so chaining image → audio → video dedup routes each payload to
-    * exactly the stage that can see it. Per micro-batch:
+  /** The binary legs of [[mixedIntakeBatch]] over a MIXED binary corpus
+    * (images, audio clips, video clips in one payload column), ending
+    * at the UNWRITTEN survivor frame. It composes the three identity
+    * families with NO modality detector: every identity extractor
+    * returns "no identity" for payloads it cannot decode, and every
+    * dedup stage passes no-identity rows through untouched — so
+    * chaining image → audio → video dedup routes each payload to
+    * exactly the stage that can see it:
     *
     *  1. image: within-batch keep-min per dHash ([[graft.operators
     *     .Dedup.imageExact]]), then vs the `_ph` history;
     *  2. audio: within-batch cluster resolution over spectral
     *     fingerprints, then the banded `_ab` history vote;
     *  3. video: within-batch cluster resolution over frame votes,
-    *     then the `_vb`/`_vn` history probe;
-    *  4. survivors written exactly-once to `outDir/batch-<id>/` (the
-    *     write IS the stage barrier — the intakeBatch job-budget
-    *     rationale), appended to all three history deltas
-    *     (overwrite-own-dir + fold-manifest replay safety, each
-    *     history independent so the crash prefix leaves every probe
-    *     correct), then the `_LATEST` pointer flips.
+    *     then the `_vb`/`_vn` history probe.
     *
-    * Delivery contract: identical to [[intakeBatch]] — every leg
-    * exactly-once, full replays skipped by the pointer, partial
-    * replays recompute identical survivors (every history probe
-    * excludes same-id matches). Scale shape: payloads never cross a
-    * shuffle anywhere — each identity is 8 bytes (image, audio) or
-    * 12 bytes/frame (video) into its banded join, batch sides
-    * broadcast, history sides never exchange — and the batch's binary
-    * blobs are resident exactly ONCE (the single batch checkpoint;
-    * stage boundaries persist id sets only and semi-join the payload
-    * back, so six stages do not mean six block-manager copies). */
-  def multimodalIntakeBatch(batch: DataFrame, batchId: Long,
-      historyTable: String, numBuckets: Int, payloadCol: String,
-      idCol: String, outDir: String,
-      decontaminateMm: Option[String] = None): Boolean = {
-    import graft.operators.Dedup
-    val spark = batch.sparkSession
-    val hconf = spark.sparkContext.hadoopConfiguration
-    val root = new Path(outDir)
-    val pointer = new Path(root, "_LATEST")
-    val current = graft.sources.AtomicPointer.read(hconf, pointer).map(_.toLong)
-    if (current.contains(batchId)) return false // replayed batch: no-op
-    val (outFrame, survIdent) = multimodalSurvivorFrame(batch, historyTable,
-      numBuckets, payloadCol, idCol, decontaminateMm)
-    val survivorsPath = new Path(root, s"batch-$batchId").toString
-    outFrame.write.mode("overwrite").parquet(survivorsPath)
-    // the history deltas project from the ALREADY-materialized survivor
-    // identity frame — zero re-reads (and zero re-decodes) of the
-    // written payloads. The identities are deterministic functions of
-    // the written payload bytes, so a replayed batch still overwrites
-    // each delta dir with identical content; the three appends stay
-    // independent writes in the same fixed order, preserving every
-    // crash prefix.
-    Dedup.appendImageHistoryDelta(spark, survIdent, idCol,
-      historyTable, batchId)
-    Dedup.appendAudioHistoryDelta(spark, survIdent, idCol,
-      historyTable, batchId)
-    Dedup.appendVideoHistoryDelta(spark, survIdent, idCol,
-      historyTable, batchId)
-    graft.sources.AtomicPointer.write(hconf,
-      new Path(root, s"_LATEST.tmp-$batchId"), pointer, batchId.toString)
-    true
-  }
-
-  /** The three modality legs of [[multimodalIntakeBatch]], ending at
-    * the UNWRITTEN survivor frame (the [[textSurvivorFrame]] split:
-    * the exactly-once write stays with the caller — alone in the
-    * binary loop, unioned with the text legs in the mixed loop).
     * Returns (survivor payload frame, survivor IDENTITY frame) — the
     * caller's history-delta appends project from the second, so the
     * batch's payload bytes are decoded exactly once end-to-end.
@@ -756,7 +474,9 @@ object StreamOps {
     * Stage boundaries persist only the surviving ID SET (the
     * resident-bytes discipline) and semi-join the materialized identity
     * frame back, so no stage re-runs an upstream pipeline and plans
-    * stay bounded.
+    * stay bounded. Payloads never cross a shuffle: batch sides
+    * broadcast, history sides never exchange, and the batch's blobs
+    * are resident exactly ONCE (the single batch checkpoint).
     *
     * Barrier class: `localCheckpoint` (eager) — lineage is truncated,
     * so an executor loss inside the batch fails the job and the batch
@@ -766,7 +486,7 @@ object StreamOps {
     * `checkpoint()` under a checkpoint dir (the r19 verdict note). */
   private def multimodalSurvivorFrame(batch: DataFrame, historyTable: String,
       numBuckets: Int, payloadCol: String, idCol: String,
-      decontaminateMm: Option[String] = None): (DataFrame, DataFrame) = {
+      decontaminateMm: Option[String]): (DataFrame, DataFrame) = {
     import graft.operators.Dedup
     val spark = batch.sparkSession
     Dedup.MultimodalHistory.ensure(spark, historyTable, batch.schema(idCol),
@@ -806,52 +526,89 @@ object StreamOps {
     (batch0.join(broadcast(s6.select(col(idCol))), Seq(idCol), "left_semi"), s6)
   }
 
-  /** [[multimodalIntakeBatch]] as a streaming sink. */
-  def multimodalIntakeSink(docs: DataFrame, historyTable: String,
-      numBuckets: Int, payloadCol: String, idCol: String, outDir: String,
-      checkpoint: String,
-      decontaminateMm: Option[String] = None): DataStreamWriter[Row] =
-    docs.writeStream
-      .option("checkpointLocation", checkpoint)
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        multimodalIntakeBatch(batch, batchId, historyTable, numBuckets,
-          payloadCol, idCol, outDir, decontaminateMm): Unit
-      }
-
-  /** The MIXED-corpus intake loop — ONE exactly-once micro-batch
-    * pipeline over a real crawl batch, where a row carries text
-    * (`htmlCol`), a binary payload (`payloadCol`), an embedding
-    * (`embCol`, optional leg), or any combination: text rows run the
-    * [[intakeBatch]] legs (boilerplate → strip → normalize → quality →
-    * LM gate → exact + near dedup vs the text histories), payload rows
-    * run the [[multimodalIntakeBatch]] legs (image → audio → video
-    * identity vs the three binary histories), embedding rows run
-    * SemDeDup at intake (within-batch cluster resolution under the
-    * history's frozen quantizer, then
-    * [[graft.operators.Similarity.semanticIncrementalDelta]] vs the
-    * persisted IVF history `_ei`), and the survivor frames merge by id
-    * into ONE survivor write + ONE `_LATEST` pointer. Routing is
-    * null-based — no content detector: whichever columns a row
-    * populates decide which legs see it, and a row carrying several
-    * families participates in each independently (the merged row keeps
-    * whatever survived).
+  /** The intake loop — the production shape of the whole engine and the
+    * only intake micro-batch: one exactly-once `foreachBatch` pipeline
+    * over a real crawl batch, where a row carries text (`htmlCol`), a
+    * binary payload (`payloadCol`), an embedding (`embCol`), or any
+    * combination. Returns false if the batch id is already recorded
+    * (full replay: no-op).
     *
-    * Delivery contract: identical to the parents — full replays no-op
-    * on the pointer, partial replays recompute identical survivors
-    * (every history probe excludes same-id matches; the IVF append is
-    * overwrite-own-dir + fold-manifest safe), and ALL history deltas
-    * (five, six with the embedding leg) append in a fixed crash-prefix
-    * order — band first, hash LAST among the text pair (the
-    * [[intakeBatch]] contract: a crashed prefix must never leave the
-    * exact-hash history ahead of the band history), image → audio →
-    * video → ivf between (each independent) — so a crash after any
-    * prefix leaves every probe correct and the replay converges.
+    * A leg runs when its content column is in the batch's schema (the
+    * embedding leg: when `embCol` is set), so a text-only or
+    * binary-only stream is just a frame without the other column.
+    * Within a leg, routing is null-based — no content detector: a row's
+    * non-NULL columns decide which legs see it, and a row carrying
+    * several families takes part in each independently (the merged row
+    * keeps whatever survived).
     *
-    * Scale shape: the union of the parents' — payloads resident once
-    * and never shuffled, text legs broadcast batch hashes only,
-    * embeddings broadcast into a bucket-pruned probe, all history
-    * sides zero-exchange. The merged write is a full-outer join of
-    * batch-sized frames on id: batch-sized, broadcast. */
+    *  - text rows: URL dedup → clean (`strip_html` → `normalizeText`,
+    *    one per-row pass) → gates → exact dedup within the batch then
+    *    vs the HASH history ([[graft.operators.Dedup
+    *    .exactIncrementalDelta]]; catches short docs LSH cannot see)
+    *    → near dedup within the batch then vs the BAND history
+    *    ([[graft.operators.Dedup.nearDedupIncremental]]). The quality
+    *    gate drops rows scoring below `minQuality` (intake is a filter,
+    *    unlike the pure dedup operators' NULL pass-through);
+    *  - payload rows: the image → audio → video identity legs
+    *    ([[multimodalSurvivorFrame]]) vs the three binary histories;
+    *  - embedding rows: SemDeDup at intake — within-batch cluster
+    *    resolution under the history's frozen quantizer, then
+    *    [[graft.operators.Similarity.semanticIncrementalDelta]] vs the
+    *    persisted IVF history `_ei`.
+    *
+    * Optional text legs (all default-off, all pure per-row or
+    * broadcast-join work — the loop's shuffle/exactly-once shape is
+    * unchanged; [[TextGates]] holds the rest):
+    *  - `urlDedupCol = Some(url)` runs canonical-URL keep-first dedup
+    *    ([[graft.operators.UrlOps.urlDedup]]) as the VERY FIRST leg,
+    *    before any content cleaning — the RefinedWeb/CCNet order: a
+    *    URL-duplicate row is shed before its content costs anything
+    *    (NULL-url rows pass through; NULL-html rows never enter the
+    *    text leg, so a body-less row cannot shadow its URL twin);
+    *  - `extractBoilerplate` inserts the jusText block classifier
+    *    ([[graft.functions.TextFunctions.extractContent]]) BEFORE
+    *    strip/normalize, so nav/footer/menu text never reaches the
+    *    quality gate or the histories;
+    *  - `paragraphDedup` inserts the CCNet/Dolma paragraph legs right
+    *    after clean and BEFORE quality scoring: within-batch
+    *    keep-first ([[graft.operators.Dedup.paragraphDedup]]) then the
+    *    persisted `_pg` history probe
+    *    ([[graft.operators.Dedup.paragraphIncrementalDelta]]);
+    *  - `qualityModel = Some((model, minPMicro))` gates on the TRAINED
+    *    quality classifier ([[graft.operators.QualityClassifier]], the
+    *    GPT-3/DCLM recipe) right after the heuristic quality gate;
+    *  - `lmGate = Some((lm, minAvgLogp))` scores the cleaned text
+    *    against a char-bigram LM trained ONCE on a clean reference
+    *    corpus ([[graft.operators.NgramLm.trainCharBigram]] — the
+    *    CCNet recipe) and drops docs whose mean log-prob falls below
+    *    the floor; `lmBuckets` routes on frozen perplexity buckets;
+    *  - `decontaminate = Some((evalGramTable, n))` drops docs sharing
+    *    any token n-gram with a frozen eval set
+    *    ([[graft.operators.Decontaminate]]); `decontaminateMm` does the
+    *    same for eval payload identities and embeddings.
+    *
+    * Delivery contract ([[commitOnce]]) — every leg exactly-once: the
+    * survivor frames merge by id into ONE survivor write to
+    * `outDir/batch-<id>/`, the history deltas each overwrite their own
+    * batch-<id> directory, and a partially-replayed batch recomputes
+    * the IDENTICAL survivor set because every history probe excludes
+    * same-id matches (a doc meeting its own crashed append is a replay
+    * artifact, not a duplicate); a batch replayed after a compaction
+    * folded its crashed append is skipped by the fold manifest
+    * ([[graft.operators.Layout.foldManifestDirOf]]) rather than
+    * re-appended. The deltas of the legs that ran append in one fixed
+    * crash-prefix order — band, `_pg`, image, audio, video, `_ei`,
+    * hash: the exact-hash history is LAST, so a crashed prefix never
+    * leaves it ahead of the band history. Fold them with
+    * [[maintainMixedHistories]] on whatever cadence bounds their size.
+    *
+    * Scale shape: the front half is narrow projections; the text legs
+    * broadcast batch hashes only and the band probe is the
+    * zero-exchange bucketed join; payloads are resident once and never
+    * shuffled; embeddings broadcast into a bucket-pruned probe; all
+    * history sides are zero-exchange; the merged write is a
+    * full-outer join of batch-sized frames on id. Nothing in the loop
+    * reads or rewrites the accumulated corpus. */
   def mixedIntakeBatch(batch: DataFrame, batchId: Long, historyTable: String,
       numBuckets: Int, htmlCol: String, payloadCol: String, idCol: String,
       outDir: String, minQuality: Double = 0.75, threshold: Double = 0.8,
@@ -869,140 +626,109 @@ object StreamOps {
       gates: TextGates = TextGates()): Boolean = {
     import graft.operators.{Dedup, Similarity}
     val spark = batch.sparkSession
-    val hconf = spark.sparkContext.hadoopConfiguration
-    val root = new Path(outDir)
-    val pointer = new Path(root, "_LATEST")
-    val current = graft.sources.AtomicPointer.read(hconf, pointer).map(_.toLong)
-    if (current.contains(batchId)) return false // replayed batch: no-op
-    // URL dedup is a TEXT-leg concern (the crawl-row granularity): the
-    // url column rides into the text frame so the leg can run first;
-    // payload/embedding legs key on content identity, not provenance
-    val textRows = batch.where(col(htmlCol).isNotNull)
-      .select((col(idCol) +: col(htmlCol) +:
-        urlDedupCol.toSeq.map(col)): _*)
-    val payloadRows = batch.where(col(payloadCol).isNotNull)
-      .select(col(idCol), col(payloadCol))
-    val textOut = textSurvivorFrame(textRows, historyTable, numBuckets,
-      htmlCol, idCol, minQuality, threshold, extractBoilerplate, lmGate,
-      decontaminate, paragraphDedup, lmBuckets, urlDedupCol, qualityModel,
-      gates)
-    val (payOut, payIdent) = multimodalSurvivorFrame(payloadRows, historyTable,
-      numBuckets, payloadCol, idCol, decontaminateMm)
-    // optional EMBEDDING leg (SemDeDup at intake, the l29b machinery):
-    // within-batch cluster resolution under the history's frozen
-    // quantizer, then the incremental probe vs the persisted IVF
-    // history (main ∪ delta). The quantizer seeds from the FIRST
-    // batch's vectors (ensureSemanticHistory) — deterministic on
-    // replay because foreachBatch redelivers identical content.
-    val embOut = embCol.map { e =>
-      val t = s"${historyTable}_ei"
-      val embRows0 = batch.where(col(e).isNotNull).select(col(idCol), col(e))
-      // eval-embedding decontamination BEFORE the dedup legs (and
-      // before seeding: a contaminated first batch must not train the
-      // quantizer on leaked vectors, nor append them to the history)
-      val embRows = decontaminateMm
-        .filter(dt => spark.catalog.tableExists(s"${dt}_ei"))
-        .fold(embRows0) { dt =>
-          graft.operators.Similarity.semanticIncrementalDelta(spark,
-            embRows0, s"${dt}_ei", embTau, idCol = idCol, vecCol = e,
-            cId = idCol, cVec = e)
+    val present = batch.columns.toSet
+    commitOnce(spark, outDir, batchId) { _ =>
+      // URL dedup is a TEXT-leg concern (the crawl-row granularity): the
+      // url column rides into the text frame so the leg can run first;
+      // payload/embedding legs key on content identity, not provenance
+      val textOut = Option.when(present(htmlCol))(textSurvivorFrame(
+        batch.where(col(htmlCol).isNotNull)
+          .select((col(idCol) +: col(htmlCol) +: urlDedupCol.toSeq.map(col)): _*),
+        historyTable, numBuckets, htmlCol, idCol, minQuality, threshold,
+        extractBoilerplate, lmGate, decontaminate, paragraphDedup, lmBuckets,
+        urlDedupCol, qualityModel, gates))
+      val payOut = Option.when(present(payloadCol))(multimodalSurvivorFrame(
+        batch.where(col(payloadCol).isNotNull).select(col(idCol), col(payloadCol)),
+        historyTable, numBuckets, payloadCol, idCol, decontaminateMm))
+      // optional EMBEDDING leg (SemDeDup at intake, the l29b machinery):
+      // within-batch cluster resolution under the history's frozen
+      // quantizer, then the incremental probe vs the persisted IVF
+      // history (main ∪ delta). The quantizer seeds from the FIRST
+      // batch's vectors (ensureSemanticHistory) — deterministic on
+      // replay because foreachBatch redelivers identical content.
+      val embOut = embCol.map { e =>
+        val t = s"${historyTable}_ei"
+        val embRows0 = batch.where(col(e).isNotNull).select(col(idCol), col(e))
+        // eval-embedding decontamination BEFORE the dedup legs (and
+        // before seeding: a contaminated first batch must not train the
+        // quantizer on leaked vectors, nor append them to the history)
+        val embRows = decontaminateMm
+          .filter(dt => spark.catalog.tableExists(s"${dt}_ei"))
+          .fold(embRows0) { dt =>
+            Similarity.semanticIncrementalDelta(spark, embRows0, s"${dt}_ei",
+              embTau, idCol = idCol, vecCol = e, cId = idCol, cVec = e)
+          }
+        // seeding guard: a first micro-batch with ZERO vectors must NOT
+        // train the quantizer — an empty centroid table freezes forever
+        // (ensure skips once tables exist), every later vector assigns
+        // to list -1, and semantic dedup silently collapses to one
+        // (instantly-sidelined) list. Defer index creation to the first
+        // batch that actually carries vectors: the isEmpty probe (one
+        // limit-1 job over the batch) runs ONLY while the index does not
+        // exist yet, so the steady-state loop pays catalog checks alone.
+        val indexExists = spark.catalog.tableExists(t) &&
+          spark.catalog.tableExists(s"${t}_centroids") &&
+          spark.catalog.tableExists(s"${t}_meta")
+        if (!indexExists && embRows.isEmpty) embRows.limit(0)
+        else {
+          Similarity.ensureSemanticHistory(spark, embRows, historyTable,
+            numBuckets = numBuckets, cId = idCol, cVec = e)
+          val within = Similarity.semanticDupClustersIndexed(spark, embRows, t,
+              embTau, idCol = idCol, vecCol = e)
+            .where(col(idCol) === col("cluster")).select(col(idCol))
+            .join(embRows, Seq(idCol))
+          Similarity.semanticIncrementalDelta(spark, within, t, embTau,
+            idCol = idCol, vecCol = e, cId = idCol, cVec = e)
         }
-      // seeding guard: a first micro-batch with ZERO vectors must NOT
-      // train the quantizer — an empty centroid table freezes forever
-      // (ensure skips once tables exist), every later vector assigns
-      // to list -1, and semantic dedup silently collapses to one
-      // (instantly-sidelined) list. Defer index creation to the first
-      // batch that actually carries vectors: the isEmpty probe (one
-      // limit-1 job over the batch) runs ONLY while the index does not
-      // exist yet, so the steady-state loop pays catalog checks alone.
-      val indexExists = spark.catalog.tableExists(t) &&
-        spark.catalog.tableExists(s"${t}_centroids") &&
-        spark.catalog.tableExists(s"${t}_meta")
-      if (!indexExists && embRows.isEmpty) embRows.limit(0)
-      else {
-        Similarity.ensureSemanticHistory(spark, embRows, historyTable,
-          numBuckets = numBuckets, cId = idCol, cVec = e)
-        val within = Similarity.semanticDupClustersIndexed(spark, embRows, t,
-            embTau, idCol = idCol, vecCol = e)
-          .where(col(idCol) === col("cluster")).select(col(idCol))
-          .join(embRows, Seq(idCol))
-        Similarity.semanticIncrementalDelta(spark, within, t, embTau,
-          idCol = idCol, vecCol = e, cId = idCol, cVec = e)
       }
+      // merge by id: (id, text, quality, payload[, emb]) — absent legs
+      // NULL; a row carrying several content families keeps whatever
+      // survived each leg independently
+      val legs = textOut.toSeq ++ payOut.map(_._1) ++ embOut
+      require(legs.nonEmpty, s"intake batch carries none of the content " +
+        s"columns $htmlCol, $payloadCol${embCol.fold("")(", " + _)}")
+      val survivors = writeSurvivors(
+        legs.reduce(_.join(_, Seq(idCol), "full_outer")), outDir, batchId)
+      val textSurv = textOut.map(_ => survivors.where(col("text").isNotNull))
+      textSurv.foreach { s =>
+        Dedup.appendBandHistoryDelta(spark, s, "text", idCol, historyTable, batchId)
+        if (paragraphDedup)
+          // assumeCanonical: survivors went through paragraphDedup + the
+          // history probe, so each hash appears in exactly one doc — the
+          // canonicalization groupBy would add a shuffle per micro-batch
+          // and collapse nothing (ADVICE r15)
+          Dedup.appendParagraphHistoryDelta(spark, s, "text", idCol,
+            historyTable, batchId, assumeCanonical = true)
+      }
+      // modality deltas project from the materialized survivor identity
+      // frame (payload-leg survivors == payload-not-null merged rows by
+      // construction of the full-outer merge) — zero re-reads and zero
+      // re-decodes of the written payloads. The identities are
+      // deterministic functions of the payload bytes, so a replay still
+      // overwrites each delta dir with identical content.
+      payOut.foreach { case (_, ident) =>
+        Dedup.appendImageHistoryDelta(spark, ident, idCol, historyTable, batchId)
+        Dedup.appendAudioHistoryDelta(spark, ident, idCol, historyTable, batchId)
+        Dedup.appendVideoHistoryDelta(spark, ident, idCol, historyTable, batchId)
+      }
+      embCol.foreach { e =>
+        // the seeding guard above may have deferred index creation (a
+        // vector-free stream prefix) — nothing to append and no centroid
+        // table to assign against until the first vector batch seeds it
+        if (spark.catalog.tableExists(s"${historyTable}_ei"))
+          Similarity.appendToIvfDelta(spark,
+            survivors.where(col(e).isNotNull).select(col(idCol), col(e)),
+            s"${historyTable}_ei", batchId, cId = idCol, cVec = e): Unit
+      }
+      textSurv.foreach(Dedup.appendHashHistoryDelta(spark, _, "text", idCol,
+        historyTable, batchId))
     }
-    // merge by id: (id, text, quality, payload[, emb]) — absent legs
-    // NULL; a row carrying several content families keeps whatever
-    // survived each leg independently
-    val merged = textOut.join(payOut, Seq(idCol), "full_outer")
-    val outFrame = embOut.fold(merged)(eo => merged.join(eo, Seq(idCol), "full_outer"))
-    val survivorsPath = new Path(root, s"batch-$batchId").toString
-    outFrame.write.mode("overwrite").parquet(survivorsPath)
-    val survivors = spark.read.schema(outFrame.schema).parquet(survivorsPath)
-    val textSurv = survivors.where(col("text").isNotNull)
-    Dedup.appendBandHistoryDelta(spark, textSurv, "text", idCol,
-      historyTable, batchId)
-    if (paragraphDedup)
-      // assumeCanonical: the text leg's survivors are paragraph-deduped
-      // (same rationale as the text-loop append)
-      Dedup.appendParagraphHistoryDelta(spark, textSurv, "text", idCol,
-        historyTable, batchId, assumeCanonical = true)
-    // modality deltas project from the materialized survivor identity
-    // frame (payload-leg survivors == payload-not-null merged rows by
-    // construction of the full-outer merge) — zero re-reads/re-decodes
-    // of the written payloads (the multimodalIntakeBatch rationale)
-    Dedup.appendImageHistoryDelta(spark, payIdent, idCol,
-      historyTable, batchId)
-    Dedup.appendAudioHistoryDelta(spark, payIdent, idCol,
-      historyTable, batchId)
-    Dedup.appendVideoHistoryDelta(spark, payIdent, idCol,
-      historyTable, batchId)
-    embCol.foreach { e =>
-      // the seeding guard above may have deferred index creation (a
-      // vector-free stream prefix) — nothing to append and no centroid
-      // table to assign against until the first vector batch seeds it
-      if (spark.catalog.tableExists(s"${historyTable}_ei"))
-        Similarity.appendToIvfDelta(spark,
-          survivors.where(col(e).isNotNull).select(col(idCol), col(e)),
-          s"${historyTable}_ei", batchId, cId = idCol, cVec = e): Unit
-    }
-    Dedup.appendHashHistoryDelta(spark, textSurv, "text", idCol,
-      historyTable, batchId)
-    graft.sources.AtomicPointer.write(hconf,
-      new Path(root, s"_LATEST.tmp-$batchId"), pointer, batchId.toString)
-    true
   }
-
-  /** [[mixedIntakeBatch]] as a streaming sink. */
-  def mixedIntakeSink(docs: DataFrame, historyTable: String,
-      numBuckets: Int, htmlCol: String, payloadCol: String, idCol: String,
-      outDir: String, checkpoint: String,
-      minQuality: Double = 0.75, threshold: Double = 0.8,
-      extractBoilerplate: Boolean = false,
-      lmGate: Option[(graft.operators.NgramLm.CharLm, Double)] = None,
-      embCol: Option[String] = None, embTau: Double = 0.95,
-      decontaminate: Option[(String, Int)] = None,
-      paragraphDedup: Boolean = false,
-      lmBuckets: Option[(graft.operators.NgramLm.CharLm,
-        graft.operators.NgramLm.PplThresholds, Set[String])] = None,
-      decontaminateMm: Option[String] = None,
-      urlDedupCol: Option[String] = None,
-      qualityModel: Option[(graft.operators.QualityClassifier.LrModel,
-        Long)] = None,
-      gates: TextGates = TextGates()): DataStreamWriter[Row] =
-    docs.writeStream
-      .option("checkpointLocation", checkpoint)
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        mixedIntakeBatch(batch, batchId, historyTable, numBuckets,
-          htmlCol, payloadCol, idCol, outDir, minQuality, threshold,
-          extractBoilerplate, lmGate, embCol, embTau, decontaminate,
-          paragraphDedup, lmBuckets, decontaminateMm, urlDedupCol,
-          qualityModel, gates): Unit
-      }
 
   /** Drop all histories of a mixed intake (text pair, the paragraph
     * table when the paragraph leg created one, three modalities, and
     * the embedding-leg IVF index if one was created). */
-  def dropMixedHistory(spark: org.apache.spark.sql.SparkSession,
+  def dropMixedHistory(spark: SparkSession,
       table: String): Unit = {
     import graft.operators.Dedup
     (Dedup.IntakeHistory ++ Dedup.ParagraphHistory ++ Dedup.MultimodalHistory)
@@ -1026,7 +752,7 @@ object StreamOps {
     * rewrites the whole index ([[graft.operators.Similarity
     * .reclusterIfDrifted]]), which belongs on a maintenance cadence an
     * operator chooses, not inside the ingest loop's hot path. */
-  def maintainMixedHistories(spark: org.apache.spark.sql.SparkSession,
+  def maintainMixedHistories(spark: SparkSession,
       table: String, maxDeltaRatio: Double = 0.10): Seq[String] = {
     import graft.operators.{Dedup, Similarity}
     val families = Seq("text" -> Dedup.IntakeHistory,
@@ -1042,18 +768,11 @@ object StreamOps {
   }
 
   /** Read the current CDC state (empty frame with `schema` if none). */
-  def readState(spark: org.apache.spark.sql.SparkSession, stateDir: String,
-      schema: org.apache.spark.sql.types.StructType): DataFrame = {
-    val root = new Path(stateDir)
+  def readState(spark: SparkSession, stateDir: String,
+      schema: org.apache.spark.sql.types.StructType): DataFrame =
     // NOTE: the returned frame is LAZY over a snapshot directory that
     // applyBatch's GC retains only while it is the current or previous
     // snapshot — materialize (collect/write) promptly; holding the frame
     // across 2+ further micro-batches can hit a deleted snapshot.
-    graft.sources.AtomicPointer.read(
-        spark.sparkContext.hadoopConfiguration, new Path(root, "_LATEST")) match {
-      case None => spark.createDataFrame(spark.sparkContext.emptyRDD[Row], schema)
-      case Some(id) =>
-        spark.read.parquet(new Path(root, s"batch-${id.toLong}").toString)
-    }
-  }
+    snapshot(spark, stateDir, committed(spark, stateDir), schema)
 }

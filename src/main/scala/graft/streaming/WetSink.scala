@@ -31,7 +31,7 @@ import org.apache.spark.sql.types._
   *    merely idempotent-ish (StreamingSpec pins the bytes equal across
   *    a simulated crash).
   *  - **Exactly-once delivery.** The [[graft.streaming.StreamOps
-  *    .intakeBatch]] contract verbatim: write `batch-<id>` with
+  *    .mixedIntakeBatch]] contract verbatim: write `batch-<id>` with
   *    mode(overwrite), then flip the `_LATEST` pointer via
   *    [[graft.sources.AtomicPointer]]. A fully-replayed batch no-ops
   *    on the pointer; a crash between write and flip replays into an
@@ -111,7 +111,7 @@ object WetSink {
   }
 
   /** One exactly-once container-write micro-batch (the
-    * [[graft.streaming.StreamOps.intakeBatch]] pointer contract).
+    * [[graft.streaming.StreamOps.mixedIntakeBatch]] pointer contract).
     * Returns false if `batchId` is already published (full replay:
     * no-op); a partial replay overwrites `batch-<id>` with identical
     * bytes and flips the pointer it crashed before. */

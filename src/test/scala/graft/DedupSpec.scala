@@ -493,14 +493,16 @@ class DedupSpec extends SparkSpec {
       // batch 0 against empty mains: the delta IS the corpus — any
       // positive ratio is exceeded, the fold fires immediately (cheap
       // early folds are intended), and a second call does not thrash
-      StreamOps.intakeBatch(docs(0 until 300), 0L, table, 4, "html", "doc_id", outDir)
+      StreamOps.mixedIntakeBatch(docs(0 until 300), 0L, table, 4,
+        "html", "payload", "doc_id", outDir)
       assert(anyDelta, "append should land delta-side")
       assert(Dedup.IntakeHistory.foldIfNeeded(spark, table), "over-ratio delta must fold")
       assert(!anyDelta, "fold must clear every delta dir")
       assert(!Dedup.IntakeHistory.foldIfNeeded(spark, table), "empty delta must not re-fold")
       // a small batch against the now-large main stays UNDER the 10%
       // ratio: the policy leaves it delta-side (fold work not yet earned)
-      StreamOps.intakeBatch(docs(300 until 310), 1L, table, 4, "html", "doc_id", outDir)
+      StreamOps.mixedIntakeBatch(docs(300 until 310), 1L, table, 4,
+        "html", "payload", "doc_id", outDir)
       assert(anyDelta)
       assert(!Dedup.IntakeHistory.foldIfNeeded(spark, table, maxDeltaRatio = 0.5),
         "a 10-doc delta over a 300-doc main must not trigger at ratio 0.5")
@@ -519,7 +521,8 @@ class DedupSpec extends SparkSpec {
       // no delta state reappears
       val outP = new Path(outDir)
       outP.getFileSystem(hconf).delete(new Path(outP, "_LATEST"), false)
-      assert(StreamOps.intakeBatch(docs(300 until 310), 1L, table, 4, "html", "doc_id", outDir))
+      assert(StreamOps.mixedIntakeBatch(docs(300 until 310), 1L, table, 4,
+        "html", "payload", "doc_id", outDir))
       val replayed = spark.read.parquet(s"$outDir/batch-1")
         .select($"doc_id").as[Long].collect().sorted
       assert(replayed === survivors1, "replay across an auto fold changed the survivor set")
@@ -1090,15 +1093,13 @@ class DedupSpec extends SparkSpec {
     // 23 fresh — a correct probe must see both history legs
     val batchB = Seq((21L, doc(2) + " zz"), (22L, doc(12) + " zz"),
       (23L, doc(23))).toDF("doc_id", "text")
-    def pairs(t: String, includeDelta: Boolean = true) =
-      Dedup.minhashIncremental(spark, batchB, t, "text", "doc_id",
-          includeDelta = includeDelta)
+    def pairs(t: String) =
+      Dedup.minhashIncremental(spark, batchB, t, "text", "doc_id")
         .where($"jaccard" >= 0.8)
         .select($"id_new", $"id_hist").as[(Long, Long)].collect().toSet
     Dedup.BandHistory.drop(spark, table)
     Dedup.BandHistory.drop(spark, ref)
     Dedup.writeBandHistory(hist, "text", "doc_id", table, numBuckets = 4)
-    Dedup.writeBandHistory(hist, "text", "doc_id", ref, numBuckets = 4)
     val fs = org.apache.hadoop.fs.FileSystem.get(spark.sparkContext.hadoopConfiguration)
     def deltaP(t: String) = new org.apache.hadoop.fs.Path(
       graft.operators.Layout.deltaDirOf(spark, t))
@@ -1112,15 +1113,15 @@ class DedupSpec extends SparkSpec {
       assert(deltaCount(table) === 4 && deltaCount(s"${table}_sh") === 4)
       // main tables untouched by the delta append
       assert(spark.table(table).select($"doc_id").distinct().count() === 10)
-      // probe sees BOTH legs; delta-off sees only the main leg
+      // probe sees BOTH legs: the main pair and the delta pair
       val withDelta = pairs(table)
       assert(withDelta === Set((21L, 2L), (22L, 12L)),
         s"delta probe pairs: $withDelta")
-      assert(pairs(table, includeDelta = false) === Set((21L, 2L)))
-      // parity: the same batch appended DIRECTLY to a twin history
-      Dedup.appendBandHistory(batchA, "text", "doc_id", ref, numBuckets = 4)
+      // parity: a twin history written DIRECTLY from history ∪ batch
+      Dedup.writeBandHistory(hist.unionByName(batchA), "text", "doc_id", ref,
+        numBuckets = 4)
       assert(pairs(ref) === withDelta,
-        "delta-probe diverged from direct-append probe")
+        "delta-probe diverged from direct-write probe")
       // compaction folds both tables, preserves bucket spec, delta gone
       Dedup.BandHistory.fold(spark, table)
       assert(!fs.exists(deltaP(table)) && !fs.exists(deltaP(s"${table}_sh")))
@@ -1437,8 +1438,10 @@ class DedupSpec extends SparkSpec {
     val surv1 = Dedup.nearDedupIncremental(spark, batch1, "t_incr_hist", "text", "doc_id")
     assert(surv1.select($"doc_id").as[Long].collect().toSet === Set(200L))
 
-    // append survivors; batch 2 must now dedup against them too
-    Dedup.appendBandHistory(surv1, "text", "doc_id", "t_incr_hist", numBuckets = 4)
+    // rewrite the history with the survivors; batch 2 must now dedup
+    // against them too (materialized first: surv1 reads the table)
+    Dedup.writeBandHistory(history.unionByName(surv1).localCheckpoint(),
+      "text", "doc_id", "t_incr_hist", numBuckets = 4)
     val batch2 = Seq((300L, sents(4) + " zzextra"), (400L, sents(5))).toDF("doc_id", "text")
     val surv2 = Dedup.nearDedupIncremental(spark, batch2, "t_incr_hist", "text", "doc_id")
     assert(surv2.select($"doc_id").as[Long].collect().toSet === Set(400L),

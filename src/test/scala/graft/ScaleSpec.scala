@@ -759,7 +759,7 @@ class ScaleSpec extends SparkSpec {
           .count()
         var ran = false
         val stages0 = probe {
-          ran = StreamOps.intakeBatch(b0, 0L, table, 8, "html", "doc_id",
+          ran = StreamOps.mixedIntakeBatch(b0, 0L, table, 8, "html", "payload", "doc_id",
             outDir, minQuality = 0.5)
         }
         assert(ran)
@@ -794,7 +794,7 @@ class ScaleSpec extends SparkSpec {
         val b1 = exactCopies.unionByName(nearCopies).unionByName(fresh)
           .repartition(16).localCheckpoint(eager = true) // same rationale as b0
         val stages1 = probe {
-          StreamOps.intakeBatch(b1, 1L, table, 8, "html", "doc_id",
+          StreamOps.mixedIntakeBatch(b1, 1L, table, 8, "html", "payload", "doc_id",
             outDir, minQuality = 0.5)
         }
         val out1 = spark.read.parquet(s"$outDir/batch-1")

@@ -3,6 +3,7 @@ package graft
 import graft.operators.{CdcApply, Dedup, Joins}
 import graft.sources.TestSources
 import graft.streaming.{FileSink, Reconcile, ReconcileLease, Stateful, StreamOps}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.{OutputMode, Trigger}
@@ -225,8 +226,10 @@ class StreamingSpec extends SparkSpec {
     val ms = TestSources.memory[(Long, String, Long, Boolean)]
     val df = ms.toDF.toDF("id", "v", "seq", "tomb")
     val dir = tmpDir("cdc")
-    val q = StreamOps.cdcSink(df, s"$dir/state", Seq("id"), Seq($"seq"),
-      $"tomb", s"$dir/ckpt").start()
+    val q = df.writeStream.option("checkpointLocation", s"$dir/ckpt")
+      .foreachBatch { (b: DataFrame, id: Long) =>
+        StreamOps.applyBatch(b, id, s"$dir/state", Seq("id"), Seq($"seq"), $"tomb"): Unit
+      }.start()
     ms.addData((1L, "a", 1L, false), (2L, "b", 1L, false)); q.processAllAvailable()
     ms.addData((1L, "a2", 2L, false), (2L, null, 2L, true), (3L, "c", 2L, false))
     q.processAllAvailable()
@@ -691,8 +694,11 @@ class StreamingSpec extends SparkSpec {
     val planted = queries.select(($"q_id" + 900000).as("vec_id"), $"q_vec".as("embedding"))
       .as[(Long, Seq[Float])].collect()
     val ms = TestSources.memory[(Long, Seq[Float])]
-    val q = StreamOps.ivfAppendSink(
-      ms.toDF.toDF("vec_id", "embedding"), table, tmpDir("ivfsinkckpt")).start()
+    val q = ms.toDF.toDF("vec_id", "embedding").writeStream
+      .option("checkpointLocation", tmpDir("ivfsinkckpt"))
+      .foreachBatch { (b: DataFrame, id: Long) =>
+        Similarity.appendToIvfDelta(spark, b, table, id): Unit
+      }.start()
     try {
       ms.addData(b0.toSeq)
       q.processAllAvailable()
@@ -723,70 +729,6 @@ class StreamingSpec extends SparkSpec {
     }
   }
 
-  test("L2h streaming leg: near-dedup ingest loop across micro-batches, replay-safe") {
-    import graft.operators.Dedup
-    def doc(n: Int): String = (0 until 20).map(w => s"tok${n}w$w").mkString(" ")
-    val hist = "t_stream_hist"
-    Dedup.BandHistory.drop(spark, hist)
-    val out = tmpDir("neardedup_out"); val ckpt = tmpDir("neardedup_ckpt")
-    val ms = TestSources.memory[(Long, String)]
-    val q = StreamOps.nearDedupSink(ms.toDF.toDF("doc_id", "text"),
-      hist, numBuckets = 4, "text", "doc_id", out, ckpt).start()
-    try {
-      try {
-        // batch 0: doc 1, a near-dup of it (one extra token), fresh doc 3
-        ms.addData((1L, doc(1)), (2L, doc(1) + " zz"), (3L, doc(3)))
-        q.processAllAvailable()
-        // batch 1: doc 4 near-dups HISTORY doc 1; 5 fresh; 6 exact-dups 5
-        ms.addData((4L, doc(1) + " yy"), (5L, doc(5)), (6L, doc(5)))
-        q.processAllAvailable()
-      } finally q.stop()
-      // survivor output: within-batch near-dup and exact dup dropped in
-      // their own batch, the cross-batch near-dup dropped against history
-      def batchIds(b: Int) = spark.read.parquet(s"$out/batch-$b")
-        .select($"doc_id").as[Long].collect().sorted
-      assert(batchIds(0) === Array(1L, 3L))
-      assert(batchIds(1) === Array(5L))
-      // the history accumulated exactly the survivors, once each — the
-      // banded table has one row per (id, band), so "once" = exactly 4
-      // band rows per id (a double-append would show 8)
-      def histIds() = spark.table(hist).select($"doc_id").distinct()
-        .as[Long].collect().sorted
-      def bandRows() = spark.table(hist).groupBy($"doc_id").count()
-        .select($"count").distinct().as[Long].collect().toSeq
-      assert(histIds() === Array(1L, 3L, 5L))
-      assert(bandRows() === Seq(4L))
-      // FULL replay of the last batch (its id is in the pointer): no-op —
-      // no double-append, output untouched
-      val replay = Seq((4L, doc(1) + " yy"), (5L, doc(5)), (6L, doc(5)))
-        .toDF("doc_id", "text")
-      assert(!StreamOps.nearDedupBatch(replay, 1L, hist, 4, "text", "doc_id", out))
-      assert(histIds() === Array(1L, 3L, 5L))
-      assert(bandRows() === Seq(4L))
-      // a later batch continues the loop against the accumulated history
-      val next = Seq((7L, doc(5) + " qq"), (8L, doc(8))).toDF("doc_id", "text")
-      assert(StreamOps.nearDedupBatch(next, 2L, hist, 4, "text", "doc_id", out))
-      assert(batchIds(2) === Array(8L))
-      assert(histIds() === Array(1L, 3L, 5L, 8L))
-      // CRASH WINDOW: history appended, pointer flip lost. The replay
-      // meets its own appended copy — same-id pairs are excluded as
-      // replay artifacts, so the recomputed survivor output is
-      // IDENTICAL (not empty), with only an at-least-once double
-      // append in the history (storage, never correctness)
-      val hconf = spark.sparkContext.hadoopConfiguration
-      graft.sources.AtomicPointer.write(hconf,
-        new org.apache.hadoop.fs.Path(out, "_LATEST.tmp-crash"),
-        new org.apache.hadoop.fs.Path(out, "_LATEST"), "1")
-      assert(StreamOps.nearDedupBatch(next, 2L, hist, 4, "text", "doc_id", out))
-      assert(batchIds(2) === Array(8L)) // survivors re-derived, not emptied
-      assert(histIds() === Array(1L, 3L, 5L, 8L))
-      // and the loop keeps deduping correctly after the replay
-      val after = Seq((9L, doc(8) + " rr"), (10L, doc(10))).toDF("doc_id", "text")
-      assert(StreamOps.nearDedupBatch(after, 3L, hist, 4, "text", "doc_id", out))
-      assert(batchIds(3) === Array(10L))
-    } finally Dedup.BandHistory.drop(spark, hist)
-  }
-
   test("L23 streaming intake: clean/score/dedup loop is exactly-once across a real mid-stream restart + compaction") {
     import graft.operators.{Dedup, Layout}
     import org.apache.hadoop.fs.Path
@@ -813,12 +755,15 @@ class StreamingSpec extends SparkSpec {
       } finally w.close()
       nextFile += 1
     }
-    def sink() = StreamOps.intakeSink(
-      spark.readStream
-        .schema("doc_id LONG, html STRING")
-        .option("maxFilesPerTrigger", "1")
-        .json(srcDir),
-      hist, numBuckets = 4, "html", "doc_id", out, ckpt)
+    def sink() = spark.readStream
+      .schema("doc_id LONG, html STRING")
+      .option("maxFilesPerTrigger", "1")
+      .json(srcDir)
+      .writeStream.option("checkpointLocation", ckpt)
+      .foreachBatch { (b: DataFrame, id: Long) =>
+        StreamOps.mixedIntakeBatch(b, id, hist, 4, "html", "payload",
+          "doc_id", out): Unit
+      }
     def batchIds(b: Int) = spark.read.parquet(s"$out/batch-$b")
       .select($"doc_id").as[Long].collect().sorted
     // batch 0: doc 1; near-dup of 1; doc 3; exact dup of 3; low-quality
@@ -876,10 +821,10 @@ class StreamingSpec extends SparkSpec {
         "hash rows duplicated across the replay")
       // and the loop still dedups correctly driven directly (batch 3:
       // exact dup of folded 8, near-dup of folded 8, one fresh)
-      assert(StreamOps.intakeBatch(
+      assert(StreamOps.mixedIntakeBatch(
         Seq((11L, html(doc(8))), (12L, html(doc(8) + " rr")),
           (13L, html(doc(13)))).toDF("doc_id", "html"),
-        3L, hist, 4, "html", "doc_id", out))
+        3L, hist, 4, "html", "payload", "doc_id", out))
       assert(batchIds(3) === Array(13L))
     } finally dropTextHistory(hist)
   }
@@ -892,8 +837,11 @@ class StreamingSpec extends SparkSpec {
     val out = tmpDir("neardelta_out"); val ckpt = tmpDir("neardelta_ckpt")
     val fs = org.apache.hadoop.fs.FileSystem.get(spark.sparkContext.hadoopConfiguration)
     val ms = TestSources.memory[(Long, String)]
-    val q = StreamOps.nearDedupSinkDelta(ms.toDF.toDF("doc_id", "text"),
-      hist, numBuckets = 4, "text", "doc_id", out, ckpt).start()
+    val q = ms.toDF.toDF("doc_id", "text").writeStream
+      .option("checkpointLocation", ckpt)
+      .foreachBatch { (b: DataFrame, id: Long) =>
+        StreamOps.nearDedupBatch(b, id, hist, 4, "text", "doc_id", out): Unit
+      }.start()
     try {
       try {
         // batch 0: doc 1, a near-dup of it, fresh doc 3
@@ -914,34 +862,60 @@ class StreamingSpec extends SparkSpec {
         .parquet(Layout.deltaDirOf(spark, hist))
         .select($"doc_id").distinct().as[Long].collect().sorted
       assert(deltaIds() === Array(1L, 3L, 5L))
-      // CRASH WINDOW that was at-least-once in the direct-append loop:
-      // history (delta) written, pointer flip lost. The replay probes
-      // its own crashed delta copy (same-id pairs excluded), recomputes
-      // identical survivors, and OVERWRITES its own delta subdirectory —
-      // band-row count stays exactly one append's worth
+      // the band table has one row per (id, band), so "once" = exactly
+      // 4 band rows per id (a double-append would show 8)
+      def bandRows() = spark.read.option("recursiveFileLookup", "true")
+        .parquet(Layout.deltaDirOf(spark, hist))
+        .groupBy($"doc_id").count()
+        .select($"count").distinct().as[Long].collect().toSeq
+      // FULL replay of the last batch (its id is in the pointer): no-op —
+      // no append, output untouched
+      val replay = Seq((4L, doc(1) + " yy"), (5L, doc(5)), (6L, doc(5)))
+        .toDF("doc_id", "text")
+      assert(!StreamOps.nearDedupBatch(replay, 1L, hist, 4, "text", "doc_id", out))
+      assert(batchIds(1) === Array(5L))
+      assert(deltaIds() === Array(1L, 3L, 5L))
+      assert(bandRows() === Seq(4L))
+      // CRASH WINDOW: history (delta) written, pointer flip lost. The
+      // replay probes its own crashed delta copy (same-id pairs
+      // excluded), recomputes identical survivors, and OVERWRITES its own
+      // delta subdirectory — band-row count stays exactly one append's worth
       val hconf = spark.sparkContext.hadoopConfiguration
       graft.sources.AtomicPointer.write(hconf,
         new org.apache.hadoop.fs.Path(out, "_LATEST.tmp-crash"),
         new org.apache.hadoop.fs.Path(out, "_LATEST"), "0")
-      val replay = Seq((4L, doc(1) + " yy"), (5L, doc(5)), (6L, doc(5)))
-        .toDF("doc_id", "text")
-      assert(StreamOps.nearDedupBatchDelta(replay, 1L, hist, 4, "text", "doc_id", out))
+      assert(StreamOps.nearDedupBatch(replay, 1L, hist, 4, "text", "doc_id", out))
       assert(batchIds(1) === Array(5L)) // identical, not emptied
       assert(deltaIds() === Array(1L, 3L, 5L))
-      val bandRows = spark.read.option("recursiveFileLookup", "true")
-        .parquet(Layout.deltaDirOf(spark, hist))
-        .groupBy($"doc_id").count()
-        .select($"count").distinct().as[Long].collect().toSeq
-      assert(bandRows === Seq(4L), s"replay double-appended: $bandRows")
+      assert(bandRows() === Seq(4L), s"replay double-appended: ${bandRows()}")
       // compaction folds the delta into the mains; the loop continues
       // correctly against the folded history
       Dedup.BandHistory.fold(spark, hist)
       assert(!fs.exists(new org.apache.hadoop.fs.Path(Layout.deltaDirOf(spark, hist))))
       assert(spark.table(hist).select($"doc_id").distinct().count() === 3)
       val next = Seq((7L, doc(5) + " qq"), (8L, doc(8))).toDF("doc_id", "text")
-      assert(StreamOps.nearDedupBatchDelta(next, 2L, hist, 4, "text", "doc_id", out))
+      assert(StreamOps.nearDedupBatch(next, 2L, hist, 4, "text", "doc_id", out))
       assert(batchIds(2) === Array(8L)) // doc 7 caught against the FOLDED main
     } finally Dedup.BandHistory.drop(spark, hist)
+  }
+
+  test("L23 url leg: a body-less row does not shadow its URL twin — NULL-html rows never reach the URL dedup leg") {
+    def doc(n: Int): String = (0 until 40).map(w => s"tok${n}word$w").mkString(" ")
+    val hist = "t_url_nullhtml_hist"
+    val outDir = tmpDir("url_nullhtml_out")
+    dropTextHistory(hist)
+    try {
+      // the lower id has no body: were it in the URL leg, it would win
+      // canonical-URL keep-first and then die at the quality gate,
+      // taking the real page with it
+      val batch = Seq((1L, "https://example.com/a", null: String),
+          (2L, "https://example.com/a", s"<p>${doc(2)}</p>"))
+        .toDF("doc_id", "url", "html")
+      assert(StreamOps.mixedIntakeBatch(batch, 0L, hist, 4, "html", "payload",
+        "doc_id", outDir, urlDedupCol = Some("url")))
+      assert(spark.read.parquet(s"$outDir/batch-0").select($"doc_id")
+        .as[Long].collect().toSeq === Seq(2L))
+    } finally dropTextHistory(hist)
   }
 
   test("L23 optional legs: boilerplate extraction + LM gate inside the intake loop — nav text never reaches the corpus, gibberish dies on the LM") {
@@ -963,7 +937,7 @@ class StreamingSpec extends SparkSpec {
       val good3 = Seq.fill(8)("joins the query fast rows scans table and the table").mkString(" ")
       val batch = Seq((1L, page(good)), (2L, page(gib)), (3L, page(good3)))
         .toDF("doc_id", "html")
-      assert(StreamOps.intakeBatch(batch, 0L, hist, 4, "html", "doc_id", outDir,
+      assert(StreamOps.mixedIntakeBatch(batch, 0L, hist, 4, "html", "payload", "doc_id", outDir,
         minQuality = 0.5, extractBoilerplate = true, lmGate = Some((lm, -3.0))))
       val out = spark.read.parquet(s"$outDir/batch-0")
         .select($"doc_id", $"text").collect()
@@ -1002,7 +976,7 @@ class StreamingSpec extends SparkSpec {
         pairs.toSeq.toDF("doc_id", "__seed"), "__seed", 64, 32, 4)
         .select($"doc_id", $"payload")
       val b0 = img((30L, 30L)).unionByName(aud((31L, 31L))).unionByName(vid((32L, 32L)))
-      assert(StreamOps.multimodalIntakeBatch(b0, 0L, hist, 4, "payload", "doc_id", outDir))
+      assert(StreamOps.mixedIntakeBatch(b0, 0L, hist, 4, "html", "payload", "doc_id", outDir))
       // batch 1: fresh per modality, re-encoded copies of HISTORY items
       // (each must die on ITS modality's history), a within-batch
       // re-encode pair (PPM 63 + PNG 163 — min id survives), and junk
@@ -1011,7 +985,7 @@ class StreamingSpec extends SparkSpec {
         .unionByName(aud((61L, 61L))).unionByName(audMu((131L, 31L)))
         .unionByName(vid((62L, 62L))).unionByName(vidMj((132L, 32L)))
         .unionByName(imgPng((130L, 30L))).unionByName(junk)
-      assert(StreamOps.multimodalIntakeBatch(b1, 1L, hist, 4, "payload", "doc_id", outDir))
+      assert(StreamOps.mixedIntakeBatch(b1, 1L, hist, 4, "html", "payload", "doc_id", outDir))
       def out1: Set[Long] = spark.read.parquet(s"$outDir/batch-1")
         .select($"doc_id").as[Long].collect().toSet
       assert(out1 === Set(60L, 61L, 62L, 63L, 999L),
@@ -1020,10 +994,10 @@ class StreamingSpec extends SparkSpec {
       // against the loop's own appended identities
       val fs = org.apache.hadoop.fs.FileSystem.get(spark.sparkContext.hadoopConfiguration)
       fs.delete(new org.apache.hadoop.fs.Path(s"$outDir/_LATEST"), false)
-      assert(StreamOps.multimodalIntakeBatch(b1, 1L, hist, 4, "payload", "doc_id", outDir))
+      assert(StreamOps.mixedIntakeBatch(b1, 1L, hist, 4, "html", "payload", "doc_id", outDir))
       assert(out1 === Set(60L, 61L, 62L, 63L, 999L), "replay changed the survivor set")
       // full replay: pointer already records batch 1 → no-op
-      assert(!StreamOps.multimodalIntakeBatch(b1, 1L, hist, 4, "payload", "doc_id", outDir))
+      assert(!StreamOps.mixedIntakeBatch(b1, 1L, hist, 4, "html", "payload", "doc_id", outDir))
     } finally Dedup.MultimodalHistory.drop(spark, hist)
   }
 
@@ -1169,7 +1143,7 @@ class StreamingSpec extends SparkSpec {
       val b0 = Seq(
         page(1L, toks(1), footer),
         page(2L, footer, toks(2))).toDF("doc_id", "html")
-      assert(StreamOps.intakeBatch(b0, 0L, hist, 4, "html", "doc_id",
+      assert(StreamOps.mixedIntakeBatch(b0, 0L, hist, 4, "html", "payload", "doc_id",
         outDir, minQuality = 0.1, paragraphDedup = true))
       def texts(b: Long): Map[Long, String] = spark.read.parquet(s"$outDir/batch-$b")
         .select($"doc_id", $"text").collect()
@@ -1185,7 +1159,7 @@ class StreamingSpec extends SparkSpec {
       val b1 = Seq(
         page(10L, toks(10), footer),
         page(11L, footer)).toDF("doc_id", "html")
-      assert(StreamOps.intakeBatch(b1, 1L, hist, 4, "html", "doc_id",
+      assert(StreamOps.mixedIntakeBatch(b1, 1L, hist, 4, "html", "payload", "doc_id",
         outDir, minQuality = 0.1, paragraphDedup = true))
       val t1 = texts(1L)
       assert(t1.keySet === Set(10L), s"history paragraph leg broke: ${t1.keySet}")
@@ -1194,7 +1168,7 @@ class StreamingSpec extends SparkSpec {
       // the batch's own paragraphs — identical survivors
       val fs = org.apache.hadoop.fs.FileSystem.get(spark.sparkContext.hadoopConfiguration)
       fs.delete(new org.apache.hadoop.fs.Path(s"$outDir/_LATEST"), false)
-      assert(StreamOps.intakeBatch(b1, 1L, hist, 4, "html", "doc_id",
+      assert(StreamOps.mixedIntakeBatch(b1, 1L, hist, 4, "html", "payload", "doc_id",
         outDir, minQuality = 0.1, paragraphDedup = true))
       assert(texts(1L) === t1, "replay changed the paragraph survivors")
       // fold via the one-call maintenance (paragraph family included),
@@ -1202,7 +1176,7 @@ class StreamingSpec extends SparkSpec {
       assert(StreamOps.maintainMixedHistories(spark, hist, 1e-9)
         .contains("paragraph"))
       val b2 = Seq(page(20L, footer, toks(20))).toDF("doc_id", "html")
-      assert(StreamOps.intakeBatch(b2, 2L, hist, 4, "html", "doc_id",
+      assert(StreamOps.mixedIntakeBatch(b2, 2L, hist, 4, "html", "payload", "doc_id",
         outDir, minQuality = 0.1, paragraphDedup = true))
       val t2 = texts(2L)
       assert(t2.keySet === Set(20L) && !t2(20L).contains("shared footer"),
@@ -1277,7 +1251,7 @@ class StreamingSpec extends SparkSpec {
         (125L, s"<p>${body(25)}</p>"),  // tail    → dropped
         (130L, "<p>a</p>"))             // unscored → passes
         .toDF("doc_id", "html")
-      assert(StreamOps.intakeBatch(batch, 0L, hist, 4, "html", "doc_id",
+      assert(StreamOps.mixedIntakeBatch(batch, 0L, hist, 4, "html", "payload", "doc_id",
         outDir, minQuality = 0.0,
         lmBuckets = Some((lm, th, Set("head", "middle")))))
       val out = spark.read.parquet(s"$outDir/batch-0")
@@ -1288,7 +1262,7 @@ class StreamingSpec extends SparkSpec {
       val batch2 = Seq(
         (205L, s"<p>${body(6)}</p>"),
         (215L, s"<p>${body(16)}</p>")).toDF("doc_id", "html")
-      assert(StreamOps.intakeBatch(batch2, 1L, hist, 4, "html", "doc_id",
+      assert(StreamOps.mixedIntakeBatch(batch2, 1L, hist, 4, "html", "payload", "doc_id",
         outDir, minQuality = 0.0, lmBuckets = Some((lm, th, Set("head")))))
       val out2 = spark.read.parquet(s"$outDir/batch-1")
         .select($"doc_id").as[Long].collect().toSet
@@ -1296,7 +1270,7 @@ class StreamingSpec extends SparkSpec {
       // composing with the scalar lmGate shares one scoring pass and
       // must demand the same CharLm instance
       val thrown = intercept[IllegalArgumentException] {
-        StreamOps.intakeBatch(batch2, 2L, hist, 4, "html", "doc_id",
+        StreamOps.mixedIntakeBatch(batch2, 2L, hist, 4, "html", "payload", "doc_id",
           outDir, minQuality = 0.0,
           lmGate = Some((NgramLm.trainCharBigram(cleanRef, "text"), -99.0)),
           lmBuckets = Some((lm, th, Set("head"))))
@@ -1332,7 +1306,7 @@ class StreamingSpec extends SparkSpec {
         (4L, page("four tokens only here")),
         (5L, page(s"${toks(5)} $fourGram")))
         .toDF("doc_id", "html")
-      assert(StreamOps.intakeBatch(batch, 0L, hist, 4, "html", "doc_id",
+      assert(StreamOps.mixedIntakeBatch(batch, 0L, hist, 4, "html", "payload", "doc_id",
         outDir, minQuality = 0.1, decontaminate = Some((evalT, 5))))
       val out = spark.read.parquet(s"$outDir/batch-0")
         .select($"doc_id").as[Long].collect().toSet
@@ -1340,9 +1314,9 @@ class StreamingSpec extends SparkSpec {
       // the contaminated doc left nothing behind in the histories: a
       // replay of its exact text under a fresh id (decon OFF) must be
       // treated as NEW, not deduped against ghost rows
-      assert(StreamOps.intakeBatch(
+      assert(StreamOps.mixedIntakeBatch(
         Seq((13L, page(s"${toks(3)} $evalQuote"))).toDF("doc_id", "html"),
-        1L, hist, 4, "html", "doc_id", outDir, minQuality = 0.1))
+        1L, hist, 4, "html", "payload", "doc_id", outDir, minQuality = 0.1))
       val out1 = spark.read.parquet(s"$outDir/batch-1")
         .select($"doc_id").as[Long].collect().toSet
       assert(out1 === Set(13L), "contaminated doc left ghost history rows")
@@ -1492,7 +1466,8 @@ class StreamingSpec extends SparkSpec {
           array_join(transform(sequence(lit(0), lit(39)),
             i => concat(lit("tok"), $"doc_id", lit("w"), i)), " "),
           lit("</p>")).as("html"))
-      StreamOps.intakeBatch(docs(0 until 300), 0L, hist, 4, "html", "doc_id", outDir)
+      StreamOps.mixedIntakeBatch(docs(0 until 300), 0L, hist, 4,
+        "html", "payload", "doc_id", outDir)
       Dedup.IntakeHistory.fold(spark, hist) // steady state: folded main
       val n = new java.util.concurrent.atomic.AtomicInteger(0)
       val listener = new SparkListener {
@@ -1500,12 +1475,13 @@ class StreamingSpec extends SparkSpec {
       }
       spark.sparkContext.addSparkListener(listener)
       try {
-        StreamOps.intakeBatch(docs(300 until 450), 1L, hist, 4, "html", "doc_id", outDir)
+        StreamOps.mixedIntakeBatch(docs(300 until 450), 1L, hist, 4,
+          "html", "payload", "doc_id", outDir)
         // the listener bus is async — give it a moment to drain
         org.apache.spark.graftshim.ListenerBridge.waitUntilEmpty(spark.sparkContext) // deterministic drain (ADVICE r19)
       } finally spark.sparkContext.removeSparkListener(listener)
       assert(n.get() <= 20,
-        s"steady-state intakeBatch launched ${n.get()} jobs (pinned at 20) — " +
+        s"steady-state text-only mixedIntakeBatch launched ${n.get()} jobs (pinned at 20) — " +
           "a new job slipped into the hot path; re-run graft.tools.JobCountProbe " +
           "to attribute it and either fuse it or re-justify the budget")
     } finally dropTextHistory(hist)
@@ -1523,7 +1499,7 @@ class StreamingSpec extends SparkSpec {
           array_join(transform(sequence(lit(0), lit(39)),
             i => concat(lit("tok"), $"doc_id", lit("w"), i)), " "),
           lit("</p><p>shared footer paragraph on every page</p>")).as("html"))
-      StreamOps.intakeBatch(docs(0 until 300), 0L, hist, 4, "html", "doc_id",
+      StreamOps.mixedIntakeBatch(docs(0 until 300), 0L, hist, 4, "html", "payload", "doc_id",
         outDir, paragraphDedup = true)
       Dedup.IntakeHistory.fold(spark, hist)
       Dedup.ParagraphHistory.fold(spark, hist) // steady state: folded mains
@@ -1533,7 +1509,7 @@ class StreamingSpec extends SparkSpec {
       }
       spark.sparkContext.addSparkListener(listener)
       try {
-        StreamOps.intakeBatch(docs(300 until 450), 1L, hist, 4, "html", "doc_id",
+        StreamOps.mixedIntakeBatch(docs(300 until 450), 1L, hist, 4, "html", "payload", "doc_id",
           outDir, paragraphDedup = true)
         org.apache.spark.graftshim.ListenerBridge.waitUntilEmpty(spark.sparkContext) // deterministic drain (ADVICE r19)
       } finally spark.sparkContext.removeSparkListener(listener)
@@ -1545,7 +1521,7 @@ class StreamingSpec extends SparkSpec {
       // reassembly join — each a distinct bounded exchange). Pinned so
       // growth is loud, like the parent.
       assert(n.get() <= 34,
-        s"paragraph-enabled intakeBatch launched ${n.get()} jobs (pinned at 34)")
+        s"paragraph-enabled text-only mixedIntakeBatch launched ${n.get()} jobs (pinned at 34)")
     } finally dropTextHistory(hist)
   }
 
@@ -1574,8 +1550,8 @@ class StreamingSpec extends SparkSpec {
           .unionByName(Multimodal.syntheticY4mBlocks(f.where($"doc_id" % 3 === 2), "__seed", 64, 32, 4))
           .select($"doc_id", $"payload")
       }
-      StreamOps.multimodalIntakeBatch(mixed(0 until 90), 0L, hist, 4,
-        "payload", "doc_id", outDir)
+      StreamOps.mixedIntakeBatch(mixed(0 until 90), 0L, hist, 4,
+        "html", "payload", "doc_id", outDir)
       Dedup.MultimodalHistory.fold(spark, hist) // steady state: folded mains
       val n = new java.util.concurrent.atomic.AtomicInteger(0)
       val listener = new SparkListener {
@@ -1583,12 +1559,12 @@ class StreamingSpec extends SparkSpec {
       }
       spark.sparkContext.addSparkListener(listener)
       try {
-        StreamOps.multimodalIntakeBatch(mixed(90 until 135), 1L, hist, 4,
-          "payload", "doc_id", outDir)
+        StreamOps.mixedIntakeBatch(mixed(90 until 135), 1L, hist, 4,
+          "html", "payload", "doc_id", outDir)
         org.apache.spark.graftshim.ListenerBridge.waitUntilEmpty(spark.sparkContext) // deterministic drain (ADVICE r19)
       } finally spark.sparkContext.removeSparkListener(listener)
       assert(n.get() <= 50,
-        s"steady-state multimodalIntakeBatch launched ${n.get()} jobs (pinned at 50) — " +
+        s"steady-state binary-only mixedIntakeBatch launched ${n.get()} jobs (pinned at 50) — " +
           "re-run 'Test/runMain graft.tools.JobCountProbe multimodal' to attribute")
     } finally Dedup.MultimodalHistory.drop(spark, hist)
   }
@@ -1845,7 +1821,7 @@ class StreamingSpec extends SparkSpec {
         (4L, "<p>too short</p>"),
         (5L, "<p>" + "click here " * 40 + "</p>")) // top-2-gram dominance
         .toDF("doc_id", "html")
-      assert(StreamOps.intakeBatch(batch, 0L, hist, 4, "html", "doc_id",
+      assert(StreamOps.mixedIntakeBatch(batch, 0L, hist, 4, "html", "payload", "doc_id",
         outDir, minQuality = 0.0,
         gates = StreamOps.TextGates(gopherRules = Some(GopherRules.Config()))))
       val out = spark.read.parquet(s"$outDir/batch-0")
@@ -1885,7 +1861,7 @@ class StreamingSpec extends SparkSpec {
           "the filter flags porn content in this line today.": _*)),
         (7L, html(good3.take(2): _*)))               // 2 sentences → dies
         .toDF("doc_id", "html")
-      assert(StreamOps.intakeBatch(batch, 0L, hist, 4, "html", "doc_id",
+      assert(StreamOps.mixedIntakeBatch(batch, 0L, hist, 4, "html", "payload", "doc_id",
         outDir, minQuality = 0.0,
         gates = StreamOps.TextGates(c4 = Some(C4Rules.Config()))))
       val out = spark.read.parquet(s"$outDir/batch-0")
@@ -1900,7 +1876,7 @@ class StreamingSpec extends SparkSpec {
       // dies as an exact duplicate against the history
       val replay = Seq((30L, html(good3b: _*)))
         .toDF("doc_id", "html")
-      assert(StreamOps.intakeBatch(replay, 1L, hist, 4, "html", "doc_id",
+      assert(StreamOps.mixedIntakeBatch(replay, 1L, hist, 4, "html", "payload", "doc_id",
         outDir, minQuality = 0.0,
         gates = StreamOps.TextGates(c4 = Some(C4Rules.Config()))))
       val out1 = spark.read.parquet(s"$outDir/batch-1")
@@ -1948,7 +1924,7 @@ class StreamingSpec extends SparkSpec {
         .where($"url".isNotNull) // quarantine rows carry no page
         .select(xxhash64($"url").as("doc_id"), $"url",
           $"page_text".as("html"))
-      assert(StreamOps.intakeBatch(pages, 0L, hist, 4, "html", "doc_id",
+      assert(StreamOps.mixedIntakeBatch(pages, 0L, hist, 4, "html", "payload", "doc_id",
         outDir, minQuality = 0.0, urlDedupCol = Some("url"),
         gates = StreamOps.TextGates(c4 = Some(C4Rules.Config()))))
       val out = spark.read.parquet(s"$outDir/batch-0")
@@ -2259,7 +2235,7 @@ class StreamingSpec extends SparkSpec {
         langIdKeep = Some((langModel, Set("en"))),
         langIdMinScoreMicro = 900000L,
         gopherRules = Some(GopherRules.Config()))
-      assert(StreamOps.intakeBatch(batch, 0L, hist, 4, "html", "doc_id",
+      assert(StreamOps.mixedIntakeBatch(batch, 0L, hist, 4, "html", "payload", "doc_id",
         outDir, minQuality = 0.0, gates = gates))
       val out = spark.read.parquet(s"$outDir/batch-0")
       val ids = out.select($"doc_id").as[Long].collect().toSet
@@ -2305,7 +2281,7 @@ class StreamingSpec extends SparkSpec {
         // NULL url passes (no evidence)
         (3L, "<p>eta theta iota three</p>", null.asInstanceOf[String]))
         .toDF("doc_id", "html", "url")
-      assert(StreamOps.intakeBatch(batch, 0L, hist, 4, "html", "doc_id",
+      assert(StreamOps.mixedIntakeBatch(batch, 0L, hist, 4, "html", "payload", "doc_id",
         outDir, minQuality = 0.0, urlDedupCol = Some("url"), gates = gates))
       val out = spark.read.parquet(s"$outDir/batch-0")
         .select($"doc_id").as[Long].collect().toSet
@@ -2316,14 +2292,14 @@ class StreamingSpec extends SparkSpec {
       val batch2 = Seq(
         (10L, "<p>delta epsilon zeta two</p>", "http://good.example.com/b"))
         .toDF("doc_id", "html", "url")
-      assert(StreamOps.intakeBatch(batch2, 1L, hist, 4, "html", "doc_id",
+      assert(StreamOps.mixedIntakeBatch(batch2, 1L, hist, 4, "html", "payload", "doc_id",
         outDir, minQuality = 0.0, urlDedupCol = Some("url"), gates = gates))
       val out2 = spark.read.parquet(s"$outDir/batch-1")
         .select($"doc_id").as[Long].collect().toSet
       assert(out2 === Set(10L), s"blocked row left a ghost history row: $out2")
       // the blocklist without the url leg is a loud contract error
       val thrown = intercept[IllegalArgumentException] {
-        StreamOps.intakeBatch(batch, 2L, hist, 4, "html", "doc_id",
+        StreamOps.mixedIntakeBatch(batch, 2L, hist, 4, "html", "payload", "doc_id",
           outDir, minQuality = 0.0, gates = gates)
       }
       assert(thrown.getMessage.contains("urlDedupCol"))
@@ -2352,7 +2328,7 @@ class StreamingSpec extends SparkSpec {
         (20L until 23L).map(i => (i, toks(200 + i)))
       val batch = rows.map { case (id, t) => (id, s"<p>$t</p>") }
         .toDF("doc_id", "html")
-      assert(StreamOps.intakeBatch(batch, 0L, hist, 4, "html", "doc_id",
+      assert(StreamOps.mixedIntakeBatch(batch, 0L, hist, 4, "html", "payload", "doc_id",
         outDir, minQuality = 0.0,
         gates = StreamOps.TextGates(qualityPareto = Some((clf, alpha)))))
       val out = spark.read.parquet(s"$outDir/batch-0")
@@ -2397,7 +2373,7 @@ class StreamingSpec extends SparkSpec {
         (102L, s"<p>${toks(42)}</p>"),      // en → kept
         (103L, s"<p>${xx(toks(43))}</p>"))  // xx → dropped
         .toDF("doc_id", "html")
-      assert(StreamOps.intakeBatch(batch, 0L, hist, 4, "html", "doc_id",
+      assert(StreamOps.mixedIntakeBatch(batch, 0L, hist, 4, "html", "payload", "doc_id",
         outDir, minQuality = 0.0,
         gates = StreamOps.TextGates(langIdKeep = Some((model, Set("en"))))))
       val out = spark.read.parquet(s"$outDir/batch-0")
@@ -2429,7 +2405,7 @@ class StreamingSpec extends SparkSpec {
         s"plant not low-confidence: ${scores(201L)}")
       assert(math.max(scores(200L)._1, scores(200L)._2) >= 900000L,
         s"control not high-confidence: ${scores(200L)}")
-      assert(StreamOps.intakeBatch(batch2, 1L, hist, 4, "html", "doc_id",
+      assert(StreamOps.mixedIntakeBatch(batch2, 1L, hist, 4, "html", "payload", "doc_id",
         outDir, minQuality = 0.0,
         gates = StreamOps.TextGates(
           langIdKeep = Some((model, Set("en", "xx"))),
@@ -2464,7 +2440,7 @@ class StreamingSpec extends SparkSpec {
         (10L until 16L).map(i => (i, gib(slice(i.toInt - 10))))
       val batch = rows.map { case (id, t) => (id, s"<p>$t</p>") }
         .toDF("doc_id", "html")
-      assert(StreamOps.intakeBatch(batch, 0L, hist, 4, "html", "doc_id",
+      assert(StreamOps.mixedIntakeBatch(batch, 0L, hist, 4, "html", "payload", "doc_id",
         outDir, minQuality = 0.0,
         gates = StreamOps.TextGates(dsir = Some((m, 0L)))))
       val out = spark.read.parquet(s"$outDir/batch-0")
@@ -2498,7 +2474,7 @@ class StreamingSpec extends SparkSpec {
         (2L, s"<p>${words(2)} reach me at bob@mail.example.org</p>"), // masked
         (3L, s"<p>${words(3)} a@x.io b@y.io c@z.io host 10.0.0.7</p>")) // dense → drops
         .toDF("doc_id", "html")
-      assert(StreamOps.intakeBatch(batch, 0L, hist, 4, "html", "doc_id",
+      assert(StreamOps.mixedIntakeBatch(batch, 0L, hist, 4, "html", "payload", "doc_id",
         outDir, minQuality = 0.0,
         gates = StreamOps.TextGates(pii = Some(2))))
       val out = spark.read.parquet(s"$outDir/batch-0")
@@ -2514,7 +2490,7 @@ class StreamingSpec extends SparkSpec {
       val batch2 = Seq(
         (10L, s"<p>${words(2)} reach me at alice@other.example.com</p>"))
         .toDF("doc_id", "html")
-      assert(StreamOps.intakeBatch(batch2, 1L, hist, 4, "html", "doc_id",
+      assert(StreamOps.mixedIntakeBatch(batch2, 1L, hist, 4, "html", "payload", "doc_id",
         outDir, minQuality = 0.0,
         gates = StreamOps.TextGates(pii = Some(2))))
       val out2 = spark.read.parquet(s"$outDir/batch-1")
@@ -2605,7 +2581,7 @@ class StreamingSpec extends SparkSpec {
         langIdKeep = Some((langModel, Set("en"))),
         dsir = Some((dsirModel, 0L)),
         pii = Some(2))
-      assert(StreamOps.intakeBatch(batch, 0L, hist, 4, "html", "doc_id",
+      assert(StreamOps.mixedIntakeBatch(batch, 0L, hist, 4, "html", "payload", "doc_id",
         outDir, minQuality = 0.0, urlDedupCol = Some("url"),
         // 500000, not 300000: the 6-pos/1-neg training pushes the
         // trained-negative plant only to p ~ 0.35 (GateProbe-read)

@@ -5,11 +5,12 @@ import graft.streaming.StreamOps
 import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
 import org.apache.spark.sql.functions._
 
-/** Diagnostic: Spark jobs launched by ONE steady-state intakeBatch —
+/** Diagnostic: Spark jobs launched by ONE steady-state text-only
+  * [[StreamOps.mixedIntakeBatch]] (a batch with no payload column) —
   * the driver-overhead number ask #6 is about (jobs × micro-batches ×
   * streams multiplies at production cadence).
   *
-  * `main("multimodal")` probes [[StreamOps.multimodalIntakeBatch]]
+  * `main("multimodal")` probes a binary-only batch (no html column)
   * instead, and additionally reports the bytes held by cached
   * (localCheckpoint) blocks right after the measured batch — the
   * resident-blob-bytes number behind the r12 ask #5 barrier slimming. */
@@ -32,7 +33,8 @@ object JobCountProbe {
           i => concat(lit("tok"), $"doc_id", lit("w"), i)), " "),
         lit("</p>")).as("html"))
     // seed + fold so the measured batch is steady-state
-    StreamOps.intakeBatch(docs(0 until 3000), 0L, table, 8, "html", "doc_id", outDir)
+    StreamOps.mixedIntakeBatch(docs(0 until 3000), 0L, table, 8,
+      "html", "payload", "doc_id", outDir)
     Dedup.IntakeHistory.fold(spark, table)
     val names = scala.collection.mutable.ArrayBuffer.empty[String]
     val listener = new SparkListener {
@@ -41,10 +43,11 @@ object JobCountProbe {
       }
     }
     spark.sparkContext.addSparkListener(listener)
-    StreamOps.intakeBatch(docs(3000 until 4500), 1L, table, 8, "html", "doc_id", outDir)
+    StreamOps.mixedIntakeBatch(docs(3000 until 4500), 1L, table, 8,
+      "html", "payload", "doc_id", outDir)
     org.apache.spark.graftshim.ListenerBridge.waitUntilEmpty(spark.sparkContext) // deterministic drain (ADVICE r19)
     spark.sparkContext.removeSparkListener(listener)
-    println(s"[jobcount] intakeBatch steady-state jobs = ${names.size}")
+    println(s"[jobcount] text-only mixedIntakeBatch steady-state jobs = ${names.size}")
     names.foreach(n => println(s"[jobcount]   $n"))
     spark.stop()
   }
@@ -129,8 +132,8 @@ object JobCountProbe {
         .select($"doc_id", $"payload")
     }
     // seed + fold every history so the measured batch is steady-state
-    StreamOps.multimodalIntakeBatch(mixed(0 until 900), 0L, table, 8,
-      "payload", "doc_id", outDir)
+    StreamOps.mixedIntakeBatch(mixed(0 until 900), 0L, table, 8,
+      "html", "payload", "doc_id", outDir)
     graft.operators.Dedup.MultimodalHistory.fold(spark, table)
     val names = scala.collection.mutable.ArrayBuffer.empty[String]
     val listener = new SparkListener {
@@ -139,15 +142,15 @@ object JobCountProbe {
       }
     }
     spark.sparkContext.addSparkListener(listener)
-    StreamOps.multimodalIntakeBatch(mixed(900 until 1350), 1L, table, 8,
-      "payload", "doc_id", outDir)
+    StreamOps.mixedIntakeBatch(mixed(900 until 1350), 1L, table, 8,
+      "html", "payload", "doc_id", outDir)
     // resident checkpoint bytes BEFORE the frames go out of scope —
     // the number the one-payload-checkpoint design bounds
     val cached = spark.sparkContext.getRDDStorageInfo
     val bytes = cached.map(i => i.memSize + i.diskSize).sum
     org.apache.spark.graftshim.ListenerBridge.waitUntilEmpty(spark.sparkContext) // deterministic drain (ADVICE r19)
     spark.sparkContext.removeSparkListener(listener)
-    println(s"[jobcount] multimodalIntakeBatch steady-state jobs = ${names.size}")
+    println(s"[jobcount] binary-only mixedIntakeBatch steady-state jobs = ${names.size}")
     println(f"[jobcount] resident checkpoint blocks = ${cached.length}, bytes = $bytes%,d")
     cached.sortBy(-_.memSize).take(12).foreach(i =>
       println(f"[jobcount]   rdd ${i.id}: ${i.memSize + i.diskSize}%,d B  ${i.name}"))
