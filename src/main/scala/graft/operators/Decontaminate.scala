@@ -112,8 +112,8 @@ object Decontaminate {
     embCol.foreach { e =>
       val vecs = evalRows.where(col(e).isNotNull).select(col(idCol), col(e))
       // an eval set without vectors simply skips the `_ei` table (the
-      // probe skips it symmetrically) — never train a zero-vector
-      // quantizer (the writeEmptyIvfIndex degenerate-freeze rationale)
+      // probe skips it symmetrically) — writeIvfIndex refuses to train
+      // a quantizer on zero vectors
       if (!vecs.isEmpty)
         Similarity.writeIvfIndex(spark, vecs, s"${table}_ei", nLists,
           numBuckets = numBuckets, cId = idCol, cVec = e)

@@ -350,7 +350,7 @@ object Dedup {
       tables.foreach { h =>
         val t = table + h.suffix
         if (!spark.catalog.tableExists(t)) {
-          clear(spark, t)
+          Layout.dropWithDelta(spark, t)
           Layout.writeBucketed(h.empty(spark, idField), t, h.keys(idField.name),
             numBuckets)
         }
@@ -363,7 +363,7 @@ object Dedup {
       * CREATE path and refuses with LOCATION_ALREADY_EXISTS over the
       * surviving directory. Rebuilds from scratch drop first. */
     def drop(spark: SparkSession, table: String): Unit =
-      tables.foreach(h => clear(spark, table + h.suffix))
+      tables.foreach(h => Layout.dropWithDelta(spark, table + h.suffix))
 
     /** Fold every table's delta into its bucketed main, in fold order.
       * The order is each family's crash-window contract: a band table
@@ -375,69 +375,15 @@ object Dedup {
       tables.foreach(h => Layout.foldDeltaIntoBucketed(spark, table + h.suffix,
         noSpecHint = "not a dedup history table"))
 
-    /** AUTO-fold policy — the measured trigger [[Similarity.ivfAging]]
-      * established: fold when the accumulated delta bytes (summed over
-      * the family's tables) reach `maxDeltaRatio` of the bucketed
-      * mains. Delta bytes are what the probes' delta legs pay per
-      * micro-batch, so the trigger bounds steady-state probe cost at
-      * ≤ (1 + ratio)× the folded cost while amortizing fold work
-      * against real growth — an empty or tiny main folds immediately
-      * (cheap), a 100 TB main only once the deltas have earned it. The
-      * measurement is filesystem metadata ([[Layout.deltaMainBytes]]),
-      * no jobs — safe to call on every micro-batch.
-      *
-      * A family with any table MISSING never folds: a delta directory
-      * without its table is stale state (a new session over an old
-      * warehouse, or a drop that crashed between the table and its
-      * delta), the main's zero bytes would make any delta look due, and
-      * the fold would read catalog metadata that does not exist. The
-      * family's next `ensure` clears that state. Crash states are the
-      * fold protocol's own; the policy only decides WHEN to enter it.
+    /** [[fold]] when the family's summed delta bytes reach
+      * `maxDeltaRatio` of its mains — [[Layout.foldIfDue]]'s byte-ratio
+      * trigger (no jobs; a family with any table missing never folds).
       * Returns true when a fold ran. */
     def foldIfNeeded(spark: SparkSession, table: String,
-        maxDeltaRatio: Double = 0.10): Boolean = {
-      require(maxDeltaRatio > 0, "maxDeltaRatio must be positive")
-      val ts = tables.map(table + _.suffix)
-      if (!ts.forall(spark.catalog.tableExists)) return false
-      val (d, m) = ts.map(Layout.deltaMainBytes(spark, _))
-        .reduce((a, b) => (a._1 + b._1, a._2 + b._2))
-      val due = d > 0 && d >= maxDeltaRatio * m
-      if (due) fold(spark, table)
-      due
-    }
+        maxDeltaRatio: Double = 0.10): Boolean =
+      Layout.foldIfDue(spark, tables.map(table + _.suffix), maxDeltaRatio)(
+        fold(spark, table))
   }
-
-  /** Drop `t` and its location, then its delta state (resolved while
-    * the catalog entry still exists). */
-  private def clear(spark: SparkSession, t: String): Unit = {
-    val delta = Layout.deltaDirOf(spark, t)
-    Layout.dropTableAndLocation(spark, t)
-    Layout.deleteDeltaState(spark, delta)
-  }
-
-  /** Land one batch's rows in `batch-<id>/` of `t`'s delta directory —
-    * overwrite-own-dir, so a replay rewrites exactly its own files —
-    * unless the fold manifest records the batch as already folded
-    * ([[Layout.foldManifestDirOf]]: re-appending it would let the next
-    * fold duplicate its rows in the main table). Batch ids must be
-    * monotonic over the table lifetime. */
-  private def appendDelta(spark: SparkSession, t: String, batchId: Long)(
-      rows: => DataFrame): Unit =
-    if (!Layout.isBatchFolded(spark, t, batchId))
-      rows.write.mode("overwrite")
-        .parquet(s"${Layout.deltaDirOf(spark, t)}/batch-$batchId")
-
-  /** `t`'s delta rows, when its delta directory exists. */
-  private def deltaOf(spark: SparkSession, t: String): Option[DataFrame] = {
-    val p = new org.apache.hadoop.fs.Path(Layout.deltaDirOf(spark, t))
-    if (p.getFileSystem(spark.sparkContext.hadoopConfiguration).exists(p))
-      Some(Layout.readDelta(spark, t, p.toString))
-    else None
-  }
-
-  /** `t`'s bucketed main ∪ its delta. */
-  private def withDelta(spark: SparkSession, t: String): DataFrame =
-    deltaOf(spark, t).fold(spark.table(t))(spark.table(t).unionByName(_))
 
   /** Empty source frames the history schemas derive from: (id, text)
     * for the text families, the [[Multimodal.multimodalIdentities]]
@@ -529,6 +475,11 @@ object Dedup {
   def writeBandHistory(df: DataFrame, textCol: String, idCol: String,
       table: String, numBuckets: Int, shingleN: Int = 3, numHashes: Int = 16,
       bands: Int = 4): Unit = {
+    val spark = df.sparkSession
+    // a rebuild starts a new generation: the old deltas (and their fold
+    // manifests) must not leak into its probes or skip its batch ids
+    Seq(table, s"${table}_sh").foreach(t =>
+      Layout.deleteDeltaState(spark, Layout.deltaDirOf(spark, t)))
     val banded = bandedSignatures(df, textCol, idCol, shingleN, numHashes, bands)
     Layout.writeBucketed(banded, table, Seq("__band", "__bandsig"), numBuckets)
     Layout.writeBucketed(shingleFrame(df, textCol, idCol, shingleN),
@@ -567,19 +518,18 @@ object Dedup {
       df: DataFrame, textCol: String, idCol: String, table: String,
       batchId: Long, shingleN: Int = 3, numHashes: Int = 16,
       bands: Int = 4): Unit = {
-    if (Layout.isBatchFolded(spark, table, batchId)) return
-    // one tokenize+shingle pass for BOTH delta writes (the
-    // minhashCandidates r20 rationale): the _sh write materializes the
-    // lazy checkpoint, the band write derives from its blocks —
-    // batch-sized, and the two writes stay independent in the same
-    // order (the fold-manifest crash-window contract is unchanged)
-    val shingled = shingleFrame(df, textCol, idCol, shingleN)
-      .localCheckpoint(false)
-    shingled.write.mode("overwrite")
-      .parquet(s"${Layout.deltaDirOf(spark, s"${table}_sh")}/batch-$batchId")
-    bandedOfShingles(shingled, idCol, numHashes, bands)
-      .write.mode("overwrite")
-      .parquet(s"${Layout.deltaDirOf(spark, table)}/batch-$batchId")
+    // the band table's gate decides for both writes; the `_sh` write
+    // runs inside it, BEFORE the band rows it returns land (its own
+    // gate always passes here: `_sh` folds after the band table). One
+    // tokenize+shingle pass feeds both (the minhashCandidates r20
+    // rationale): the _sh write materializes the lazy checkpoint, the
+    // band write derives from its blocks — batch-sized
+    Layout.appendDelta(spark, table, batchId) {
+      val shingled = shingleFrame(df, textCol, idCol, shingleN)
+        .localCheckpoint(false)
+      Layout.appendDelta(spark, s"${table}_sh", batchId)(shingled)
+      bandedOfShingles(shingled, idCol, numHashes, bands)
+    }
   }
 
   /** Compact a band history down to `survivors` (a frame carrying
@@ -651,7 +601,7 @@ object Dedup {
   def appendHashHistoryDelta(spark: SparkSession,
       df: DataFrame, textCol: String, idCol: String, table: String,
       batchId: Long): Unit =
-    appendDelta(spark, s"${table}_xh", batchId)(hashFrame(df, textCol, idCol))
+    Layout.appendDelta(spark, s"${table}_xh", batchId)(hashFrame(df, textCol, idCol))
 
   /** L1 incremental against a persisted hash history (main ∪ delta) —
     * the exact-dedup stage of the streaming intake loop: batch rows
@@ -670,7 +620,7 @@ object Dedup {
   def exactIncrementalDelta(spark: SparkSession,
       newDf: DataFrame, table: String, textCol: String, idCol: String): DataFrame = {
     val h = hashName(newDf)
-    val hist = withDelta(spark, s"${table}_xh")
+    val hist = Layout.withDelta(spark, s"${table}_xh")
     val batchKeys = newDf.where(col(textCol).isNotNull)
       .select(sha2(col(textCol), 256).alias(h))
     // hits is bounded by the batch's key set whenever the history is
@@ -722,8 +672,8 @@ object Dedup {
     // two folds sees band rows already in the main table whose shingles
     // still live only in the surviving _sh delta — verification must be
     // able to find them there
-    val bandDelta = deltaOf(spark, historyTable)
-    val shDelta = deltaOf(spark, s"${historyTable}_sh")
+    val bandDelta = Layout.deltaOf(spark, historyTable)
+    val shDelta = Layout.deltaOf(spark, s"${historyTable}_sh")
     // both band legs share the batch-side signature pipeline — when a
     // delta leg exists, materialize it once (tiny: one batch) or each
     // leg would recompute the shingle + hash pass. The shingle frame
@@ -947,7 +897,7 @@ object Dedup {
     * audio, video), so every crash prefix leaves every probe correct. */
   def appendImageHistoryDelta(spark: SparkSession, ident: DataFrame,
       idCol: String, table: String, batchId: Long): Unit =
-    appendDelta(spark, s"${table}_ph", batchId)(imageRows(ident, idCol))
+    Layout.appendDelta(spark, s"${table}_ph", batchId)(imageRows(ident, idCol))
 
   /** Incremental image dedup against a persisted perceptual-hash
     * history (main ∪ delta) — [[exactIncrementalDelta]] for images:
@@ -967,7 +917,7 @@ object Dedup {
     val bph = graft.Cols.fresh(ident.columns :+ "__pid", "__bph")
     val b = ident.withColumnRenamed("__ph", bph)
     val batchKeys = b.where(col(bph).isNotNull).select(col(bph))
-    val hits = withDelta(spark, s"${table}_ph")
+    val hits = Layout.withDelta(spark, s"${table}_ph")
       .join(broadcast(batchKeys), col("__ph") === col(bph), "left_semi")
     b.join(broadcast(hits),
         col("__ph") === col(bph) && col("__pid") =!= col(idCol), "left_anti")
@@ -1112,7 +1062,8 @@ object Dedup {
     * [[appendImageHistoryDelta]] contract. */
   def appendAudioHistoryDelta(spark: SparkSession, ident: DataFrame,
       idCol: String, table: String, batchId: Long): Unit =
-    appendDelta(spark, s"${table}_ab", batchId)(audioBandFrame(audioSigs(ident, idCol)))
+    Layout.appendDelta(spark, s"${table}_ab", batchId)(
+      audioBandFrame(audioSigs(ident, idCol)))
 
   /** Incremental audio dedup against a persisted band history
     * (main ∪ delta): batch rows whose fingerprint lies within
@@ -1128,7 +1079,7 @@ object Dedup {
   def audioIncrementalDelta(spark: SparkSession, ident: DataFrame,
       table: String, idCol: String, maxBucket: Int = 1024): DataFrame = {
     val t = s"${table}_ab"
-    val delta = deltaOf(spark, t)
+    val delta = Layout.deltaOf(spark, t)
     // batch side carries the FLIP-BALL probes (13 rows per band per
     // item — still batch-sized and broadcastable); the history keeps
     // one exact row per band, so the persisted layout never grows
@@ -1273,9 +1224,9 @@ object Dedup {
     * both dirs identically. */
   def appendVideoHistoryDelta(spark: SparkSession, ident: DataFrame,
       idCol: String, table: String, batchId: Long): Unit = {
-    appendDelta(spark, s"${table}_vb", batchId)(
+    Layout.appendDelta(spark, s"${table}_vb", batchId)(
       videoBandFrame(videoFrameRows(ident, idCol)))
-    appendDelta(spark, s"${table}_vn", batchId)(videoCountRows(ident, idCol))
+    Layout.appendDelta(spark, s"${table}_vn", batchId)(videoCountRows(ident, idCol))
   }
 
   /** Incremental video dedup against a persisted history (main ∪
@@ -1311,11 +1262,11 @@ object Dedup {
         .where(hamming(col("__fh"), col("__bfh"), bits = 64) <= VideoMaxDist)
         .select(col("__bid"), col("__pid"), col("__fidx"))
     val mainMatches = frameMatches(spark.table(tb))
-    val matches = deltaOf(spark, tb)
+    val matches = Layout.deltaOf(spark, tb)
       .fold(mainMatches)(d => mainMatches.unionByName(frameMatches(d)))
     val hits = matches.distinct()
       .groupBy(col("__bid"), col("__pid")).agg(count(lit(1)).as("__m"))
-      .join(withDelta(spark, s"${table}_vn").select(col("__pid"), col("__nf")),
+      .join(Layout.withDelta(spark, s"${table}_vn").select(col("__pid"), col("__nf")),
         Seq("__pid"))
       .join(broadcast(batchCounts), Seq("__bid"))
       .where(col("__m") >= lit(VideoMinMatchFrac) * least(col("__nf"), col("__bnf")))
@@ -1580,7 +1531,7 @@ object Dedup {
   def appendParagraphHistoryDelta(spark: SparkSession,
       df: DataFrame, textCol: String, idCol: String, table: String,
       batchId: Long, assumeCanonical: Boolean = false): Unit =
-    appendDelta(spark, s"${table}_pg", batchId)(
+    Layout.appendDelta(spark, s"${table}_pg", batchId)(
       if (assumeCanonical) paragraphFrame(df, textCol, idCol)
       else canonicalParagraphFrame(df, textCol, idCol))
 
@@ -1606,7 +1557,7 @@ object Dedup {
   def paragraphIncrementalDelta(spark: SparkSession,
       newDf: DataFrame, table: String, textCol: String, idCol: String,
       minChars: Int = 1): DataFrame = {
-    val hist = withDelta(spark, s"${table}_pg")
+    val hist = Layout.withDelta(spark, s"${table}_pg")
     val withH = explodeParas(newDf, textCol, idCol)
       .withColumn("__bh", paraHash(col("__para"), minChars))
     val batchKeys = withH.where(col("__bh").isNotNull).select(col("__bh"))

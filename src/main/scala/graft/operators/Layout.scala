@@ -120,11 +120,40 @@ object Layout {
     (bytes(deltaP), bytes(mainP))
   }
 
+  /** AUTO-fold policy — the measured trigger [[Similarity.ivfAging]]
+    * established: `fold` runs when the accumulated delta bytes (summed
+    * over `tables`) reach `maxDeltaRatio` of their bucketed mains.
+    * Delta bytes are what the probes' delta legs pay per micro-batch,
+    * so the trigger bounds steady-state probe cost at ≤ (1 + ratio)×
+    * the folded cost while amortizing fold work against real growth —
+    * an empty or tiny main folds immediately (cheap), a 100 TB main
+    * only once the deltas have earned it. The measurement is
+    * filesystem metadata ([[deltaMainBytes]]), no jobs — safe to call
+    * on every micro-batch.
+    *
+    * With any table MISSING nothing folds: a delta directory without
+    * its table is stale state (a new session over an old warehouse, or
+    * a drop that crashed between the table and its delta), the main's
+    * zero bytes would make any delta look due, and the fold would read
+    * catalog metadata that does not exist. The next ensure/build clears
+    * that state. Crash states are the fold protocol's own; the policy
+    * only decides WHEN to enter it. Returns true when `fold` ran. */
+  private[graft] def foldIfDue(spark: SparkSession, tables: Seq[String],
+      maxDeltaRatio: Double)(fold: => Unit): Boolean = {
+    require(maxDeltaRatio > 0, "maxDeltaRatio must be positive")
+    if (!tables.forall(spark.catalog.tableExists)) return false
+    val (d, m) = tables.map(deltaMainBytes(spark, _))
+      .reduce((a, b) => (a._1 + b._1, a._2 + b._2))
+    val due = d > 0 && d >= maxDeltaRatio * m
+    if (due) fold
+    due
+  }
+
   /** The fold manifest of a delta table: one empty `batch-<id>` marker
     * file per delta batch already folded into the bucketed main table.
     * [[foldDeltaIntoBucketed]] writes the markers BEFORE its commit
     * rename, and the streaming appends ([[Dedup.appendBandHistoryDelta]],
-    * [[Similarity.appendToIvfDelta]]) skip marked batches — closing the
+    * [[appendDelta]]) skip marked batches — closing the
     * one at-least-once hole the commit-record protocol alone leaves: a
     * batch whose delta append landed but whose STREAM checkpoint commit
     * was lost, then folded before the stream replays it, would be
@@ -170,6 +199,14 @@ object Layout {
     fs.delete(new Path(deltaDir + "__manifest"), true)
   }
 
+  /** Drop `t` and its location, then its delta state (resolved while
+    * the catalog entry still exists). */
+  private[graft] def dropWithDelta(spark: SparkSession, t: String): Unit = {
+    val delta = deltaDirOf(spark, t)
+    dropTableAndLocation(spark, t)
+    deleteDeltaState(spark, delta)
+  }
+
   /** Read a table's delta directory. Batches live in `batch-<id>/`
     * subdirectories (so a replayed micro-batch overwrites exactly its
     * own files), and Spark's parquet source does NOT list non-partition
@@ -182,6 +219,30 @@ object Layout {
     spark.read.schema(spark.table(table).schema)
       .option("recursiveFileLookup", "true")
       .parquet(deltaPath)
+
+  /** Land one batch's rows in `batch-<id>/` of `t`'s delta directory —
+    * overwrite-own-dir, so a replay rewrites exactly its own files —
+    * unless the fold manifest records the batch as already folded
+    * ([[foldManifestDirOf]]: re-appending it would let the next fold
+    * duplicate its rows in the main table). `rows` is evaluated only
+    * when the batch lands. Batch ids must be monotonic over the table
+    * lifetime. */
+  private[graft] def appendDelta(spark: SparkSession, t: String, batchId: Long)(
+      rows: => DataFrame): Unit =
+    if (!isBatchFolded(spark, t, batchId))
+      rows.write.mode("overwrite").parquet(s"${deltaDirOf(spark, t)}/batch-$batchId")
+
+  /** `t`'s delta rows, when its delta directory exists. */
+  private[graft] def deltaOf(spark: SparkSession, t: String): Option[DataFrame] = {
+    val p = new org.apache.hadoop.fs.Path(deltaDirOf(spark, t))
+    if (p.getFileSystem(spark.sparkContext.hadoopConfiguration).exists(p))
+      Some(readDelta(spark, t, p.toString))
+    else None
+  }
+
+  /** `t`'s bucketed main ∪ its delta — what every history probe reads. */
+  private[graft] def withDelta(spark: SparkSession, t: String): DataFrame =
+    deltaOf(spark, t).fold(spark.table(t))(spark.table(t).unionByName(_))
 
   /** Fold a table's delta directory back into the bucketed main table
     * (write main ∪ delta to a tmp table under the SAME bucket spec,
@@ -260,10 +321,7 @@ object Layout {
       .getOrElse(throw new IllegalArgumentException(
         s"$table has no bucket spec — $noSpecHint"))
     dropTableAndLocation(spark, tmp) // stale tmp from a mid-write crash
-    val cols = spark.table(table).columns.map(col)
-    val merged = spark.table(table)
-      .unionByName(readDelta(spark, table, deltaPath.toString).select(cols: _*))
-    writeBucketed(merged, tmp, spec.bucketColumnNames, spec.numBuckets,
+    writeBucketed(withDelta(spark, table), tmp, spec.bucketColumnNames, spec.numBuckets,
       onePassPerBucket = true)
     // record every batch id being folded BEFORE the commit rename (the
     // [[foldManifestDirOf]] contract): after the rename these rows live

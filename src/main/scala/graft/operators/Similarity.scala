@@ -117,8 +117,7 @@ object Similarity {
       cId: String = "vec_id", cVec: String = "embedding"): DataFrame = {
     val centRows = buildCentroids(corpus, nLists, lloydIters, cId, cVec)
     val cents = typedLit(centRows.toSeq)
-    val assigned = corpus.select(col(cId), col(cVec),
-      nearestAgainst(cents, col(cVec)).alias("__list"))
+    val assigned = assign(corpus, cents, cId, cVec)
     val probes = queries.select(col(qId), col(qVec),
       explode(probeListsAgainst(cents, col(qVec), nProbe)).alias("__list"))
     // each corpus vector lives in exactly one list and probe lists are
@@ -279,12 +278,19 @@ object Similarity {
     rows
   }
 
+  /** `df`'s (`cId`, `cVec`) rows with `__list`, the nearest centroid of
+    * the `cents` literal — the assignment every build, append and
+    * SemDeDup pass projects. */
+  private def assign(df: DataFrame, cents: Column, cId: String,
+      cVec: String): DataFrame =
+    df.select(col(cId), col(cVec), nearestAgainst(cents, col(cVec)).alias("__list"))
+
   /** Mean cosine similarity of assigned rows (`cVec`, `__list`) to
-    * their centroid — the tightness number both the drift report and
-    * the aging policy stand on. Zero-norm/null vectors are excluded
-    * (they are indexed but score NaN against any centroid; the mean
-    * must reflect list tightness, not data hygiene). One bounded
-    * aggregate; a production deployment would sample the input. */
+    * their centroid — the tightness number the aging policy stands on.
+    * Zero-norm/null vectors are excluded (they are indexed but score
+    * NaN against any centroid; the mean must reflect list tightness,
+    * not data hygiene). One bounded aggregate; a production deployment
+    * would sample the input. */
   private def listTightness(df: DataFrame, cVec: String,
       centRows: Array[(Long, Seq[Float])]): (Long, Double) = {
     val centMap = typedLit(centRows.toMap)
@@ -298,7 +304,7 @@ object Similarity {
   /** Persist an IVF index — the PRODUCTION shape: [[ivfTopK]] rebuilds
     * its coarse quantizer on every call (the honest per-call bench
     * cost), while a deployment builds the index once per corpus and
-    * amortizes it over every query batch. Two tables:
+    * amortizes it over every query batch. Three tables:
     *
     *  - `table_centroids` — (list, centroid), nLists rows (the
     *    broadcast/driver side of every probe);
@@ -307,9 +313,15 @@ object Similarity {
     *    files (`SelectedBucketsCount` — pinned in PlanSpec) and
     *    (b) joins the broadcast probe frame with no corpus-side
     *    exchange. At 100 TB this is the difference between scanning
-    *    nProbe/nLists of the corpus and scanning all of it.
+    *    nProbe/nLists of the corpus and scanning all of it;
+    *  - `table_meta` — the build-time tightness baseline of
+    *    [[ivfAging]] and the build parameters.
     *
-    * Deterministic: same corpus + params → byte-identical index.
+    * Deterministic: same corpus + params → byte-identical index. A
+    * build starts a new generation, so it clears the table's delta
+    * state: the previous generation's delta rows were assigned under
+    * the old centroids, and its fold manifest would skip the new
+    * stream's first batch ids.
     *
     * Rebuilding in a NEW session over a non-durable metastore: call
     * [[dropIvfIndex]] first — `mode=overwrite` cannot see the previous
@@ -318,29 +330,40 @@ object Similarity {
   def writeIvfIndex(spark: org.apache.spark.sql.SparkSession, corpus: DataFrame,
       table: String, nLists: Int = 16, lloydIters: Int = 1,
       numBuckets: Int = 16,
-      cId: String = "vec_id", cVec: String = "embedding",
-      recordAging: Boolean = true): Unit = {
-    val centRows = buildCentroids(corpus, nLists, lloydIters, cId, cVec)
+      cId: String = "vec_id", cVec: String = "embedding"): Unit = {
+    Layout.deleteDeltaState(spark, Layout.deltaDirOf(spark, table))
+    writeIvfMeta(spark, table, writeGeneration(spark, corpus, corpus, table,
+      s"${table}_centroids", nLists, lloydIters, numBuckets, cId, cVec))
+  }
+
+  /** One index generation — the sequence every build path shares:
+    * train the quantizer on `trainOn`, write `rows` assigned to it into
+    * the bucketed `mainT`, then the centroids into `centT`. Main
+    * first: [[reclusterIvfIndex]]'s re-entry reads a registered
+    * centroid side table as "main swap already committed". Returns the
+    * generation's meta; its tightness rides the bucketed write as
+    * observe() metrics — never a second scan of what was just written.
+    *
+    * A training set with no usable vector (all null or zero-norm)
+    * fails here: a quantizer without centroids assigns every vector to
+    * list -1, so probes return nothing — and an intake history would
+    * stay that way (ensure skips existing tables; the NaN baseline
+    * never triggers a retrain). */
+  private def writeGeneration(spark: org.apache.spark.sql.SparkSession,
+      trainOn: DataFrame, rows: DataFrame, mainT: String, centT: String,
+      nLists: Int, lloydIters: Int, numBuckets: Int, cId: String,
+      cVec: String): IvfMeta = {
+    val centRows = buildCentroids(trainOn, nLists, lloydIters, cId, cVec)
+    require(centRows.nonEmpty, s"IVF index $mainT: the training set has no " +
+      "usable vector (every one is null or zero-norm), so the quantizer " +
+      "would have no centroids — train on a set that carries some")
+    val (obs, assigned) = observedAssignment(rows, centRows, cId, cVec)
+    Layout.writeBucketed(assigned, mainT, Seq("__list"), numBuckets)
+    val (n, mean) = assignmentStats(obs)
     import spark.implicits._
     centRows.toSeq.toDF("list", "centroid")
-      .write.mode("overwrite").format("parquet")
-      .saveAsTable(s"${table}_centroids")
-    if (recordAging) {
-      // the aging baseline ([[ivfAging]]): build-time tightness rides
-      // the bucketed write as observe() metrics — the previous shape
-      // re-READ the whole just-written index for one aggregate, a full
-      // extra corpus pass per build (guide §1.2: numbers the write pass
-      // can carry must not cost a second scan)
-      val (obs, assigned) = observedAssignment(corpus, centRows, cId, cVec)
-      Layout.writeBucketed(assigned, table, Seq("__list"), numBuckets)
-      val (_, nOk, mean) = assignmentStats(obs)
-      writeIvfMetaValues(spark, table, nLists, lloydIters, nOk, mean)
-    } else {
-      val cents = typedLit(centRows.toSeq)
-      val assigned = corpus.select(col(cId), col(cVec),
-        nearestAgainst(cents, col(cVec)).alias("__list"))
-      Layout.writeBucketed(assigned, table, Seq("__list"), numBuckets)
-    }
+      .write.mode("overwrite").format("parquet").saveAsTable(centT)
+    IvfMeta(mean, n, nLists, lloydIters)
   }
 
   /** The persisted index's one-row meta table: the quantizer's
@@ -351,22 +374,9 @@ object Similarity {
       nLists: Int, lloydIters: Int)
 
   private def writeIvfMeta(spark: org.apache.spark.sql.SparkSession,
-      table: String, nLists: Int, lloydIters: Int, cVec: String): Unit = {
-    val (n, mean) = listTightness(spark.table(table), cVec,
-      readCentroids(spark, table))
-    writeIvfMetaValues(spark, table, nLists, lloydIters, n, mean)
-  }
-
-  /** Meta-table write from ALREADY-measured tightness numbers — the
-    * form the build/recluster paths use after carrying the aggregate on
-    * their write pass via observe(); the table-scan [[writeIvfMeta]]
-    * stays for the recluster re-entry paths, where the assignment frame
-    * is gone. */
-  private def writeIvfMetaValues(spark: org.apache.spark.sql.SparkSession,
-      table: String, nLists: Int, lloydIters: Int, n: Long,
-      mean: Double): Unit = {
+      table: String, m: IvfMeta): Unit = {
     import spark.implicits._
-    Seq((mean, n, nLists, lloydIters))
+    Seq((m.builtMeanSim, m.builtRows, m.nLists, m.lloydIters))
       .toDF("built_mean_sim", "built_rows", "n_lists", "lloyd_iters")
       .write.mode("overwrite").format("parquet")
       .saveAsTable(s"${table}_meta")
@@ -375,181 +385,80 @@ object Similarity {
   private def readIvfMeta(spark: org.apache.spark.sql.SparkSession,
       table: String): IvfMeta = {
     require(spark.catalog.tableExists(s"${table}_meta"),
-      s"${table}_meta missing — build the index with writeIvfIndex" +
-        " (recordAging=true) to enable the aging policy")
+      s"${table}_meta missing — build the index with writeIvfIndex")
     val r = spark.table(s"${table}_meta")
       .select(col("built_mean_sim"), col("built_rows"),
         col("n_lists"), col("lloyd_iters")).head()
     IvfMeta(r.getDouble(0), r.getLong(1), r.getInt(2), r.getInt(3))
   }
 
-  /** Train the coarse quantizer on `trainOn` but write an EMPTY main
-    * corpus — the ensure-shape for an IVF index used as an APPEND-ONLY
-    * history ([[semanticIncrementalDelta]]): every vector enters
-    * through [[appendToIvfDelta]]'s exactly-once delta batches (and
-    * folds in via [[compactIvfDelta]]), so seeding the main table with
-    * the training vectors would double-count the first batch. The
-    * quantizer is frozen from whatever first batch trains it — the
-    * production SemDeDup seeding; [[reclusterIfDrifted]] owns drift. */
-  def writeEmptyIvfIndex(spark: org.apache.spark.sql.SparkSession,
-      trainOn: DataFrame, table: String, nLists: Int = 16,
-      lloydIters: Int = 1, numBuckets: Int = 16,
-      cId: String = "vec_id", cVec: String = "embedding"): Unit = {
-    val centRows = buildCentroids(trainOn, nLists, lloydIters, cId, cVec)
-    // a quantizer trained on zero vectors would freeze forever (ensure
-    // skips once the tables exist): every later vector assigns to list
-    // -1, SemDeDup collapses to one list, and the NaN built_mean_sim
-    // keeps drift-recovery from ever retraining. Fail loudly instead —
-    // callers must defer seeding to the first batch carrying vectors.
-    require(centRows.nonEmpty,
-      s"writeEmptyIvfIndex($table): training set has no vectors — " +
-        "defer index creation to the first batch that carries some")
-    import spark.implicits._
-    centRows.toSeq.toDF("list", "centroid")
-      .write.mode("overwrite").format("parquet")
-      .saveAsTable(s"${table}_centroids")
-    // observe-fused like [[writeIvfIndex]] (over zero rows: the metrics
-    // come back (0, NaN) — exactly what the table re-scan measured)
-    val (obs, assigned) = observedAssignment(trainOn.limit(0), centRows,
-      cId, cVec)
-    Layout.writeBucketed(assigned, table, Seq("__list"), numBuckets)
-    val (_, nOk, mean) = assignmentStats(obs)
-    writeIvfMetaValues(spark, table, nLists, lloydIters, nOk, mean)
-  }
-
   /** Create the embedding-history index `${table}_ei` if missing —
-    * the [[graft.operators.Dedup.History.ensure]] discipline for
-    * the embedding modality (crash-safe: a half-created index is
-    * dropped whole and rebuilt; callers must pass the SAME first-batch
-    * vectors on a replay, which foreachBatch guarantees). */
+    * the [[graft.operators.Dedup.History.ensure]] discipline for the
+    * embedding modality (crash-safe: a half-created index is dropped
+    * whole and rebuilt; callers must pass the SAME first-batch vectors
+    * on a replay, which foreachBatch guarantees). The quantizer trains
+    * on `firstVectors` and freezes — the production SemDeDup seeding;
+    * [[reclusterIfDrifted]] owns drift. The main table starts EMPTY:
+    * every vector enters through [[appendToIvfDelta]]'s exactly-once
+    * delta batches (folded by [[compactIvfDelta]]), so seeding it with
+    * the training vectors would double-count the first batch.
+    *
+    * Returns whether the index exists. Seeding is deferred (false)
+    * while `firstVectors` is empty: a quantizer trained on zero vectors
+    * would freeze that way. The emptiness check (one limit-1 job) runs
+    * only while the index is missing, so the steady-state loop pays
+    * catalog checks alone. */
   def ensureSemanticHistory(spark: org.apache.spark.sql.SparkSession,
       firstVectors: DataFrame, table: String, nLists: Int = 16,
       numBuckets: Int = 16,
-      cId: String = "vec_id", cVec: String = "embedding"): Unit = {
+      cId: String = "vec_id", cVec: String = "embedding"): Boolean = {
     val t = s"${table}_ei"
-    // all THREE tables must exist: writeEmptyIvfIndex writes centroids
-    // → main → meta, so a crash after the main-table write leaves both
-    // earlier tables present with `_meta` missing — without the meta
-    // check that half-state would go undetected until ivfAging /
-    // reclusterIfDrifted throw on their own require, long after intake
-    // resumed on the crippled index
-    if (!spark.catalog.tableExists(t) ||
-        !spark.catalog.tableExists(s"${t}_centroids") ||
-        !spark.catalog.tableExists(s"${t}_meta")) {
+    // all THREE tables must exist: a generation is written main →
+    // centroids → meta, and a crash part-way leaves a prefix — without
+    // the meta check that half-state would go undetected until
+    // ivfAging / reclusterIfDrifted throw on their own require, long
+    // after intake resumed on the crippled index
+    if (Seq(t, s"${t}_centroids", s"${t}_meta").forall(spark.catalog.tableExists)) true
+    else if (firstVectors.isEmpty) false
+    else {
       dropIvfIndex(spark, t) // orphaned locations / half-created index
-      writeEmptyIvfIndex(spark, firstVectors, t, nLists,
-        numBuckets = numBuckets, cId = cId, cVec = cVec)
+      writeIvfMeta(spark, t, writeGeneration(spark, firstVectors,
+        firstVectors.limit(0), t, s"${t}_centroids", nLists, lloydIters = 1,
+        numBuckets = numBuckets, cId = cId, cVec = cVec))
+      true
     }
   }
 
-  /** Drop a persisted IVF index (both tables AND their warehouse
-    * locations — see [[Layout.dropTableAndLocation]] for why the
-    * location matters across sessions). */
+  /** Drop a persisted IVF index (every table AND its warehouse
+    * location, plus the delta state — see
+    * [[Layout.dropTableAndLocation]] for why the location matters
+    * across sessions). */
   def dropIvfIndex(spark: org.apache.spark.sql.SparkSession, table: String): Unit = {
-    // resolve the delta location while the catalog entry still exists
-    val delta = ivfDeltaDir(spark, table)
-    Layout.dropTableAndLocation(spark, table)
-    Layout.dropTableAndLocation(spark, s"${table}_centroids")
-    Layout.dropTableAndLocation(spark, s"${table}_meta")
-    // stale recluster swap halves, if a crashed maintenance run left any
-    Layout.dropTableAndLocation(spark, s"${table}__recluster")
-    Layout.dropTableAndLocation(spark, s"${table}_centroids__next")
-    Layout.deleteDeltaState(spark, delta)
+    Layout.dropWithDelta(spark, table)
+    // the side tables, and the swap halves a crashed recluster may leave
+    Seq("_centroids", "_meta", "__recluster", "_centroids__next")
+      .foreach(s => Layout.dropTableAndLocation(spark, table + s))
   }
 
-  /** [[appendToIvfIndex]]'s drift report: mean cosine similarity of
-    * indexed vectors to their assigned centroid, before vs after the
-    * append (higher = tighter lists; `indexedBefore` counts the rows
-    * behind `meanSimBefore`, i.e. pre-append rows with a finite score).
-    * `meanSimAfter` falling across appends means the FROZEN quantizer
-    * is drifting away from the data — the signal to schedule a
-    * [[writeIvfIndex]] rebuild. */
-  final case class IvfDrift(appended: Long, indexedBefore: Long,
-      meanSimBefore: Double, meanSimAfter: Double)
-
-  /** Continuous-ingest append to a persisted IVF index: assign `batch`
-    * to the EXISTING centroids (the quantizer is frozen — assignment is
-    * a pure projection of the centroid literal, exactly the build's
-    * rule, so an appended index is bit-identical to building over
-    * old+new with these centroids) and append to the bucketed list
-    * table under its OWN bucket spec (read from the catalog; Spark
-    * rejects a mismatched append, and probes keep pruning to bucket
-    * files). The existing index is never read for the write and never
-    * exchanges — at 100 TB the append costs one pass over the batch,
-    * not the corpus.
-    *
-    * Drift: `meanSimBefore` is one (vec, list)-projection aggregate
-    * over the existing index (a production deployment would sample it);
-    * `meanSimAfter` combines it exactly with the batch-side mean via
-    * the row counts — no post-append rescan. */
-  def appendToIvfIndex(spark: org.apache.spark.sql.SparkSession,
-      batch: DataFrame, table: String,
-      cId: String = "vec_id", cVec: String = "embedding",
-      computeDrift: Boolean = true): IvfDrift = {
-    val meta = spark.sessionState.catalog.getTableMetadata(
-      spark.sessionState.sqlParser.parseTableIdentifier(table))
-    val spec = meta.bucketSpec.getOrElse(throw new IllegalArgumentException(
-      s"$table has no bucket spec — build the index with writeIvfIndex first"))
-    val centRows = readCentroids(spark, table) // build order → same tie-breaks
-    val cents = typedLit(centRows.toSeq)
-    // ONE pass over the batch: the append count and the batch-side
-    // tightness ride the bucketed write itself as observe() metrics
-    // (CollectMetrics — computed on the rows as the write streams them),
-    // where the previous shape persisted the batch and paid a count job
-    // plus a stats job before the write: three passes / driver
-    // round-trips per append where one suffices (the appendToIvfDelta
-    // rationale; jobs-per-append pinned in DedupSpec).
-    // pre-append history tightness FIRST (the table must be scanned
-    // before the append lands). This leg reads a different dataset, so
-    // it cannot ride the batch write (production would sample it).
-    val (nb, sb) =
-      if (!computeDrift) (0L, Double.NaN)
-      else {
-        val centMap = typedLit(centRows.toMap)
-        // zero-norm/null vectors score NaN against any centroid — they
-        // are indexed (same rule as the build) but excluded from the
-        // mean, which must reflect list tightness, not data hygiene
-        val sim = VF.cosineNative(col(cVec), element_at(centMap, col("__list")))
-        val r = spark.table(table).select(sim.alias("__s"))
-          .where(col("__s").isNotNull && !isnan(col("__s")))
-          .agg(count(lit(1)), avg(col("__s"))).head()
-        (r.getLong(0), if (r.isNullAt(1)) Double.NaN else r.getDouble(1))
-      }
-    val (obs, assigned) = observedAssignment(batch, centRows, cId, cVec)
-    Layout.writeBucketed(assigned, table, Seq("__list"), spec.numBuckets,
-      mode = "append")
-    val (appended, na, sa) = assignmentStats(obs)
-    val after =
-      if (!computeDrift) Double.NaN
-      else if (nb + na == 0) Double.NaN
-      else if (nb == 0) sa
-      else if (na == 0) sb
-      else (sb * nb + sa * na) / (nb + na)
-    IvfDrift(appended, nb, sb, after)
-  }
-
-  /** The (observation, assigned-frame) pair every index write shares:
-    * batch rows assigned to their nearest centroid, with the row count
-    * and the non-NaN tightness mean attached as observe() metrics so
-    * they materialize DURING the caller's one write pass — never as a
+  /** The (observation, assigned-frame) pair of a generation write:
+    * rows assigned to their nearest centroid, with the non-NaN row
+    * count and tightness mean attached as observe() metrics so they
+    * materialize DURING the caller's one write pass — never as a
     * separate scan (guide §1.2: no second pass for numbers the first
     * pass can carry). */
   private def observedAssignment(batch: DataFrame,
       centRows: Array[(Long, Seq[Float])], cId: String, cVec: String):
       (org.apache.spark.sql.Observation, DataFrame) = {
-    val cents = typedLit(centRows.toSeq)
     val centMap = typedLit(centRows.toMap)
     val sim = VF.cosineNative(col(cVec), element_at(centMap, col("__list")))
     val ok = sim.isNotNull && !isnan(sim)
     val obs = org.apache.spark.sql.Observation()
-    val assigned = batch.select(col(cId), col(cVec),
-        nearestAgainst(cents, col(cVec)).alias("__list"))
-      .observe(obs, count(lit(1)).as("n"),
-        count(when(ok, 1)).as("n_ok"), avg(when(ok, sim)).as("mean"))
+    val assigned = assign(batch, typedLit(centRows.toSeq), cId, cVec)
+      .observe(obs, count(when(ok, 1)).as("n_ok"), avg(when(ok, sim)).as("mean"))
     (obs, assigned)
   }
 
-  /** (rows, non-NaN rows, tightness mean) from an [[observedAssignment]]
+  /** (non-NaN rows, tightness mean) from an [[observedAssignment]]
     * observation — call only after the write action ran.
     *
     * Bounded wait (ADVICE r19): `Observation.get` blocks FOREVER if the
@@ -558,9 +467,9 @@ object Similarity {
     * write path bypassing the observed Dataset). The metrics land
     * within listener-bus latency of the action that just ran, so a
     * 30 s poll either returns them or fails loudly naming both
-    * possible causes instead of hanging the ingest loop. */
+    * possible causes instead of hanging the build. */
   private def assignmentStats(
-      obs: org.apache.spark.sql.Observation): (Long, Long, Double) = {
+      obs: org.apache.spark.sql.Observation): (Long, Double) = {
     val deadline = System.nanoTime() + 30L * 1000 * 1000 * 1000
     var m = org.apache.spark.sql.graftshim.ObservationBridge.getOrEmpty(obs)
     while (m.isEmpty && System.nanoTime() < deadline) {
@@ -578,74 +487,43 @@ object Similarity {
       case Some(d: java.lang.Double) => d.toDouble
       case _ => Double.NaN
     }
-    (m("n").asInstanceOf[Long], m("n_ok").asInstanceOf[Long], mean)
+    (m("n_ok").asInstanceOf[Long], mean)
   }
-
-  /** The delta directory of a persisted IVF index: a sibling of the
-    * main table's warehouse location. Streaming appends land here
-    * (one subdirectory per micro-batch — see [[appendToIvfDelta]]),
-    * probes union it with the bucketed main table, and
-    * [[compactIvfDelta]] folds it back in. */
-  private[graft] def ivfDeltaDir(spark: org.apache.spark.sql.SparkSession,
-      table: String): String = Layout.deltaDirOf(spark, table)
-
-  /** Read an IVF delta directory — see [[Layout.readDelta]] for the
-    * recursive-lookup + explicit-schema rationale. */
-  private def readIvfDelta(spark: org.apache.spark.sql.SparkSession,
-      table: String, deltaPath: String): DataFrame =
-    Layout.readDelta(spark, table, deltaPath)
 
   /** Streaming-ingest append to a persisted IVF index, EXACTLY-ONCE:
     * assign `batch` to the EXISTING centroids (frozen quantizer, the
-    * build's exact rule) and write the assigned rows to the index's
-    * delta directory under `batch-<batchId>/` with mode=overwrite — a
-    * replayed micro-batch deterministically overwrites its own
-    * directory, so redelivery is idempotent WITHOUT ever rewriting or
-    * even reading the main index (the property that matters when the
-    * index is 100 TB and the batch is minutes of data; contrast a
-    * bucketed-table append, which cannot be made replay-safe without a
-    * recovery rewrite of the table).
+    * build's exact rule, so main ∪ delta is bit-identical to building
+    * over old+new with these centroids) and land the assigned rows in
+    * the index's delta directory through [[Layout.appendDelta]] —
+    * `batch-<batchId>/` with mode=overwrite, so redelivery is
+    * idempotent WITHOUT ever rewriting or even reading the main index
+    * (the property that matters when the index is 100 TB and the batch
+    * is minutes of data). One pass over the batch, one job.
     *
     * The delta is deliberately NOT bucketed: it stays small — bounded
     * by the [[compactIvfDelta]] cadence — so probe-side pruning on it
     * is parquet min/max, not bucket files; the 100 TB main table keeps
-    * its bucket pruning. Returns the appended row count and the
-    * batch-side mean similarity to the assigned centroid (the drift
-    * signal, batch-only: a streaming sink must not rescan the corpus
-    * per micro-batch — compare against the build-time mean instead).
+    * its bucket pruning. Drift is measured by [[ivfAging]], not here:
+    * a streaming sink must not rescan the corpus per micro-batch.
     *
     * A batch the fold manifest records as already folded
-    * ([[Layout.foldManifestDirOf]]) is SKIPPED (returns a zero-count
-    * drift): re-appending a folded batch would let the next fold
-    * duplicate its vectors in the main index — each then consuming two
-    * top-k slots. Corollary: batch ids must be monotonic over the index
-    * lifetime (one streaming checkpoint); rebuild via [[dropIvfIndex]] +
-    * [[writeIvfIndex]] for a fresh stream. */
+    * ([[Layout.foldManifestDirOf]]) is SKIPPED: re-appending a folded
+    * batch would let the next fold duplicate its vectors in the main
+    * index — each then consuming two top-k slots. Corollary: batch ids
+    * must be monotonic over the index lifetime (one streaming
+    * checkpoint); rebuild with [[writeIvfIndex]] for a fresh stream. */
   def appendToIvfDelta(spark: org.apache.spark.sql.SparkSession,
       batch: DataFrame, table: String, batchId: Long,
-      cId: String = "vec_id", cVec: String = "embedding"): IvfDrift = {
-    if (Layout.isBatchFolded(spark, table, batchId))
-      return IvfDrift(0L, 0L, Double.NaN, Double.NaN)
-    val centRows = readCentroids(spark, table) // build order → same tie-breaks
-    // ONE pass, ONE job per micro-batch append: the count and the
-    // batch-side tightness mean ride the delta write as observe()
-    // metrics. The previous shape persisted the batch and ran a
-    // separate (count, avg) aggregate before the write — two driver
-    // round-trips plus a block-manager copy per micro-batch, in exactly
-    // the many-small-job pattern the composed loops are budgeted
-    // against (VERDICT r18 #2; jobs-per-append pinned in DedupSpec).
-    val (obs, assigned) = observedAssignment(batch, centRows, cId, cVec)
-    assigned.write.mode("overwrite")
-      .parquet(s"${ivfDeltaDir(spark, table)}/batch-$batchId")
-    val (n, _, mean) = assignmentStats(obs)
-    IvfDrift(n, 0L, Double.NaN, mean)
-  }
+      cId: String = "vec_id", cVec: String = "embedding"): Unit =
+    // readCentroids keeps the build order → the build's tie-breaks
+    Layout.appendDelta(spark, table, batchId)(
+      assign(batch, typedLit(readCentroids(spark, table).toSeq), cId, cVec))
 
-  /** Fold the delta directory back into the bucketed main table (the
-    * [[Dedup.compactBandHistory]] swap discipline: write main ∪ delta
-    * to a tmp table under the SAME bucket spec, drop, rename — and
-    * complete an interrupted swap instead of dropping the only copy),
-    * then delete the delta. No-op without a delta.
+  /** Fold the delta directory back into the bucketed main table
+    * ([[Layout.foldDeltaIntoBucketed]]: write main ∪ delta to a tmp
+    * table under the SAME bucket spec, drop, rename — and complete an
+    * interrupted swap instead of dropping the only copy), then delete
+    * the delta. No-op without a delta.
     *
     * Crash contract: the delta-dir rename to `__folded` is the commit
     * record, so re-entry after a crash at ANY point either completes
@@ -653,25 +531,11 @@ object Similarity {
     * never loses a vector. Between an interrupted run and its re-run,
     * probes may temporarily not see the delta rows (and a probe during
     * the drop-rename instant can fail to resolve the table) — the
-    * standard swap-window caveat, same as [[Dedup.compactBandHistory]]. */
+    * standard swap-window caveat. */
   def compactIvfDelta(spark: org.apache.spark.sql.SparkSession,
       table: String): Unit =
     Layout.foldDeltaIntoBucketed(spark, table,
       noSpecHint = "build the index with writeIvfIndex first")
-
-  /** [[graft.operators.Dedup.History.foldIfNeeded]]'s byte-ratio
-    * auto-fold policy for a persisted IVF index / embedding history:
-    * fold when the delta directory reaches `maxDeltaRatio` of the
-    * bucketed main's bytes (fs metadata only, no jobs — safe per
-    * micro-batch). Returns true when a fold ran. */
-  def compactIvfIfNeeded(spark: org.apache.spark.sql.SparkSession,
-      table: String, maxDeltaRatio: Double = 0.10): Boolean = {
-    require(maxDeltaRatio > 0, "maxDeltaRatio must be positive")
-    val (d, m) = Layout.deltaMainBytes(spark, table)
-    val fold = d > 0 && d >= maxDeltaRatio * m
-    if (fold) compactIvfDelta(spark, table)
-    fold
-  }
 
   /** The aging report behind the persisted index's re-clustering
     * policy: build-time tightness (recorded by [[writeIvfIndex]] in the
@@ -705,14 +569,7 @@ object Similarity {
       "sampleFraction must be in (0, 1]")
     val meta = readIvfMeta(spark, table)
     val centRows = readCentroids(spark, table)
-    val main = spark.table(table)
-    val deltaPath = new org.apache.hadoop.fs.Path(ivfDeltaDir(spark, table))
-    val fs = deltaPath.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    val whole =
-      if (fs.exists(deltaPath))
-        main.unionByName(readIvfDelta(spark, table, deltaPath.toString)
-          .select(main.columns.map(col): _*))
-      else main
+    val whole = Layout.withDelta(spark, table)
     val cur =
       if (sampleFraction < 1.0) whole.sample(sampleFraction, seed = 42L)
       else whole
@@ -788,7 +645,11 @@ object Similarity {
       val meta = readIvfMeta(spark, table)
       Layout.dropTableAndLocation(spark, centT)
       spark.sql(s"ALTER TABLE `$nextT` RENAME TO `$centT`")
-      writeIvfMeta(spark, table, meta.nLists, meta.lloydIters, cVec)
+      // the assignment frame is gone here: measure the swapped-in
+      // generation from the table
+      val (n, mean) = listTightness(spark.table(table), cVec,
+        readCentroids(spark, table))
+      writeIvfMeta(spark, table, meta.copy(builtMeanSim = mean, builtRows = n))
       return
     }
     // ---- fresh rebuild (also the crashed-before-any-drop path: both
@@ -804,21 +665,14 @@ object Similarity {
     Layout.dropTableAndLocation(spark, tmp)   // stale uncommitted halves
     Layout.dropTableAndLocation(spark, nextT)
     val corpus = spark.table(table).select(col(cId), col(cVec))
-    val centRows = buildCentroids(corpus, meta.nLists, meta.lloydIters, cId, cVec)
-    // tightness rides the side-table write (the writeIvfIndex observe
-    // discipline) — the rebuilt generation is not re-read for the meta
-    val (obs, assigned) = observedAssignment(corpus, centRows, cId, cVec)
-    Layout.writeBucketed(assigned, tmp, Seq("__list"), spec.numBuckets)
-    val (_, nOk, mean) = assignmentStats(obs)
-    import spark.implicits._
-    centRows.toSeq.toDF("list", "centroid")
-      .write.mode("overwrite").format("parquet").saveAsTable(nextT)
+    val next = writeGeneration(spark, corpus, corpus, tmp, nextT,
+      meta.nLists, meta.lloydIters, spec.numBuckets, cId, cVec)
     // ---- swap: main first, then centroids (the re-entry order) ----
     Layout.dropTableAndLocation(spark, table)
     spark.sql(s"ALTER TABLE `$tmp` RENAME TO `$table`")
     Layout.dropTableAndLocation(spark, centT)
     spark.sql(s"ALTER TABLE `$nextT` RENAME TO `$centT`")
-    writeIvfMetaValues(spark, table, meta.nLists, meta.lloydIters, nOk, mean)
+    writeIvfMeta(spark, table, next)
   }
 
   /** The measured aging trigger: re-cluster iff the index's tightness
@@ -868,16 +722,8 @@ object Similarity {
     // the extra round-trip (ADVICE/VERDICT r18 #2).
     val lists = probes.agg(collect_set(col("__list")))
       .head().getSeq[Long](0).toArray
-    val main = spark.table(table)
-    val deltaPath = new org.apache.hadoop.fs.Path(ivfDeltaDir(spark, table))
-    val fs = org.apache.hadoop.fs.FileSystem.get(
-      spark.sparkContext.hadoopConfiguration)
-    val corpus =
-      if (fs.exists(deltaPath))
-        main.unionByName(readIvfDelta(spark, table, deltaPath.toString)
-          .select(main.columns.map(col): _*))
-      else main
-    val pruned = corpus.where(col("__list").isin(lists.toSeq: _*))
+    val pruned = Layout.withDelta(spark, table)
+      .where(col("__list").isin(lists.toSeq: _*))
     val probed = pruned.join(broadcast(probes), Seq("__list"))
       .select(col(qId), col(cId), VF.cosineNative(col(qVec), col(cVec)).alias("cos_sim"))
     topKStage(probed, k, qId, cId)
@@ -909,9 +755,8 @@ object Similarity {
       lloydIters: Int = 1, maxCluster: Int = 4096,
       idCol: String = "vec_id", vecCol: String = "embedding"): DataFrame = {
     val cents = typedLit(buildCentroids(df, nLists, lloydIters, idCol, vecCol).toSeq)
-    semanticOverAssigned(df.select(col(idCol), col(vecCol),
-      nearestAgainst(cents, col(vecCol)).alias("__list")),
-      df, tau, maxCluster, idCol, vecCol)
+    semanticOverAssigned(assign(df, cents, idCol, vecCol), df, tau, maxCluster,
+      idCol, vecCol)
   }
 
   /** [[semanticDupClusters]] against a PERSISTED index's frozen
@@ -924,9 +769,8 @@ object Similarity {
       df: DataFrame, table: String, tau: Double, maxCluster: Int = 4096,
       idCol: String = "vec_id", vecCol: String = "embedding"): DataFrame = {
     val cents = typedLit(readCentroids(spark, table).toSeq)
-    semanticOverAssigned(df.select(col(idCol), col(vecCol),
-      nearestAgainst(cents, col(vecCol)).alias("__list")),
-      df, tau, maxCluster, idCol, vecCol)
+    semanticOverAssigned(assign(df, cents, idCol, vecCol), df, tau, maxCluster,
+      idCol, vecCol)
   }
 
   private def semanticOverAssigned(assigned: DataFrame, all: DataFrame,
@@ -1010,15 +854,8 @@ object Similarity {
     // sideline = drop oversized lists map-side via the SAME literal —
     // no count-frame semi-join in the plan at all
     val probes = assigned.where(col("__list").isin(lists.toSeq: _*))
-    val main = spark.table(table)
-    val deltaPath = new org.apache.hadoop.fs.Path(ivfDeltaDir(spark, table))
-    val fs = deltaPath.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    val hist =
-      if (fs.exists(deltaPath))
-        main.unionByName(readIvfDelta(spark, table, deltaPath.toString)
-          .select(main.columns.map(col): _*))
-      else main
-    val pruned = hist.where(col("__list").isin(lists.toSeq: _*))
+    val pruned = Layout.withDelta(spark, table)
+      .where(col("__list").isin(lists.toSeq: _*))
     val dropped = pruned.join(broadcast(probes), Seq("__list"))
       .select(col(bid),
         VF.cosineNative(col(bvec), col(cVec)).alias("__cos"), col(cId))

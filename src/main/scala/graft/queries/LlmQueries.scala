@@ -879,9 +879,10 @@ object LlmQueries {
     }, Some("""SELECT 0 AS missed_planted, COUNT(*) AS n_planted FROM embeddings WHERE vec_id < 5""")),
 
     // ---- L4f: IVF index APPEND (continuous ingest) — planted copies
-    // arrive in a later batch appended to the frozen quantizer; the
-    // probe must surface every one through the same bucket-pruned path,
-    // proving the appended rows are first-class index citizens ----
+    // arrive in a later batch appended to the frozen quantizer and
+    // folded into the bucketed main; the probe must surface every one
+    // through the same bucket-pruned path, proving the appended rows
+    // are first-class index citizens ----
     ("l04f_ivf_append_recall", (s, d) => {
       val emb = Tables.embeddings(s, d).select(col("vec_id"), col("embedding"))
       val queries = emb.where(col("vec_id") < 5)
@@ -891,7 +892,8 @@ object LlmQueries {
         .select((col("q_id") + 500000).as("vec_id"), col("q_vec").as("embedding")))
       Similarity.dropIvfIndex(s, "l04f_ivf") // cross-session idempotence
       Similarity.writeIvfIndex(s, base, "l04f_ivf", nLists = 16, lloydIters = 1)
-      Similarity.appendToIvfIndex(s, later, "l04f_ivf")
+      Similarity.appendToIvfDelta(s, later, "l04f_ivf", batchId = 0)
+      Similarity.compactIvfDelta(s, "l04f_ivf")
       val top = Similarity.ivfTopKIndexed(s, queries, "l04f_ivf", k = 10, nProbe = 4)
       val planted = queries.select(col("q_id"), (col("q_id") + 500000).as("vec_id"))
       planted.join(top.select(col("q_id"), col("vec_id")), Seq("q_id", "vec_id"), "left_anti")
@@ -915,9 +917,7 @@ object LlmQueries {
       val b1 = queries
         .select((col("q_id") + 500000).as("vec_id"), col("q_vec").as("embedding"))
       Similarity.dropIvfIndex(s, "l04g_ivf") // cross-session idempotence
-      val fs = org.apache.hadoop.fs.FileSystem.get(s.sparkContext.hadoopConfiguration)
       Similarity.writeIvfIndex(s, base, "l04g_ivf", nLists = 16, lloydIters = 1)
-      fs.delete(new org.apache.hadoop.fs.Path(Similarity.ivfDeltaDir(s, "l04g_ivf")), true)
       Similarity.appendToIvfDelta(s, b0, "l04g_ivf", batchId = 0)
       Similarity.appendToIvfDelta(s, b1, "l04g_ivf", batchId = 1)
       val planted = queries.select(col("q_id"), (col("q_id") + 500000).as("vec_id"))
@@ -964,9 +964,7 @@ object LlmQueries {
         .select((col("q_id") + 500000).as("vec_id"), col("q_vec").as("embedding"))
       val t = "l04h_ivf"
       Similarity.dropIvfIndex(s, t) // cross-session idempotence
-      val fs = org.apache.hadoop.fs.FileSystem.get(s.sparkContext.hadoopConfiguration)
       Similarity.writeIvfIndex(s, base, t, nLists = 16, lloydIters = 1)
-      fs.delete(new org.apache.hadoop.fs.Path(Similarity.ivfDeltaDir(s, t)), true)
       Similarity.appendToIvfDelta(s, drift.unionByName(plantedVecs), t, batchId = 0)
       // tau 0.01: the negated third measures a deterministic drift of
       // ~0.015-0.03 against these near-uniform synthetic embeddings

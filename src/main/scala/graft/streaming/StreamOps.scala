@@ -658,21 +658,11 @@ object StreamOps {
             Similarity.semanticIncrementalDelta(spark, embRows0, s"${dt}_ei",
               embTau, idCol = idCol, vecCol = e, cId = idCol, cVec = e)
           }
-        // seeding guard: a first micro-batch with ZERO vectors must NOT
-        // train the quantizer — an empty centroid table freezes forever
-        // (ensure skips once tables exist), every later vector assigns
-        // to list -1, and semantic dedup silently collapses to one
-        // (instantly-sidelined) list. Defer index creation to the first
-        // batch that actually carries vectors: the isEmpty probe (one
-        // limit-1 job over the batch) runs ONLY while the index does not
-        // exist yet, so the steady-state loop pays catalog checks alone.
-        val indexExists = spark.catalog.tableExists(t) &&
-          spark.catalog.tableExists(s"${t}_centroids") &&
-          spark.catalog.tableExists(s"${t}_meta")
-        if (!indexExists && embRows.isEmpty) embRows.limit(0)
+        // a vector-free stream prefix defers seeding (the index must
+        // not train on zero vectors): nothing to dedup against yet
+        if (!Similarity.ensureSemanticHistory(spark, embRows, historyTable,
+            numBuckets = numBuckets, cId = idCol, cVec = e)) embRows.limit(0)
         else {
-          Similarity.ensureSemanticHistory(spark, embRows, historyTable,
-            numBuckets = numBuckets, cId = idCol, cVec = e)
           val within = Similarity.semanticDupClustersIndexed(spark, embRows, t,
               embTau, idCol = idCol, vecCol = e)
             .where(col(idCol) === col("cluster")).select(col(idCol))
@@ -718,7 +708,7 @@ object StreamOps {
         if (spark.catalog.tableExists(s"${historyTable}_ei"))
           Similarity.appendToIvfDelta(spark,
             survivors.where(col(e).isNotNull).select(col(idCol), col(e)),
-            s"${historyTable}_ei", batchId, cId = idCol, cVec = e): Unit
+            s"${historyTable}_ei", batchId, cId = idCol, cVec = e)
       }
       textSurv.foreach(Dedup.appendHashHistoryDelta(spark, _, "text", idCol,
         historyTable, batchId))
@@ -754,17 +744,15 @@ object StreamOps {
     * operator chooses, not inside the ingest loop's hot path. */
   def maintainMixedHistories(spark: SparkSession,
       table: String, maxDeltaRatio: Double = 0.10): Seq[String] = {
-    import graft.operators.{Dedup, Similarity}
+    import graft.operators.{Dedup, Layout, Similarity}
     val families = Seq("text" -> Dedup.IntakeHistory,
       "paragraph" -> Dedup.ParagraphHistory, "image" -> Dedup.ImageHistory,
       "audio" -> Dedup.AudioHistory, "video" -> Dedup.VideoHistory)
-    val folded = families.collect {
+    val ei = s"${table}_ei"
+    families.collect {
       case (name, h) if h.foldIfNeeded(spark, table, maxDeltaRatio) => name
-    }
-    if (spark.catalog.tableExists(s"${table}_ei") &&
-        Similarity.compactIvfIfNeeded(spark, s"${table}_ei", maxDeltaRatio))
-      folded :+ "embedding"
-    else folded
+    } ++ Option.when(Layout.foldIfDue(spark, Seq(ei), maxDeltaRatio)(
+      Similarity.compactIvfDelta(spark, ei)))("embedding")
   }
 
   /** Read the current CDC state (empty frame with `schema` if none). */

@@ -1,6 +1,6 @@
 package graft
 
-import graft.operators.{Dedup, Similarity}
+import graft.operators.{Dedup, Layout, Similarity}
 import graft.sources.Tables
 import org.apache.spark.sql.functions._
 
@@ -457,7 +457,6 @@ class DedupSpec extends SparkSpec {
   }
 
   test("history fold-if-needed: a stale delta without its table folds nothing and does not throw") {
-    import graft.operators.Layout
     import graft.streaming.StreamOps
     val table = "t_stale_delta"
     StreamOps.dropMixedHistory(spark, table)
@@ -474,7 +473,6 @@ class DedupSpec extends SparkSpec {
   }
 
   test("L23 auto-compaction: byte-ratio trigger folds when earned, probe's delta legs vanish, replay stays safe across an auto fold") {
-    import graft.operators.Layout
     import graft.streaming.StreamOps
     import org.apache.hadoop.fs.Path
     val table = "t_autofold"
@@ -692,10 +690,8 @@ class DedupSpec extends SparkSpec {
     }
     spark.listenerManager.register(listener)
     try {
-      val drift = Similarity.appendToIvfIndex(spark, later, "t_ivf_app")
-      assert(drift.appended === later.count())
-      assert(!drift.meanSimBefore.isNaN && !drift.meanSimAfter.isNaN)
-      // 1) the append write never read the EXISTING index and never
+      Similarity.appendToIvfDelta(spark, later, "t_ivf_app", batchId = 0)
+      // 1) the delta write never read the EXISTING index and never
       //    shuffled — at 100 TB the append costs one batch pass, full
       //    stop. Listener events deliver async: poll with a deadline
       //    (the bus has no public flush).
@@ -704,6 +700,7 @@ class DedupSpec extends SparkSpec {
       val deadline = System.currentTimeMillis + 30000
       while (capturedWrites().isEmpty && System.currentTimeMillis < deadline)
         Thread.sleep(50)
+      spark.listenerManager.unregister(listener)
       val writePlans = capturedWrites()
       assert(writePlans.nonEmpty, "no captured append write plan")
       writePlans.foreach { qe =>
@@ -714,10 +711,13 @@ class DedupSpec extends SparkSpec {
           case e: org.apache.spark.sql.execution.exchange.ShuffleExchangeLike => e }
         assert(shuffles.isEmpty, s"append write shuffled:\n$p")
       }
-      // 2) bit-parity with a frozen-quantizer rebuild: the table now
-      //    holds exactly the assignment of base∪later to the SAME
-      //    centroids (the production claim — append ≡ rebuild as long
-      //    as the quantizer is unchanged)
+      assert(spark.table("t_ivf_app").count() === base.count(),
+        "the delta append touched the main table")
+      Similarity.compactIvfDelta(spark, "t_ivf_app")
+      // 2) bit-parity with a frozen-quantizer rebuild: after the fold
+      //    the table holds exactly the assignment of base∪later to the
+      //    SAME centroids (the production claim — append ≡ rebuild as
+      //    long as the quantizer is unchanged)
       val centRows = spark.table("t_ivf_app_centroids")
         .select($"list", $"centroid").collect()
         .map(r => (r.getLong(0), r.getSeq[Float](1))).sortBy(_._1)
@@ -729,7 +729,7 @@ class DedupSpec extends SparkSpec {
         Similarity.nearestAgainst(cents, $"embedding").as("__list")))
       assert(rows(spark.table("t_ivf_app")) === expected,
         "appended index diverged from the frozen-quantizer assignment")
-      // 3) bucket spec survived the append; probes still prune AND find
+      // 3) bucket spec survived the fold; probes still prune AND find
       //    the appended planted copies
       val spec = spark.sessionState.catalog.getTableMetadata(
         spark.sessionState.sqlParser.parseTableIdentifier("t_ivf_app")).bucketSpec
@@ -749,32 +749,6 @@ class DedupSpec extends SparkSpec {
       spark.listenerManager.unregister(listener)
       Similarity.dropIvfIndex(spark, "t_ivf_app")
     }
-  }
-
-  test("L4f: drift metric falls when the appended batch sits far from the frozen centroids") {
-    // base corpus: one vector per axis with nLists = corpus size, so
-    // (sample + id-order top-up) makes EVERY vector its own centroid —
-    // meanSimBefore is exactly 1, independent of the hash-strided
-    // sample. Appended batch: diagonals at 45° to every centroid —
-    // meanSimAfter must drop, the rebuild signal
-    val base = (0L to 7L)
-      .map(i => (i, Seq.tabulate(8)(j => if (j == i) 1f else 0f)))
-      .toDF("vec_id", "embedding")
-    val diag = (20L to 29L)
-      .map(i => (i, Seq.tabulate(8)(j => if (j <= 1) 1f else 0f)))
-      .toDF("vec_id", "embedding")
-    Similarity.dropIvfIndex(spark, "t_ivf_drift")
-    Similarity.writeIvfIndex(spark, base, "t_ivf_drift", nLists = 8, lloydIters = 0)
-    try {
-      val drift = Similarity.appendToIvfIndex(spark, diag, "t_ivf_drift")
-      assert(drift.appended === 10L && drift.indexedBefore === 8L)
-      assert(drift.meanSimBefore > 0.999,
-        s"self-centroid base must score 1, got ${drift.meanSimBefore}")
-      // exact: (8*1 + 10*cos45) / 18 ≈ 0.837
-      assert(drift.meanSimAfter < 0.95 && drift.meanSimAfter > 0.8,
-        s"45-degree batch must drag the mean to ~0.84: " +
-          s"${drift.meanSimBefore} -> ${drift.meanSimAfter}")
-    } finally Similarity.dropIvfIndex(spark, "t_ivf_drift")
   }
 
   test("L4e: indexed probe prunes the corpus scan to the probed lists' bucket files") {
@@ -808,15 +782,12 @@ class DedupSpec extends SparkSpec {
     def norm(df: org.apache.spark.sql.DataFrame) = df
       .select($"q_id", $"vec_id", $"rank").as[(Long, Long, Int)].collect().toSet
     Similarity.dropIvfIndex(spark, "t_ivf_delta")
-    Similarity.dropIvfIndex(spark, "t_ivf_delta_ref")
     Similarity.writeIvfIndex(spark, base, "t_ivf_delta", nLists = 16, lloydIters = 1)
-    Similarity.writeIvfIndex(spark, base, "t_ivf_delta_ref", nLists = 16, lloydIters = 1)
     val fs = org.apache.hadoop.fs.FileSystem.get(spark.sparkContext.hadoopConfiguration)
     val deltaPath = new org.apache.hadoop.fs.Path(
-      Similarity.ivfDeltaDir(spark, "t_ivf_delta"))
+      Layout.deltaDirOf(spark, "t_ivf_delta"))
     try {
-      val d0 = Similarity.appendToIvfDelta(spark, b0, "t_ivf_delta", batchId = 0)
-      assert(d0.appended === b0.count() && !d0.meanSimAfter.isNaN)
+      Similarity.appendToIvfDelta(spark, b0, "t_ivf_delta", batchId = 0)
       Similarity.appendToIvfDelta(spark, b1, "t_ivf_delta", batchId = 1)
       // the main table was NOT touched: delta rows live beside it
       assert(spark.table("t_ivf_delta").count() === base.count())
@@ -835,13 +806,6 @@ class DedupSpec extends SparkSpec {
         assert(preCompact.exists(t => t._1 == q && t._2 == q + 500000),
           s"delta-appended planted copy of query $q not surfaced")
       }
-      // reference: the same rows appended DIRECTLY to a twin index —
-      // probe parity pins that delta+union ≡ bucketed append semantics
-      Similarity.appendToIvfIndex(spark, b0.unionByName(b1), "t_ivf_delta_ref",
-        computeDrift = false)
-      val ref = norm(
-        Similarity.ivfTopKIndexed(spark, queries, "t_ivf_delta_ref", k = 10, nProbe = 4))
-      assert(preCompact === ref, "delta-union probe diverged from direct-append probe")
       // compaction folds the delta in: same probe results, bucket spec
       // and pruning preserved, delta gone
       Similarity.compactIvfDelta(spark, "t_ivf_delta")
@@ -860,23 +824,16 @@ class DedupSpec extends SparkSpec {
       // compaction with no delta is a no-op
       Similarity.compactIvfDelta(spark, "t_ivf_delta")
       assert(spark.table("t_ivf_delta").count() === base.count() + b0.count() + b1.count())
-    } finally {
-      fs.delete(deltaPath, true)
-      Similarity.dropIvfIndex(spark, "t_ivf_delta")
-      Similarity.dropIvfIndex(spark, "t_ivf_delta_ref")
-    }
+    } finally Similarity.dropIvfIndex(spark, "t_ivf_delta")
   }
 
   test("L4f/L4g job budget: index appends are ONE pass — drift stats ride the write via observe(), never a separate scan") {
     // r19 optimization pin (VERDICT r18 #2 follow-through): the delta
     // append previously persisted the batch and paid a (count, avg)
-    // aggregate job before its write (4 jobs measured); the bucketed
-    // append additionally paid a count job (8). With the stats carried
-    // by the write pass as CollectMetrics, the delta append is exactly
-    // one job and the bucketed append is the write plus the pre-append
-    // history-tightness scan. Budgets leave one-job headroom for
-    // commit-protocol variation; a regression re-introducing a
-    // batch-side scan lands well above them.
+    // aggregate job before its write (4 jobs measured). It is now
+    // exactly one job — the write. The budget leaves one-job headroom
+    // for commit-protocol variation; a regression re-introducing a
+    // batch-side scan lands above it.
     val vecs = (0L until 200L).map { i =>
       (i, Seq.tabulate(8)(j => if (j == (i % 4).toInt) 1f else 0.1f))
     }.toDF("vec_id", "embedding")
@@ -903,20 +860,13 @@ class DedupSpec extends SparkSpec {
       // warm the write/codegen paths so the measured calls are steady
       Similarity.appendToIvfDelta(spark, vecs.where($"vec_id" === 100), t, 0)
       val deltaJobs = countJobs {
-        val d = Similarity.appendToIvfDelta(spark,
+        Similarity.appendToIvfDelta(spark,
           vecs.where($"vec_id" >= 101 && $"vec_id" < 150), t, batchId = 1)
-        // the fused metrics still report real numbers
-        assert(d.appended === 49L && !d.meanSimAfter.isNaN)
       }
       assert(deltaJobs <= 2,
         s"appendToIvfDelta launched $deltaJobs jobs — the one-pass fusion regressed")
-      val appendJobs = countJobs {
-        val d = Similarity.appendToIvfIndex(spark,
-          vecs.where($"vec_id" >= 150), t)
-        assert(d.appended === 50L && !d.meanSimBefore.isNaN && !d.meanSimAfter.isNaN)
-      }
-      assert(appendJobs <= 4,
-        s"appendToIvfIndex launched $appendJobs jobs — the one-pass fusion regressed")
+      assert(spark.read.parquet(s"${Layout.deltaDirOf(spark, t)}/batch-1")
+        .count() === 49L, "the measured append did not land its batch")
     } finally Similarity.dropIvfIndex(spark, t)
   }
 
@@ -954,7 +904,7 @@ class DedupSpec extends SparkSpec {
       val fs = org.apache.hadoop.fs.FileSystem.get(
         spark.sparkContext.hadoopConfiguration)
       assert(!fs.exists(new org.apache.hadoop.fs.Path(
-        Similarity.ivfDeltaDir(spark, t))), "recluster left the delta behind")
+        Layout.deltaDirOf(spark, t))), "recluster left the delta behind")
       assert(spark.table(t).count() === 30L)
       // parity: recluster ≡ writeIvfIndex over the same content with
       // the same recorded parameters (deterministic quantizer)
@@ -994,7 +944,6 @@ class DedupSpec extends SparkSpec {
   }
 
   test("L4h: an interrupted recluster swap completes at re-entry") {
-    import graft.operators.Layout
     val base = (0L to 19L).map { i =>
       (i, Seq.tabulate(8)(j => if (j == (i % 2).toInt) 1f else 0f))
     }.toDF("vec_id", "embedding")
@@ -1038,7 +987,6 @@ class DedupSpec extends SparkSpec {
   }
 
   test("L4h: recluster re-entry recovers a crash inside its own compaction (__compact holds the only copy)") {
-    import graft.operators.Layout
     val base = (0L to 19L).map { i =>
       (i, Seq.tabulate(8)(j => if (j == (i % 2).toInt) 1f else 0f))
     }.toDF("vec_id", "embedding")
@@ -1055,7 +1003,7 @@ class DedupSpec extends SparkSpec {
       numBuckets = 4)
     try {
       Similarity.appendToIvfDelta(spark, delta, t, batchId = 0)
-      val deltaP = new org.apache.hadoop.fs.Path(Similarity.ivfDeltaDir(spark, t))
+      val deltaP = new org.apache.hadoop.fs.Path(Layout.deltaDirOf(spark, t))
       // plant the fold's own state C inside a recluster: tmp fully
       // written, commit record renamed, main dropped — the r10 code
       // hit the misleading "neither exists" require here; the fix
@@ -1143,7 +1091,6 @@ class DedupSpec extends SparkSpec {
   }
 
   test("L2h: probe verifies through the _sh delta in the between-folds crash window") {
-    import graft.operators.Layout
     def doc(n: Int): String = (0 until 20).map(w => s"tok${n}w$w").mkString(" ")
     val table = "t_band_window"
     val hist = (1 to 8).map(i => (i.toLong, doc(i))).toDF("doc_id", "text")
@@ -1176,7 +1123,6 @@ class DedupSpec extends SparkSpec {
   }
 
   test("L2h: fold manifest — a batch replayed AFTER its fold is skipped, never duplicated") {
-    import graft.operators.Layout
     def doc(n: Int): String = (0 until 20).map(w => s"tok${n}w$w").mkString(" ")
     val table = "t_band_manifest"
     val hist = (1 to 8).map(i => (i.toLong, doc(i))).toDF("doc_id", "text")
@@ -1221,31 +1167,104 @@ class DedupSpec extends SparkSpec {
     val fs = org.apache.hadoop.fs.FileSystem.get(spark.sparkContext.hadoopConfiguration)
     Similarity.dropIvfIndex(spark, table)
     Similarity.writeIvfIndex(spark, base, table, nLists = 8, lloydIters = 1)
-    val deltaPath = new org.apache.hadoop.fs.Path(Similarity.ivfDeltaDir(spark, table))
+    val deltaPath = new org.apache.hadoop.fs.Path(Layout.deltaDirOf(spark, table))
     try {
-      assert(Similarity.appendToIvfDelta(spark, batch, table, batchId = 0)
-        .appended === batch.count())
+      Similarity.appendToIvfDelta(spark, batch, table, batchId = 0)
       Similarity.compactIvfDelta(spark, table)
       val n = spark.table(table).count()
       assert(n === base.count() + batch.count())
-      // replay after the fold: skipped (zero-count drift), nothing lands
-      val replay = Similarity.appendToIvfDelta(spark, batch, table, batchId = 0)
-      assert(replay.appended === 0L, "folded batch re-appended")
-      assert(!fs.exists(deltaPath))
+      // replay after the fold: skipped, nothing lands
+      Similarity.appendToIvfDelta(spark, batch, table, batchId = 0)
+      assert(!fs.exists(deltaPath), "folded batch re-appended")
       Similarity.compactIvfDelta(spark, table)
       assert(spark.table(table).count() === n,
         "replay-after-fold duplicated vectors in the index")
       // fresh batch id unaffected
       val b1 = emb.where($"vec_id" >= 450 && $"vec_id" < 460)
-      assert(Similarity.appendToIvfDelta(spark, b1, table, batchId = 1)
-        .appended === b1.count())
+      Similarity.appendToIvfDelta(spark, b1, table, batchId = 1)
+      assert(spark.read.parquet(s"$deltaPath/batch-1").count() === b1.count())
       Similarity.compactIvfDelta(spark, table)
       assert(spark.table(table).count() === n + b1.count())
     } finally Similarity.dropIvfIndex(spark, table)
   }
 
+  test("L2h: a band-history rebuild starts a new generation — probes see only its rows, and a fresh batch 0 lands") {
+    def doc(n: Int): String = (0 until 20).map(w => s"tok${n}w$w").mkString(" ")
+    def docs(ids: Range) = ids.map(i => (i.toLong, doc(i))).toDF("doc_id", "text")
+    val table = "t_band_regen"
+    // history ids matched by near-copies (fresh ids) of docs `ids`
+    def hits(ids: Int*) = Dedup.minhashIncremental(spark,
+        ids.map(i => (i + 1000L, doc(i) + " zz")).toDF("doc_id", "text"),
+        table, "text", "doc_id")
+      .where($"jaccard" >= 0.8).select($"id_hist").as[Long].collect().toSet
+    Dedup.BandHistory.drop(spark, table)
+    try {
+      Dedup.writeBandHistory(docs(1 to 5), "text", "doc_id", table, numBuckets = 4)
+      Dedup.appendBandHistoryDelta(spark, docs(6 to 8), "text", "doc_id", table, 0)
+      Dedup.BandHistory.fold(spark, table) // batch 0 enters the fold manifest
+      Dedup.appendBandHistoryDelta(spark, docs(9 to 10), "text", "doc_id", table, 1)
+      assert(hits(1, 6, 9) === Set(1L, 6L, 9L))
+      // rebuild over a disjoint set: the old generation's unfolded
+      // delta must not answer probes
+      Dedup.writeBandHistory(docs(21 to 25), "text", "doc_id", table, numBuckets = 4)
+      assert(hits(1, 6, 9, 10, 21) === Set(21L),
+        "the rebuild kept the previous generation's delta rows")
+      // the new stream's batch 0 is not in the new generation's manifest
+      Dedup.appendBandHistoryDelta(spark, docs(31 to 32), "text", "doc_id", table, 0)
+      assert(hits(31, 32) === Set(31L, 32L),
+        "a stale fold manifest skipped the new generation's batch 0")
+    } finally Dedup.BandHistory.drop(spark, table)
+  }
+
+  test("L4g: an IVF rebuild starts a new generation — probes see only its rows, and a fresh batch 0 lands") {
+    def vecs(ids: Range) = ids.map { i =>
+      (i.toLong, Seq.tabulate(8)(j => ((i * 31 + j * 7) % 11 + 1).toFloat))
+    }.toDF("vec_id", "embedding")
+    val t = "t_ivf_regen"
+    // every indexed id an exhaustive probe (nProbe = nLists, k > rows) returns
+    def probed() = Similarity.ivfTopKIndexed(spark,
+        vecs(0 until 1).select($"vec_id".as("q_id"), $"embedding".as("q_vec")),
+        t, k = 100, nProbe = 2)
+      .select($"vec_id").as[Long].collect().toSet
+    def rows() = Similarity.ivfAging(spark, t).currentRows // main ∪ delta
+    Similarity.dropIvfIndex(spark, t)
+    try {
+      Similarity.writeIvfIndex(spark, vecs(0 until 20), t, nLists = 2,
+        lloydIters = 0, numBuckets = 4)
+      Similarity.appendToIvfDelta(spark, vecs(100 until 105), t, batchId = 0)
+      Similarity.compactIvfDelta(spark, t) // batch 0 enters the fold manifest
+      Similarity.appendToIvfDelta(spark, vecs(200 until 205), t, batchId = 1)
+      assert(rows() === 30L)
+      // rebuild over a disjoint set: the old generation's delta rows,
+      // assigned under the old centroids, must not survive it (list
+      // pruning hides them from probes, but a fold would land them)
+      Similarity.writeIvfIndex(spark, vecs(300 until 320), t, nLists = 2,
+        lloydIters = 0, numBuckets = 4)
+      assert(probed() === (300L until 320L).toSet)
+      Similarity.compactIvfDelta(spark, t)
+      assert(spark.table(t).count() === 20L,
+        "the rebuild kept the previous generation's delta rows")
+      // the new stream's batch 0 is not in the new generation's manifest
+      Similarity.appendToIvfDelta(spark, vecs(400 until 405), t, batchId = 0)
+      assert(rows() === 25L,
+        "a stale fold manifest skipped the new generation's batch 0")
+      assert(probed() === ((300L until 320L) ++ (400L until 405L)).toSet)
+    } finally Similarity.dropIvfIndex(spark, t)
+  }
+
+  test("L4e: an IVF build over a training set with no usable vector fails loudly, naming the cause") {
+    val t = "t_ivf_novec"
+    val bad = Seq((1L, Seq.fill(8)(0f)), (2L, null.asInstanceOf[Seq[Float]]))
+      .toDF("vec_id", "embedding")
+    Similarity.dropIvfIndex(spark, t)
+    try {
+      val e = intercept[IllegalArgumentException](
+        Similarity.writeIvfIndex(spark, bad, t, nLists = 2, numBuckets = 4))
+      assert(e.getMessage.contains("no usable vector"), e.getMessage)
+    } finally Similarity.dropIvfIndex(spark, t)
+  }
+
   test("L2h: a history id present in BOTH main and delta yields ONE candidate pair row") {
-    import graft.operators.Layout
     def doc(n: Int): String = (0 until 20).map(w => s"tok${n}w$w").mkString(" ")
     val table = "t_band_redeliver"
     val hist = (1 to 8).map(i => (i.toLong, doc(i))).toDF("doc_id", "text")
@@ -1277,14 +1296,13 @@ class DedupSpec extends SparkSpec {
   }
 
   test("L4g: every interrupted-compaction crash state recovers without loss or duplication") {
-    import graft.operators.Layout
     val emb = Tables.embeddings(spark, sf0001).select($"vec_id", $"embedding")
     val base = emb.where($"vec_id" < 400)
     val batch = emb.where($"vec_id" >= 400 && $"vec_id" < 450)
     val table = "t_ivf_crash"
     val tmp = table + "__compact"
     val fs = org.apache.hadoop.fs.FileSystem.get(spark.sparkContext.hadoopConfiguration)
-    def deltaP = new org.apache.hadoop.fs.Path(Similarity.ivfDeltaDir(spark, table))
+    def deltaP = new org.apache.hadoop.fs.Path(Layout.deltaDirOf(spark, table))
     def foldedP = new org.apache.hadoop.fs.Path(deltaP.toString + "__folded")
     def expected = base.count() + batch.count()
     def freshIndexWithDelta(): Unit = {

@@ -683,8 +683,8 @@ class StreamingSpec extends SparkSpec {
     Similarity.dropIvfIndex(spark, table)
     Similarity.writeIvfIndex(spark, base, table, nLists = 8, lloydIters = 0)
     val fs = org.apache.hadoop.fs.FileSystem.get(spark.sparkContext.hadoopConfiguration)
-    val deltaP = new org.apache.hadoop.fs.Path(Similarity.ivfDeltaDir(spark, table))
-    fs.delete(deltaP, true)
+    val deltaP = new org.apache.hadoop.fs.Path(
+      graft.operators.Layout.deltaDirOf(spark, table))
     // two micro-batches of arriving vectors, the second with planted
     // copies of the probes
     val b0 = emb.where($"vec_id" >= 400 && $"vec_id" < 430)

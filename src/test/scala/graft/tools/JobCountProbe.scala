@@ -96,14 +96,11 @@ object JobCountProbe {
         tau = 0.999).count(): Unit
     }
     // the maintenance/append paths the VERDICT r18 #2 family also prices:
-    // jobs per streaming delta append, per bucketed append (drift on),
-    // and per full index build (sample + lloyd + 2 table writes + meta)
+    // jobs per streaming delta append and per full index build
+    // (sample + lloyd + 2 table writes + meta)
     measure("appendToIvfDelta") {
       Similarity.appendToIvfDelta(spark, vecs(4200 until 4300), table,
-        batchId = 1): Unit
-    }
-    measure("appendToIvfIndex") {
-      Similarity.appendToIvfIndex(spark, vecs(4300 until 4400), table): Unit
+        batchId = 1)
     }
     measure("writeIvfIndex") {
       Similarity.dropIvfIndex(spark, "jcp_ivf_idx2")
